@@ -86,7 +86,7 @@ object LongArray {
     * any BIGINT expression. */
   def fromParquet(spark: SparkSession, dir: String, table: String,
                   idxSql: String, valueSql: String): LongArray =
-    new LongArray(spark.read.parquet(s"$dir/$table.parquet")
+    new LongArray(Tables.read(spark, s"$dir/$table.parquet")
       .selectExpr(s"CAST($idxSql AS BIGINT) AS idx", s"CAST($valueSql AS BIGINT) AS v"))
 
   /** Exact integer arange (start, start+step, ...), n values. */

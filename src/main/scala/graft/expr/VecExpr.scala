@@ -6,10 +6,12 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Evaluation context: a session plus the scale-factor directory holding the
   * parquet tables (see /root/repo/TESTDATA.md). */
 final case class Ctx(spark: SparkSession, dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = Tables.read(spark, s"$dir/$name.parquet")
 }
 
 /** Lazy 1-d array expression — the element-table realization of the

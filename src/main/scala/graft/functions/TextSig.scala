@@ -2,6 +2,8 @@ package graft.functions
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.Tables
+
 /** One-pass in-block text-signature kernel — the engine's "numpy role"
   * (SURVEY §7.3 item 1): a tight JVM loop per document computing the char
   * trigram hash list, its distinct set, 8 minhashes, the 16-bit simhash and
@@ -97,7 +99,7 @@ object TextSig {
     * per-partition pass over `documents`. */
   def rows(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    s.read.parquet(s"$d/documents.parquet").select("doc_id", "text")
+    Tables.read(s, s"$d/documents.parquet").select("doc_id", "text")
       .as[(Long, String)]
       .mapPartitions(_.map { case (id, t) => sig(id, t) })
       .toDF()

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.DArray
+import graft.{DArray, Tables}
 
 /** Array-engine queries exposed through the driver contract: each entry
   * computes through the DArray expression layer (scan → pushdown-optimized
@@ -543,7 +543,7 @@ object ArrayQueries {
     // NaN→NULL values skipped by the distributed rank selection, same as
     // the aggregate semantics — the oracle's percentile also skips NULLs
     "q65_nanquantile" -> ((s, d) => {
-      val el = s.read.parquet(s"$d/events.parquet").selectExpr(
+      val el = Tables.read(s, s"$d/events.parquet").selectExpr(
         "event_id AS idx",
         "CASE WHEN event_type = 'error' THEN NULL ELSE value END AS v")
       val qs = ExactQuantile.quantiles(el, "v", Seq(0.25, 0.75))
@@ -562,7 +562,7 @@ object ArrayQueries {
     // per doc keyed by doc_id — deterministic, partitioning-independent —
     // keeps ~40%; per-source kept/total counts audit the mixture
     "q64_source_sample" -> ((s, d) =>
-      s.read.parquet(s"$d/documents.parquet")
+      Tables.read(s, s"$d/documents.parquet")
         .selectExpr("source",
           "CASE WHEN ((1103515245 * (doc_id % 2147483648 + 7) + 12345) % 2147483648) % 10 < 4 THEN 1 ELSE 0 END AS keep")
         .groupBy("source")
@@ -1140,7 +1140,7 @@ object ArrayQueries {
     // sum is over integer-valued quantities (exact, order-free) and /2
     // is a power-of-two scale (exact in IEEE754).
     "q113_from_graph" -> ((s, d) => {
-      val foreign = s.read.parquet(s"$d/lineitem.parquet")
+      val foreign = Tables.read(s, s"$d/lineitem.parquet")
         .groupBy("l_linenumber")
         .agg(sum("l_quantity").as("sq"))
       DArray.fromGraph(s, d, foreign, "l_linenumber - 1", "sq")

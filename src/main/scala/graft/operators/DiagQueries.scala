@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.DArray
+import graft.{DArray, Tables}
 import graft.expr.Diagnostics
 
 /** Oracle gates for the diagnostics surface (SURVEY §2.14, reference
@@ -24,11 +24,11 @@ import graft.expr.Diagnostics
   */
 object DiagQueries {
 
-  /** Length of the events table — the one driver-side action these
-    * queries take (a count job; metadata-sized result, same class as the
-    * reference's `compute_chunk_sizes`). */
+  /** Length of the events table, summed from the parquet footers' row
+    * counts — metadata, as the reference derives chunk sizes without
+    * executing; no Spark job. */
   private def eventsLen(s: SparkSession, d: String): Long =
-    s.read.parquet(s"$d/events.parquet").count()
+    Tables.rows(s, s"$d/events.parquet")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Similarity-search operators over the `embeddings` table
   * (`vec_id BIGINT, embedding ARRAY<FLOAT>, label INT`; vectors are
   * L2-normalized so cosine similarity = dot product).
@@ -55,7 +57,7 @@ object EmbeddingQueries {
 
   private def emb(s: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(s) // idempotent per session
-    s.read.parquet(s"$d/embeddings.parquet")
+    Tables.read(s, s"$d/embeddings.parquet")
   }
 
   /** PQ codebook weight for (sub, code, dim) — the JVM value. The SQL

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** The two range-flavored join operators the engine's equi-join surface
   * (SURVEY §2.6) did not yet name as first-class calls: backward AS-OF
   * join and bounded-interval RANGE join. Spark has no native form of
@@ -326,7 +328,7 @@ object JoinOps {
     * gates) so a corpus ts-encoding change can never shift timestamps
     * in only some gates. */
   private[operators] def normalizedEvents(s: SparkSession, d: String): DataFrame = {
-    val base = s.read.parquet(s"$d/events.parquet")
+    val base = Tables.read(s, s"$d/events.parquet")
     val tsExpr = base.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => "timestamp_micros(ts DIV 1000)"
       case _ => "CAST(ts AS TIMESTAMP)"

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{DArray, DMatrix, GUFunc}
+import graft.{DArray, DMatrix, GUFunc, Tables}
 
 /** 2-d array / linear-algebra queries (SURVEY §2.10, §2.11): matmul, gram,
   * trace, transpose, triangles, diagonal, outer, reshape, axis reductions.
@@ -52,11 +52,11 @@ object MatrixQueries {
         oldV1.split(",").map(_.trim).filter(v => v.nonEmpty && v != "parquet")
           .mkString(","))
       s.conf.set(AGG_PD, "true")
-      maxes(s.read.parquet(s"$d/lineitem.parquet"))
+      maxes(Tables.read(s, s"$d/lineitem.parquet"))
     } catch {
       case _: Throwable =>
         s.conf.set(V1_LIST, oldV1); s.conf.set(AGG_PD, oldPd)
-        maxes(s.read.parquet(s"$d/lineitem.parquet"))
+        maxes(Tables.read(s, s"$d/lineitem.parquet"))
     } finally {
       s.conf.set(V1_LIST, oldV1); s.conf.set(AGG_PD, oldPd)
     }
@@ -175,7 +175,7 @@ object MatrixQueries {
     // division is one correctly-rounded IEEE op, identical across engines
     "f01_dft" -> ((s, d) => {
       val n = 64
-      val x = s.read.parquet(s"$d/events.parquet")
+      val x = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS j",
           "CAST(floor(value * 100 + 0.5) AS BIGINT) AS xq").where(s"j < $n")
       val basis = s.range(n.toLong * n).selectExpr(
@@ -356,7 +356,7 @@ object MatrixQueries {
     // header-manifest read — codec bit-exactness under the oracle gate
     "np01_npy_roundtrip" -> ((s, d) => {
       val dir = s"/tmp/graft_npy_np01_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.NpyStack.write(el, dir, blockSize = 256, n = 1000)
       graft.sources.NpyStack.read(s, dir).orderBy("idx")
@@ -377,7 +377,7 @@ object MatrixQueries {
     // header-manifest read; format bit-exactness under the oracle gate
     "h01_hdf5_roundtrip" -> ((s, d) => {
       val dir = s"/tmp/graft_h5_h01_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Hdf5.writeStack(el, dir, blockSize = 256, n = 1000)
       graft.sources.Hdf5.readStack(s, dir).orderBy("idx")
@@ -415,7 +415,7 @@ object MatrixQueries {
     "h03_hdf5_chunked" -> ((s, d) => {
       val file = s"/tmp/graft_h5_h03_${new java.io.File(d).getName}.h5"
       val vals = new Array[Double](1000)
-      s.read.parquet(s"$d/events.parquet")
+      Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
         .collect().foreach(r => vals(r.getLong(0).toInt) = r.getDouble(1))
       val (fs, base) = graft.sources.StoreIO.fsOf(file, s.sparkContext.hadoopConfiguration)
@@ -437,7 +437,7 @@ object MatrixQueries {
     "h04_hdf5_v4_latest" -> ((s, d) => {
       val file = s"/tmp/graft_h5_h04_${new java.io.File(d).getName}.h5"
       val vals = new Array[Double](1000)
-      s.read.parquet(s"$d/events.parquet")
+      Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
         .collect().foreach(r => vals(r.getLong(0).toInt) = r.getDouble(1))
       val (fs, base) = graft.sources.StoreIO.fsOf(file, s.sparkContext.hadoopConfiguration)
@@ -458,7 +458,7 @@ object MatrixQueries {
     "h05_hdf5_dense_group" -> ((s, d) => {
       val file = s"/tmp/graft_h5_h05_${new java.io.File(d).getName}.h5"
       val vals = new Array[Double](1000)
-      s.read.parquet(s"$d/events.parquet")
+      Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
         .collect().foreach(r => vals(r.getLong(0).toInt) = r.getDouble(1))
       val parts = (0 until 10).map(k =>
@@ -480,7 +480,7 @@ object MatrixQueries {
     "h06_hdf5_nested_groups" -> ((s, d) => {
       val file = s"/tmp/graft_h5_h06_${new java.io.File(d).getName}.h5"
       val vals = new Array[Double](1000)
-      s.read.parquet(s"$d/events.parquet")
+      Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
         .collect().foreach(r => vals(r.getLong(0).toInt) = r.getDouble(1))
       val (fs, base) = graft.sources.StoreIO.fsOf(file, s.sparkContext.hadoopConfiguration)
@@ -499,7 +499,7 @@ object MatrixQueries {
     "td01_tiledb_roundtrip" -> ((s, d) => {
       val uri = s"/tmp/graft_tdb_td01_${new java.io.File(d).getName}"
       deleteDir(uri)
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.TileDb.createArray(s, uri,
         graft.sources.TileDb.Schema(Seq(1000L), Seq(256L)))
@@ -513,7 +513,7 @@ object MatrixQueries {
     "td02_tiledb_shadow" -> ((s, d) => {
       val uri = s"/tmp/graft_tdb_td02_${new java.io.File(d).getName}"
       deleteDir(uri)
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.TileDb.createArray(s, uri,
         graft.sources.TileDb.Schema(Seq(1000L), Seq(256L)))
@@ -531,7 +531,7 @@ object MatrixQueries {
     // values directly — codec bit-exactness is what's under test
     "z01_zarr_roundtrip" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z01_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256, compressor = Some("zlib"))
       graft.sources.Zarr.read1d(s, dir).orderBy("idx")
@@ -561,7 +561,7 @@ object MatrixQueries {
     // bytes+gzip codec chain) — same codec-bit-exactness contract as z01
     "z03_zarr_v3" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z03_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256,
         compressor = Some("gzip"), format = 3)
@@ -573,7 +573,7 @@ object MatrixQueries {
     // distributed read, same chunk-manifest scale shape as z01-z04
     "z05_zarr_zstd" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z05_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 900")
       graft.sources.Zarr.write1d(el, dir, 900, chunk = 200,
         compressor = Some("zstd"), format = 3)
@@ -587,7 +587,7 @@ object MatrixQueries {
     // 16-byte header — distributed encode/decode like z01-z05
     "z06_zarr_blosc" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z06_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256, compressor = Some("blosc"))
       graft.sources.Zarr.read1d(s, dir).orderBy("idx")
@@ -602,7 +602,7 @@ object MatrixQueries {
     // 8-element-group tail passthrough is pinned in BloscSpec's vectors)
     "z12_zarr_bitshuffle" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z12_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256,
         compressor = Some("blosc-bit"))
@@ -616,7 +616,7 @@ object MatrixQueries {
     // written distributed and read back through the sharded decode path
     "z07_zarr_sharded" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z07_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 900")
       graft.sources.Zarr.write1dSharded(el, dir, 900, chunk = 256, inner = 64,
         compressor = Some("zstd"))
@@ -632,13 +632,13 @@ object MatrixQueries {
     // silently (ZarrSpec pins the refusal and the raw chunk bytes).
     "z08_zarr_i4_u1_write" -> ((s, d) => {
       val base = s"/tmp/graft_zarr_z08_${new java.io.File(d).getName}"
-      val el4 = s.read.parquet(s"$d/events.parquet")
+      val el4 = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",
           "CAST(floor(value * 1000) - 500 AS DOUBLE) AS v")
         .where("idx < 1000")
       graft.sources.Zarr.write1d(el4, s"$base/i4", 1000, chunk = 256,
         compressor = Some("zlib"), format = 2, dtype = "<i4")
-      val el1 = s.read.parquet(s"$d/events.parquet")
+      val el1 = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",
           "CAST(least(255, greatest(0, floor(value * 255))) AS DOUBLE) AS v")
         .where("idx < 1000")
@@ -655,7 +655,7 @@ object MatrixQueries {
     // exact Long codec — no value ever passes through a double
     "z09_zarr_sharded_long" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_z09_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",
           "CAST(9007199254740993 + 7 * event_id AS BIGINT) AS v")
         .where("idx < 600")
@@ -674,7 +674,7 @@ object MatrixQueries {
     // mixup between members cannot cancel out.
     "z10_zarr_consolidated" -> ((s, d) => {
       val root = s"/tmp/graft_zarr_z10_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.writeGroup(root)
       graft.sources.Zarr.write1d(el, s"$root/a", 1000, chunk = 256,
@@ -700,7 +700,7 @@ object MatrixQueries {
     // for a hierarchy of thousands of arrays.
     "z11_zarr_consolidated_v3" -> ((s, d) => {
       val root = s"/tmp/graft_zarr_z11_${new java.io.File(d).getName}"
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, s"$root/a", 1000, chunk = 256,
         compressor = Some("gzip"), format = 3)
@@ -721,7 +721,7 @@ object MatrixQueries {
     "q88_zarr_int64_exact" -> ((s, d) => {
       val dir = s"/tmp/graft_zarr_q88_${new java.io.File(d).getName}"
       // 2^53 + 1 + 7·id: odd offsets are NOT representable as doubles
-      val el = s.read.parquet(s"$d/events.parquet")
+      val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",
           "CAST(9007199254740993 + 7 * event_id AS BIGINT) AS v")
         .where("idx < 600")
@@ -753,12 +753,12 @@ object MatrixQueries {
     "m37_sparse_matvec" -> ((s, d) => {
       val (np, ns) = liDims(s, d)
       val a = new graft.DMatrix(
-        s.read.parquet(s"$d/lineitem.parquet")
+        Tables.read(s, s"$d/lineitem.parquet")
           .selectExpr("l_partkey AS i", "l_suppkey AS j", "l_quantity AS v")
           .groupBy("i", "j").agg(sum("v").as("v")),
         np, ns)
       val x = new graft.DMatrix(
-        s.read.parquet(s"$d/supplier.parquet")
+        Tables.read(s, s"$d/supplier.parquet")
           .selectExpr("s_suppkey AS i", "CAST(0 AS BIGINT) AS j", "s_acctbal AS v"),
         ns, 1)
       a.matmul(x).df.selectExpr("i", "j", "round(v, 2) AS v").orderBy("i")
@@ -776,7 +776,7 @@ object MatrixQueries {
     "m38_sparse_spgemm" -> ((s, d) => {
       val (np, ns) = liDims(s, d)
       val a = graft.DSparse.fromCOO(
-        s.read.parquet(s"$d/lineitem.parquet")
+        Tables.read(s, s"$d/lineitem.parquet")
           .selectExpr("l_partkey AS i", "l_suppkey AS j", "l_quantity AS v"),
         np, ns)
       a.gram.df
@@ -790,7 +790,7 @@ object MatrixQueries {
     // all stored values are positive, so the corrected min IS 0 and the
     // oracle checks exactly that). Integer arithmetic throughout.
     "m39_sparse_elemwise" -> ((s, d) => {
-      val li = s.read.parquet(s"$d/lineitem.parquet")
+      val li = Tables.read(s, s"$d/lineitem.parquet")
       val (np, ns) = liDims(s, d)
       val a = graft.DSparse.fromCOO(
         li.selectExpr("l_partkey AS i", "l_suppkey AS j", "l_quantity AS v"), np, ns)
@@ -808,7 +808,7 @@ object MatrixQueries {
     "m40_sparse_identity" -> ((s, d) => {
       val (np, ns) = liDims(s, d)
       val a = graft.DSparse.fromCOO(
-        s.read.parquet(s"$d/lineitem.parquet")
+        Tables.read(s, s"$d/lineitem.parquet")
           .selectExpr("l_partkey AS i", "l_suppkey AS j", "l_quantity AS v"),
         np, ns)
       val c = graft.DSparse.eye(s, np).matmul(a)
@@ -878,7 +878,7 @@ object MatrixQueries {
     // ~1e-4 absolute FFT error on a ~1e8 quantity by 6 orders
     "f02_fft_parseval" -> ((s, d) => {
       val n = 4096
-      val x = s.read.parquet(s"$d/events.parquet")
+      val x = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS re", "CAST(0 AS DOUBLE) AS im")
         .where(s"idx < $n")
       graft.linalg.FFT.fft(s, x, n)
@@ -893,7 +893,7 @@ object MatrixQueries {
     // identity n·Σx² = |X₀|² + |X_{n/2}|² + 2·Σ_{0<k<n/2}|X_k|²
     "f04_rfft_parseval" -> ((s, d) => {
       val n = 2048
-      val x = s.read.parquet(s"$d/events.parquet")
+      val x = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where(s"idx < $n")
       graft.linalg.FFT.rfft(s, x, n)
         .selectExpr(s"CASE WHEN idx = 0 OR idx = ${n / 2} THEN re*re + im*im " +
@@ -905,7 +905,7 @@ object MatrixQueries {
     // the real signal exactly (up to fp noise) — identity-property oracle
     "f06_hfft_roundtrip" -> ((s, d) => {
       val n = 1024
-      val x = s.read.parquet(s"$d/events.parquet")
+      val x = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where(s"idx < $n")
       val back = graft.linalg.FFT.hfft(s, graft.linalg.FFT.ihfft(s, x, n), n)
       back.withColumnRenamed("v", "rv").join(x, "idx")
@@ -934,7 +934,7 @@ object MatrixQueries {
     // Bluestein in-core): Parseval against the direct sum
     "f08_fft_anylen_parseval" -> ((s, d) => {
       val n = 1000
-      val x = s.read.parquet(s"$d/events.parquet")
+      val x = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS re", "CAST(0 AS DOUBLE) AS im")
         .where(s"idx < $n")
       graft.linalg.FFT.fft(s, x, n)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Multimodal-column plumbing: opaque `BINARY` payloads with typed
   * metadata, decoded/feature-extracted via batched `mapPartitions` over a
   * typed Dataset — the Spark-side pipeline a real image/audio corpus needs.
@@ -33,7 +35,7 @@ object MultimodalQueries {
 
   /** documents → media table: binary payload + synthesized typed metadata. */
   def mediaTable(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet").selectExpr(
+    Tables.read(s, s"$d/documents.parquet").selectExpr(
       "doc_id",
       "encode(text, 'UTF-8') AS payload",
       "CASE WHEN doc_id % 3 = 0 THEN 'image' WHEN doc_id % 3 = 1 THEN 'audio' ELSE 'video' END AS kind",

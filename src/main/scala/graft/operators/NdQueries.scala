@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.NdArray
+import graft.{NdArray, Tables}
 
 /** General N-d array queries (SURVEY §2.11 N-d beyond the batched 3-d
   * [[graft.DTensor]]): axis-tuple reductions, axis permutations, rank
@@ -89,7 +89,7 @@ object NdQueries {
         .applyOverAxes(Seq(0, 2), "sum(v)").elements.orderBy("c1", "c3")),
 
     "n06_nd_unravel" -> ((s, d) => {
-      val flat = s.read.parquet(s"$d/events.parquet")
+      val flat = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 360")
       NdArray.fromFlat(flat, Seq(5L, 8L, 9L)).elements
         .selectExpr("c0", "c1", "c2", "v", "c0 * 72 + c1 * 9 + c2 AS flat")

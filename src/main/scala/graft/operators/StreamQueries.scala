@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Tables
 import graft.streaming.StreamOps
 
 /** Oracle-gated STREAMING queries — §2.13's replay-to-completion gate.
@@ -624,7 +625,7 @@ object StreamQueries {
   }
 
   private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.read(s, s"$d/documents.parquet")
 
   /** Project `cols` and append the ordered-replay `_file` range column
     * (id-quartile split) WITHOUT an eager driver job (r18, guide §1.2 —

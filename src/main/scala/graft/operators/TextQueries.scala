@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Tables
+
 /** Training-data-pipeline text operators over the `documents` table:
   * deduplication (exact, MinHash+LSH, n-gram Jaccard, SimHash), language
   * ID, quality scoring, token counting, fingerprinting.
@@ -108,7 +110,7 @@ object TextQueries {
   // -------------------------------------------------------------------------
 
   private def docs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(s"$d/documents.parquet")
+    Tables.read(s, s"$d/documents.parquet")
 
   /** Maximal repeated spans per doc for the ExactSubstr family (t27
     * signal + t28 removal): one sliding W-token window per position,

@@ -28,15 +28,19 @@ class ParquetStatsAggSpec extends AnyFunSuite {
         oldV1.split(",").map(_.trim).filter(v => v.nonEmpty && v != "parquet")
           .mkString(","))
       s.conf.set(AGG_PD, "true")
-      val df = s.read.parquet(s"$sf/lineitem.parquet")
-        .selectExpr("CAST(max(l_partkey) AS BIGINT)", "CAST(max(l_suppkey) AS BIGINT)")
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      assert(plan.contains("PushedAggregation: [MAX(l_partkey), MAX(l_suppkey)]"),
-        s"aggregate did not push to the scan:\n$plan")
-      val pushed = df.collect()(0)
-      assert(pushed.getLong(0) == scanned.getLong(0))
-      assert(pushed.getLong(1) == scanned.getLong(1))
+      // inferred and footer-declared (Tables, as liDims reads) schemas alike
+      for (table <- Seq(s.read.parquet(s"$sf/lineitem.parquet"),
+                        Tables.read(s, s"$sf/lineitem.parquet"))) {
+        val df = table
+          .selectExpr("CAST(max(l_partkey) AS BIGINT)", "CAST(max(l_suppkey) AS BIGINT)")
+        val plan = df.queryExecution.explainString(
+          org.apache.spark.sql.execution.SimpleMode)
+        assert(plan.contains("PushedAggregation: [MAX(l_partkey), MAX(l_suppkey)]"),
+          s"aggregate did not push to the scan:\n$plan")
+        val pushed = df.collect()(0)
+        assert(pushed.getLong(0) == scanned.getLong(0))
+        assert(pushed.getLong(1) == scanned.getLong(1))
+      }
     } finally {
       s.conf.set(V1_LIST, oldV1); s.conf.set(AGG_PD, oldPd)
     }
