@@ -3,19 +3,21 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Lazy 2-d array as an element table `(i BIGINT, j BIGINT, v DOUBLE)` with
-  * static shape metadata — the 2-d slice of the reference's chunked N-d
-  * array (reference `dask_array/_collection.py:110`; SURVEY §1.5's "element
-  * table" representation).
+/** Lazy 2-d array as an element table `(i BIGINT, j BIGINT, v DOUBLE)` —
+  * the rank-2 view of [[NdArray]] (reference `dask_array/_collection.py:110`
+  * has one array type at every rank), with the coordinates named `i`, `j`.
+  * The generic element-table ops (map, zip, transpose, flips, slices,
+  * ravel/reshape, densify, mask, triangles, setWhere, axis reductions) are
+  * the NdArray ops, so they follow its density rule: two dense operands
+  * keep the inner-join / plain-projection plans, a gapped one (eye, triu,
+  * mask, store reads) pays the zero-filling plan. This class keeps only
+  * the 2-d kernels whose plans really differ.
   *
-  * Where the 1-d [[DArray]] keeps its own expression layer (slice pushdown
-  * needs index rebasing Catalyst can't see), the 2-d ops here are pure
-  * declarative Catalyst plans: a filter on `i`/`j` commutes through
-  * transpose (key projection), elemwise joins (equi-join keys), and the
-  * matmul group-by (grouping keys) entirely inside Catalyst's own
-  * `PushDownPredicates`, reaching the scan as `PushedFilters` — verified in
-  * MatrixSpec. This is SURVEY §4.2's division of labor: array-layer rewrites
-  * only where Catalyst lacks the metadata.
+  * The 2-d ops are pure declarative Catalyst plans: a filter on `i`/`j`
+  * commutes through transpose (key projection), elemwise joins (equi-join
+  * keys), and the matmul group-by (grouping keys) entirely inside
+  * Catalyst's own `PushDownPredicates`, reaching the scan as
+  * `PushedFilters` — verified in MatrixSpec.
   *
   * Scale notes (100 TB design):
   *  - matmul (reference `dask_array/linalg/_tensordot.py:45-139`) is the
@@ -27,25 +29,29 @@ import org.apache.spark.sql.functions._
   *    zero data movement (reference `manipulation/_transpose.py:14` keeps
   *    the same promise via block-coordinate permutation).
   */
-final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
+final class DMatrix private (val nd: NdArray) {
+  require(nd.names == DMatrix.axes, s"a DMatrix view needs coordinates i, j, got ${nd.names}")
 
-  private def wrap(d: DataFrame): DMatrix = new DMatrix(d, rows, cols)
+  /** Wrap an `(i, j, v)` element table. `dense` states whether every cell
+    * of the `rows x cols` grid is present; say `false` when unsure — a
+    * gapped matrix only pays the zero-filling plans. */
+  def this(df: DataFrame, rows: Long, cols: Long, dense: Boolean) =
+    this(new NdArray(df, Seq(rows, cols), dense, DMatrix.axes))
+
+  def df: DataFrame = nd.df
+  def rows: Long = nd.shape(0)
+  def cols: Long = nd.shape(1)
+  def dense: Boolean = nd.dense
 
   /** Elements under ~this many doubles are broadcast in joins. */
   private val broadcastElems = 1L << 22
 
   // ---- elemwise ------------------------------------------------------------
-  def map(sqlOverV: String): DMatrix =
-    wrap(df.selectExpr("i", "j", s"CAST($sqlOverV AS DOUBLE) AS v"))
+  def map(sqlOverV: String): DMatrix = new DMatrix(nd.map(sqlOverV))
 
   /** Aligned elemwise combine — equi-join on the grid coordinates
     * (reference blockwise alignment, SURVEY §2.6 item 1). */
-  def zip(o: DMatrix, sqlOverV1V2: String): DMatrix = {
-    require(rows == o.rows && cols == o.cols, s"shape mismatch $rows x $cols vs ${o.rows} x ${o.cols}")
-    val l = df.withColumnRenamed("v", "v1")
-    val r = o.df.withColumnRenamed("v", "v2")
-    wrap(l.join(r, Seq("i", "j")).selectExpr("i", "j", s"CAST($sqlOverV1V2 AS DOUBLE) AS v"))
-  }
+  def zip(o: DMatrix, sqlOverV1V2: String): DMatrix = new DMatrix(nd.zip(o.nd, sqlOverV1V2))
   def +(o: DMatrix): DMatrix = zip(o, "v1 + v2")
   def -(o: DMatrix): DMatrix = zip(o, "v1 - v2")
   def *(o: DMatrix): DMatrix = zip(o, "v1 * v2")
@@ -54,13 +60,10 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
   /** Transpose: pure key projection (reference
     * `manipulation/_transpose.py:14` — coordinate permutation, no data
     * movement). */
-  def t: DMatrix =
-    new DMatrix(df.select(col("j").as("i"), col("i").as("j"), col("v")), cols, rows)
+  def t: DMatrix = new DMatrix(nd.transpose(Seq(1, 0)))
 
-  def flipRows: DMatrix = new DMatrix(
-    df.select((lit(rows - 1) - col("i")).as("i"), col("j"), col("v")), rows, cols)
-  def flipCols: DMatrix = new DMatrix(
-    df.select(col("i"), (lit(cols - 1) - col("j")).as("j"), col("v")), rows, cols)
+  def flipRows: DMatrix = new DMatrix(nd.flip(0))
+  def flipCols: DMatrix = new DMatrix(nd.flip(1))
   /** numpy names (reference `flipud`/`fliplr`, `manipulation/_flip.py`). */
   def flipud: DMatrix = flipRows
   def fliplr: DMatrix = flipCols
@@ -72,73 +75,53 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
 
   /** Rectangular slice `[r0:r1, c0:c1)` with rebasing — the 2-d
     * `SliceSlicesIntegers` (reference `slicing/_basic.py:357`); the range
-    * predicates push to the scan through every operator above. */
+    * predicates push to the scan through every operator above. An empty
+    * range gives an empty (0 x k) matrix. */
   def slice(r0: Long, r1: Long, c0: Long, c1: Long): DMatrix =
-    new DMatrix(
-      df.where(col("i") >= r0 && col("i") < r1 && col("j") >= c0 && col("j") < c1)
-        .select((col("i") - r0).as("i"), (col("j") - c0).as("j"), col("v")),
-      math.max(0L, r1 - r0), math.max(0L, c1 - c0)) // empty, never negative
+    new DMatrix(nd.sliceBy(Seq((r0, r1, 1L), (c0, c1, 1L))))
 
   /** Strided rectangular slice `[r0:r1:sr, c0:c1:sc)` (reference strided
     * basic indexing): the range predicates still push to the scan; the
     * strides are modular filters + integer-DIV reindexing. */
-  def slice(r0: Long, r1: Long, sr: Long, c0: Long, c1: Long, sc: Long): DMatrix = {
-    require(sr > 0 && sc > 0, "steps must be positive")
-    new DMatrix(
-      df.where(col("i") >= r0 && col("i") < r1 && col("j") >= c0 && col("j") < c1)
-        .where((col("i") - r0) % sr === 0 && (col("j") - c0) % sc === 0)
-        .selectExpr(s"(i - $r0) DIV $sr AS i", s"(j - $c0) DIV $sc AS j", "v"),
-      math.max(0L, (r1 - r0 + sr - 1) / sr), math.max(0L, (c1 - c0 + sc - 1) / sc))
-  }
+  def slice(r0: Long, r1: Long, sr: Long, c0: Long, c1: Long, sc: Long): DMatrix =
+    new DMatrix(nd.sliceBy(Seq((r0, r1, sr), (c0, c1, sc))))
 
   /** Flatten C-order to a 1-d element table (reference `ravel`,
     * `manipulation/_reshape.py:709`): an affine index map, no shuffle. */
-  def ravel: DataFrame = df.select((col("i") * cols + col("j")).as("idx"), col("v"))
+  def ravel: DataFrame = nd.ravel
 
   /** Reshape via the linearized index (reference `Reshape`,
     * `manipulation/_reshape.py:265`): relinearize — the element table makes
     * the reference's rechunk-planning unnecessary. */
-  def reshape(nr: Long, nc: Long): DMatrix = {
-    require(nr * nc == rows * cols, s"cannot reshape $rows x $cols to $nr x $nc")
-    new DMatrix(
-      ravel.select(expr(s"idx DIV $nc").as("i"), (col("idx") % nc).as("j"), col("v")),
-      nr, nc)
-  }
+  def reshape(nr: Long, nc: Long): DMatrix = new DMatrix(nd.reshape(Seq(nr, nc)))
 
   /** Materialize every grid cell, zero-filling absent ones — the bridge
-    * from the sparse element-table convention to dense numpy semantics.
-    * Needed before [[mask]]/[[setWhere]] when the predicate can match
-    * v = 0 (absent cells are implicit zeros and are otherwise not
-    * visited), and used internally by [[integralImage]]. */
-  def densify: DMatrix = {
-    val sess = df.sparkSession
-    val grid = sess.range(rows * cols)
-      .selectExpr(s"id DIV $cols AS i", s"id % $cols AS j")
-    wrap(grid.join(df, Seq("i", "j"), "left")
-      .select(col("i"), col("j"), coalesce(col("v"), lit(0.0)).as("v")))
-  }
+    * from the gapped element-table convention to dense numpy semantics.
+    * Needed before [[mask]] when the predicate can match v = 0 (absent
+    * cells are implicit zeros and are otherwise not visited), and used
+    * internally by [[integralImage]]. */
+  def densify: DMatrix = new DMatrix(nd.densify)
 
   /** Boolean mask over values/coords (2-d `x[mask]` analogue — keeps
     * coordinates, argwhere-style). Operates on PRESENT cells: a predicate
     * that should match implicit zeros needs [[densify]] first. */
-  def mask(predOverVIJ: String): DMatrix = wrap(df.where(predOverVIJ))
+  def mask(predOverVIJ: String): DMatrix = new DMatrix(nd.mask(predOverVIJ))
 
   /** Coordinates of the nonzero cells (reference `argwhere`,
     * `dask_array/routines/_nonzero.py`): one filtered O(nnz) projection
     * of the element table — the dense grid is never materialized. */
   def argwhere: DataFrame = df.where(col("v") =!= 0.0).select("i", "j")
 
-  /** Mask-valued assignment `x[cond] = value` (2-d SetItem bool path).
-    * Rewrites PRESENT cells; to assign where implicit zeros match,
-    * [[densify]] first. */
+  /** Mask-valued assignment `x[cond] = value` (2-d SetItem bool path);
+    * a gapped matrix densifies first, so implicit zeros are assigned too. */
   def setWhere(predOverVIJ: String, value: Double): DMatrix =
-    map(s"CASE WHEN $predOverVIJ THEN CAST($value AS DOUBLE) ELSE v END")
+    new DMatrix(nd.setWhere(predOverVIJ, value))
 
   // ---- triangles / diagonal ------------------------------------------------
   /** Keep the upper triangle at offset k, zero-fill semantics by omission
     * (reference `triu`, `routines/_triangular.py:12`). */
-  def triu(k: Long = 0): DMatrix = wrap(df.where(col("j") - col("i") >= k))
-  def tril(k: Long = 0): DMatrix = wrap(df.where(col("j") - col("i") <= k))
+  def triu(k: Long = 0): DMatrix = new DMatrix(nd.triu(k))
+  def tril(k: Long = 0): DMatrix = new DMatrix(nd.tril(k))
 
   /** Extract the k-diagonal as a 1-d element table (reference `diagonal`,
     * `creation/_diagonal.py:16`). */
@@ -156,9 +139,9 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
     * axis-subset reduction, `reductions/_reduction.py:89`): partial
     * aggregation gives the map-side combine of the reference's tree. */
   def reduceRows(sqlAggOverV: String): DataFrame = // one value per row i
-    df.groupBy("i").agg(expr(sqlAggOverV).cast("double").as("v")).withColumnRenamed("i", "idx")
+    nd.reduceAxes(Seq(1), sqlAggOverV).df.withColumnRenamed("c0", "idx")
   def reduceCols(sqlAggOverV: String): DataFrame =
-    df.groupBy("j").agg(expr(sqlAggOverV).cast("double").as("v")).withColumnRenamed("j", "idx")
+    nd.reduceAxes(Seq(0), sqlAggOverV).df.withColumnRenamed("c0", "idx")
 
   /** Diagonal sum (reference `trace`, `reductions/_trace.py:4`). */
   def trace: DataFrame = diag(0).agg(sum(col("v")).as("trace"))
@@ -198,13 +181,13 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
     * absent positions' carry (the output is inherently dense anyway). */
   def integralImage: DMatrix = {
     import org.apache.spark.sql.expressions.Window
-    val dense = densify.df
+    val grid = densify.df
     val byRow = Window.partitionBy("i").orderBy("j")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val byCol = Window.partitionBy("j").orderBy("i")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wrap(dense.withColumn("v", sum(col("v")).over(byRow))
-      .withColumn("v", sum(col("v")).over(byCol)))
+    new DMatrix(grid.withColumn("v", sum(col("v")).over(byRow))
+      .withColumn("v", sum(col("v")).over(byCol)), rows, cols, dense = true)
   }
 
   /** Central-difference gradient along axis 0 (reference `gradient`,
@@ -220,10 +203,10 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
     val w = Window.partitionBy("j").orderBy("i")
     val prev = lag(col("v"), 1).over(w)
     val next = lead(col("v"), 1).over(w)
-    wrap(densify.df.select(col("i"), col("j"),
+    new DMatrix(densify.df.select(col("i"), col("j"),
       when(prev.isNull, next - col("v"))
         .when(next.isNull, col("v") - prev)
-        .otherwise((next - prev) / 2.0).as("v")))
+        .otherwise((next - prev) / 2.0).as("v")), rows, cols, dense = true)
   }
 
   /** Gradient along axis 1 — the transpose composition. */
@@ -238,10 +221,10 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
     * in the ranking. */
   def sortRows: DMatrix = {
     import org.apache.spark.sql.expressions.Window
-    wrap(df
+    new DMatrix(df
       .withColumn("j2",
         row_number().over(Window.partitionBy("i").orderBy("v", "j")).cast("long") - 1)
-      .select(col("i"), col("j2").as("j"), col("v")))
+      .select(col("i"), col("j2").as("j"), col("v")), rows, cols, dense)
   }
 
   /** Apply an in-core kernel to each dense row — `apply_along_axis`
@@ -295,7 +278,7 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
         .select((col("i") * o.rows + col("bi")).as("i"),
           (col("j") * o.cols + col("bj")).as("j"),
           (col("v") * col("bv")).as("v")),
-      rows * o.rows, cols * o.cols)
+      rows * o.rows, cols * o.cols, dense && o.dense)
   }
 
   // ---- contraction ---------------------------------------------------------
@@ -311,7 +294,7 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
     val b = if (o.rows * o.cols <= broadcastElems) broadcast(b0) else b0
     new DMatrix(
       a.join(b, "k").groupBy("i", "j").agg(sum(col("va") * col("vb")).as("v")),
-      rows, o.cols)
+      rows, o.cols, dense && o.dense && cols > 0)
   }
   def @@(o: DMatrix): DMatrix = matmul(o)
 
@@ -342,7 +325,7 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
     new DMatrix(
       pairs.crossJoin(broadcast(scal))
         .selectExpr("j AS i", "j2 AS j", s"s / (wsum - $ddof * swa / wsum) AS v"),
-      cols, cols)
+      cols, cols, dense)
   }
 
   /** Tiled matrix multiply — the BLAS3 scale path (reference blockwise
@@ -410,13 +393,16 @@ final class DMatrix(val df: DataFrame, val rows: Long, val cols: Long) {
       }.toDF("i", "j", "v")
       .where(col("i") < rows && col("j") < o.cols)
 
-    new DMatrix(out, rows, o.cols)
+    new DMatrix(out, rows, o.cols, dense = false) // zero cells are not emitted
   }
 
   def elements: DataFrame = df
 }
 
 object DMatrix {
+  /** Coordinate names of the 2-d view. */
+  private val axes = Seq("i", "j")
+
   /** Build from a generator kernel over `i`,`j` — covers `fromfunction`,
     * `indices`, `meshgrid` (reference `creation/_mesh.py:114`): one
     * `spark.range` scan, the affine coordinate math folds into the scan. */
@@ -424,7 +410,7 @@ object DMatrix {
     new DMatrix(
       spark.range(rows * cols).selectExpr(
         s"id DIV $cols AS i", s"id % $cols AS j", s"CAST($sqlOverIJ AS DOUBLE) AS v"),
-      rows, cols)
+      rows, cols, dense = true)
 
   /** Identity at offset k (reference `eye`, `creation/_eye.py:13`):
     * materializes only the diagonal — O(n) rows, not O(n^2), the sparse
@@ -433,28 +419,29 @@ object DMatrix {
     new DMatrix(
       spark.range(n).selectExpr("id AS i", s"id + $k AS j", "CAST(1 AS DOUBLE) AS v")
         .where(col("j") >= 0 && col("j") < n),
-      n, n)
+      n, n, dense = false)
 
   /** 1-d → 2-d diagonal matrix (reference `diag`, `creation/_diag.py:15`). */
   def diagOf(vecElements: DataFrame, n: Long): DMatrix =
-    new DMatrix(vecElements.select(col("idx").as("i"), col("idx").as("j"), col("v")), n, n)
+    new DMatrix(vecElements.select(col("idx").as("i"), col("idx").as("j"), col("v")), n, n,
+      dense = false)
 
   /** Outer product of two 1-d element tables (reference `outer`,
     * `routines/_outer.py:6`): broadcast the right side — every (i,j) pair
-    * is produced map-side, no shuffle. */
+    * is produced map-side, no shuffle. Gapped: the vectors may be. */
   def outer(a: DataFrame, na: Long, b: DataFrame, nb: Long): DMatrix =
     new DMatrix(
       a.select(col("idx").as("i"), col("v").as("va"))
         .crossJoin(broadcast(b.select(col("idx").as("j"), col("v").as("vb"))))
         .select(col("i"), col("j"), (col("va") * col("vb")).as("v")),
-      na, nb)
+      na, nb, dense = false)
 
   /** 1-d element table reshaped to (rows x cols) C-order (reference
-    * `reshape`, `manipulation/_reshape.py:265`). */
+    * `reshape`, `manipulation/_reshape.py:265`). Gapped: the vector may be. */
   def fromVec(vecElements: DataFrame, rows: Long, cols: Long): DMatrix =
     new DMatrix(
       vecElements.select(expr(s"idx DIV $cols").as("i"), (col("idx") % cols).as("j"), col("v")),
-      rows, cols)
+      rows, cols, dense = false)
 
   /** Assemble a block matrix from a nested grid (reference `block`,
     * `stacking/_block.py:6`): pure unions with coordinate offsets — zero
@@ -476,6 +463,7 @@ object DMatrix {
       (m, bj) <- band.zipWithIndex
     } yield m.df.select(
       (col("i") + rowOffs(bi)).as("i"), (col("j") + colOffs(bj)).as("j"), col("v"))
-    new DMatrix(parts.reduce(_ unionByName _), rowOffs.last, colOffs.last)
+    new DMatrix(parts.reduce(_ unionByName _), rowOffs.last, colOffs.last,
+      grid.forall(_.forall(_.dense)))
   }
 }

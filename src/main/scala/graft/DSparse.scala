@@ -40,15 +40,7 @@ final class DSparse(val df: DataFrame, val rows: Long, val cols: Long,
   /** Elemwise over STORED values — zero-preserving kernels only (probed
     * like [[NdArray.map]]); others must go through [[toDense]] first. */
   def map(sqlOverV: String): DSparse = {
-    // probe f(0) against a LocalRelation leaf: ConvertToLocalRelation
-    // folds the projection driver-side, so the probe launches NO Spark
-    // job (spark.range(1) would run a whole single-task stage per call)
-    val sess = df.sparkSession
-    import sess.implicits._
-    val f0 = Seq(0.0).toDF("v")
-      .selectExpr(s"CAST($sqlOverV AS DOUBLE) AS r").collect()(0)
-    val zeroPreserving = f0.isNullAt(0) || f0.getDouble(0) == 0.0
-    require(zeroPreserving,
+    require(NdArray.zeroPreserving(df.sparkSession, sqlOverV),
       s"kernel '$sqlOverV' maps 0 to a nonzero value: applying it sparsely would " +
         "silently drop the implicit cells — call .toDense first to densify explicitly")
     new DSparse(
@@ -195,9 +187,9 @@ final class DSparse(val df: DataFrame, val rows: Long, val cols: Long,
       .groupBy("i").agg(sum(expr("v * xv")).as("v"))
 
   /** Bridge to the dense surface (the element table is shared — this is a
-    * zero-copy reinterpretation; DMatrix ops that need the zeros densify
-    * themselves). */
-  def toDense: DMatrix = new DMatrix(df, rows, cols)
+    * zero-copy reinterpretation as a gapped [[DMatrix]], whose ops fill
+    * the zeros where they need them). */
+  def toDense: DMatrix = new DMatrix(df, rows, cols, dense = false)
 
   /** One-line layout row in the [[graft.expr.VecExpr.chunkReport]] idiom:
     * shape, stored nonzeros, density, and stored-vs-dense bytes — the

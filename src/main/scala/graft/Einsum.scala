@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** einsum over element-table matrices (reference `dask_array/_einsum.py:181`
+/** einsum over element-table arrays (reference `dask_array/_einsum.py:181`
   * — notation parser lowering to a single blockwise contraction; here the
   * lowering target is the join+agg plan of [[DMatrix.matmul]]).
   *
-  * Supported: any number of 2-d operands, index letters, repeated letters
-  * within an operand (diagonal extraction, `"ii->i"`), contraction over
-  * any subset (`"ij,jk->ik"`, `"ij,ij->"`, `"ij->j"`), pure permutation
-  * (`"ij->ji"`), and n-ary chains (`"ij,jk,kl->il"`).
+  * Supported: any number of operands of any rank, index letters, repeated
+  * letters within an operand (diagonal extraction, `"ii->i"`), contraction
+  * over any subset (`"ij,jk->ik"`, `"ij,ij->"`, `"ij->j"`), pure
+  * permutation (`"ij->ji"`), n-ary chains (`"ij,jk,kl->il"`) and numpy's
+  * `...` ellipsis.
   *
   * N-ary plans fold left with EAGER intermediate contraction: after each
   * join, any letter that appears in no remaining operand and not in the
@@ -53,10 +54,9 @@ object Einsum {
     }
   }
 
-  /** The shared n-ary contraction fold (2-d and N-d lower to the same
-    * letter algebra): greedily join shared-letter operands, pre-reduce
-    * each side's exclusively-held dead letters, and sum out letters dead
-    * to the remaining expression after each merge. */
+  /** The n-ary contraction fold: greedily join shared-letter operands,
+    * pre-reduce each side's exclusively-held dead letters, and sum out
+    * letters dead to the remaining expression after each merge. */
   private def foldContract(first: (DataFrame, Set[String]),
                            rest: List[(DataFrame, Set[String])],
                            outLetters: Seq[String]): (DataFrame, Set[String]) = {
@@ -104,44 +104,9 @@ object Einsum {
         .agg(sum(product).as("v"))
   }
 
-  def apply(spec: String, ops: DMatrix*): DataFrame = {
-    val cleaned0 = spec.replace(" ", "")
-    // implicit mode (numpy: no '->'): output = the letters appearing
-    // exactly once across all operands, sorted — same rule as `nd`
-    val withArrow =
-      if (cleaned0.contains("->")) cleaned0
-      else {
-        val letters = cleaned0.replace(",", "")
-        val once = letters.groupBy(identity).collect {
-          case (c, g) if g.length == 1 => c
-        }.toSeq.sorted.mkString
-        cleaned0 + "->" + once
-      }
-    val Array(lhs, rhs) = withArrow.split("->", -1)
-    val inSpecs = lhs.split(",").toSeq
-    require(inSpecs.length == ops.length, s"$spec expects ${inSpecs.length} operands")
-    require(ops.nonEmpty, "einsum needs at least one operand")
-    val outLetters = rhs.toSeq.map(_.toString)
-
-    // per-operand: rename coords to letters, collapse repeated letters
-    def prep(m: DMatrix, letters: String, vName: String): DataFrame = {
-      require(letters.length == 2, s"operand spec '$letters' must be 2-d")
-      val (a, b) = (letters(0).toString, letters(1).toString)
-      if (a == b) // diagonal: "ii" → one coordinate
-        m.df.where(col("i") === col("j"))
-          .select(col("i").as(a), col("v").as(vName))
-      else
-        m.df.select(col("i").as(a), col("j").as(b), col("v").as(vName))
-    }
-
-    val pending: List[(DataFrame, Set[String])] =
-      inSpecs.zip(ops).zipWithIndex.map { case ((ls, m), n) =>
-        (prep(m, ls, s"v$n").withColumnRenamed(s"v$n", "vr"), ls.distinct.map(_.toString).toSet)
-      }.toList
-
-    val (acc, accLetters) = foldContract(pending.head, pending.tail, outLetters)
-    finish(acc, accLetters, outLetters)
-  }
+  /** einsum over [[DMatrix]] operands: their [[NdArray]] views through
+    * [[nd]], so the 2-d path has no plan of its own. */
+  def apply(spec: String, ops: DMatrix*): DataFrame = nd(spec, ops.map(_.nd): _*)
 
   /** numpy ellipsis sugar (reference einsum `...` broadcasting,
     * `dask_array/_einsum.py`): `...` in an operand stands for its
@@ -174,12 +139,12 @@ object Einsum {
 
   /** einsum over [[NdArray]] operands of ANY rank (the reference's einsum
     * is N-dimensional; `"bij,bjk->bik"` is one call, not a special-cased
-    * batch op). Same plan algebra as the 2-d form — rename coordinate
-    * columns to index letters, fold with shared-letter joins, pre-join
-    * dead-letter reduction, and EAGER intermediate contraction — the
-    * letter count per operand is just its rank. Repeated letters within
-    * an operand take the diagonal (equality predicate over the repeated
-    * coordinates). Output columns are the `->` letters plus `v`. */
+    * batch op): rename coordinate columns to index letters, fold with
+    * shared-letter joins, pre-join dead-letter reduction, and EAGER
+    * intermediate contraction — the letter count per operand is its
+    * rank. Repeated letters within an operand take the diagonal (equality
+    * predicate over the repeated coordinates). Output columns are the
+    * `->` letters plus `v`. */
   def nd(spec: String, ops: NdArray*): DataFrame = {
     val cleaned = spec.replace(" ", "")
     // implicit mode (numpy: no '->'): output = '...' (if present) then
@@ -206,13 +171,12 @@ object Einsum {
         s"operand spec '$letters' is rank ${letters.length}, array is rank ${a.rank}")
       val ls = letters.map(_.toString)
       // diagonal collapse: all positions of a repeated letter must agree
-      val firstPos = ls.zipWithIndex.groupBy(_._1).map { case (l, g) => l -> g.head._2 }
+      def first(l: String) = a.names(ls.indexOf(l))
       val pred = ls.zipWithIndex.collect {
-        case (l, p) if firstPos(l) != p => s"c${firstPos(l)} = c$p"
+        case (l, p) if ls.indexOf(l) != p => s"${first(l)} = ${a.names(p)}"
       }.mkString(" AND ")
       val filtered = if (pred.isEmpty) a.df else a.df.where(pred)
-      filtered.selectExpr(
-        firstPos.toSeq.map { case (l, p) => s"c$p AS $l" } :+ s"v AS $vName": _*)
+      filtered.selectExpr(ls.distinct.map(l => s"${first(l)} AS $l") :+ s"v AS $vName": _*)
     }
 
     val pending: List[(DataFrame, Set[String])] =

@@ -114,6 +114,6 @@ object GUFunc {
       require(out.length == outK, s"kernel returned ${out.length}, expected $outK")
       out.iterator.zipWithIndex.collect { case (v, j) if v != 0.0 => (i, j.toLong, v) }
     }.toDF("i", "j", "v")
-    new DMatrix(outDF, ops.head.rows, outK)
+    new DMatrix(outDF, ops.head.rows, outK, dense = false) // zero outputs are dropped
   }
 }

@@ -3,17 +3,34 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Lazy N-dimensional array of arbitrary rank as an element table
-  * `(c0 BIGINT, …, c{r-1} BIGINT, v DOUBLE)` — the general form of the
-  * reference's chunked N-d array (reference `dask_array/_expr.py:221`,
-  * chunks as a rank-length tuple; axis-tuple reductions
-  * `reductions/_reduction.py:89-95`; transpose
+/** Lazy N-dimensional array of any rank as an element table
+  * `(n0 BIGINT, …, n{r-1} BIGINT, v DOUBLE)` — the one element-table core,
+  * the general form of the reference's chunked N-d array (reference
+  * `dask_array/_expr.py:221`, chunks as a rank-length tuple; axis-tuple
+  * reductions `reductions/_reduction.py:89-95`; transpose
   * `manipulation/_transpose.py:14`; reshape `_reshape.py:132`).
   *
-  * [[DArray]] (rank 1, with its own slice-pushdown expression layer),
-  * [[DMatrix]] (rank 2) and [[DTensor]] (batch×rows×cols) stay the tuned
-  * fast paths; NdArray covers every higher rank with the same element-table
-  * design: each coordinate is its own BIGINT column, so
+  * The coordinate column names are a field: `c0 … c{r-1}` for arrays built
+  * here, `i`, `j` for the rank-2 [[DMatrix]] view, which keeps only the
+  * 2-d kernels whose plans really differ (matmul, tiled matmul, gram,
+  * kron, …) and calls these ops for everything else. Ops that keep the
+  * rank keep the names; ops that change it name their output `c0 …`.
+  * [[DArray]] (rank 1) keeps its own slice-pushdown expression layer.
+  *
+  * Density. Absent cells read as zero (the repo-wide implicit-zero
+  * convention), and `dense` is the static fact that every grid cell is
+  * present. `tabulate`, `densify` and the ops that keep every cell (shape
+  * ops, dense⊗dense `zip` and contraction) are dense; `triu`/`tril`,
+  * `mask`, `fromFlat` (store reads), zero pads and the [[DMatrix]]
+  * `eye`/`diagOf`/`matmulTiled` outputs are gapped. The fact picks the
+  * plan, so dense inputs pay nothing for the convention:
+  *  - `zip` of two dense arrays is an inner equi-join; a gapped operand
+  *    takes the full outer join with zero fill;
+  *  - `map` on a dense array is a plain projection; on a gapped one the
+  *    kernel's f(0) is probed once ([[NdArray.zeroPreserving]]), and a
+  *    kernel with f(0) ≠ 0 densifies first.
+  *
+  * Each coordinate is its own BIGINT column, so
   *  - transpose is a pure column-rename projection (zero movement),
   *  - an axis-subset reduction is ONE groupBy on the kept coordinate
   *    columns — one partial-aggregated shuffle no matter how many axes
@@ -26,12 +43,18 @@ import org.apache.spark.sql.functions._
   * predicates, equi-joins and groupBys, so pushdown/pruning/AQE apply
   * unchanged at any rank.
   */
-final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
-  require(shape.nonEmpty && shape.forall(_ > 0), s"bad shape $shape")
+final class NdArray(val df: DataFrame, val shape: Seq[Long], val dense: Boolean,
+                    val names: Seq[String]) {
+  require(shape.nonEmpty && shape.forall(_ >= 0), s"bad shape $shape")
+  require(names.length == shape.length && names.distinct == names,
+    s"need ${shape.length} distinct coordinate names, got $names")
 
   def rank: Int = shape.length
   def size: Long = shape.product
-  private def coords: Seq[String] = (0 until rank).map(i => s"c$i")
+
+  /** Coordinate names of a rank-`r` result: this array's own when the
+    * rank is kept, `c0 …` when it changes. */
+  private def namesOf(r: Int): Seq[String] = if (r == rank) names else NdArray.axes(r)
 
   /** Row-major strides: stride(i) = product of shape(i+1..). */
   private def strides(s: Seq[Long]): Seq[Long] =
@@ -39,55 +62,86 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
 
   // ---- elemwise ------------------------------------------------------------
 
-  /** Elemwise kernel. The element table is SPARSE (absent cells read as
-    * zero — the repo-wide implicit-zero convention), so a kernel with
-    * f(0) ≠ 0 must see the absent cells too: the kernel is probed once on
-    * a one-row frame driver-side, and only zero-preserving kernels take
-    * the narrow sparse projection; others densify first (their output is
-    * a dense grid regardless, so the fill is inherent, not overhead). */
-  def map(sqlOverV: String): NdArray = {
-    val zeroPreserving = NdArray.zeroProbe.computeIfAbsent(sqlOverV, { k =>
-      val f0 = df.sparkSession.range(1)
-        .selectExpr("CAST(0.0 AS DOUBLE) AS v")
-        .selectExpr(s"CAST($k AS DOUBLE) AS r").collect()(0)
-      java.lang.Boolean.valueOf(f0.isNullAt(0) || f0.getDouble(0) == 0.0)
-    })
-    val base = if (zeroPreserving) df else densify.df
-    new NdArray(base.selectExpr(coords :+ s"CAST($sqlOverV AS DOUBLE) AS v": _*), shape)
-  }
+  /** Elemwise kernel. A dense array is a plain projection. On a gapped
+    * one the kernel must see the absent cells too when f(0) ≠ 0: the
+    * kernel is probed once driver-side ([[NdArray.zeroPreserving]]), and
+    * only zero-preserving kernels take the narrow gapped projection;
+    * others densify first (their output is a dense grid regardless, so
+    * the fill is inherent, not overhead). */
+  def map(sqlOverV: String): NdArray =
+    if (dense || NdArray.zeroPreserving(df.sparkSession, sqlOverV)) project(sqlOverV)
+    else densify.map(sqlOverV)
+
+  private def project(sqlOverV: String): NdArray =
+    new NdArray(df.selectExpr(names :+ s"CAST($sqlOverV AS DOUBLE) AS v": _*),
+      shape, dense, names)
 
   /** Materialize every grid cell: absent cells become explicit 0.0 rows.
-    * A generated full-grid left join — the bridge from the sparse
+    * A generated full-grid left join — the bridge from the gapped
     * convention to numpy's dense semantics when an operator needs to
-    * touch the zeros. */
+    * touch the zeros. Always builds the join, dense input or not. */
   def densify: NdArray = {
-    val spark = df.sparkSession
     val st = strides(shape)
-    val grid = spark.range(size).selectExpr(
-      shape.indices.map(a => s"(id DIV ${st(a)}L) % ${shape(a)}L AS c$a"): _*)
+    val grid = df.sparkSession.range(size).selectExpr(shape.indices.map { a =>
+      val q = if (st(a) == 1L) "id" else s"id DIV ${st(a)}"
+      val c = if (a == 0) q else if (st(a) == 1L) s"id % ${shape(a)}" else s"($q) % ${shape(a)}"
+      s"$c AS ${names(a)}"
+    }: _*)
     new NdArray(
-      grid.join(df, coords, "left")
-        .selectExpr(coords :+ "coalesce(v, CAST(0.0 AS DOUBLE)) AS v": _*),
-      shape)
+      grid.join(df, names, "left")
+        .select(names.map(col) :+ coalesce(col("v"), lit(0.0)).as("v"): _*),
+      shape, dense = true, names)
   }
 
-  /** Aligned elemwise combine — equi-join on all coordinates. The join is
-    * FULL OUTER with absent cells coalesced to 0.0, honoring the repo-wide
-    * implicit-zero element-table convention ([[DMatrix]] densify, vindex
-    * fill): a gapped table built via [[NdArray.fromFlat]] combines as if
-    * its missing positions held zero instead of silently dropping the
-    * other side's elements. Dense inputs plan identically to an inner
-    * join (no absent keys → no extra rows). */
+  /** Aligned elemwise combine — equi-join on all coordinates. Two dense
+    * operands have no absent keys, so the join is a plain inner join.
+    * With a gapped operand it is FULL OUTER with absent cells read as
+    * 0.0 (the implicit-zero convention): a gapped table combines as if its
+    * missing positions held zero instead of silently dropping the other
+    * side's elements. When both are gapped and the kernel maps (0, 0) to
+    * a nonzero value, this side densifies first. */
   def zip(o: NdArray, sqlOverV1V2: String): NdArray = {
     require(shape == o.shape, s"shape mismatch $shape vs ${o.shape}")
-    val l = df.withColumnRenamed("v", "v1")
-    val r = o.df.withColumnRenamed("v", "v2")
-    // USING-column full outer join coalesces the coordinate keys
-    val joined = l.join(r, coords, "full_outer")
-      .na.fill(0.0, Seq("v1", "v2"))
-    new NdArray(
-      joined.selectExpr(coords :+ s"CAST($sqlOverV1V2 AS DOUBLE) AS v": _*),
-      shape)
+    require(names == o.names, s"coordinate names differ: $names vs ${o.names}")
+    if (!dense && !o.dense && !NdArray.zeroPreserving(df.sparkSession, sqlOverV1V2))
+      densify.zip(o, sqlOverV1V2)
+    else {
+      val l = df.withColumnRenamed("v", "v1")
+      val r = o.df.withColumnRenamed("v", "v2")
+      // USING-column joins coalesce the coordinate keys
+      val joined =
+        if (dense && o.dense) l.join(r, names)
+        else l.join(r, names, "full_outer").na.fill(0.0, Seq("v1", "v2"))
+      new NdArray(
+        joined.selectExpr(names :+ s"CAST($sqlOverV1V2 AS DOUBLE) AS v": _*),
+        shape, dense || o.dense, names)
+    }
+  }
+
+  /** Boolean mask over values/coordinates (`x[mask]` analogue — keeps
+    * coordinates, argwhere-style). Operates on PRESENT cells and drops
+    * the rest, so the result is gapped: a predicate that should match
+    * implicit zeros needs [[densify]] first. */
+  def mask(predOverCoordsV: String): NdArray =
+    new NdArray(df.where(predOverCoordsV), shape, dense = false, names)
+
+  /** Mask-valued assignment `x[cond] = value` (SetItem bool path). The
+    * predicate may read coordinates, so it cannot be probed at zero: a
+    * gapped array densifies first, so implicit zeros are assigned too. */
+  def setWhere(predOverCoordsV: String, value: Double): NdArray =
+    (if (dense) this else densify)
+      .project(s"CASE WHEN $predOverCoordsV THEN CAST($value AS DOUBLE) ELSE v END")
+
+  /** Keep the upper triangle of the last two axes at offset k (reference
+    * `triu`, `routines/_triangular.py:12`): a coordinate predicate, the
+    * dropped cells are implicit zeros. */
+  def triu(k: Long = 0): NdArray = triangle(_ >= k)
+  def tril(k: Long = 0): NdArray = triangle(_ <= k)
+
+  private def triangle(keep: Column => Column): NdArray = {
+    require(rank >= 2, s"triangle needs rank >= 2, got $rank")
+    new NdArray(df.where(keep(col(names(rank - 1)) - col(names(rank - 2)))),
+      shape, dense = false, names)
   }
 
   // ---- shape ---------------------------------------------------------------
@@ -96,8 +150,8 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     * axis perm(a) — a pure projection, no data movement. */
   def transpose(perm: Seq[Int]): NdArray = {
     require(perm.sorted == (0 until rank), s"bad permutation $perm for rank $rank")
-    val proj = perm.zipWithIndex.map { case (src, dst) => s"c$src AS c$dst" } :+ "v"
-    new NdArray(df.selectExpr(proj: _*), perm.map(shape))
+    val proj = perm.zipWithIndex.map { case (src, dst) => s"${names(src)} AS ${names(dst)}" } :+ "v"
+    new NdArray(df.selectExpr(proj: _*), perm.map(shape), dense, names)
   }
 
   /** numpy `rollaxis(a, axis, start)` (reference exports it alongside
@@ -145,42 +199,57 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     bounds.zip(shape).foreach { case ((lo, hi), n) =>
       require(lo >= 0 && lo < hi && hi <= n, s"bad bounds $bounds for $shape")
     }
-    val pred = bounds.zipWithIndex.map { case ((lo, hi), a) =>
-      s"c$a >= $lo AND c$a < $hi"
-    }.mkString(" AND ")
-    val rebased = bounds.zipWithIndex.map { case ((lo, _), a) => s"c$a - $lo AS c$a" } :+ "v"
-    new NdArray(df.where(pred).selectExpr(rebased: _*),
-      bounds.map { case (lo, hi) => hi - lo })
+    sliceBy(bounds.map { case (lo, hi) => (lo, hi, 1L) })
   }
+
+  /** Strided slice `[lo:hi:step)` per axis (reference strided basic
+    * indexing, `slicing/_basic.py:357`), unchecked: the range predicates
+    * clip out-of-grid bounds and an empty range gives a zero extent. With
+    * any step ≠ 1, every axis adds a modular filter and DIV-rebases. */
+  private[graft] def sliceBy(bounds: Seq[(Long, Long, Long)]): NdArray = {
+    require(bounds.length == rank && bounds.forall(_._3 > 0), s"bad strided bounds $bounds")
+    val axes = bounds.zip(names)
+    val strided = bounds.exists(_._3 != 1L)
+    val inRange = df.where(axes.map { case ((lo, hi, _), c) => s"$c >= $lo AND $c < $hi" }
+      .mkString(" AND "))
+    val kept =
+      if (!strided) inRange
+      else inRange.where(axes.map { case ((lo, _, st), c) => s"($c - $lo) % $st = 0" }
+        .mkString(" AND "))
+    val rebased = axes.map { case ((lo, _, st), c) =>
+      if (strided) s"($c - $lo) DIV $st AS $c" else s"$c - $lo AS $c"
+    } :+ "v"
+    new NdArray(kept.selectExpr(rebased: _*),
+      bounds.map { case (lo, hi, st) => math.max(0L, (hi - lo + st - 1) / st) }, dense, names)
+  }
+
+  /** Row-major flat index of a cell, as SQL over the coordinates. */
+  private def flatIndex: String =
+    names.zip(strides(shape)).map { case (c, st) => s"$c * ${st}L" }.mkString(" + ")
 
   /** Row-major reshape (reference `_reshape.py:132`): exact integer
     * ravel on the old strides, unravel on the new — one projection. */
   def reshape(newShape: Seq[Long]): NdArray = {
     require(newShape.product == size, s"reshape $shape -> $newShape size mismatch")
-    val flat = coords.zip(strides(shape))
-      .map { case (c, st) => s"$c * ${st}L" }.mkString(" + ")
     val nst = strides(newShape)
+    val out = namesOf(newShape.length)
     val proj = newShape.indices.map { a =>
-      s"(($flat) DIV ${nst(a)}L) % ${newShape(a)}L AS c$a"
+      s"(($flatIndex) DIV ${nst(a)}L) % ${newShape(a)}L AS ${out(a)}"
     } :+ "v"
-    new NdArray(df.selectExpr(proj: _*), newShape)
+    new NdArray(df.selectExpr(proj: _*), newShape, dense, out)
   }
 
   /** Flatten to the 1-d element table `(idx, v)`. */
-  def ravel: DataFrame = {
-    val flat = coords.zip(strides(shape))
-      .map { case (c, st) => s"$c * ${st}L" }.mkString(" + ")
-    df.selectExpr(s"($flat) AS idx", "v")
-  }
+  def ravel: DataFrame = df.selectExpr(s"($flatIndex) AS idx", "v")
 
   /** Reverse one axis — pure coordinate remap (reference `flip`,
     * `manipulation/_flip.py:10`). */
   def flip(axis: Int): NdArray = {
     require(axis >= 0 && axis < rank)
     val proj = (0 until rank).map { a =>
-      if (a == axis) s"${shape(a) - 1}L - c$a AS c$a" else s"c$a"
+      if (a == axis) s"${shape(a) - 1}L - ${names(a)} AS ${names(a)}" else names(a)
     } :+ "v"
-    new NdArray(df.selectExpr(proj: _*), shape)
+    new NdArray(df.selectExpr(proj: _*), shape, dense, names)
   }
 
   /** Circular shift along one axis — coordinate remap (reference `roll`,
@@ -190,9 +259,9 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     val n = shape(axis)
     val sh = ((s % n) + n) % n
     val proj = (0 until rank).map { a =>
-      if (a == axis) s"(c$a + ${sh}L) % ${n}L AS c$a" else s"c$a"
+      if (a == axis) s"(${names(a)} + ${sh}L) % ${n}L AS ${names(a)}" else names(a)
     } :+ "v"
-    new NdArray(df.selectExpr(proj: _*), shape)
+    new NdArray(df.selectExpr(proj: _*), shape, dense, names)
   }
 
   /** Concatenate along one axis — zero-movement union with an offset on
@@ -200,16 +269,17 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     * `stacking/_concatenate.py:20`); all other extents must match. */
   def concat(o: NdArray, axis: Int): NdArray = {
     require(o.rank == rank && axis >= 0 && axis < rank)
+    require(o.names == names, s"coordinate names differ: $names vs ${o.names}")
     (0 until rank).foreach { a =>
       require(a == axis || shape(a) == o.shape(a),
         s"concat axis $axis: extent mismatch at axis $a ($shape vs ${o.shape})")
     }
     val off = shape(axis)
     val shifted = o.df.selectExpr((0 until rank).map { a =>
-      if (a == axis) s"c$a + ${off}L AS c$a" else s"c$a"
+      if (a == axis) s"${names(a)} + ${off}L AS ${names(a)}" else names(a)
     } :+ "v": _*)
     new NdArray(df.unionByName(shifted),
-      shape.updated(axis, shape(axis) + o.shape(axis)))
+      shape.updated(axis, shape(axis) + o.shape(axis)), dense && o.dense, names)
   }
 
   /** Constant-pad one axis (numpy `pad` constant mode at any rank —
@@ -223,14 +293,14 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     val spark = df.sparkSession
     def slab(extent: Long): Option[NdArray] =
       if (extent == 0) None
-      else Some(NdArray.tabulate(spark, shape.updated(axis, extent), cv.toString))
+      else Some(NdArray.grid(spark, shape.updated(axis, extent), names, cv.toString))
     if (cv == 0.0) {
       // pads are implicit zeros: just shift the axis coordinate
       val proj = (0 until rank).map { a =>
-        if (a == axis) s"c$a + ${before}L AS c$a" else s"c$a"
+        if (a == axis) s"${names(a)} + ${before}L AS ${names(a)}" else names(a)
       } :+ "v"
       new NdArray(df.selectExpr(proj: _*),
-        shape.updated(axis, before + shape(axis) + after))
+        shape.updated(axis, before + shape(axis) + after), dense && before + after == 0, names)
     } else {
       val mid = this
       val withBefore = slab(before).map(_.concat(mid, axis)).getOrElse(mid)
@@ -286,26 +356,29 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     val reps = org.apache.spark.sql.functions.broadcast(
       spark.range(n).toDF("rep__"))
     val proj = (0 until rank).map { a =>
-      if (a == axis) s"rep__ AS c$a" else s"c$a"
+      if (a == axis) s"rep__ AS ${names(a)}" else names(a)
     } :+ "v"
-    new NdArray(df.crossJoin(reps).selectExpr(proj: _*), shape.updated(axis, n))
+    new NdArray(df.crossJoin(reps).selectExpr(proj: _*), shape.updated(axis, n), dense, names)
   }
 
   /** Drop a size-1 axis / insert one — coordinate projections. */
   def squeeze(axis: Int): NdArray = {
     require(shape(axis) == 1, s"axis $axis has extent ${shape(axis)}")
     val kept = (0 until rank).filterNot(_ == axis)
-    val proj = kept.zipWithIndex.map { case (src, dst) => s"c$src AS c$dst" } :+ "v"
-    new NdArray(df.selectExpr(proj: _*), kept.map(shape))
+    val out = namesOf(kept.length)
+    val proj = kept.zipWithIndex.map { case (src, dst) => s"${names(src)} AS ${out(dst)}" } :+ "v"
+    new NdArray(df.selectExpr(proj: _*), kept.map(shape), dense, out)
   }
   def expandDims(axis: Int): NdArray = {
     require(axis >= 0 && axis <= rank)
+    val out = namesOf(rank + 1)
+    def as(src: String, dst: String) = if (src == dst) src else s"$src AS $dst"
     val proj = (0 until rank + 1).map { a =>
-      if (a < axis) s"c$a" else if (a == axis) s"CAST(0 AS BIGINT) AS c$a"
-      else s"c${a - 1} AS c$a"
+      if (a < axis) as(names(a), out(a)) else if (a == axis) s"CAST(0 AS BIGINT) AS ${out(a)}"
+      else s"${names(a - 1)} AS ${out(a)}"
     } :+ "v"
     new NdArray(df.selectExpr(proj: _*),
-      (shape.take(axis) :+ 1L) ++ shape.drop(axis))
+      (shape.take(axis) :+ 1L) ++ shape.drop(axis), dense, out)
   }
 
   // ---- reductions ----------------------------------------------------------
@@ -319,15 +392,17 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     require(drop.nonEmpty && drop.forall(a => a >= 0 && a < rank) &&
       drop.distinct.length == drop.length, s"bad axes $drop")
     val kept = (0 until rank).filterNot(drop.contains)
-    if (kept.isEmpty)
+    if (kept.isEmpty) {
+      val out = namesOf(1)
       new NdArray(
         df.agg(expr(sqlAggOverV).cast("double").as("v"))
-          .selectExpr("CAST(0 AS BIGINT) AS c0", "v"), Seq(1L))
-    else {
-      val agged = df.groupBy(kept.map(a => col(s"c$a")): _*)
+          .selectExpr(s"CAST(0 AS BIGINT) AS ${out.head}", "v"), Seq(1L), dense = true, out)
+    } else {
+      val agged = df.groupBy(kept.map(a => col(names(a))): _*)
         .agg(expr(sqlAggOverV).cast("double").as("v"))
-      val proj = kept.zipWithIndex.map { case (src, dst) => s"c$src AS c$dst" } :+ "v"
-      new NdArray(agged.selectExpr(proj: _*), kept.map(shape))
+      val out = namesOf(kept.length)
+      val proj = kept.zipWithIndex.map { case (src, dst) => s"${names(src)} AS ${out(dst)}" } :+ "v"
+      new NdArray(agged.selectExpr(proj: _*), kept.map(shape), dense, out)
     }
   }
 
@@ -352,10 +427,10 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
           s"shape $shape not divisible by $factors (pass trimExcess=true to trim)")
         this
       }
-    val keys = (0 until rank).map(a => expr(s"c$a DIV ${factors(a)}").as(s"c$a"))
+    val keys = (0 until rank).map(a => expr(s"${names(a)} DIV ${factors(a)}").as(names(a)))
     new NdArray(
       base.df.groupBy(keys: _*).agg(expr(sqlAggOverV).cast("double").as("v")),
-      base.shape.zip(factors).map { case (n, k) => n / k })
+      base.shape.zip(factors).map { case (n, k) => n / k }, dense, names)
   }
 
   /** Cumulative reduction along one axis at any rank (numpy
@@ -373,7 +448,7 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
   def cumAxis(axis: Int, op: String = "sum", blockSize: Long = 1024L): NdArray = {
     require(axis >= 0 && axis < rank, s"bad axis $axis for rank $rank")
     import org.apache.spark.sql.expressions.Window
-    val others = (0 until rank).filterNot(_ == axis).map(a => s"c$a")
+    val others = (0 until rank).filterNot(_ == axis).map(names)
     val (aggF, combine): (Column => Column, (Column, Column) => Column) = op match {
       case "sum" => ((c: Column) => sum(c),
         (l: Column, cr: Column) => l + coalesce(cr, lit(0.0)))
@@ -383,9 +458,9 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
         (l: Column, cr: Column) => when(cr.isNull, l).otherwise(greatest(l, cr)))
       case other => throw new IllegalArgumentException(s"cumAxis op $other")
     }
-    val base = df.withColumn("blk", expr(s"c$axis DIV $blockSize"))
+    val base = df.withColumn("blk", expr(s"${names(axis)} DIV $blockSize"))
     val grp = "blk" +: others
-    val wLocal = Window.partitionBy(grp.map(col): _*).orderBy(col(s"c$axis"))
+    val wLocal = Window.partitionBy(grp.map(col): _*).orderBy(col(names(axis)))
     val local = base.withColumn("lv", aggF(col("v")).over(wLocal))
     // rank-1 has no off-axis coordinates: fall back to a constant-valued
     // non-foldable key so the bounded carry stays an EXPLICITLY partitioned
@@ -400,9 +475,9 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
       .select(grp.map(col) :+ col("cr"): _*)
     val joined = local.join(carry, grp)
     new NdArray(
-      joined.select(coords.map(col) :+
+      joined.select(names.map(col) :+
         combine(col("lv"), col("cr")).cast("double").as("v"): _*),
-      shape)
+      shape, dense, names)
   }
 
   /** Difference along one axis (numpy `diff(axis=k)`): a pure composition
@@ -446,31 +521,32 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     for (a <- 0 until rank if halos(a) > 0) {
       val h = halos(a)
       val n = shape(a)
+      val c = names(a)
       require(h <= n, s"halo $h exceeds axis $a extent $n")
       val images = mode match {
         case "reflect" =>
           // core c+h; sources c in [0,h) also at h-1-c; c in [n-h,n)
           // also at h+2n-1-c (mirror with edge repeat, numpy 'symmetric'
           // ghost convention the oracle replays)
-          s"filter(array(c$a + ${h}L, " +
-            s"IF(c$a < ${h}L, ${h - 1}L - c$a, NULL), " +
-            s"IF(c$a >= ${n - h}L, ${h + 2 * n - 1}L - c$a, NULL)), " +
+          s"filter(array($c + ${h}L, " +
+            s"IF($c < ${h}L, ${h - 1}L - $c, NULL), " +
+            s"IF($c >= ${n - h}L, ${h + 2 * n - 1}L - $c, NULL)), " +
             "x -> x IS NOT NULL)"
         case "wrap" =>
           // core c+h; sources c in [n-h,n) also at c-(n-h); c in [0,h)
           // also at c+h+n (torus)
-          s"filter(array(c$a + ${h}L, " +
-            s"IF(c$a >= ${n - h}L, c$a - ${n - h}L, NULL), " +
-            s"IF(c$a < ${h}L, c$a + ${h + n}L, NULL)), " +
+          s"filter(array($c + ${h}L, " +
+            s"IF($c >= ${n - h}L, $c - ${n - h}L, NULL), " +
+            s"IF($c < ${h}L, $c + ${h + n}L, NULL)), " +
             "x -> x IS NOT NULL)"
         case other => sys.error(s"unsupported ghost mode '$other' (reflect/wrap)")
       }
       cur = cur.selectExpr(
-        (0 until rank).filter(_ != a).map(x => s"c$x") ++
-          Seq(s"explode($images) AS c$a", "v"): _*)
+        (0 until rank).filter(_ != a).map(names) ++
+          Seq(s"explode($images) AS $c", "v"): _*)
     }
-    new NdArray(cur.selectExpr((0 until rank).map(x => s"c$x") :+ "v": _*),
-      (0 until rank).map(x => shape(x) + 2 * halos(x)))
+    new NdArray(cur.selectExpr(names :+ "v": _*),
+      (0 until rank).map(x => shape(x) + 2 * halos(x)), dense, names)
   }
 
   /** Rank-generic weighted-sum stencil — `map_overlap` at ANY rank for
@@ -489,10 +565,15 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     val contrib = stencilContrib(taps.map(_._1), Some(taps.map(_._2)),
       boundary, "v * w")
     new NdArray(
-      contrib.groupBy(coords.map(col): _*)
+      contrib.groupBy(names.map(col): _*)
         .agg(sum("v").cast("double").as("v")),
-      shape)
+      shape, stencilDense(boundary), names)
   }
+
+  /** A stencil over a dense array fills every cell when the ghosts give
+    * each cell a full neighborhood; with `constant` edges a cell may see
+    * no in-domain tap at all, so that output counts as gapped. */
+  private def stencilDense(boundary: String): Boolean = dense && boundary != "constant"
 
   /** Shared stencil scaffolding (one definition for the linear
     * [[stencilSum]] and nonlinear [[stencilAgg]] paths, so the halo /
@@ -515,7 +596,7 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
       if (boundary == "constant") this
       else ghostImages(halos.map(_.toLong), boundary)
     val shift = if (boundary == "constant") Seq.fill(rank)(0L) else halos.map(_.toLong)
-    val inBounds = (0 until rank).map(a => s"c$a >= 0 AND c$a < ${shape(a)}")
+    val inBounds = (0 until rank).map(a => s"${names(a)} >= 0 AND ${names(a)} < ${shape(a)}")
       .mkString(" AND ")
     val spark = df.sparkSession
     val tapRows = offsets.zipWithIndex.map { case (off, t) =>
@@ -530,7 +611,7 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
       spark.createDataFrame(spark.sparkContext.parallelize(tapRows, 1), tapSchema))
     ext.df.crossJoin(tapDf)
       .selectExpr((0 until rank).map { a =>
-        s"c$a - ${shift(a)}L - off$a AS c$a"
+        s"${names(a)} - ${shift(a)}L - off$a AS ${names(a)}"
       } :+ s"$valueExpr AS v": _*)
       .where(inBounds)
   }
@@ -558,9 +639,9 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
                  boundary: String = "constant"): NdArray = {
     val contrib = stencilContrib(offsets, None, boundary, "v")
     new NdArray(
-      contrib.groupBy(coords.map(col): _*)
+      contrib.groupBy(names.map(col): _*)
         .agg(expr(aggSqlOverV).cast("double").as("v")),
-      shape)
+      shape, stencilDense(boundary), names)
   }
 
   // ---- contraction ---------------------------------------------------------
@@ -589,23 +670,27 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
     val keptB = (0 until o.rank).filterNot(axesB.contains)
     // prefix-rename to avoid column collisions, join keys k0..k{m-1}
     val l = df.selectExpr(
-      (axesA.zipWithIndex.map { case (a, m) => s"c$a AS k$m" } ++
-        keptA.zipWithIndex.map { case (a, d) => s"c$a AS la$d" } :+ "v AS va"): _*)
+      (axesA.zipWithIndex.map { case (a, m) => s"${names(a)} AS k$m" } ++
+        keptA.zipWithIndex.map { case (a, d) => s"${names(a)} AS la$d" } :+ "v AS va"): _*)
     val r = o.df.selectExpr(
-      (axesB.zipWithIndex.map { case (b, m) => s"c$b AS k$m" } ++
-        keptB.zipWithIndex.map { case (b, d) => s"c$b AS rb$d" } :+ "v AS vb"): _*)
+      (axesB.zipWithIndex.map { case (b, m) => s"${o.names(b)} AS k$m" } ++
+        keptB.zipWithIndex.map { case (b, d) => s"${o.names(b)} AS rb$d" } :+ "v AS vb"): _*)
     val keys = axesA.indices.map(m => s"k$m")
     val outCols = keptA.indices.map(d => s"la$d") ++ keptB.indices.map(d => s"rb$d")
     val joined = l.join(r, keys)
+    val outShape =
+      if (outCols.isEmpty) Seq(1L) else keptA.map(shape) ++ keptB.map(o.shape)
+    val out = namesOf(outShape.length)
     val agged =
       if (outCols.isEmpty)
         joined.agg(sum(expr("va * vb")).as("v"))
-          .selectExpr("CAST(0 AS BIGINT) AS c0", "v")
+          .selectExpr(s"CAST(0 AS BIGINT) AS ${out.head}", "v")
       else joined.groupBy(outCols.map(col): _*).agg(sum(expr("va * vb")).as("v"))
-        .selectExpr(outCols.zipWithIndex.map { case (c, d) => s"$c AS c$d" } :+ "v": _*)
-    val outShape =
-      if (outCols.isEmpty) Seq(1L) else keptA.map(shape) ++ keptB.map(o.shape)
-    new NdArray(agged, outShape)
+        .selectExpr(outCols.zip(out).map { case (c, n) => s"$c AS $n" } :+ "v": _*)
+    // every kept-coordinate pair meets some contracted cell unless a
+    // contracted extent is empty
+    new NdArray(agged, outShape,
+      outCols.isEmpty || dense && o.dense && axesA.forall(shape(_) > 0), out)
   }
 
   def elements: DataFrame = df
@@ -624,10 +709,23 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long]) {
 }
 
 object NdArray {
-  /** Memoized driver-side probe results: kernel SQL → does it map 0 to
-    * 0/NULL? One tiny local evaluation per distinct kernel per JVM. */
-  private[graft] val zeroProbe =
+  /** The default coordinate names of a rank-`r` array: `c0 … c{r-1}`. */
+  def axes(r: Int): Seq[String] = (0 until r).map(a => s"c$a")
+
+  private val zeroProbe =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+
+  /** Does a kernel over `v` (or `v1`, `v2`) map zero input to 0 or NULL?
+    * Memoized per kernel SQL for the JVM. The kernel is evaluated on a
+    * one-row LocalRelation, which ConvertToLocalRelation folds
+    * driver-side, so the probe launches no Spark job. */
+  private[graft] def zeroPreserving(spark: SparkSession, kernelSql: String): Boolean =
+    zeroProbe.computeIfAbsent(kernelSql, { k =>
+      import spark.implicits._
+      val f0 = Seq((0.0, 0.0, 0.0)).toDF("v", "v1", "v2")
+        .selectExpr(s"CAST($k AS DOUBLE) AS r").collect()(0)
+      java.lang.Boolean.valueOf(f0.isNullAt(0) || f0.getDouble(0) == 0.0)
+    })
 
   /** numpy `broadcast_arrays` (reference `routines/_broadcast.py`):
     * expand both operands to their common broadcast shape — leading
@@ -673,25 +771,29 @@ object NdArray {
   def dstack(arrays: Seq[NdArray]): NdArray =
     arrays.map(_.atleast3d).reduce(_.concat(_, 2))
   /** Generator over the full coordinate grid — one `spark.range` scan with
-    * exact unravel arithmetic; the kernel sees `c0 … c{r-1}`. */
-  def tabulate(spark: SparkSession, shape: Seq[Long], sqlOverCoords: String): NdArray = {
+    * exact unravel arithmetic; the kernel sees `c0 … c{r-1}`. Dense. */
+  def tabulate(spark: SparkSession, shape: Seq[Long], sqlOverCoords: String): NdArray =
+    grid(spark, shape, axes(shape.length), sqlOverCoords)
+
+  private def grid(spark: SparkSession, shape: Seq[Long], names: Seq[String],
+                   sqlOverCoords: String): NdArray = {
     val strides = shape.scanRight(1L)(_ * _).tail
     val proj = shape.indices.map { a =>
-      s"(id DIV ${strides(a)}L) % ${shape(a)}L AS c$a"
+      s"(id DIV ${strides(a)}L) % ${shape(a)}L AS ${names(a)}"
     }
     new NdArray(
       spark.range(shape.product).selectExpr(proj: _*)
-        .selectExpr((shape.indices.map(a => s"c$a") :+
-          s"CAST($sqlOverCoords AS DOUBLE) AS v"): _*),
-      shape)
+        .selectExpr(names :+ s"CAST($sqlOverCoords AS DOUBLE) AS v": _*),
+      shape, dense = true, names)
   }
 
-  /** Wrap a flat element table `(idx, v)` as an N-d array (row-major). */
+  /** Wrap a flat element table `(idx, v)` as an N-d array (row-major).
+    * Gapped: the table may hold any subset of the cells. */
   def fromFlat(flat: DataFrame, shape: Seq[Long]): NdArray = {
     val strides = shape.scanRight(1L)(_ * _).tail
     val proj = shape.indices.map { a =>
       s"(idx DIV ${strides(a)}L) % ${shape(a)}L AS c$a"
     } :+ "v"
-    new NdArray(flat.selectExpr(proj: _*), shape)
+    new NdArray(flat.selectExpr(proj: _*), shape, dense = false, axes(shape.length))
   }
 }

@@ -188,7 +188,7 @@ object Cholesky {
       // grids of the triangular solves, matmuls) re-read a compact RDD
       // instead of re-deriving every panel per action
       .localCheckpoint(true)
-    new DMatrix(lDF, n, n)
+    new DMatrix(lDF, n, n, dense = false)
   }
 
   /** The factorization loop of [[cholesky]], returning L's block-column
@@ -406,8 +406,8 @@ object Cholesky {
         }.toDF("i", "j", "v")
       }.reduce(_ unionByName _)
 
-    (new DMatrix(assemble(lPanels, lower = true).localCheckpoint(true), n, n),
-      new DMatrix(assemble(uPanels, lower = false).localCheckpoint(true), n, n))
+    (new DMatrix(assemble(lPanels, lower = true).localCheckpoint(true), n, n, dense = false),
+      new DMatrix(assemble(uPanels, lower = false).localCheckpoint(true), n, n, dense = false))
   }
 
   /** The factorization loop of [[lu]], returning the factors as PANELS:
@@ -647,7 +647,7 @@ object Cholesky {
     val fTiles = tileGrid(s, f, tile, diagPad = true).localCheckpoint(true)
     val bTiles = tileGrid(s, b, tile, diagPad = false).localCheckpoint(true)
     val xPanels = solveTriCore(s, fTiles, bTiles, n, tile, lower)
-    new DMatrix(xCells(s, xPanels, n, m, tile), n, m)
+    new DMatrix(xCells(s, xPanels, n, m, tile), n, m, dense = false)
   }
 
   /** The block substitution loop over tile sets (see [[solveLowerTiles]]
@@ -745,7 +745,7 @@ object Cholesky {
     val uT = tilesOfPanels(up, lower = false)
     val y = solveTriCore(s, lT, eyeTiles(s, n, tile), n, tile, lower = true)
     val x = solveTriCore(s, uT, xTiles(y), n, tile, lower = false)
-    new DMatrix(xCells(s, x, n, n, tile), n, n)
+    new DMatrix(xCells(s, x, n, n, tile), n, n, dense = false)
   }
 
   /** General (non-SPD) solve A·x = b via LU + two triangular solves

@@ -145,7 +145,7 @@ object SVD {
     val cells = for {
       i <- 0 until rows; j <- 0 until cols if m(i * cols + j) != 0.0
     } yield (i.toLong, j.toLong, m(i * cols + j))
-    new DMatrix(cells.toDF("i", "j", "v"), rows, cols)
+    new DMatrix(cells.toDF("i", "j", "v"), rows, cols, dense = false)
   }
 
   /** Full SVD of a tall-skinny matrix: A = U·diag(S)·Vᵀ with U n×k
@@ -211,8 +211,8 @@ object SVD {
     val (u1, sv, v1) = localSVD(rbt, l)
     val uFull = q.matmul(smallDM(s, u1, l, l))    // n×l
     val vFull = qb.matmul(smallDM(s, v1, l, l))   // m×l
-    val u = new DMatrix(uFull.df.where(s"j < $k"), a.rows, k)
-    val v = new DMatrix(vFull.df.where(s"j < $k"), a.cols, k)
+    val u = new DMatrix(uFull.df.where(s"j < $k"), a.rows, k, uFull.dense)
+    val v = new DMatrix(vFull.df.where(s"j < $k"), a.cols, k, vFull.dense)
     (u, sv.take(k), v, () => { q.df.unpersist(); qb.df.unpersist(); () })
   }
 }

@@ -314,7 +314,8 @@ object TSQR {
       case _                                  =>
     }
 
-    (new DMatrix(qDF, n, k), rFinal)
+    // every present row gets all k columns
+    (new DMatrix(qDF, n, k, mat.dense), rFinal)
   }
 
   /** R factor only — the upward tree sweep without Q materialization.
@@ -408,7 +409,7 @@ object TSQR {
     val qtRows = for (l <- 0 until m; i <- 0 until m)
       yield (l.toLong, i.toLong, q(i * m + l))
     import s.implicits._
-    val qt = new DMatrix(qtRows.toDF("i", "j", "v"), m, m)
+    val qt = new DMatrix(qtRows.toDF("i", "j", "v"), m, m, dense = true)
     (q, qt.matmul(a))
   }
 

@@ -199,7 +199,8 @@ object MatrixQueries {
       val k = 6
       val svt = for (i <- 0 until k; j <- 0 until k; x = sv(i) * v(j * k + i) if x != 0.0)
         yield (i.toLong, j.toLong, x)
-      val svtDM = new graft.DMatrix(s.createDataFrame(svt).toDF("i", "j", "v"), k, k)
+      val svtDM = new graft.DMatrix(s.createDataFrame(svt).toDF("i", "j", "v"), k, k,
+        dense = false)
       val recon = u.matmul(svtDM)
       val err = recon.elements.withColumnRenamed("v", "x")
         .join(a.elements.withColumnRenamed("v", "y"), Seq("i", "j"), "full")
@@ -233,10 +234,11 @@ object MatrixQueries {
       // collect below (round-6 judge: leaking it pinned executor storage
       // for the rest of the 191-query session)
       val adf = x.matmul(y.t).df.persist()
-      val a = new graft.DMatrix(adf, 240, 80)
+      val a = new graft.DMatrix(adf, 240, 80, dense = true)
       val (u, sv, v, release) = graft.linalg.SVD.svdCompressed(s, a, k = 4, oversample = 4)
       val sDM = new graft.DMatrix(
-        s.createDataFrame((0 until 4).map(i => (i.toLong, i.toLong, sv(i)))).toDF("i", "j", "v"), 4, 4)
+        s.createDataFrame((0 until 4).map(i => (i.toLong, i.toLong, sv(i)))).toDF("i", "j", "v"), 4, 4,
+        dense = false)
       val recon = u.matmul(sDM).matmul(v.t)
       val err = recon.elements.withColumnRenamed("v", "xx")
         .join(a.elements.withColumnRenamed("v", "yy"), Seq("i", "j"), "full")
@@ -252,13 +254,13 @@ object MatrixQueries {
       Seq((row.getDouble(0), row.getDouble(1))).toDF("rel_err", "energy_ratio")
     }),
 
-    // batched matmul (reference batched dims, linalg/_tensordot.py:194):
-    // 4 batches contract in ONE (b,k) join + ONE (b,i,j) aggregation —
-    // batches spread across partitions, no per-batch driver loop
+    // batched matmul (reference batched dims, linalg/_tensordot.py:194)
+    // as ONE einsum: 4 batches contract in ONE (b,k) join + ONE (b,i,j)
+    // aggregation — batches spread across partitions, no per-batch loop
     "m17_batched_matmul" -> ((s, d) => {
-      val x = graft.DTensor.tabulate(s, 4, 20, 15, "(b*3 + i*7 + j*3) % 11")
-      val y = graft.DTensor.tabulate(s, 4, 15, 10, "(b*5 + i*2 + j*9) % 13")
-      x.matmul(y).elements.orderBy("b", "i", "j")
+      val x = graft.NdArray.tabulate(s, Seq(4L, 20L, 15L), "(c0*3 + c1*7 + c2*3) % 11")
+      val y = graft.NdArray.tabulate(s, Seq(4L, 15L, 10L), "(c0*5 + c1*2 + c2*9) % 13")
+      graft.Einsum.nd("bik,bkj->bij", x, y).orderBy("b", "i", "j")
     }),
 
     // 3-operand einsum chain: eager intermediate contraction makes this
@@ -756,11 +758,11 @@ object MatrixQueries {
         Tables.read(s, s"$d/lineitem.parquet")
           .selectExpr("l_partkey AS i", "l_suppkey AS j", "l_quantity AS v")
           .groupBy("i", "j").agg(sum("v").as("v")),
-        np, ns)
+        np, ns, dense = false)
       val x = new graft.DMatrix(
         Tables.read(s, s"$d/supplier.parquet")
           .selectExpr("s_suppkey AS i", "CAST(0 AS BIGINT) AS j", "s_acctbal AS v"),
-        ns, 1)
+        ns, 1, dense = false)
       a.matmul(x).df.selectExpr("i", "j", "round(v, 2) AS v").orderBy("i")
     }),
 
@@ -958,8 +960,8 @@ object MatrixQueries {
     // 3-d axis-tuple reduction (reference reductions/_reduction.py:89):
     // collapse (i, j), keep the batch axis — one partial-agg shuffle
     "m21_tensor_axis_reduce" -> ((s, d) =>
-      graft.DTensor.tabulate(s, 6, 30, 20, "(b*7 + i*3 + j*11) % 17")
-        .reduceAxes(Seq("b"), "sum(v)").orderBy("b")),
+      graft.NdArray.tabulate(s, Seq(6L, 30L, 20L), "(c0*7 + c1*3 + c2*11) % 17")
+        .reduceAxes(Seq(1, 2), "sum(v)").elements.withColumnRenamed("c0", "b").orderBy("b")),
 
     // 2-d stencil via neighbor join — map_overlap in two dimensions
     // (reference `map_overlap`, _overlap.py:143): each cell averages its
@@ -1028,7 +1030,7 @@ object MatrixQueries {
       val (r, c) = (30L, 20L)
       val a = Tab(r, c, "(i*5 + j*3) % 21").spark(s)
       new graft.DMatrix(
-        a.df.selectExpr(s"(i + 7) % $r AS i", s"(j + 13) % $c AS j", "v"), r, c)
+        a.df.selectExpr(s"(i + 7) % $r AS i", s"(j + 13) % $c AS j", "v"), r, c, dense = true)
         .elements.orderBy("i", "j")
     }),
 
@@ -1042,7 +1044,7 @@ object MatrixQueries {
         .agg(avg("v").as("mu"), stddev_samp("v").as("sd"))
       val z = new graft.DMatrix(
         x.df.join(broadcast(stats), "j")
-          .selectExpr("i", "j", "(v - mu) / sd AS v"), n, k)
+          .selectExpr("i", "j", "(v - mu) / sd AS v"), n, k, dense = true)
       z.gram.map(s"round(v / ${n - 1}, 6)").elements.orderBy("i", "j")
     }),
 
@@ -1085,7 +1087,7 @@ object MatrixQueries {
       val x = Tab(n, k, "(i*7 + j*13) % 19 + (i % (j + 2))").spark(s)
       val mu = x.df.groupBy("j").agg(avg("v").as("mu"))
       val z = new graft.DMatrix(
-        x.df.join(broadcast(mu), "j").selectExpr("i", "j", "v - mu AS v"), n, k)
+        x.df.join(broadcast(mu), "j").selectExpr("i", "j", "v - mu AS v"), n, k, dense = true)
       z.gram.map(s"round(v / ${n - 1}, 6)").elements.orderBy("i", "j")
     }),
 
@@ -1141,7 +1143,7 @@ object MatrixQueries {
       import s.implicits._
       val qDf = new DMatrix(
         (for (i <- 0 until m; l <- 0 until m) yield
-          (i.toLong, l.toLong, q(i * m + l))).toDF("i", "j", "v"), m, m)
+          (i.toLong, l.toLong, q(i * m + l))).toDF("i", "j", "v"), m, m, dense = true)
       // recon − A: full outer on coords (implicit zeros on either side)
       val recon = qDf.matmul(r).df
         .select(col("i"), col("j"), col("v").as("rv"))
@@ -1166,7 +1168,7 @@ object MatrixQueries {
       val g = m.matmul(m.t).map(s"v / 100")
       val a = new graft.DMatrix(
         g.elements.unionByName(DMatrix.eye(s, n).map(s"v * $n").elements)
-          .groupBy("i", "j").agg(sum("v").as("v")), n, n)
+          .groupBy("i", "j").agg(sum("v").as("v")), n, n, dense = true)
       val l = graft.linalg.Cholesky.cholesky(s, a, tile = 16)
       l.elements.agg(round(sum(expr("v * v")), 4).as("frob2"))
     }),

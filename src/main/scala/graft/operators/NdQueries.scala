@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.{NdArray, Tables}
 
-/** General N-d array queries (SURVEY §2.11 N-d beyond the batched 3-d
-  * [[graft.DTensor]]): axis-tuple reductions, axis permutations, rank
+/** General N-d array queries (SURVEY §2.11 N-d over [[graft.NdArray]]):
+  * axis-tuple reductions, axis permutations, rank
   * changes, rectangular slices and rank-generic tensordot, all over
   * rank-4 fixtures.
   *

@@ -28,7 +28,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
     val withDiag = g.elements.unionByName(
       DMatrix.eye(spark, n).map(s"v * $n").elements)
       .groupBy("i", "j").agg(sum("v").as("v"))
-    new DMatrix(withDiag, n, n)
+    new DMatrix(withDiag, n, n, dense = true)
   }
 
   test("in-core chol: L·Lᵀ = A on a small SPD matrix") {
@@ -68,7 +68,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = DMatrix.tabulate(spark, n, n, "((i*5 + j*11) % 9) - 4")
     val a = new DMatrix(
       base.elements.unionByName(DMatrix.eye(spark, n).map(s"v * $n").elements)
-        .groupBy("i", "j").agg(sum("v").as("v")), n, n)
+        .groupBy("i", "j").agg(sum("v").as("v")), n, n, dense = true)
     val (l, u) = Cholesky.lu(spark, a, tile = 32)
     assert(l.elements.where("j > i").count() == 0, "L not lower")
     assert(u.elements.where("i > j").count() == 0, "U not upper")
@@ -113,7 +113,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
       (t until n).map(i => (i.toLong, (i % t).toLong, ((i * 7) % 13 + 1).toDouble)) ++
       (t until n).map(i => ((i % t).toLong, i.toLong, ((i * 7) % 13 + 1).toDouble))
     ).toDF("i", "j", "v").groupBy("i", "j").agg(sum("v").as("v"))
-    val a = new DMatrix(cells, n, n)
+    val a = new DMatrix(cells, n, n, dense = false)
     val l = Cholesky.cholesky(spark, a, tile = t)
     // fill-in must exist in interior blocks (bi,bj >= 1, bi != bj)
     assert(l.elements.where(s"i >= ${2 * t} AND j >= $t AND j < ${2 * t}").count() > 0,
@@ -135,7 +135,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
       (t until n).map(i => (i.toLong, (i % t).toLong, ((i * 3) % 7 + 1).toDouble)) ++
       (t until n).map(i => ((i % t).toLong, i.toLong, ((i * 5) % 7 + 1).toDouble))
     ).toDF("i", "j", "v").groupBy("i", "j").agg(sum("v").as("v"))
-    val a = new DMatrix(cells, n, n)
+    val a = new DMatrix(cells, n, n, dense = false)
     val (l, u) = Cholesky.lu(spark, a, tile = t)
     val luProd = l.matmul(u)
     val diff = luProd.elements.withColumnRenamed("v", "x")
@@ -150,7 +150,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = DMatrix.tabulate(spark, n, n, "((i*5 + j*11) % 9) - 4")
     val a = new DMatrix(
       base.elements.unionByName(DMatrix.eye(spark, n).map(s"v * $n").elements)
-        .groupBy("i", "j").agg(sum("v").as("v")), n, n)
+        .groupBy("i", "j").agg(sum("v").as("v")), n, n, dense = true)
     val ainv = Cholesky.inv(spark, a, tile = 16)
     val prod = a.matmul(ainv)
     val offDiag = prod.elements.where("i <> j")
@@ -165,7 +165,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = DMatrix.tabulate(spark, n, n, "((i*7 + j*3) % 11) - 5")
     val a = new DMatrix(
       base.elements.unionByName(DMatrix.eye(spark, n).map(s"v * $n").elements)
-        .groupBy("i", "j").agg(sum("v").as("v")), n, n)
+        .groupBy("i", "j").agg(sum("v").as("v")), n, n, dense = true)
     val b = Array.tabulate(n)(i => ((i * 3) % 13).toDouble - 6)
     val x = Cholesky.solveLU(spark, a, b, tile = 16)
     val sp = spark
@@ -201,7 +201,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = DMatrix.tabulate(spark, n, n, "((i*7 + j*3) % 11) - 5")
     val g = new DMatrix(
       base.elements.unionByName(DMatrix.eye(spark, n).map(s"v * $n").elements)
-        .groupBy("i", "j").agg(sum("v").as("v")), n, n)
+        .groupBy("i", "j").agg(sum("v").as("v")), n, n, dense = true)
     val yLocal = Cholesky.solveLU(spark, g, b, tile = 16)
     val yDist = withLocalSolveMax(0)(Cholesky.solveLU(spark, g, b, tile = 16))
     yLocal.zip(yDist).zipWithIndex.foreach { case ((lv, dv), i) =>

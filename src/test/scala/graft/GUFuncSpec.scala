@@ -54,7 +54,7 @@ class GUFuncSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     val cells = (0 until 10 by 2).flatMap(i =>
       (0 until 4).map(j => (i.toLong, j.toLong, (i + j + 1).toDouble)))
-    val a = new DMatrix(cells.toDF("i", "j", "v"), 10, 4)
+    val a = new DMatrix(cells.toDF("i", "j", "v"), 10, 4, dense = false)
     val got = GUFunc.applyScalar("(i)->()", a) { case Seq(x) => x.sum + 100.0 }
       .orderBy("idx").collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(got.length == 10, s"expected all 10 loop positions, got ${got.length}")

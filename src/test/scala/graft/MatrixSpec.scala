@@ -92,26 +92,67 @@ class MatrixSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("batched matmul equals per-batch 2-d matmul") {
-    val x = DTensor.tabulate(spark, 3, 8, 6, "(b*3 + i*7 + j*3) % 11")
-    val y = DTensor.tabulate(spark, 3, 6, 5, "(b*5 + i*2 + j*9) % 13")
-    val got = x.matmul(y)
+    val x = NdArray.tabulate(spark, Seq(3L, 8L, 6L), "(c0*3 + c1*7 + c2*3) % 11")
+    val y = NdArray.tabulate(spark, Seq(3L, 6L, 5L), "(c0*5 + c1*2 + c2*9) % 13")
+    val got = Einsum.nd("bik,bkj->bij", x, y)
     for (b <- 0 until 3) {
-      val want = x.slice(b).matmul(y.slice(b)).elements
+      val xb = DMatrix.tabulate(spark, 8, 6, s"($b*3 + i*7 + j*3) % 11")
+      val yb = DMatrix.tabulate(spark, 6, 5, s"($b*5 + i*2 + j*9) % 13")
+      val want = xb.matmul(yb).elements
         .orderBy("i", "j").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      val g = got.slice(b).elements
+      val g = got.where(s"b = $b").select("i", "j", "v")
         .orderBy("i", "j").collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       assert(g.toSeq == want.toSeq, s"batch $b")
     }
   }
 
-  test("DTensor stack + reduceBatch sum the batch axis") {
-    val a = DMatrix.tabulate(spark, 4, 3, "i + j")
-    val b = DMatrix.tabulate(spark, 4, 3, "2 * (i + j)")
-    val t3 = DTensor.stack(Seq(a, b))
-    val summed = t3.reduceBatch("sum(v)").elements.orderBy("i", "j")
+  test("NdArray stack + reduceAxes sum the batch axis") {
+    val a = NdArray.tabulate(spark, Seq(4L, 3L), "c0 + c1")
+    val b = NdArray.tabulate(spark, Seq(4L, 3L), "2 * (c0 + c1)")
+    val t3 = NdArray.stack(Seq(a, b))
+    val summed = t3.reduceAxes(Seq(0), "sum(v)").elements.orderBy("c0", "c1")
       .collect().map(_.getDouble(2))
-    val want = a.elements.orderBy("i", "j").collect().map(_.getDouble(2) * 3)
+    val want = a.elements.orderBy("c0", "c1").collect().map(_.getDouble(2) * 3)
     assert(summed.toSeq == want.toSeq)
+  }
+
+  // numpy semantics on gapped element tables: triu/tril/eye leave cells
+  // out, and an absent cell must read as 0 in zip and map.
+  // a = [[1,2,3],[4,5,6],[7,8,9]]
+  private def cells(m: DMatrix): (Long, Double) = {
+    val r = m.elements.agg(
+      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
+      org.apache.spark.sql.functions.sum("v")).collect()(0)
+    (r.getLong(0), r.getDouble(1))
+  }
+
+  test("gapped zip: triu + tril covers all 9 cells (numpy sum 60)") {
+    val a = DMatrix.tabulate(spark, 3, 3, "i*3 + j + 1")
+    assert(cells(a.triu() + a.tril()) == (9L, 60.0))
+  }
+
+  test("gapped map: triu().map(v + 1) fills the zeros (numpy sum 35)") {
+    val a = DMatrix.tabulate(spark, 3, 3, "i*3 + j + 1")
+    assert(cells(a.triu().map("v + 1")) == (9L, 35.0))
+  }
+
+  test("gapped zip: eye(3) + a keeps every cell of a (numpy sum 48)") {
+    val a = DMatrix.tabulate(spark, 3, 3, "i*3 + j + 1")
+    assert(cells(DMatrix.eye(spark, 3) + a) == (9L, 48.0))
+  }
+
+  test("the same gapped answers through NdArray") {
+    val s = spark
+    import s.implicits._
+    def cellsNd(x: NdArray) = {
+      val r = x.elements.selectExpr("count(1)", "sum(v)").collect()(0)
+      (r.getLong(0), r.getDouble(1))
+    }
+    val a = NdArray.tabulate(spark, Seq(3L, 3L), "c0*3 + c1 + 1")
+    val eye = NdArray.fromFlat(Seq((0L, 1.0), (4L, 1.0), (8L, 1.0)).toDF("idx", "v"), Seq(3L, 3L))
+    assert(cellsNd(a.triu().zip(a.tril(), "v1 + v2")) == (9L, 60.0))
+    assert(cellsNd(a.triu().map("v + 1")) == (9L, 35.0))
+    assert(cellsNd(eye.zip(a, "v1 + v2")) == (9L, 48.0))
   }
 
   test("3-operand einsum chain equals pairwise matmul") {
@@ -142,7 +183,7 @@ class MatrixSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a stored-cells-only min would report 3; the corrected min is 0
     val df = Seq((0L, 0L, 1.0), (0L, 1L, -2.0), (2L, 0L, 3.0), (2L, 3L, -4.0))
       .toDF("i", "j", "v")
-    val m = new DMatrix(df, 3, 4)
+    val m = new DMatrix(df, 3, 4, dense = false)
     def one(d: org.apache.spark.sql.DataFrame) = d.collect()(0).getDouble(0)
     assert(one(m.norm("-1")) == 0.0)   // column 2 empty
     assert(one(m.norm("-inf")) == 0.0) // row 1 empty

@@ -229,6 +229,8 @@ class NdSpec extends AnyFunSuite {
     val s2 = gapped.zip(g2, "v1 + v2")
     val cells = s2.ravel.orderBy("idx").collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(cells.toSeq == Seq((0L, 10.0), (1L, 2.0), (4L, 40.0)))
+    // both gapped and f(0, 0) ≠ 0: cells absent on both sides read f(0, 0)
+    assert(values(gapped.zip(g2, "v1 + v2 + 1")) == Seq(11.0, 3.0, 1.0, 1.0, 41.0, 1.0))
   }
 
   test("stack/vstack/hstack/dstack match numpy's promote-then-concat shapes") {
@@ -388,5 +390,45 @@ class NdSpec extends AnyFunSuite {
     // union the 27-branch ghost union would appear |taps| times over
     val ranges = "Range \\(0".r.findAllIn(plan).length
     assert(ranges <= 27, s"extended input scanned per tap? $ranges Range scans")
+  }
+
+  test("density picks the zip plan: dense⊗dense is an inner join, a gapped operand full outer") {
+    val s = spark // stable identifier for the implicits import
+    import s.implicits._
+    val a = NdArray.tabulate(spark, Seq(3L, 4L), "c0 + c1")
+    val b = NdArray.tabulate(spark, Seq(3L, 4L), "c0 * c1")
+    val gapped = NdArray.fromFlat(Seq((5L, 2.0)).toDF("idx", "v"), Seq(3L, 4L))
+    def plan(x: NdArray) = x.elements.queryExecution.executedPlan.toString
+    assert(a.dense && b.dense && !gapped.dense)
+    val dd = a.zip(b, "v1 + v2")
+    assert(dd.dense && !plan(dd).contains("FullOuter"), plan(dd))
+    // either side gapped: full outer with zero fill, and the result is dense
+    for (x <- Seq(a.zip(gapped, "v1 + v2"), gapped.zip(a, "v1 + v2"))) {
+      assert(x.dense && plan(x).contains("FullOuter"), plan(x))
+      assert(values(x).sum == values(a).sum + 2.0)
+    }
+  }
+
+  test("map launches no job: a dense map projects, a gapped map probes a local relation") {
+    val s = spark
+    import s.implicits._
+    val sc = s.sparkContext
+    def jobsOf(body: => Unit): Int = {
+      val group = s"nd-map-${System.nanoTime()}"
+      sc.setJobGroup(group, "construction")
+      try body finally sc.clearJobGroup()
+      sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val a = NdArray.tabulate(spark, Seq(3L, 4L), "c0 + c1")
+    val gapped = NdArray.fromFlat(Seq((5L, 2.0)).toDF("idx", "v"), Seq(3L, 4L))
+    // kernels no other spec uses, so the memoized probe really runs here
+    var scaled, shifted: NdArray = null
+    assert(jobsOf { a.map("v * 3.875 + 0.125") } == 0)
+    assert(jobsOf { scaled = gapped.map("v * 5.375") } == 0)
+    assert(jobsOf { shifted = gapped.map("v * 5.375 + 0.625") } == 0)
+    assert(jobsOf { s.range(3).collect() } == 1, "control: a real action is counted")
+    // f(0) = 0 keeps the gapped table; f(0) ≠ 0 densifies first
+    assert(!scaled.dense && scaled.elements.count() == 1)
+    assert(shifted.dense && values(shifted).sum == 2.0 * 5.375 + 12 * 0.625)
   }
 }

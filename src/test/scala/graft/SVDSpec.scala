@@ -63,7 +63,7 @@ class SVDSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     val svtDM = new DMatrix(
       (for (i <- 0 until k; j <- 0 until k if svt(i * k + j) != 0.0)
-        yield (i.toLong, j.toLong, svt(i * k + j))).toDF("i", "j", "v"), k, k)
+        yield (i.toLong, j.toLong, svt(i * k + j))).toDF("i", "j", "v"), k, k, dense = false)
     val recon = u.matmul(svtDM)
     assert(maxAbsDiff(recon, a) < 1e-8)
     release()
@@ -99,7 +99,8 @@ class SVDSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val sDM = new DMatrix(
-      (0 until rank).map(i => (i.toLong, i.toLong, sv(i))).toDF("i", "j", "v"), rank, rank)
+      (0 until rank).map(i => (i.toLong, i.toLong, sv(i))).toDF("i", "j", "v"), rank, rank,
+      dense = false)
     val recon = u.matmul(sDM).matmul(v.t)
     val scale = sv.head
     assert(maxAbsDiff(recon, a) / scale < 1e-9)

@@ -60,7 +60,7 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rdf = spark.createDataFrame(
       for (i <- 0 until k; j <- 0 until k)
         yield (i.toLong, j.toLong, r(i * k + j))).toDF("i", "j", "v")
-    val qr = q.matmul(new DMatrix(rdf, k, k))
+    val qr = q.matmul(new DMatrix(rdf, k, k, dense = true))
     val diff = qr.zip(a, "abs(v1 - v2)").agg("max(v)" -> "mx").collect()(0).getDouble(0)
     assert(diff < 1e-8, s"max |QR - A| = $diff")
   }
@@ -81,7 +81,7 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rdf = spark.createDataFrame(
       for (i <- 0 until k; j <- 0 until k)
         yield (i.toLong, j.toLong, r(i * k + j))).toDF("i", "j", "v")
-    val qr = q.matmul(new DMatrix(rdf, k, k))
+    val qr = q.matmul(new DMatrix(rdf, k, k, dense = true))
     val diff = qr.zip(a, "abs(v1 - v2)").agg("max(v)" -> "mx").collect()(0).getDouble(0)
     assert(diff < 1e-8, s"max |QR - A| = $diff")
     // tree result agrees with the single-level path
@@ -97,7 +97,7 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rdf = spark.createDataFrame(
       for (i <- 0 until k; j <- 0 until k)
         yield (i.toLong, j.toLong, r(i * k + j))).toDF("i", "j", "v")
-    val qr = q.matmul(new DMatrix(rdf, k, k))
+    val qr = q.matmul(new DMatrix(rdf, k, k, dense = true))
     val diff = qr.zip(a, "abs(v1 - v2)").agg("max(v)" -> "mx").collect()(0).getDouble(0)
     assert(diff < 1e-8, s"max |QR - A| = $diff")
   }
@@ -107,7 +107,7 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     import sp.implicits._
     val df = Seq((0L, 0L, 3.0), (1L, 1L, 4.0)).toDF("i", "j", "v")
-    val sv = TSQR.singularValues(spark, new DMatrix(df, 2, 2))
+    val sv = TSQR.singularValues(spark, new DMatrix(df, 2, 2, dense = false))
     assert(math.abs(sv(0) - 4.0) < 1e-10 && math.abs(sv(1) - 3.0) < 1e-10,
       s"got ${sv.toSeq}")
   }
@@ -154,7 +154,7 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
       val y = ((i * 5) % 11).toDouble + 1
       Seq((i.toLong, 0L, x), (i.toLong, 1L, y), (i.toLong, 2L, x)) // col2 = col0
     }
-    val a = new DMatrix(rows.toDF("i", "j", "v"), 100, 3)
+    val a = new DMatrix(rows.toDF("i", "j", "v"), 100, 3, dense = true)
     val sv = TSQR.singularValues(spark, a)
     assert(sv(2) < sv(0) * 1e-10, s"expected vanishing third sv, got ${sv.toSeq}")
   }
