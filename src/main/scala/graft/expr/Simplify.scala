@@ -10,8 +10,10 @@ import scala.annotation.tailrec
   *
   * Rules:
   *   1. map/map fusion          — `Map(Map(x,e1),e2) → Map(x, e2[v:=e1])`
-  *      (reference blockwise fusion, `dask_array/_blockwise.py:1405-1573`)
-  *   2. map-into-zip fusion     — `Map(Zip(a,b,e),e2) → Zip(a,b, e2[v:=e])`
+  *      (reference blockwise fusion, `dask_array/_blockwise.py:1405-1573`),
+  *      unless e2 reads `v` more than once and e1 is not cheap
+  *   2. map-into-zip fusion     — `Map(Zip(a,b,e),e2) → Zip(a,b, e2[v:=e])`,
+  *      same guard
   *   3. slice/slice fusion      — `fuse_slice`
   *      (reference `dask_array/slicing/_utils.py:941`)
   *   4. slice-through-map       — rebasing `idx` when the kernel uses it
@@ -110,6 +112,17 @@ object Simplify {
     simplifyNode(withChildren, parents)
   }
 
+  /** Spark's `CollapseProject` rule, on kernel text: substitute producer
+    * `e1` into consumer `e2` when `e2` reads `v` at most once or `e1` is
+    * cheap (a bare column or a literal). Otherwise fusion copies `e1` once
+    * per read — `map(uniform).map(search)` would re-inline the uniform into
+    * every arm of the search — so the maps stay two projections. */
+  private def fusible(e1: String, e2: String): Boolean =
+    ReadsV.findAllIn(e2).length <= 1 || CheapKernel.matches(e1.trim)
+
+  private val ReadsV = "\\bv\\b".r
+  private val CheapKernel = """[A-Za-z_]\w*|-?\d+(\.\d+)?([eE][-+]?\d+)?[DdLl]?""".r
+
   private def simplifyNode(e: VecExpr, parents: Map[String, List[VecExpr]]): VecExpr = e match {
     // -- identity elision ---------------------------------------------------
     case MapVec(c, "v")                                   => c
@@ -145,9 +158,12 @@ object Simplify {
       else ZipOffsetVec(ColumnVec(t1, i1, x1, Some((c, b))), a - c, swap(e))
 
     // -- elemwise fusion ----------------------------------------------------
-    case MapVec(MapVec(c, e1), e2) =>
+    // (map consumers fuse only where that duplicates no work — [[fusible]];
+    // zip operands always fuse: kept apart, f(x) ⊗ g(x) would lose the
+    // self-zip rule above and pay an alignment join)
+    case MapVec(MapVec(c, e1), e2) if fusible(e1, e2) =>
       simplifyNode(MapVec(c, VecExpr.subst(e2, "v", e1)), parents)
-    case MapVec(ZipVec(a, b, e1), e2) =>
+    case MapVec(ZipVec(a, b, e1), e2) if fusible(e1, e2) =>
       ZipVec(a, b, VecExpr.subst(e2, "v", e1))
     case ZipVec(MapVec(a, e1), b, e) if !VecExpr.usesIdx(e1) =>
       simplifyNode(ZipVec(a, b, VecExpr.subst(e, "v1", VecExpr.subst(e1, "v", "v1"))), parents)

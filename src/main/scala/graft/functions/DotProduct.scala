@@ -138,7 +138,15 @@ object GraftFunctions {
       build(exprs)
     }
 
+  /** The planner strategies both routes install (the same one-list rule
+    * as [[builders]]). */
+  val strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Seq(graft.SingleTaskSort)
+
   def register(spark: SparkSession): Unit = {
+    strategies.foreach { st =>
+      if (!spark.sessionState.planner.strategies.contains(st))
+        spark.experimental.extraStrategies = st +: spark.experimental.extraStrategies
+    }
     // Skip when already registered: createOrReplaceTempFunction logs a
     // "replaced a previously registered function" WARN per call, and every
     // SparkEntry query calls register, so a 191-query run floods the log.

@@ -758,7 +758,8 @@ object ArrayQueries {
     // (reference `RandomState.poisson`, random/_generator.py:282)
     "q49_random_poisson" -> ((s, d) =>
       DArray.arange(s, d, 0, 20000, 1)
-        .map(invCdfKernel(poissonCdf, unifKernel("CAST(v AS BIGINT)", 901)))
+        .map(unifKernel("CAST(v AS BIGINT)", 901))
+        .map(graft.random.Kernels.cdfSearch("v", poissonCdf))
         .elements
         .groupBy(col("v").cast("long").as("k"))
         .agg(expr("CAST(count(*) AS BIGINT)").as("cnt"))
@@ -768,7 +769,8 @@ object ArrayQueries {
     // (reference `RandomState.binomial`, random/_generator.py:100)
     "q50_random_binomial" -> ((s, d) =>
       DArray.arange(s, d, 0, 20000, 1)
-        .map(invCdfKernel(binomialCdf, unifKernel("CAST(v AS BIGINT)", 333)))
+        .map(unifKernel("CAST(v AS BIGINT)", 333))
+        .map(graft.random.Kernels.cdfSearch("v", binomialCdf))
         .elements
         .groupBy(col("v").cast("long").as("k"))
         .agg(expr("CAST(count(*) AS BIGINT)").as("cnt"))
@@ -818,13 +820,11 @@ object ArrayQueries {
     // driver-computed literal cutoffs (shared verbatim with the oracle):
     // zipf, logseries, negative_binomial, hypergeometric — integer sums
     // and head counts hash exactly (reference random/_generator.py:345,
-    // 218, 248, 170)
+    // 218, 248, 170). Each uniform is projected once and searched by the
+    // layered sampler; the oracle keeps the flat cascade text.
     "q90_random_gen_disc" -> ((s, d) =>
-      DArray.arange(s, d, 0, 20000, 1).elements.selectExpr(
-          s"1 + ${invCdfCount(zipfCdf, unif2Kernel("CAST(v AS BIGINT)", 9301))} AS zk",
-          s"1 + ${invCdfCount(logseriesCdf, unif2Kernel("CAST(v AS BIGINT)", 9407))} AS lk",
-          s"${invCdfCount(negBinCdf, unif2Kernel("CAST(v AS BIGINT)", 9511))} AS nk",
-          s"${invCdfCount(hyperCdf, unif2Kernel("CAST(v AS BIGINT)", 9613))} AS hk")
+      genDiscLayers("CAST(v AS BIGINT)")
+        .foldLeft(DArray.arange(s, d, 0, 20000, 1).elements)((df, l) => df.selectExpr(l: _*))
         .agg(
           expr("CAST(sum(zk) AS BIGINT)").as("zipf_sum"),
           expr("CAST(sum(CASE WHEN zk = 1 THEN 1 ELSE 0 END) AS BIGINT)").as("zipf_ones"),
@@ -1376,8 +1376,23 @@ object ArrayQueries {
   private def qsum(x: String, scale: Long): String =
     s"CAST(sum(CAST(floor(($x) * $scale.0) AS BIGINT)) AS BIGINT)"
 
+  /** q90's layered discrete draws (zipf, logseries, negative binomial,
+    * hypergeometric): layer 1 the four uniforms, layer 2 the four
+    * searches as zk, lk, nk, hk. */
+  private def genDiscLayers(iExpr: String): Seq[Seq[String]] = {
+    import graft.random.Kernels
+    val draws = Seq(
+      "zk" -> Kernels.cdfLayered(unif2Kernel(iExpr, 9301), zipfCdf, "zk", base = 1L),
+      "lk" -> Kernels.cdfLayered(unif2Kernel(iExpr, 9407), logseriesCdf, "lk", base = 1L),
+      "nk" -> Kernels.cdfLayered(unif2Kernel(iExpr, 9511), negBinCdf, "nk"),
+      "hk" -> Kernels.cdfLayered(unif2Kernel(iExpr, 9613), hyperCdf, "hk"))
+    Seq(draws.flatMap(_._2.layers.head), draws.map { case (k, l) => s"${l.value} AS $k" })
+  }
+
   /** k = #{cdf values < u} — exact inverse-CDF sampling over literal
-    * cutoffs (identical text on both engines, so comparisons are exact). */
+    * cutoffs (identical text on both engines, so comparisons are exact).
+    * The flat form the q49/q50 oracles replay; the engine queries search
+    * a projected uniform ([[graft.random.Kernels.cdfSearch]]). */
   private def invCdfKernel(cdf: Seq[Double], uExpr: String): String =
     "CAST(" + cdf.map(c => s"(CASE WHEN ($uExpr) > $c THEN 1 ELSE 0 END)")
       .mkString(" + ") + " AS DOUBLE)"
@@ -1400,8 +1415,8 @@ object ArrayQueries {
     pmf.scanLeft(0.0)(_ + _).tail
   }
 
-  /** Like [[invCdfKernel]] but yielding the raw BIGINT count (discrete
-    * samplers whose sums must hash exactly). */
+  /** Like [[invCdfKernel]] but yielding the raw integer count (discrete
+    * samplers whose sums must hash exactly) — the q90 oracle's flat form. */
   private def invCdfCount(cdf: Seq[Double], uExpr: String): String =
     "(" + cdf.map(c => s"(CASE WHEN ($uExpr) > $c THEN 1 ELSE 0 END)")
       .mkString(" + ") + ")"
@@ -1409,14 +1424,14 @@ object ArrayQueries {
   /** Cumulative zipf(a=2.5) probabilities, k = 1..30 (tail beyond 30 —
     * total mass ~2e-4 — lands on k=31; the cutoffs are literals shared
     * with the oracle, so the truncation is part of the sampler). */
-  private val zipfCdf: Seq[Double] = {
+  private[graft] val zipfCdf: Seq[Double] = {
     val a = 2.5
     val zeta = (1 to 2000000).iterator.map(k => math.pow(k.toDouble, -a)).sum
     (1 to 30).map(k => math.pow(k.toDouble, -a) / zeta).scanLeft(0.0)(_ + _).tail
   }
 
   /** Cumulative logseries(p=0.4) probabilities, k = 1..20. */
-  private val logseriesCdf: Seq[Double] = {
+  private[graft] val logseriesCdf: Seq[Double] = {
     val p = 0.4
     (1 to 20).map(k => -math.pow(p, k) / (k * math.log(1 - p)))
       .scanLeft(0.0)(_ + _).tail
@@ -1424,7 +1439,7 @@ object ArrayQueries {
 
   /** Cumulative negative_binomial(n=5, p=0.5) probabilities (numpy
     * convention: k = number of failures), k = 0..30. */
-  private val negBinCdf: Seq[Double] = {
+  private[graft] val negBinCdf: Seq[Double] = {
     val n = 5; val p = 0.5
     def comb(a: Int, b: Int): Double =
       (1 to b).map(i => (a - b + i).toDouble / i).product
@@ -1434,7 +1449,7 @@ object ArrayQueries {
 
   /** Cumulative hypergeometric(ngood=7, nbad=13, nsample=8) probabilities,
     * cutoffs k = 0..6 (exact finite support 0..7). */
-  private val hyperCdf: Seq[Double] = {
+  private[graft] val hyperCdf: Seq[Double] = {
     def comb(a: Int, b: Int): Double =
       if (b < 0 || b > a) 0.0 else (1 to b).map(i => (a - b + i).toDouble / i).product
     val tot = comb(20, 8)

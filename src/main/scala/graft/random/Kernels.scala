@@ -18,6 +18,12 @@ package graft.random
   * the linearity (see ArrayQueries.unif2Kernel's moment-check note). All
   * arithmetic is `*`/`+`/`%` over positive BIGINTs cast to DOUBLE before
   * any fraction, so Spark and DuckDB type the fragment identically.
+  *
+  * Samplers whose value reads a draw many times (rejection cascades,
+  * inverse-CDF searches) come in [[Layered]] form: the draws are projected
+  * once as named columns and the value reads the columns. Discrete draws
+  * use [[cdfLayered]]; the flat [[cdfCascade]] text stays only as the
+  * independent reference the oracles and parity specs replay.
   */
 object Kernels {
 
@@ -289,9 +295,45 @@ object Kernels {
   def randint(iExpr: String, s: Long, low: Long, high: Long): String =
     s"CAST($low + floor((${uniform01(iExpr, s)}) * ${high - low}) AS BIGINT)"
 
-  /** k = #{cutoffs < u}: exact inverse-CDF over driver-computed literal
-    * cutoffs — the engine's discrete-sampler template. `base` offsets the
-    * returned count (e.g. 1 for 1-based supports). */
+  /** The discrete inverse-CDF sampler in layered form — the engine's
+    * discrete-sampler template. Layer 1 projects the uniform `uExpr` once
+    * as the column {prefix}u; the value is [[cdfSearch]] over that column,
+    * k = #{cutoffs < u} (+ `base`, e.g. 1 for 1-based supports).
+    *
+    * The flat form ([[cdfCascade]]) re-inlines the whole uniform into each
+    * of its K arms, and every row evaluates all K: q90's four cascades
+    * compiled to one 9169-byte generated method, over HotSpot's 8000-byte
+    * JIT limit, so it ran in the interpreter. Projected once and
+    * searched as a balanced tree, a row evaluates one uniform and
+    * ⌈log2(K+1)⌉ comparisons. Both forms return the same integer at every
+    * position (same cutoff literals, same `u > c` test). */
+  def cdfLayered(uExpr: String, cutoffs: Seq[Double], prefix: String,
+                 base: Long = 0L): Layered =
+    Layered(Seq(Seq(s"$uExpr AS ${prefix}u")), cdfSearch(s"${prefix}u", cutoffs, base))
+
+  /** k = #{cutoffs < u} (+ `base`) as a BIGINT, by a balanced CASE tree
+    * over the column `uCol`. The tree reads `uCol` at every level, so it
+    * must name a projected column, not an inline kernel (see
+    * [[cdfLayered]]). Cutoffs must be nondecreasing: the tree's halving
+    * is only a count for sorted cutoffs. */
+  def cdfSearch(uCol: String, cutoffs: Seq[Double], base: Long = 0L): String = {
+    require(cutoffs.forall(!_.isNaN) &&
+      cutoffs.iterator.sliding(2).forall(p => p.length < 2 || p(0) <= p(1)),
+      s"inverse-CDF cutoffs must be nondecreasing: ${cutoffs.mkString(", ")}")
+    // known: cutoffs(0 until lo) < u <= cutoffs(hi until K)
+    def node(lo: Int, hi: Int): String =
+      if (lo == hi) s"${base + lo}"
+      else {
+        val mid = (lo + hi) / 2
+        s"CASE WHEN $uCol > ${cutoffs(mid)} THEN ${node(mid + 1, hi)} " +
+          s"ELSE ${node(lo, mid)} END"
+      }
+    s"CAST(${node(0, cutoffs.length)} AS BIGINT)"
+  }
+
+  /** k = #{cutoffs < u} as one flat expression: the uniform inlined into
+    * each of the K arms. The independent reference [[cdfLayered]] is
+    * checked against; engine plans use the layered form. */
   def cdfCascade(iExpr: String, s: Long, cutoffs: Seq[Double], base: Long = 0L): String = {
     val u = uniform01(iExpr, s)
     s"CAST($base + " + cutoffs.map(c => s"(CASE WHEN ($u) > $c THEN 1 ELSE 0 END)")

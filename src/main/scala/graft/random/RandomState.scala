@@ -39,6 +39,12 @@ class RandomState(spark: SparkSession, dir: String, seed0: Long = 0L) {
   private def draw(size: Long, kernel: String): DArray =
     DArray.arange(spark, dir, 0, size.toDouble, 1).map(kernel)
 
+  /** A discrete draw: the uniform projected once, then searched
+    * ([[Kernels.cdfSearch]] — the layered sampler as two maps, which
+    * `Simplify` keeps apart because the search reads `v` at every level). */
+  private def drawDiscrete(size: Long, cutoffs: Seq[Double], base: Long = 0L): DArray =
+    draw(size, Kernels.uniform01(I, next())).map(Kernels.cdfSearch("v", cutoffs, base))
+
   // ---- continuous ----------------------------------------------------------
 
   def random_sample(size: Long): DArray = draw(size, Kernels.uniform01(I, next()))
@@ -122,25 +128,25 @@ class RandomState(spark: SparkSession, dir: String, seed0: Long = 0L) {
   // ---- discrete ------------------------------------------------------------
 
   def poisson(lam: Double = 1.0, size: Long): DArray =
-    draw(size, Kernels.cdfCascade(I, next(), Kernels.poissonCdf(lam)))
+    drawDiscrete(size, Kernels.poissonCdf(lam))
 
   def binomial(n: Int, p: Double, size: Long): DArray =
-    draw(size, Kernels.cdfCascade(I, next(), Kernels.binomialCdf(n, p)))
+    drawDiscrete(size, Kernels.binomialCdf(n, p))
 
   def geometric(p: Double, size: Long): DArray =
     draw(size, Kernels.geometric(I, next(), p))
 
   def zipf(a: Double, size: Long): DArray =
-    draw(size, Kernels.cdfCascade(I, next(), Kernels.zipfCdf(a), base = 1L))
+    drawDiscrete(size, Kernels.zipfCdf(a), base = 1L)
 
   def logseries(p: Double, size: Long): DArray =
-    draw(size, Kernels.cdfCascade(I, next(), Kernels.logseriesCdf(p), base = 1L))
+    drawDiscrete(size, Kernels.logseriesCdf(p), base = 1L)
 
   def negative_binomial(n: Int, p: Double, size: Long): DArray =
-    draw(size, Kernels.cdfCascade(I, next(), Kernels.negativeBinomialCdf(n, p)))
+    drawDiscrete(size, Kernels.negativeBinomialCdf(n, p))
 
   def hypergeometric(ngood: Int, nbad: Int, nsample: Int, size: Long): DArray =
-    draw(size, Kernels.cdfCascade(I, next(), Kernels.hypergeometricCdf(ngood, nbad, nsample)))
+    drawDiscrete(size, Kernels.hypergeometricCdf(ngood, nbad, nsample))
 
   def randint(low: Long, high: Long, size: Long): DArray =
     draw(size, Kernels.randint(I, next(), low, high))

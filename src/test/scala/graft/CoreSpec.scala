@@ -63,6 +63,30 @@ class SimplifySpec extends AnyFunSuite {
     assert(s == MapVec(src, "(v * 2) + 1"))
   }
 
+  test("map fusion keeps a non-cheap producer out of a consumer that reads v twice") {
+    // the layered discrete sampler: a uniform projected once, then a
+    // search that reads it at every level — fused, the uniform would be
+    // copied into every arm (Spark's CollapseProject keeps the same rule)
+    val u = "(CAST((1103515245 * (CAST(v AS BIGINT) + 901) + 12345) % 2147483648 AS DOUBLE) + 0.5) / 2147483648.0"
+    val search = "CASE WHEN v > 0.5 THEN CASE WHEN v > 0.75 THEN 3 ELSE 2 END " +
+      "ELSE CASE WHEN v > 0.25 THEN 1 ELSE 0 END END"
+    assert(Simplify(MapVec(MapVec(src, u), search)) == MapVec(MapVec(src, u), search))
+    // map-into-zip: same guard
+    val other = ColumnVec("events", "event_id", "quantity")
+    Simplify(MapVec(ZipVec(src, other, "v1 * v2"), "v * v")) match {
+      case MapVec(ZipVec(_, _, "v1 * v2"), "v * v") => ()
+      case x => fail(s"zip kernel inlined into a two-read map: ${x.pprint()}")
+    }
+    // single-read consumers and cheap producers still fuse
+    assert(Simplify(MapVec(MapVec(src, u), "ln(v) + 1")) == MapVec(src, s"ln(($u)) + 1"))
+    assert(Simplify(MapVec(MapVec(src, "idx"), "v * v")) == MapVec(src, "(idx) * (idx)"))
+    assert(Simplify(MapVec(MapVec(src, "2.5"), "v * v")) == MapVec(src, "(2.5) * (2.5)"))
+    Simplify(MapVec(ZipVec(src, other, "v1 * v2"), "v + 1")) match {
+      case ZipVec(_, _, "(v1 * v2) + 1") => ()
+      case x => fail(s"single-read map not fused into the zip: ${x.pprint()}")
+    }
+  }
+
   test("slice pushes through map into the scan region") {
     val e = SliceVec(MapVec(src, "v * 2"), 10, 20)
     val s = Simplify(e)
