@@ -213,8 +213,8 @@ final class DArray(val exprTree: VecExpr, val ctx: Ctx) {
     * mode (reference `boundaries`, `dask_array/_overlap.py:715-792`):
     * `constant` (fill `cv`), `periodic` (wrap), `reflect` (mirror incl.
     * edge), `nearest` (repeat edge). Pure composition of slice/flip/
-    * repeat/range + concat — all narrow, zero-shuffle index remaps that
-    * [[Simplify]] pushes into the scans. Windowed ops over the extended
+    * repeat/range + concat — all narrow, zero-shuffle index remaps.
+    * Windowed ops over the extended
     * array followed by `slice(depth, n+depth)` give the boundary-aware
     * `map_overlap`; the same compositions ARE `pad`'s edge/wrap/reflect
     * modes (reference `creation/_pad.py:17`). Needs a statically known

@@ -8,31 +8,32 @@ import scala.annotation.tailrec
   * algebra BEFORE plans are handed to Catalyst (SURVEY §4.2's decision:
   * array-level rewrites need array metadata Catalyst doesn't carry).
   *
-  * Rules:
-  *   1. map/map fusion          — `Map(Map(x,e1),e2) → Map(x, e2[v:=e1])`
+  * Rules — each one changes the physical plan of at least one query:
+  *   1. identity elision        — `Slice(x, 0, len) → x`
+  *   2. self-zip → map          — `Zip(x, x, e) → Map(x, e[v1,v2:=v])`
+  *   3. offset self-alignment   — `Zip(x[a:b], x[a+k:b+k]) → ZipOffset`
+  *   4. map/map fusion          — `Map(Map(x,e1),e2) → Map(x, e2[v:=e1])`
   *      (reference blockwise fusion, `dask_array/_blockwise.py:1405-1573`),
   *      unless e2 reads `v` more than once and e1 is not cheap
-  *   2. map-into-zip fusion     — `Map(Zip(a,b,e),e2) → Zip(a,b, e2[v:=e])`,
-  *      same guard
-  *   3. slice/slice fusion      — `fuse_slice`
-  *      (reference `dask_array/slicing/_utils.py:941`)
-  *   4. slice-through-map       — rebasing `idx` when the kernel uses it
+  *   5. zip-operand fusion      — `Zip(Map(a,e1), b, e) → Zip(a, b, e[v1:=e1])`,
+  *      either side, idx-free kernels only
+  *   6. slice-through-concat    — whole-side scan pruning, straddles split
+  *   7. slice-through-setitem   — updates filtered and rebased
+  *   8. slice-through-sliding   — the w-1 halo rides in the pushed slice
+  *   9. slice-through-map       — rebasing `idx` when the kernel uses it
   *      (reference `.ai-docs/optimizations.md` "Through Blockwise")
-  *   5. slice-through-zip       — pushed to both sides
-  *   6. slice-into-source       — folded into the scan `region`
-  *      (reference `FromArray._accept_slice`, `dask_array/io/_from_array.py`)
-  *   7. slice-into-range        — affine refit (slice of arange is arange)
-  *   8. identity elision        — `Map(x,"v") → x`, `Slice(x, 0, len) → x`
-  *   9. slice-through-repeat/-setitem — bounds keep pruning at the scan
-  *      below partial repeats and copy-on-write point updates
-  *  10. map-through-concat      — same idx-free kernel both sides pulls
-  *      above the union so adjacent-piece coalescing can fuse the scans
-  *  11. slice-through-overlap   — windowed ops need only a bounded halo,
-  *      so a bound commutes below diff/sliding/gradient with the halo
-  *      folded into the pushed slice; prefix scans (cum/ffill) admit
-  *      right-bound pruning; coarsen scales the bound by k; a slice of a
-  *      roll dissolves the roll into pushed region scans (reference
-  *      `tests/test_slice_through_overlap.py`)
+  *  10. slice-into-source       — folded into the scan `region`, a region
+  *      slice fused with it (reference `FromArray._accept_slice`,
+  *      `dask_array/io/_from_array.py`)
+  *  11. slice-into-range        — affine refit (slice of arange is arange)
+  *
+  * Dropped because no query's plan changes without them: identity map and
+  * stride, stride∘stride, map-into-zip, rechunk collapse and the
+  * unify-chunks cost policy, slice/slice fusion (slice-into-source fuses
+  * regions), flip∘flip, adjacent-piece concat coalescing, map-through-
+  * concat, and the slice pushes through zip, stride, rechunk, flip,
+  * repeat, diff, cumsum, ffill, gradient, stencil, roll and coarsen. A
+  * slice over those nodes stays above them; answers are unchanged.
   *
   * Sharing gate (reference `_slice_pushdown`, `dask_array/_expr.py:431-468`):
   * a slice only pushes below a node all of whose dependents are slices —
@@ -42,14 +43,7 @@ import scala.annotation.tailrec
   */
 object Simplify {
 
-  def apply(root: VecExpr): VecExpr = fixpoint(root, 20)
-
-  @tailrec
-  private def fixpoint(e: VecExpr, fuel: Int): VecExpr = {
-    val parents = dependents(e)
-    val next = rewrite(e, parents)
-    if (next.name == e.name || fuel == 0) next else fixpoint(next, fuel - 1)
-  }
+  def apply(root: VecExpr): VecExpr = fixpoint(root)((_, _, _) => ())
 
   /** One trace entry per fixpoint round that changed the plan. */
   final case class TraceStep(round: Int, before: String, after: String)
@@ -60,17 +54,26 @@ object Simplify {
     * the simplified root plus the trail — driver-side only, no jobs. */
   def trace(root: VecExpr): (VecExpr, Seq[TraceStep]) = {
     val steps = scala.collection.mutable.ArrayBuffer.empty[TraceStep]
-    var e = root
-    var round = 0
-    var changed = true
-    while (changed && round < 20) {
-      val next = rewrite(e, dependents(e))
-      changed = next.name != e.name
-      if (changed) steps += TraceStep(round, e.pprint(), next.pprint())
-      e = next
-      round += 1
+    val out = fixpoint(root) { (round, before, after) =>
+      steps += TraceStep(round, before.pprint(), after.pprint())
     }
-    (e, steps.toSeq)
+    (out, steps.toSeq)
+  }
+
+  private val MaxRounds = 21
+
+  /** Rewrite until the root's content name stops changing or
+    * [[MaxRounds]] rounds have run; `changed` sees every round that
+    * rewrote the plan. */
+  @tailrec
+  private def fixpoint(e: VecExpr, round: Int = 0)(
+      changed: (Int, VecExpr, VecExpr) => Unit): VecExpr = {
+    val next = rewrite(e, dependents(e))
+    if (next.name == e.name) next
+    else {
+      changed(round, e, next)
+      if (round + 1 == MaxRounds) next else fixpoint(next, round + 1)(changed)
+    }
   }
 
   /** name → set of parent tokens (for the sharing gate). */
@@ -125,11 +128,7 @@ object Simplify {
 
   private def simplifyNode(e: VecExpr, parents: Map[String, List[VecExpr]]): VecExpr = e match {
     // -- identity elision ---------------------------------------------------
-    case MapVec(c, "v")                                   => c
     case SliceVec(c, 0, hi) if c.length == hi             => c
-    case StrideVec(c, 1)                                  => c
-    // stride/stride composes multiplicatively
-    case StrideVec(StrideVec(c, a), b)                    => StrideVec(c, a * b)
 
     // -- operand dedup / self-alignment fusion -------------------------------
     // Zipping an expression with ITSELF is an elemwise map: content
@@ -163,105 +162,12 @@ object Simplify {
     // self-zip rule above and pay an alignment join)
     case MapVec(MapVec(c, e1), e2) if fusible(e1, e2) =>
       simplifyNode(MapVec(c, VecExpr.subst(e2, "v", e1)), parents)
-    case MapVec(ZipVec(a, b, e1), e2) if fusible(e1, e2) =>
-      ZipVec(a, b, VecExpr.subst(e2, "v", e1))
     case ZipVec(MapVec(a, e1), b, e) if !VecExpr.usesIdx(e1) =>
       simplifyNode(ZipVec(a, b, VecExpr.subst(e, "v1", VecExpr.subst(e1, "v", "v1"))), parents)
     case ZipVec(a, MapVec(b, e2), e) if !VecExpr.usesIdx(e2) =>
       simplifyNode(ZipVec(a, b, VecExpr.subst(e, "v2", VecExpr.subst(e2, "v", "v2"))), parents)
 
-    // -- rechunk collapsing + unify-chunks cost policy ------------------------
-    // adjacent rechunks collapse to the outermost grid; a rechunk to the
-    // grid the child already has is the identity; slices commute through
-    // the pure-metadata rechunk node so region pushdown still reaches the
-    // scan underneath a re-gridded operand
-    case RechunkVec(RechunkVec(c, _), b)      => simplifyNode(RechunkVec(c, b), parents)
-    case RechunkVec(c, b) if c.chunk == b     => c
-    case SliceVec(RechunkVec(c, b), lo, hi) =>
-      simplifyNode(RechunkVec(simplifyNode(SliceVec(c, lo, hi), parents), b), parents)
-
-    // -- slice-through-stride -------------------------------------------------
-    // (stride∘slice)[k] = c[(lo+k)·s], so the bound commutes below the
-    // stride (scaled by s) and keeps pruning at the scan; gated like every
-    // pushdown so a shared stride isn't re-derived
-    case s0 @ SliceVec(st @ StrideVec(c, sp), lo, hi) if hi > lo =>
-      if (!allDependentsAreSlices(st, parents)) s0
-      else StrideVec(
-        simplifyNode(SliceVec(c, lo * sp, (hi - 1) * sp + 1), parents), sp)
-    // unify-chunks (reference §4.4 policy, `dask_array/_expr.py:723-905`,
-    // decision records `bench/bench_unify_policy.py:33-73`): zip operands
-    // on different grids must realign. Direction, in priority order:
-    //   1. modeled bytes — re-grid the side with fewer (unknown-length
-    //      sides count as infinite, so the known-smaller side moves);
-    //   2. on a byte TIE, MERGE to the coarser grid (the shatter_guard
-    //      record: refining a 10-block side to a per-element partner
-    //      mints thousands of downstream partitions — the reference's
-    //      60 719-vs-12 401 task blow-up);
-    //   3. hard backstop — a merge that would manufacture blocks over
-    //      `unify-chunks-limit` refines to the finer grid instead (the
-    //      nested_merge inflation record: a 2-chunk operand must not
-    //      drag a day-chunked panel up to multi-GiB blocks).
-    // UnifyPolicyBenchSpec pins all the decision-record outcomes.
-    case ZipVec(a, b, e) if a.chunk != b.chunk =>
-      val la = VecExpr.passBytes(a.length)
-      val lb = VecExpr.passBytes(b.length)
-      val aBytes = if (la < 0) Long.MaxValue else la
-      val bBytes = if (lb < 0) Long.MaxValue else lb
-      val coarse = math.max(a.chunk, b.chunk)
-      val fine = math.min(a.chunk, b.chunk)
-      val target0 =
-        if (bBytes < aBytes) a.chunk
-        else if (aBytes < bBytes) b.chunk
-        else coarse
-      // The backstop arbitrates the TIE merge only (the nested_merge
-      // record is an equal-weight tie): it must never reverse rule 1's
-      // byte decision — flipping target to the fine grid also flips WHICH
-      // side moves, and rule 1 may have chosen a giant-chunked unknown-
-      // length side precisely so the small known side is the one that
-      // moves (its manufactured block is then min(len, chunk), far under
-      // the nominal grid). Size the check by the blocks the merge would
-      // actually mint on the moved side: on a byte tie the lengths are
-      // equal, so a grid wider than the array caps at len·RowBytes.
-      val target =
-        if (aBytes == bBytes && target0 == coarse) {
-          val movedLen = math.max(a.length, b.length) // equal on a known tie
-          val blockBytes =
-            (if (movedLen < 0) coarse else math.min(coarse, movedLen)) * VecExpr.RowBytes
-          if (blockBytes > Blocked.unifyLimitBytes) fine else coarse
-        } else target0
-      if (target == a.chunk) ZipVec(a, RechunkVec(b, target), e)
-      else ZipVec(RechunkVec(a, target), b, e)
-
-    // -- slice fusion & pushdown ---------------------------------------------
-    case SliceVec(SliceVec(c, a, b), c2, d) =>
-      val (lo, hi) = graft.core.Chunks.fuseSlice(a, b, c2, d)
-      simplifyNode(SliceVec(c, lo, hi), parents)
-
-    // flip∘flip is the identity
-    case FlipVec(FlipVec(c)) => c
-
-    // adjacent-piece concat coalescing (reference concat-of-slices
-    // simplification): two touching regions of the same scan, or two
-    // contiguous arithmetic ranges, are ONE leaf — half the scans
-    case ConcatVec(ColumnVec(t1, i1, v1, Some((a, b))),
-                   ColumnVec(t2, i2, v2, Some((c, d))))
-        if t1 == t2 && i1 == i2 && v1 == v2 && c == b =>
-      ColumnVec(t1, i1, v1, Some((a, d)))
-    case ConcatVec(RangeVec(s1, st1, n1), RangeVec(s2, st2, n2))
-        if st1 == st2 && s2 == s1 + st1 * n1 =>
-      RangeVec(s1, st1, n1 + n2)
-
-    // slice-through-flip: x.flip[lo:hi] = x[n-hi:n-lo].flip — the bound
-    // keeps pruning at the scan under the pure index reversal (reference
-    // slice pushdown through coordinate remaps); gated like every push
-    case s0 @ SliceVec(f @ FlipVec(c), lo, hi)
-        if c.length >= 0 && hi <= c.length =>
-      if (!allDependentsAreSlices(f, parents)) s0
-      else {
-        val n = c.length
-        FlipVec(simplifyNode(SliceVec(c, n - hi, n - lo), parents))
-      }
-
+    // -- slice pushdown -------------------------------------------------------
     // slice-through-concat: prune sides the bound cannot touch — a slice
     // entirely inside one input deletes the other input's SCAN from the
     // plan (reference slice-through-Concatenate); straddling bounds split
@@ -277,27 +183,6 @@ object Simplify {
           simplifyNode(SliceVec(b, 0, hi - na), parents))
       }
 
-    // map-through-concat (same idx-free kernel both sides): pulling the
-    // map ABOVE the union lets adjacent-piece coalescing fuse the scans
-    // underneath — `x[0:100].map(f) ++ x[100:200].map(f)` becomes one
-    // scan + one kernel (reference blockwise-over-Concatenate fusion)
-    case ConcatVec(MapVec(a, e1), MapVec(b, e2))
-        if e1 == e2 && !VecExpr.usesIdx(e1) =>
-      simplifyNode(MapVec(simplifyNode(ConcatVec(a, b), parents), e1), parents)
-
-    // slice-through-repeat: out[p] = c[p div k], so [lo,hi) needs child
-    // rows [lo div k, (hi-1) div k]. Fires only when that child range is
-    // strictly narrower (otherwise it rewrites to itself forever); the
-    // residual outer slice trims the partial first/last repeats.
-    case s0 @ SliceVec(rp @ RepeatVec(c, k), lo, hi) if hi > lo && lo >= 0 =>
-      val cl = lo / k
-      val ch = (hi - 1) / k + 1
-      val shrinks = cl > 0 || (c.length >= 0 && ch < c.length)
-      if (!allDependentsAreSlices(rp, parents) || !shrinks) s0
-      else simplifyNode(
-        SliceVec(RepeatVec(simplifyNode(SliceVec(c, cl, ch), parents), k),
-          lo - cl * k, hi - cl * k), parents)
-
     // slice-through-setitem: keep only the point updates the bound can
     // see, rebased — the slice keeps pruning at the scan below the
     // copy-on-write projection (reference SetItem is blockwise, so slice
@@ -312,18 +197,6 @@ object Simplify {
         if (kept.isEmpty) sliced else SetItemVec(sliced, kept)
       }
 
-    // -- slice-through-overlap (reference tests/test_slice_through_overlap
-    // .py): a windowed op reads only a bounded halo beyond the bound, so
-    // the slice commutes below it with the halo folded into the pushed
-    // slice — pruning reaches the scan underneath the window
-
-    // slice-through-diff: out[j] = x[j+n] - x[j], so [lo,hi) reads exactly
-    // x[lo, hi+n) — the halo rides inside the pushed slice, no residual
-    case s0 @ SliceVec(d @ DiffVec(c, n), lo, hi) =>
-      val shrinks = lo > 0 || (c.length >= 0 && hi + n < c.length)
-      if (!allDependentsAreSlices(d, parents) || !shrinks) s0
-      else DiffVec(simplifyNode(SliceVec(c, lo, hi + n), parents), n)
-
     // slice-through-sliding: a trailing width-w frame sees at most w-1
     // rows before the bound; the pushed slice starts at lo-w+1 and the
     // residual outer slice trims the halo region (whose partial windows
@@ -337,82 +210,7 @@ object Simplify {
         if (lo == start) inner else SliceVec(inner, lo - start, hi - start)
       }
 
-    // prefix scans (cumsum/ffill): the left prefix is load-bearing, but a
-    // right bound cuts the scan tail — x.cum()[lo:hi) == cum(x[0:hi))[lo:)
-    case s0 @ SliceVec(cv @ CumVec(c, op2), lo, hi)
-        if c.length >= 0 && hi < c.length =>
-      if (!allDependentsAreSlices(cv, parents)) s0
-      else SliceVec(CumVec(simplifyNode(SliceVec(c, 0, hi), parents), op2), lo, hi)
-    case s0 @ SliceVec(fv @ FfillVec(c), lo, hi)
-        if c.length >= 0 && hi < c.length =>
-      if (!allDependentsAreSlices(fv, parents)) s0
-      else SliceVec(FfillVec(simplifyNode(SliceVec(c, 0, hi), parents)), lo, hi)
-
-    // slice-through-gradient: the central difference needs one ghost cell
-    // per side; interior positions keep their central stencil, and the
-    // pushed slice's own edges coincide with the global edges exactly
-    // where the one-sided formula applies
-    case s0 @ SliceVec(g @ GradientVec(c), lo, hi) if c.length >= 0 && hi > lo =>
-      val n = c.length
-      val start = math.max(0L, lo - 1)
-      val end = math.min(n, hi + 1)
-      val shrinks = start > 0 || end < n
-      // start > end = a fully past-the-end slice: leave it to evaluate
-      // empty rather than build an inverted inner slice
-      if (!allDependentsAreSlices(g, parents) || !shrinks || start > end) s0
-      else {
-        val inner = GradientVec(simplifyNode(SliceVec(c, start, end), parents))
-        if (lo == start && hi == end) inner
-        else SliceVec(inner, lo - start, hi - start)
-      }
-
-    // slice-through-stencil: same shape as gradient with a ±depth halo —
-    // taps of every kept position stay inside the pushed domain (or off
-    // the global edge, where both sides read NULL); idx-using kernels are
-    // rebased like slice-through-map
-    case s0 @ SliceVec(st @ StencilVec(c, dep, k), lo, hi) if c.length >= 0 && hi > lo =>
-      val n = c.length
-      val start = math.max(0L, lo - dep)
-      val end = math.min(n, hi + dep)
-      val shrinks = start > 0 || end < n
-      // past-the-end slices evaluate empty; don't build an inverted slice
-      if (!allDependentsAreSlices(st, parents) || !shrinks || start > end) s0
-      else {
-        val rebased = if (VecExpr.usesIdx(k)) VecExpr.subst(k, "idx", s"idx + ${start}L") else k
-        val inner = StencilVec(simplifyNode(SliceVec(c, start, end), parents), dep, rebased)
-        if (lo == start && hi == end) inner
-        else SliceVec(inner, lo - start, hi - start)
-      }
-
-    // slice-through-roll: the circular shift is a pure index remap, so a
-    // contiguous output range reads a contiguous-mod-n input range — the
-    // roll dissolves into one (or two, when wrapping) pushed slices and
-    // its whole-length crossJoin disappears from the plan
-    case s0 @ SliceVec(r @ RollVec(c, sft), lo, hi)
-        if c.length > 0 && hi <= c.length && hi > lo =>
-      if (!allDependentsAreSlices(r, parents)) s0
-      else {
-        val n = c.length
-        val a = ((lo - sft) % n + n) % n
-        val len = hi - lo
-        if (a + len <= n) simplifyNode(SliceVec(c, a, a + len), parents)
-        else simplifyNode(ConcatVec(
-          simplifyNode(SliceVec(c, a, n), parents),
-          simplifyNode(SliceVec(c, 0, a + len - n), parents)), parents)
-      }
-
-    // slice-through-coarsen: out group g covers child rows [g·k,(g+1)·k),
-    // so [lo,hi) reads child [lo·k, hi·k) exactly (ragged tail included —
-    // the cap at the child length preserves the partial last group)
-    case s0 @ SliceVec(cv @ CoarsenVec(c, k, op2), lo, hi) if hi > lo =>
-      // clamp so a past-the-end outer slice (empty result) can't build an
-      // inverted inner slice (lo·k above the data, innerHi capped below it)
-      val innerHi0 = if (c.length >= 0) math.min(hi * k, c.length) else hi * k
-      val innerHi = math.max(lo * k, innerHi0)
-      val shrinks = lo > 0 || (c.length >= 0 && innerHi < c.length)
-      if (!allDependentsAreSlices(cv, parents) || !shrinks) s0
-      else CoarsenVec(simplifyNode(SliceVec(c, lo * k, innerHi), parents), k, op2)
-
+    // slice-through-map: rebasing `idx` when the kernel uses it
     case s @ SliceVec(m @ MapVec(c, e1), lo, hi) =>
       if (!allDependentsAreSlices(m, parents)) s // sharing gate
       else {
@@ -421,21 +219,16 @@ object Simplify {
         MapVec(simplifyNode(SliceVec(c, lo, hi), parents), rebased)
       }
 
-    case s @ SliceVec(z @ ZipVec(a, b, e1), lo, hi) =>
-      if (!allDependentsAreSlices(z, parents)) s
-      else {
-        val rebased = if (VecExpr.usesIdx(e1)) VecExpr.subst(e1, "idx", s"idx + ${lo}L") else e1
-        ZipVec(simplifyNode(SliceVec(a, lo, hi), parents),
-               simplifyNode(SliceVec(b, lo, hi), parents), rebased)
-      }
-
-    case SliceVec(src @ ColumnVec(t, i, v, None), lo, hi) =>
-      val _ = src
+    // slice-into-source: the bound becomes the scan `region`; a slice of a
+    // region composes with it (reference `fuse_slice`,
+    // `dask_array/slicing/_utils.py:941`: [a,b) then [c,d) is
+    // [a+c, min(a+d, b)))
+    case SliceVec(ColumnVec(t, i, v, None), lo, hi) =>
       ColumnVec(t, i, v, Some((lo, hi)))
     case SliceVec(ColumnVec(t, i, v, Some((l0, h0))), lo, hi) =>
-      val (nl, nh) = graft.core.Chunks.fuseSlice(l0, h0, lo, hi)
-      ColumnVec(t, i, v, Some((nl, nh)))
+      ColumnVec(t, i, v, Some((l0 + lo, math.min(l0 + hi, h0))))
 
+    // slice-into-range: a slice of arange is an arange
     case SliceVec(RangeVec(start, step, n), lo, hi) =>
       RangeVec(start + lo * step, step, math.min(hi, n) - math.min(lo, n))
 

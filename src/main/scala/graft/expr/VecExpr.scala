@@ -411,7 +411,8 @@ final case class ConcatVec(left: VecExpr, right: VecExpr) extends VecExpr {
     val shifted =
       if (left.length >= 0) r.select((col("idx") + left.length).as("idx"), col("v"))
       else {
-        val off = l.agg(max(col("idx")).as("m")).select((col("m") + 1).as("off"))
+        // an empty left side has max(idx) NULL: its offset is 0, not NULL
+        val off = l.agg(max(col("idx")).as("m")).select(coalesce(col("m") + 1, lit(0L)).as("off"))
         r.crossJoin(broadcast(off)).select((col("idx") + col("off")).as("idx"), col("v"))
       }
     l.unionByName(shifted)
@@ -448,16 +449,6 @@ object Blocked {
     * the correctness gate, not just at scale. Tunable via
     * -Dgraft.block.size; per-expression override via [[RechunkVec]]. */
   val B: Long = sys.props.getOrElse("graft.block.size", "4096").toLong
-
-  /** Hard backstop on MANUFACTURED chunk size under any unify-merge
-    * direction (reference `array.unify-chunks-limit`, default 512 MiB —
-    * `bench/bench_unify_policy.py:14-16`): merging two grids up to the
-    * coarser side must never mint blocks bigger than this; when it
-    * would, the policy refines to the finer grid instead (the
-    * nested_merge inflation guard). Tunable via
-    * -Dgraft.unify.limit.bytes. */
-  val unifyLimitBytes: Long =
-    sys.props.getOrElse("graft.unify.limit.bytes", (512L << 20).toString).toLong
 
   /** Length-aware default block: B up to B² elements (every small-scale
     * plan unchanged), then √n — so the per-block scan and the
@@ -531,8 +522,8 @@ object Blocked {
   * blocked op consumes it (its `idx DIV chunk` partitioning). This is the
   * element-table form of the reference's lazy rechunk: the data exchange
   * happens once, inside the consumer's shuffle, never as a standalone
-  * pass. [[Simplify]] collapses adjacent rechunks and uses the transfer
-  * model to pick the realignment direction when zip operands disagree. */
+  * pass. A zip whose operands sit on different grids joins them on
+  * `idx` as they are; blocked ops above it use the left operand's grid. */
 final case class RechunkVec(child: VecExpr, newChunk: Long) extends VecExpr {
   require(newChunk > 0, s"chunk must be positive, got $newChunk")
   def children: Seq[VecExpr] = Seq(child)

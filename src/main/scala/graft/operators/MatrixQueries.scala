@@ -29,6 +29,21 @@ object MatrixQueries {
     if (fs.exists(p)) fs.delete(p, true)
   }
 
+  /** One scratch directory per JVM for the store round trips, created
+    * under `java.io.tmpdir` and removed at exit, so two runs at once never
+    * overwrite each other's stores. */
+  private lazy val storeRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_stores_")
+    sys.addShutdownHook {
+      val paths = java.nio.file.Files.walk(root)
+      try paths.sorted(java.util.Comparator.reverseOrder()).forEach(p => java.nio.file.Files.deleteIfExists(p))
+      finally paths.close()
+    }
+    root
+  }
+
+  private def storePath(name: String): String = storeRoot.resolve(name).toString
+
   private def liDims(s: SparkSession, d: String): (Long, Long) = {
     // MAX over the two key columns is answerable from parquet row-group
     // STATISTICS alone — the same exact value the full scan computes, read
@@ -357,7 +372,7 @@ object MatrixQueries {
     // io/_from_npy_stack.py:13): distributed densifying write + two-phase
     // header-manifest read — codec bit-exactness under the oracle gate
     "np01_npy_roundtrip" -> ((s, d) => {
-      val dir = s"/tmp/graft_npy_np01_${new java.io.File(d).getName}"
+      val dir = storePath(s"npy_np01_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.NpyStack.write(el, dir, blockSize = 256, n = 1000)
@@ -367,7 +382,7 @@ object MatrixQueries {
     // N-d npy stack round trip (reference to_npy_stack/from_npy_stack
     // stack N-d blocks along axis 0): rank-3 with a ragged last block
     "np02_npy_nd" -> ((s, d) => {
-      val dir = s"/tmp/graft_npy_np02_${new java.io.File(d).getName}"
+      val dir = storePath(s"npy_np02_${new java.io.File(d).getName}")
       val a = graft.NdArray.tabulate(s, Seq(7L, 3L, 2L), "(c0*5 + c1*3 + c2) % 9 + 1")
       graft.sources.NpyStack.writeNd(a, dir, blockRows = 3)
       graft.sources.NpyStack.readNd(s, dir).elements.orderBy("c0", "c1", "c2")
@@ -378,7 +393,7 @@ object MatrixQueries {
     // files with contiguous f8 datasets — h5py-readable) + the two-phase
     // header-manifest read; format bit-exactness under the oracle gate
     "h01_hdf5_roundtrip" -> ((s, d) => {
-      val dir = s"/tmp/graft_h5_h01_${new java.io.File(d).getName}"
+      val dir = storePath(s"h5_h01_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Hdf5.writeStack(el, dir, blockSize = 256, n = 1000)
@@ -389,7 +404,7 @@ object MatrixQueries {
     // the symbol-table B-tree in sorted order; both datasets come back
     // through one file read each
     "h02_hdf5_datasets" -> ((s, d) => {
-      val file = s"/tmp/graft_h5_h02_${new java.io.File(d).getName}.h5"
+      val file = storePath(s"h5_h02_${new java.io.File(d).getName}.h5")
       val xs = Array.tabulate(300)(i => ((i * 7) % 13).toDouble)
       val ys = Array.tabulate(200)(i => ((i * 3) % 11) - 5.0)
       val (fs, base) = graft.sources.StoreIO.fsOf(file, s.sparkContext.hadoopConfiguration)
@@ -415,7 +430,7 @@ object MatrixQueries {
     // files distributedly (one task per file, chunk B-trees decoded on
     // executors, never the driver).
     "h03_hdf5_chunked" -> ((s, d) => {
-      val file = s"/tmp/graft_h5_h03_${new java.io.File(d).getName}.h5"
+      val file = storePath(s"h5_h03_${new java.io.File(d).getName}.h5")
       val vals = new Array[Double](1000)
       Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
@@ -437,7 +452,7 @@ object MatrixQueries {
     // the other four index types (single/implicit/extensible/v2-btree),
     // paged fixed arrays, and depth-1 v2 B-trees.
     "h04_hdf5_v4_latest" -> ((s, d) => {
-      val file = s"/tmp/graft_h5_h04_${new java.io.File(d).getName}.h5"
+      val file = storePath(s"h5_h04_${new java.io.File(d).getName}.h5")
       val vals = new Array[Double](1000)
       Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
@@ -458,7 +473,7 @@ object MatrixQueries {
     // binaryFile pass as (ds, idx, v). Hdf5Spec also covers the
     // multi-direct-block / root-indirect-block heap shape.
     "h05_hdf5_dense_group" -> ((s, d) => {
-      val file = s"/tmp/graft_h5_h05_${new java.io.File(d).getName}.h5"
+      val file = storePath(s"h5_h05_${new java.io.File(d).getName}.h5")
       val vals = new Array[Double](1000)
       Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
@@ -480,7 +495,7 @@ object MatrixQueries {
     // pass with slash-path names. Hdf5Spec covers the latest-format
     // (dense root + compact subgroup) variant.
     "h06_hdf5_nested_groups" -> ((s, d) => {
-      val file = s"/tmp/graft_h5_h06_${new java.io.File(d).getName}.h5"
+      val file = storePath(s"h5_h06_${new java.io.File(d).getName}.h5")
       val vals = new Array[Double](1000)
       Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
@@ -499,7 +514,7 @@ object MatrixQueries {
     // io/_tiledb.py:12,72): one fragment per block task, committed-
     // fragment manifest read, distributed a0.tdb decode
     "td01_tiledb_roundtrip" -> ((s, d) => {
-      val uri = s"/tmp/graft_tdb_td01_${new java.io.File(d).getName}"
+      val uri = storePath(s"tdb_td01_${new java.io.File(d).getName}")
       deleteDir(uri)
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
@@ -513,7 +528,7 @@ object MatrixQueries {
     // have: a later-timestamp subarray write overlays the base fragment
     // cell-by-cell at read time (max_by over the manifest rank)
     "td02_tiledb_shadow" -> ((s, d) => {
-      val uri = s"/tmp/graft_tdb_td02_${new java.io.File(d).getName}"
+      val uri = storePath(s"tdb_td02_${new java.io.File(d).getName}")
       deleteDir(uri)
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
@@ -532,7 +547,7 @@ object MatrixQueries {
     // back (distributed binaryFile decode); the oracle recomputes the same
     // values directly — codec bit-exactness is what's under test
     "z01_zarr_roundtrip" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z01_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z01_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256, compressor = Some("zlib"))
@@ -540,7 +555,7 @@ object MatrixQueries {
     }),
 
     "z02_zarr_2d" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z02_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z02_${new java.io.File(d).getName}")
       graft.sources.Zarr.write2d(R.spark(s).df, dir, R.rows, R.cols, 7, 9)
       graft.sources.Zarr.read2d(s, dir).where("v <> 0").orderBy("i", "j")
     }),
@@ -551,7 +566,7 @@ object MatrixQueries {
     // readNd → NdArray; zero cells drop per the implicit-zero convention,
     // so both sides filter v <> 0
     "z04_zarr_nd" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z04_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z04_${new java.io.File(d).getName}")
       val a = graft.NdArray.tabulate(s, Seq(6L, 5L, 4L), "(c0*7 + c1*3 + c2) % 11")
       graft.sources.Zarr.writeNd(a, dir, Seq(4L, 2L, 3L),
         compressor = Some("gzip"), format = 3)
@@ -562,7 +577,7 @@ object MatrixQueries {
     // zarr v3 round trip (zarr.json metadata, c/-prefixed chunk keys,
     // bytes+gzip codec chain) — same codec-bit-exactness contract as z01
     "z03_zarr_v3" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z03_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z03_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256,
@@ -574,7 +589,7 @@ object MatrixQueries {
     // default to; zstd-jni ships with Spark) — distributed write,
     // distributed read, same chunk-manifest scale shape as z01-z04
     "z05_zarr_zstd" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z05_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z05_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 900")
       graft.sources.Zarr.write1d(el, dir, 900, chunk = 200,
@@ -588,7 +603,7 @@ object MatrixQueries {
     // byte-shuffle + lz4 via the lz4-java Spark ships, self-describing
     // 16-byte header — distributed encode/decode like z01-z05
     "z06_zarr_blosc" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z06_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z06_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256, compressor = Some("blosc"))
@@ -603,7 +618,7 @@ object MatrixQueries {
     // including the ragged 232-element edge chunk (the partial
     // 8-element-group tail passthrough is pinned in BloscSpec's vectors)
     "z12_zarr_bitshuffle" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z12_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z12_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, dir, 1000, chunk = 256,
@@ -617,7 +632,7 @@ object MatrixQueries {
     // chunk stays the random-access unit); crc32c-indexed shards are
     // written distributed and read back through the sharded decode path
     "z07_zarr_sharded" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z07_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z07_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 900")
       graft.sources.Zarr.write1dSharded(el, dir, 900, chunk = 256, inner = 64,
@@ -633,7 +648,7 @@ object MatrixQueries {
     // non-integral / out-of-range values rather than numpy-C-casting
     // silently (ZarrSpec pins the refusal and the raw chunk bytes).
     "z08_zarr_i4_u1_write" -> ((s, d) => {
-      val base = s"/tmp/graft_zarr_z08_${new java.io.File(d).getName}"
+      val base = storePath(s"zarr_z08_${new java.io.File(d).getName}")
       val el4 = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",
           "CAST(floor(value * 1000) - 500 AS DOUBLE) AS v")
@@ -656,7 +671,7 @@ object MatrixQueries {
     // crc32c-indexed shard object and round-trip bit-for-bit through the
     // exact Long codec — no value ever passes through a double
     "z09_zarr_sharded_long" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_z09_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_z09_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",
           "CAST(9007199254740993 + 7 * event_id AS BIGINT) AS v")
@@ -675,7 +690,7 @@ object MatrixQueries {
     // a member's own .zarray first). Mixed chunk sizes so a key-to-meta
     // mixup between members cannot cancel out.
     "z10_zarr_consolidated" -> ((s, d) => {
-      val root = s"/tmp/graft_zarr_z10_${new java.io.File(d).getName}"
+      val root = storePath(s"zarr_z10_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.writeGroup(root)
@@ -701,7 +716,7 @@ object MatrixQueries {
     // first). At 100 TB this is the v3 object-store open cost: one GET
     // for a hierarchy of thousands of arrays.
     "z11_zarr_consolidated_v3" -> ((s, d) => {
-      val root = s"/tmp/graft_zarr_z11_${new java.io.File(d).getName}"
+      val root = storePath(s"zarr_z11_${new java.io.File(d).getName}")
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx", "value AS v").where("idx < 1000")
       graft.sources.Zarr.write1d(el, s"$root/a", 1000, chunk = 256,
@@ -721,7 +736,7 @@ object MatrixQueries {
     // the LongType read path — any cast through double would corrupt the
     // low bits and fail the oracle's exact hash
     "q88_zarr_int64_exact" -> ((s, d) => {
-      val dir = s"/tmp/graft_zarr_q88_${new java.io.File(d).getName}"
+      val dir = storePath(s"zarr_q88_${new java.io.File(d).getName}")
       // 2^53 + 1 + 7·id: odd offsets are NOT representable as doubles
       val el = Tables.read(s, s"$d/events.parquet")
         .selectExpr("event_id AS idx",

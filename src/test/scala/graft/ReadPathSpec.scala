@@ -9,7 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Every parquet input-table read goes through [[Tables]]: a bare
   * `read.parquet(` infers the schema with a Spark job while the DataFrame
   * is being built. The allowlist holds only reads of files the engine
-  * itself has just written. */
+  * itself has just written.
+  *
+  * No source names a fixed path under `/tmp` either: two runs at once
+  * would overwrite each other's files there. The store round trips in
+  * `MatrixQueries` write under a directory made per JVM instead. */
 class ReadPathSpec extends AnyFunSuite {
 
   private val resolver = "src/main/scala/graft/Tables.scala"
@@ -37,6 +41,15 @@ class ReadPathSpec extends AnyFunSuite {
     } yield s"$rel:${no + 1}: ${line.trim}"
     assert(found.isEmpty, found.mkString("bare parquet reads outside graft.Tables:\n", "\n", ""))
     assert(sources(new File("src/main/scala")).size > 40, "scanned the wrong tree")
+  }
+
+  test("no string literal starting with /tmp in src/main") {
+    val found = for {
+      f <- sources(new File("src/main/scala"))
+      (line, no) <- { val src = Source.fromFile(f, "UTF-8"); try src.getLines().toList finally src.close() }.zipWithIndex
+      if line.contains("\"/tmp")
+    } yield s"${f.getPath}:${no + 1}: ${line.trim}"
+    assert(found.isEmpty, found.mkString("fixed /tmp paths in src/main:\n", "\n", ""))
   }
 
   test("every allowlisted read still exists") {

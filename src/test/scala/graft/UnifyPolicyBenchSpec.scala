@@ -4,116 +4,28 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.expr._
 
-/** Decision-record regression spec for the chunk-unification policy —
-  * the engine-side analogue of the reference's optimizer benches
+/** Decision-record regression spec for chunk alignment — the
+  * engine-side analogue of the reference's optimizer benches
   * (`bench/bench_unify_policy.py:33-73`,
-  * `bench/bench_rechunk_insertion.py:49-66`), the one BASELINE.md
-  * surface that previously had no ported regression metric. CoreSpec
-  * tests the policy's DECISIONS and CostSpec the transfer model; this
-  * spec asserts the OUTCOME METRICS the reference records — unified
-  * partition counts (its "tasks") and modeled movement (its
-  * "est transfer") — for each named scenario, so a policy regression
-  * shows up as the same numbers the reference's decision records would
-  * catch. Mapping to BASELINE.md rows:
+  * `bench/bench_rechunk_insertion.py:49-66`). It asserts the outcome
+  * metrics the reference records — rechunk count (its "rechunks") and
+  * modeled movement (its "est transfer") — for the scenarios where no
+  * standalone realignment pass may appear. Mapping to BASELINE.md rows:
   *
   *   scenario          BASELINE row  reference metric       engine metric here
-  *   shatter_guard     1, 2          12 401 vs 60 719 tasks 10 vs 12 000 partitions
-  *   nested_merge      3, 4          468 KiB vs 91 MiB max  blocks capped at unify-limit
-  *   comparable_merge  (§ref case 3) merge kept             coarser grid kept
   *   roll_sliver       7             1809 tasks, 1 rechunk  0 standalone rechunks, join-borne realign
   *   cross_io          9             197 tasks, 0 rechunks  0 rechunks, (0, 2-pass) model
   *   negative_control  10            1095 tasks, 0 rechunks 0 rechunks, (0, 0) model
   *
-  * The macro-DAG rows (5, 6) are the composition of shatter_guard +
-  * comparable_merge at scale (the reference's own reading: auto's macro
-  * graph equals coarse's because its internal merges are all equal-
-  * weight or near-free) — covered transitively by those two records,
-  * not reproduced as a separate synthetic DAG.
+  * The engine has no unify-chunks policy: a zip joins its operands on
+  * `idx` whatever their grids, and no query's plan changed when the
+  * policy was dropped, so rows 1-6 (shatter_guard, nested_merge) have no
+  * engine decision left to record.
   */
 class UnifyPolicyBenchSpec extends AnyFunSuite {
 
   private def rechunks(e: VecExpr): Int =
     (if (e.isInstanceOf[RechunkVec]) 1 else 0) + e.children.map(rechunks).sum
-
-  private def partitions(n: Long, chunk: Long): Long = (n + chunk - 1) / chunk
-
-  /** The unified grid of a simplified zip (both sides land on it). */
-  private def unifiedChunk(e: VecExpr): Long = e match {
-    case ZipVec(l, r, _) =>
-      assert(l.chunk == r.chunk, s"zip sides not unified: ${l.chunk} vs ${r.chunk}")
-      l.chunk
-    case other => fail(s"expected ZipVec, got ${other.token}")
-  }
-
-  test("shatter_guard: equal-weight per-element side merges UP (10 partitions, not 12000)") {
-    // reference: coarse 3D vs per-element indexed — refine shatters to
-    // 60 719 tasks, auto/coarse keep 12 401 (BASELINE rows 1-2, the 11x
-    // wall gap). Engine shape: 10-block coarse grid vs per-element grid,
-    // equal bytes — the tie-break must merge to the coarser grid.
-    // distinct leaves (a shared leaf would — correctly — take the
-    // self-zip fusion path instead and move nothing at all)
-    val n = 12000L
-    val coarse = RechunkVec(RangeVec(0, 1, n), 1200)
-    val perElem = RechunkVec(RangeVec(5, 2, n), 1)
-    for (z <- Seq(ZipVec(coarse, perElem, "v1 + v2"),
-                  ZipVec(perElem, coarse, "v1 + v2"))) {
-      val u = unifiedChunk(Simplify(z))
-      assert(u == 1200L, s"shatter: unified to chunk $u")
-      assert(partitions(n, u) == 10L)
-      // the refine direction this record exists to forbid:
-      assert(partitions(n, 1L) == 12000L) // the counterfactual blow-up
-    }
-  }
-
-  test("nested_merge: the unify-limit backstop refines instead of minting over-limit blocks") {
-    // reference: a 2-chunk vector must not drag a day-chunked panel up
-    // to 91.55 MiB (-> multi-GiB downstream) blocks; auto refines that
-    // dimension (BASELINE rows 3-4). Engine shape: equal-weight tie
-    // whose coarser grid exceeds unify-chunks-limit — the backstop must
-    // pick the FINER grid even though the tie-break prefers merging.
-    val n = 1L << 27 // 134M elements
-    val coarseChunk = n / 2 // 67M rows * 16 B = 1 GiB > the 512 MiB limit
-    assert(coarseChunk * VecExpr.RowBytes > Blocked.unifyLimitBytes,
-      "fixture must exceed the limit for the record to bite")
-    val fine = RechunkVec(RangeVec(0, 1, n), 65536)
-    val twoChunk = RechunkVec(RangeVec(3, 4, n), coarseChunk)
-    val u = unifiedChunk(Simplify(ZipVec(fine, twoChunk, "v1 + v2")))
-    assert(u == 65536L, s"inflation: unified to chunk $u")
-    assert(u * VecExpr.RowBytes <= Blocked.unifyLimitBytes)
-    assert(partitions(n, u) == 2048L)
-  }
-
-  test("byte-rule direction is never reversed by the backstop (giant-grid unknown side stays put)") {
-    // rule 1 picks the known-SMALLER side to move; the backstop
-    // arbitrates ties only. Before the fix it compared the NOMINAL grid
-    // chunk (giant · 16 B > limit) and flipped the target to the fine
-    // grid — re-gridding the unknown-length side the byte model chose to
-    // keep still, a full re-grid of the "infinite" operand. The side
-    // that actually moves mints blocks of min(len, chunk) = 16 MB here,
-    // far under the limit.
-    val giant = 50L * 1000 * 1000 // 800 MB nominal grid > the 512 MiB limit
-    assert(giant * VecExpr.RowBytes > Blocked.unifyLimitBytes,
-      "fixture must exceed the limit for the reversal to have fired")
-    val known = RechunkVec(RangeVec(0, 1, 1000000L), 4096)
-    val unknown = RechunkVec(FilterVec(RangeVec(5, 2, 1000000L), "v > -1"), giant)
-    for (z <- Seq(ZipVec(known, unknown, "v1 + v2"),
-                  ZipVec(unknown, known, "v1 + v2"))) {
-      val u = unifiedChunk(Simplify(z))
-      assert(u == giant, s"backstop reversed the byte rule: unified to chunk $u")
-    }
-  }
-
-  test("comparable_merge: equal-weight nested grids under the limit keep merging") {
-    // reference case 3 (the rolling-window halo regime): auto must keep
-    // the merge when the moved bytes are backed by an equal-weight
-    // anchor — 384 tasks, same as coarse, vs refine's 1212.
-    val n = 90000L
-    val fine = RechunkVec(RangeVec(0, 1, n), 250)
-    val nested = RechunkVec(RangeVec(7, 3, n), 750)
-    val u = unifiedChunk(Simplify(ZipVec(fine, nested, "v1 + v2")))
-    assert(u == 750L, s"comparable: unified to chunk $u")
-    assert(partitions(n, u) == 120L) // vs 360 refined
-  }
 
   test("roll_sliver: x + roll(x,1) realigns inside the join — no standalone rechunk pass") {
     // reference post-realign record (BASELINE row 7): 1809 tasks with
