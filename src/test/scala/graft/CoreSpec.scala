@@ -2,6 +2,24 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+/** Slice composition (reference `fuse_slice`): slicing [a,b) then [c,d) of
+  * the result equals slicing [a+c, min(a+d, b)) of the original. The
+  * arithmetic lives in `Simplify`'s slice-into-source rule, which fuses a
+  * slice of a scan region with that region. */
+class ChunksSpec extends AnyFunSuite {
+  import graft.expr._
+
+  private def region(a: Long, b: Long) = ColumnVec("events", "event_id", "value", Some((a, b)))
+
+  test("fuseSlice composes consecutive slices") {
+    val src = ColumnVec("events", "event_id", "value")
+    // x[2:9][1:4] == x[3:6]
+    assert(Simplify(SliceVec(SliceVec(src, 2, 9), 1, 4)) == region(3, 6))
+    // clamped by outer bound: x[2:5][1:10] == x[3:5]
+    assert(Simplify(SliceVec(SliceVec(src, 2, 5), 1, 10)) == region(3, 5))
+  }
+}
+
 class SimplifySpec extends AnyFunSuite {
   import graft.expr._
 
@@ -36,11 +54,6 @@ class SimplifySpec extends AnyFunSuite {
   test("slice/slice fuses before pushing") {
     val e = SliceVec(SliceVec(src, 10, 100), 5, 20)
     assert(Simplify(e) == ColumnVec("events", "event_id", "value", Some((15L, 30L))))
-    // x[2:9][1:4] == x[3:6], and the outer bound clamps: x[2:5][1:10] == x[3:5]
-    assert(Simplify(SliceVec(SliceVec(src, 2, 9), 1, 4)) ==
-      ColumnVec("events", "event_id", "value", Some((3L, 6L))))
-    assert(Simplify(SliceVec(SliceVec(src, 2, 5), 1, 10)) ==
-      ColumnVec("events", "event_id", "value", Some((3L, 5L))))
   }
 
   test("idx-dependent kernels are rebased when a slice passes them") {
