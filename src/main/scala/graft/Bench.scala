@@ -153,13 +153,18 @@ object Bench {
     // metaspace LEVELS after them — so a re-paying-work inversion
     // arrives with its mechanism attached (escalating jit_ms ⇒ recompile
     // churn; cc_mb at the reserve ceiling ⇒ code-cache flush thrash; flat
-    // counters ⇒ look elsewhere).
+    // counters ⇒ look elsewhere). codegen_n counts the Janino compiles
+    // of the three steady executions (Spark's public codegen metric): 0
+    // once run 1 has cached the query's generated classes, so a query
+    // that recompiles on every run shows it without a profiler rerun.
     import scala.jdk.CollectionConverters._
     def jitMsNow(): Long = {
       val c = java.lang.management.ManagementFactory.getCompilationMXBean
       if (c != null && c.isCompilationTimeMonitoringSupported)
         c.getTotalCompilationTime else 0L
     }
+    def codegenNow(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     def gcMsNow(): Long = java.lang.management.ManagementFactory
       .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
     def poolMb(prefix: String): Double = java.lang.management.ManagementFactory
@@ -226,6 +231,7 @@ object Bench {
     val results = ordered.map { case (name, fn) =>
       val jit0 = jitMsNow(); val gc0 = gcMsNow(); val thr0 = threadsNow()
       val first = runOnce(fn, name)
+      val cg0 = codegenNow()
       // unpersist anything run 1 leaked so later runs can't skip real work
       spark.catalog.clearCache()
       drainJit()
@@ -249,7 +255,8 @@ object Bench {
       // by construction; a thread leak is one signal they cannot see)
       val counters = (jitMsNow() - jit0, gcMsNow() - gc0,
         poolMb("CodeHeap"), poolMb("Metaspace"),
-        threadsNow(), threadsNow() - thr0, ssp, mnt, listenerQueueDepth())
+        threadsNow(), threadsNow() - thr0, ssp, mnt, listenerQueueDepth(),
+        codegenNow() - cg0)
       // quiesce BETWEEN replay gates (r14 verdict "next" #3): gates run
       // last and back-to-back, so without this each gate's teardown —
       // state-store stop, listener drain, GC debt — lands inside the
@@ -281,11 +288,11 @@ object Bench {
       .map { case (k, (f, s1, s2, s3, c)) => (k, (f, median3(s1, s2, s3), s1, s2, s3, c)) }
       .sortBy { case (_, (_, s, _, _, _, _)) => -s }
     val detailQs = bySteady.map {
-      case (k, (f, s, s1, s2, s3, (jit, gc, cc, meta, thr, thrD, ssp, mnt, lbq))) =>
+      case (k, (f, s, s1, s2, s3, (jit, gc, cc, meta, thr, thrD, ssp, mnt, lbq, cg))) =>
         s"\"" + k + "\":{\"first\":" + fmt(f) + ",\"steady\":" + fmt(s) +
           ",\"s1\":" + fmt(s1) + ",\"s2\":" + fmt(s2) + ",\"s3\":" + fmt(s3) +
           ",\"min\":" + fmt(Seq(f, s1, s2, s3).min) +
-          ",\"jit_ms\":" + jit + ",\"gc_ms\":" + gc +
+          ",\"jit_ms\":" + jit + ",\"gc_ms\":" + gc + ",\"codegen_n\":" + cg +
           ",\"cc_mb\":" + fmt(cc) + ",\"meta_mb\":" + fmt(meta) +
           ",\"thr\":" + thr + ",\"thr_d\":" + thrD + ",\"ssp\":" + ssp +
           ",\"mnt\":" + mnt + ",\"lbq\":" + lbq + "}"

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Tables
 import graft.streaming.StreamOps
@@ -86,22 +86,24 @@ object StreamQueries {
     * mtime over every file under it, recursively) — folded into every
     * staged-replay key so a corpus regenerated under the same path can
     * never replay stale staged bytes (r13 verdict #3: `modelCache` got
-    * exactly this fingerprint in r12; `stageOnce` was missed, and its
+    * a fingerprint like this in r12; `stageOnce` was missed, and its
     * `_STAGED_OK` marker survives JVMs AND driver rounds, so the stale
     * window there was unbounded). Listing a test-scale table tree is
     * tens of stat calls — noise against the replay it guards. */
   private[graft] def dirFingerprint(d: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .sortBy(_.getName).flatMap(walk)
-      else Seq(f)
     import scala.util.hashing.MurmurHash3.stringHash
-    val files = walk(new java.io.File(d))
+    val files = filesUnder(new java.io.File(d))
     val desc = files.map(f => s"${f.getPath}:${f.length}:${f.lastModified}")
       .mkString("|")
     f"${stringHash(desc)}%08x${files.size}%x"
   }
+
+  /** Every file under `f` (or `f` itself), depth-first in name order. */
+  private def filesUnder(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty).toSeq
+        .sortBy(_.getName).flatMap(filesUnder)
+    else Seq(f)
 
   /** Scope the state-store maintenance interval PAST any gate's
     * lifetime for the duration of one replay (r13 verdict "next" #4:
@@ -129,11 +131,30 @@ object StreamQueries {
     * .commitTimeMs` + `walCommit`): the checksum companionship is a
     * per-file fixed cost that dominates tmpfs-resident, kilobyte-scale
     * files. The gate checkpoints are per-run throwaway scratch (a fresh
-    * dir every invocation, wiped in `localizeAndCleanup`), so corruption
+    * dir every invocation, wiped when [[runGate]] ends), so corruption
     * detection buys nothing here; a production deployment on durable
     * DFS storage chooses per its own durability needs —
-    * `-Dgraft.stream.ckpt.checksum=true` restores the default. */
+    * `-Dgraft.stream.ckpt.checksum=true` restores the default.
+    *
+    * Artifact isolation is scoped off for the stream. `start()` clones the
+    * session, and the clone copies this conf when it is created. With
+    * `spark.sql.artifact.isolation.enabled` at its default (true), every
+    * clone gets its own artifact-state UUID; the executor keys its
+    * isolated-session cache by that UUID and runs the clone's tasks under
+    * a fresh `ExecutorClassLoader`. Spark's codegen cache is keyed by
+    * (context class loader, code), so every replay recompiled all of its
+    * executor-side generated classes with Janino and lost their JIT-warm
+    * code: per repeat run, s01 compiled 4 classes and s06 14
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`, pinned by
+    * `ReplayCodegenSpec`), and one replay bench run ended with one class
+    * loader per replay still alive. With isolation off the clone has no
+    * artifact state, its tasks run in the executor's default session, and
+    * a repeat replay compiles nothing. It is safe because the engine adds
+    * no session artifacts (nothing calls `addArtifact` or `addJar`), so
+    * the clone has nothing to isolate; the parent session's value comes
+    * back when the replay ends, like every other conf scoped here. */
   private def gateCheckpointConfs: Seq[(String, String)] = Seq(
+    "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
       sys.props.getOrElse("graft.stream.ckpt.checksum", "false")) ++ {
     // raw-NIO checkpoint manager for the gates' LOCAL scratch
@@ -172,16 +193,19 @@ object StreamQueries {
     }
   }
 
-  private def stageOnce(key: String)(write: String => Unit): String =
+  /** Stage a gate's corpus once, keyed by the gate's stage key, its batch
+    * count, the staging layout `version` and the corpus CONTENT
+    * fingerprint (r13 verdict #3: same path + regenerated data must
+    * re-stage, not replay stale bytes; nFiles is part of it so a dir
+    * staged under an old batch count is never silently reused). */
+  private def stageOnce(stageKey: String, nFiles: Int, version: String,
+      corpusDir: String)(write: String => Unit): String = phase(gateTag(stageKey), "stage") {
+    val key = s"$stageKey|n$nFiles|$version|fp${dirFingerprint(corpusDir)}"
     stagedDirs.computeIfAbsent(key, { _ =>
       import scala.util.hashing.MurmurHash3.stringHash
       val tag = f"${stringHash(key)}%08x${stringHash(key.reverse)}%08x"
       val dir = s"$fastTmpDir/graft_stage_$tag"
       val marker = new java.io.File(dir, "_STAGED_OK")
-      def wipe(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
-        f.delete()
-      }
       if (!marker.exists()) {
         // a dir without its marker is a crashed/legacy writer's litter
         wipe(new java.io.File(dir))
@@ -201,98 +225,100 @@ object StreamQueries {
       }
       dir
     })
+  }
 
-  /** Localize a finished replay's memory-sink table and release every
-    * per-run resource (r11 advisory: a Bench session — 6+ gates × 4 runs
-    * — retained ~24 full sink tables in driver heap and left checkpoint
-    * litter on disk). The sink is collected into a LOCAL DataFrame (gate
-    * outputs are oracle-sized — hundreds to a few thousand rows), the
-    * memory table is dropped, and the run's checkpoint/watch dir tree is
-    * deleted before the result is returned. */
   private def wipe(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
     f.delete()
   }
 
-  private def localizeAndCleanup(s: SparkSession, run: String,
-      dir: String): DataFrame = {
-    val sink = s.table(run)
-    val out = s.createDataFrame(
-      java.util.Arrays.asList(sink.collect(): _*), sink.schema)
-    s.catalog.dropTempView(run)
-    wipe(new java.io.File(dir))
-    out
-  }
+  /** The diag/phase name of a gate: its stage key's head ("s03"). */
+  private def gateTag(stageKey: String): String = stageKey.takeWhile(_ != '|')
 
-  /** Error-path release: a replay that THROWS (transform failure, a
-    * died stream) must not retain its sink view or leave its
-    * checkpoint/watch tree behind — the r11 heap/litter advisory applies
-    * to failed runs exactly as to successful ones. Best-effort: the view
-    * may not exist yet. */
-  private def releaseRun(s: SparkSession, run: String, dir: String): Unit = {
-    try s.catalog.dropTempView(run) catch { case _: Throwable => }
-    wipe(new java.io.File(dir))
+  /** Janino compiles so far in this JVM (Spark's public codegen metric:
+    * one histogram update per compiled class). */
+  private def codegenCompiles(): Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Start, drive and tear down one replay run — the one path both replay
+    * drivers take, so every gate starts under the same scoped confs
+    * ([[withQuietMaintenance]]) and releases the same resources.
+    *
+    * Every invocation gets a fresh checkpoint and sink name (Bench runs
+    * each query four times in one session — a reused checkpoint would
+    * replay ZERO batches and fake an empty result; a reused sink name
+    * would refuse to start). `source(dir)` opens the input stream for the
+    * run's scratch `dir`; `transform` is the operator under test, written
+    * to a memory sink; `drive(q, dir)` runs the started query to
+    * completion. Teardown stops the query, records its progress and
+    * replay diag, and unloads the state stores. The sink is then
+    * localized (r11 advisory: a Bench session — 6+ gates × 4 runs —
+    * retained ~24 full sink tables in driver heap and left checkpoint
+    * litter on disk): it is collected into a LOCAL DataFrame (gate outputs
+    * are oracle-sized — hundreds to a few thousand rows), the memory table
+    * is dropped, and the run's checkpoint/watch tree is deleted. A run
+    * that THROWS (transform failure, a died stream) is released the same
+    * way, best-effort, before the error propagates. */
+  private def runGate(s: SparkSession, stageKey: String, staged: String,
+      outputMode: String, trigger: Option[Trigger])(
+      source: String => DataFrame)(transform: DataFrame => DataFrame)(
+      drive: (StreamingQuery, String) => Unit): DataFrame = {
+    val run = s"graft_stream_sink_${runSeq.incrementAndGet()}_" +
+      java.util.UUID.randomUUID.toString.take(8)
+    val dir = s"$fastTmpDir/$run"
+    val tag = gateTag(stageKey)
+    try withQuietMaintenance(s) {
+      val compiles0 = codegenCompiles()
+      val q = phase(tag, "start") {
+        val writer = transform(source(dir)).writeStream
+          .format("memory")
+          .queryName(run)
+          .outputMode(outputMode)
+          .option("checkpointLocation", s"$dir/ckpt")
+        trigger.fold(writer)(writer.trigger).start()
+      }
+      try drive(q, dir) finally phase(tag, "teardown") {
+        if (q.isActive) q.stop()
+        dumpProgress(q)
+        captureReplayDiag(q, staged, stageKey, codegenCompiles() - compiles0)
+        unloadStateStores()
+      }
+      phase(tag, "localize") {
+        val sink = s.table(run)
+        val out = s.createDataFrame(
+          java.util.Arrays.asList(sink.collect(): _*), sink.schema)
+        s.catalog.dropTempView(run)
+        wipe(new java.io.File(dir))
+        out
+      }
+    } catch { case t: Throwable =>
+      try s.catalog.dropTempView(run) catch { case _: Throwable => }
+      wipe(new java.io.File(dir))
+      throw t
+    }
   }
 
   /** Stage `src` as `nFiles` parquet files, replay them one file per
     * micro-batch through `transform`, run to completion, and return the
-    * (localized) sink contents. Every invocation gets a fresh checkpoint
-    * and sink name (Bench runs each query four times in one session —
-    * a reused checkpoint would replay ZERO batches and fake an empty
-    * result; a reused sink name would refuse to start). Only for
-    * transforms whose OUTPUT is invariant to batch split and order
-    * (stateless kernels, key-emitting dedup): the file source's listing
-    * order is not pinned here. */
+    * (localized) sink contents. Only for transforms whose OUTPUT is
+    * invariant to batch split and order (stateless kernels, key-emitting
+    * dedup): the file source's listing order is not pinned here. */
   private[graft] def replayToCompletion(s: SparkSession, src: DataFrame,
       nFiles: Int, stageKey: String, corpusDir: String,
       outputMode: String = "append")(
       transform: DataFrame => DataFrame): DataFrame = {
-    val run = s"graft_stream_sink_${runSeq.incrementAndGet()}_" +
-      java.util.UUID.randomUUID.toString.take(8)
-    val dir = s"$fastTmpDir/$run"
-    // nFiles (and a format version) are part of the corpus identity: a
-    // marker-gated dir staged under an old batch count would otherwise be
-    // silently reused, degrading the multi-batch coverage with no signal.
-    // The corpus CONTENT fingerprint is part of it too (r13 verdict #3):
-    // same path + regenerated data must re-stage, not replay stale bytes.
-    val gateTag = stageKey.takeWhile(_ != '|')
-    val staged = phase(gateTag, "stage") { stageOnce(
-        s"$stageKey|n$nFiles|v1|fp${dirFingerprint(corpusDir)}") { sd =>
+    val staged = stageOnce(stageKey, nFiles, "v1", corpusDir) { sd =>
       src.repartition(nFiles).write.mode("overwrite").parquet(s"$sd/src")
-    } }
-    val stream = s.readStream
-      .schema(src.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$staged/src")
-    try withQuietMaintenance(s) {
-      val q = phase(gateTag, "start") { transform(stream).writeStream
-        .format("memory")
-        .queryName(run)
-        .outputMode(outputMode)
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start() }
-      try phase(gateTag, "await") { q.awaitTermination() } finally
-        phase(gateTag, "teardown") {
-        if (q.isActive) q.stop()
-        dumpProgress(q)
-        captureReplayDiag(q, staged, stageKey)
-        unloadStateStores()
-      }
-      phase(gateTag, "localize") { localizeAndCleanup(s, run, dir) }
-    } catch { case t: Throwable => releaseRun(s, run, dir); throw t }
+    }
+    runGate(s, stageKey, staged, outputMode, Some(Trigger.AvailableNow()))(_ =>
+      s.readStream
+        .schema(src.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(s"$staged/src"))(transform) { (q, _) =>
+      phase(gateTag(stageKey), "await") { q.awaitTermination() }
+    }
   }
 
-  /** A finished replay's state-store providers stay LOADED in the JVM —
-    * its checkpoint is never reused, yet the background maintenance task
-    * keeps snapshotting the corpses on every tick. In a many-query
-    * session (Bench runs every gate four times in one JVM) the registry
-    * accumulates across replays and a maintenance tick landing inside a
-    * later measured query absorbs seconds of dead-snapshot I/O (observed:
-    * s03 escalating 1.7 → 7.7 → 11 s across its own runs). Unload
-    * eagerly; the next stateful query re-registers from scratch. A real
-    * deployment never hits this — one long-lived query owns its
-    * providers — it is strictly the multi-replay-per-JVM harness shape. */
   /** Inter-gate quiesce for Bench (r14 verdict "next" #3: the gates-
     * last ordering moved the scheduler-epoch tax INTO the measured
     * s-family steadies — +11.5 s across the family in the r14 driver
@@ -306,6 +332,16 @@ object StreamQueries {
     Thread.sleep(250)
   }
 
+  /** A finished replay's state-store providers stay LOADED in the JVM —
+    * its checkpoint is never reused, yet the background maintenance task
+    * keeps snapshotting the corpses on every tick. In a many-query
+    * session (Bench runs every gate four times in one JVM) the registry
+    * accumulates across replays and a maintenance tick landing inside a
+    * later measured query absorbs seconds of dead-snapshot I/O (observed:
+    * s03 escalating 1.7 → 7.7 → 11 s across its own runs). Unload
+    * eagerly; the next stateful query re-registers from scratch. A real
+    * deployment never hits this — one long-lived query owns its
+    * providers — it is strictly the multi-replay-per-JVM harness shape. */
   private def unloadStateStores(): Unit = {
     // StateStore.stop() is private[sql] at the Scala level but public
     // bytecode (Spark's own test teardowns call it) — reflective
@@ -366,16 +402,10 @@ object StreamQueries {
       fileCol: String, nFiles: Int, stageKey: String, corpusDir: String,
       outputMode: String = "append")(
       transform: DataFrame => DataFrame): DataFrame = {
-    val run = s"graft_stream_sink_${runSeq.incrementAndGet()}_" +
-      java.util.UUID.randomUUID.toString.take(8)
-    val dir = s"$fastTmpDir/$run"
     // stage each range ONCE as a single sequence-named parquet file
     // (b000.parquet, b001.parquet, …) under ranges/ — reused across
-    // invocations and JVMs like every other staged corpus; the corpus
-    // content fingerprint is part of the key (r13 verdict #3)
-    val gateTag = stageKey.takeWhile(_ != '|')
-    val staged = phase(gateTag, "stage") { stageOnce(
-        s"$stageKey|n$nFiles|v4|fp${dirFingerprint(corpusDir)}") { sd =>
+    // invocations and JVMs like every other staged corpus
+    val staged = stageOnce(stageKey, nFiles, "v4", corpusDir) { sd =>
       new java.io.File(s"$sd/ranges").mkdirs()
       for (k <- 0 until nFiles) {
         src.where(col(fileCol) === k).drop(fileCol)
@@ -387,21 +417,17 @@ object StreamQueries {
         java.nio.file.Files.move(part.head.toPath,
           java.nio.file.Paths.get(f"$sd/ranges/b$k%03d.parquet"))
       }
-    } }
-    val watch = new java.io.File(s"$dir/watch")
-    watch.mkdirs()
-    val stream = s.readStream
-      .schema(src.drop(fileCol).schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(watch.getAbsolutePath)
-    try withQuietMaintenance(s) {
-    val q = phase(gateTag, "start") { transform(stream).writeStream
-      .format("memory")
-      .queryName(run)
-      .outputMode(outputMode)
-      .option("checkpointLocation", s"$dir/ckpt")
-      .start() }
-    try {
+    }
+    val tag = gateTag(stageKey)
+    runGate(s, stageKey, staged, outputMode, trigger = None) { dir =>
+      val watch = new java.io.File(s"$dir/watch")
+      watch.mkdirs()
+      s.readStream
+        .schema(src.drop(fileCol).schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(watch.getAbsolutePath)
+    }(transform) { (q, dir) =>
+      val watch = new java.io.File(s"$dir/watch")
       // barrier truth (r18 rework — guide §2.4, remove work outright):
       // the file source's RESERVED logOffset in the offsets WAL — the
       // 0-based index of the latest file-source metadata-log entry, one
@@ -444,7 +470,7 @@ object StreamQueries {
           logOffsetRe.findFirstMatchIn(body).map(_.group(1).toLong).getOrElse(-1L)
         }
       } catch { case _: java.io.IOException => -1L }
-      phase(gateTag, "publish") { for (k <- 0 until nFiles) {
+      phase(tag, "publish") { for (k <- 0 until nFiles) {
         // barrier: file k becomes visible only after file k-1 is locked
         // into a batch (reserved logOffset >= k-1) — order equals
         // publish order; see the reservedFiles() contract above.
@@ -476,7 +502,7 @@ object StreamQueries {
           new java.io.File(watch, f"b$k%03d.parquet").toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       } }
-      phase(gateTag, "flush") {
+      phase(tag, "flush") {
       // pre-quiescence barrier: processAllAvailable resets noNewData and
       // returns on the NEXT no-new-data trigger — a trigger whose
       // directory listing predates the last rename could set that flag
@@ -500,14 +526,7 @@ object StreamQueries {
       // returns only at true quiescence
       q.processAllAvailable()
       }
-    } finally phase(gateTag, "teardown") {
-      q.stop()
-      dumpProgress(q)
-      captureReplayDiag(q, staged, stageKey)
-      unloadStateStores()
     }
-    phase(gateTag, "localize") { localizeAndCleanup(s, run, dir) }
-    } catch { case t: Throwable => releaseRun(s, run, dir); throw t }
   }
 
   /** Forensics from the MOST RECENT replay, captured after every run
@@ -522,21 +541,15 @@ object StreamQueries {
                               manifest: Seq[(String, Long, String)])
   private[graft] var lastReplayDiag: Option[ReplayDiag] = None
 
-  private def captureReplayDiag(
-      q: org.apache.spark.sql.streaming.StreamingQuery, staged: String,
-      stageKey: String): Unit = {
+  private def captureReplayDiag(q: StreamingQuery, staged: String,
+      stageKey: String, compiles: Long): Unit = {
     def sha256(f: java.io.File): String = {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       md.digest(java.nio.file.Files.readAllBytes(f.toPath))
         .map(b => f"$b%02x").mkString
     }
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).toSeq
-          .sortBy(_.getName).flatMap(walk)
-      else Seq(f)
     try {
-      val files = walk(new java.io.File(staged)).map(f =>
+      val files = filesUnder(new java.io.File(staged)).map(f =>
         (f.getPath.stripPrefix(staged + "/"), f.length, sha256(f)))
       lastReplayDiag =
         Some(ReplayDiag(staged, q.recentProgress.toIndexedSeq.map(_.json), files))
@@ -544,7 +557,7 @@ object StreamQueries {
       // (cheap: gate corpora are KBs) — s03's in-session self-compare is
       // the deep diagnostic, but a driver red on ANY replay gate should
       // at least leave its batch sequence + staged-byte identity behind
-      val gate = stageKey.takeWhile(_ != '|')
+      val gate = gateTag(stageKey)
       def js(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
         .replace("\n", "\\n") + "\""
       val dir = java.nio.file.Paths.get(
@@ -554,6 +567,7 @@ object StreamQueries {
         "\"gate\":" + js(gate),
         "\"wall_ms\":" + System.currentTimeMillis,
         "\"staged_dir\":" + js(staged),
+        "\"codegen_compiles\":" + compiles,
         "\"staged_manifest\":" + files.map { case (n, len, h) =>
           s"""{"file":${js(n)},"bytes":$len,"sha256":${js(h)}}"""
         }.mkString("[", ",", "]"),
@@ -600,7 +614,7 @@ object StreamQueries {
   /** -Dgraft.stream.debug: per-batch progress to stderr (input rows,
     * watermark, sink rows) — the first thing to look at when a replay
     * gate's row count is off. */
-  private def dumpProgress(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+  private def dumpProgress(q: StreamingQuery): Unit =
     if (sys.props.contains("graft.stream.debug"))
       q.recentProgress.foreach { p =>
         System.err.println(s"[stream-debug] ${q.name} batch=${p.batchId} " +
@@ -752,7 +766,7 @@ object StreamQueries {
     * their bench rows measure training.
     *
     * r12 ADVICE hardening: the memo key carries a CONTENT FINGERPRINT
-    * of the corpus (per-file name/size/mtime), so a corpus regenerated
+    * of the corpus (`dirFingerprint` of `documents.parquet`), so a corpus regenerated
     * under the same path within one JVM re-trains instead of serving a
     * stale model; and training runs OUTSIDE any map lock (get →
     * train → putIfAbsent), so a long Spark training job never blocks
@@ -760,18 +774,8 @@ object StreamQueries {
     * one redundant training of a deterministic model. */
   private val modelCache =
     new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def corpusFingerprint(d: String): String = {
-    val root = new java.io.File(s"$d/documents.parquet")
-    val files =
-      if (root.isDirectory)
-        Option(root.listFiles()).map(_.toSeq).getOrElse(Nil)
-          .filter(_.isFile).sortBy(_.getName)
-      else Seq(root)
-    files.map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|").hashCode.toHexString + s":${files.size}"
-  }
   private def cached[T <: AnyRef](key: String, d: String)(train: => T): T = {
-    val k = s"$key|${corpusFingerprint(d)}"
+    val k = s"$key|${dirFingerprint(s"$d/documents.parquet")}"
     val hit = modelCache.get(k)
     if (hit != null) hit.asInstanceOf[T]
     else {
