@@ -69,9 +69,9 @@ object StreamQueries {
     * real deployment writes checkpoints to a DFS whose cost profile is
     * its own). Parameterised: `-Dgraft.stream.tmpdir=...` wins; else a
     * writable /dev/shm (tmpfs) is preferred; else `java.io.tmpdir`.
-    * Forensic artifacts (graft_replay_diag, S03 diag) intentionally
-    * stay on `java.io.tmpdir` so Verify and the judge find them where
-    * previous rounds documented them. */
+    * The replay diags (graft_replay_diag) intentionally stay on
+    * `java.io.tmpdir` so Verify finds them where previous rounds
+    * documented them. */
   private[graft] lazy val fastTmpDir: String =
     sys.props.get("graft.stream.tmpdir").getOrElse {
       val shm = new java.io.File("/dev/shm")
@@ -105,19 +105,29 @@ object StreamQueries {
         .sortBy(_.getName).flatMap(filesUnder)
     else Seq(f)
 
-  /** Scope the state-store maintenance interval PAST any gate's
-    * lifetime for the duration of one replay (r13 verdict "next" #4:
-    * the 214.6 s bench outlier sat entirely in replay gates'
-    * no-data-batch/state-maintenance timing). The stream reads the
-    * interval when [[unloadStateStores]]' stop() has left no running
-    * maintenance task and the first provider load restarts it — i.e.
-    * at every gate's start, so scoping around start()+termination is
-    * complete. With a 1-hour tick and a full stop() after every gate,
-    * no maintenance tick can ever land inside a measured query. */
-  private def withQuietMaintenance[T](s: SparkSession)(body: => T): T =
-    withGateConfs(s, Seq(
-      "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s") ++
-      gateCheckpointConfs)(body)
+  /** The confs every replay run is scoped under, from staging to
+    * termination ([[withGateConfs]]; the stream captures them at start,
+    * and the parent session's values come back when the run ends):
+    *
+    *  - four shuffle partitions: a stateful micro-batch materializes ONE
+    *    STATE STORE PER SHUFFLE PARTITION PER BATCH, so a 4-batch
+    *    test-scale replay at 32 partitions pays 128 state-store setups
+    *    for a corpus that fits in 4. On a real cluster the production
+    *    path sizes this to the stream's key cardinality, not to the
+    *    gate's corpus.
+    *  - the state-store maintenance interval past any gate's lifetime
+    *    (r13 verdict "next" #4: the 214.6 s bench outlier sat entirely in
+    *    replay gates' no-data-batch/state-maintenance timing). The stream
+    *    reads the interval when [[unloadStateStores]]' stop() has left no
+    *    running maintenance task and the first provider load restarts it,
+    *    i.e. at every gate's start; with a 1-hour tick and a full stop()
+    *    after every gate, no maintenance tick can land inside a measured
+    *    query.
+    *  - the checkpoint profile, [[gateCheckpointConfs]]. */
+  private val gateConfs: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "4",
+    "spark.sql.streaming.stateStore.maintenanceInterval" -> "3600s") ++
+    gateCheckpointConfs
 
   /** Gate checkpoint I/O profile (r18 session 2, guide §1.2 then §6).
     *
@@ -132,9 +142,14 @@ object StreamQueries {
     * per-file fixed cost that dominates tmpfs-resident, kilobyte-scale
     * files. The gate checkpoints are per-run throwaway scratch (a fresh
     * dir every invocation, wiped when [[runGate]] ends), so corruption
-    * detection buys nothing here; a production deployment on durable
-    * DFS storage chooses per its own durability needs —
-    * `-Dgraft.stream.ckpt.checksum=true` restores the default.
+    * detection buys nothing here and checksums are off; a production
+    * deployment on durable DFS storage chooses per its own durability
+    * needs.
+    *
+    * The checkpoint manager is [[graft.streaming.GateNioCheckpointFileManager]],
+    * raw NIO for the gates' LOCAL scratch checkpoints: the stock
+    * FileContext manager fork+execs a shell per file op (see its header
+    * for the measurements) — 3 metadata writes/batch + every state delta.
     *
     * Artifact isolation is scoped off for the stream. `start()` clones the
     * session, and the clone copies this conf when it is created. With
@@ -151,24 +166,12 @@ object StreamQueries {
     * artifact state, its tasks run in the executor's default session, and
     * a repeat replay compiles nothing. It is safe because the engine adds
     * no session artifacts (nothing calls `addArtifact` or `addJar`), so
-    * the clone has nothing to isolate; the parent session's value comes
-    * back when the replay ends, like every other conf scoped here. */
+    * the clone has nothing to isolate. */
   private def gateCheckpointConfs: Seq[(String, String)] = Seq(
     "spark.sql.artifact.isolation.enabled" -> "false",
-    "spark.sql.streaming.checkpoint.fileChecksum.enabled" ->
-      sys.props.getOrElse("graft.stream.ckpt.checksum", "false")) ++ {
-    // raw-NIO checkpoint manager for the gates' LOCAL scratch
-    // checkpoints: the stock FileContext manager fork+execs a shell
-    // per file op (see GateNioCheckpointFileManager's header for the
-    // measurements) — 3 metadata writes/batch + every state delta.
-    // `-Dgraft.stream.ckpt.manager=default` restores stock behavior;
-    // any other value is used verbatim as the manager class name.
-    sys.props.getOrElse("graft.stream.ckpt.manager",
-      "graft.streaming.GateNioCheckpointFileManager") match {
-      case "default" => Seq.empty
-      case cls => Seq("spark.sql.streaming.checkpointFileManagerClass" -> cls)
-    }
-  }
+    "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.GateNioCheckpointFileManager].getName)
 
   // Tried and rejected (measured, r18 session 2): in-batch scan
   // parallelism — staging with 128 KB parquet row groups plus scoped
@@ -183,10 +186,9 @@ object StreamQueries {
   // both directions. Rejected per guide §1.2 (configs last; keep only
   // what survives measurement).
 
-  private def withGateConfs[T](s: SparkSession,
-      kvs: Seq[(String, String)])(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+  private def withGateConfs[T](s: SparkSession)(body: => T): T = {
+    val prev = gateConfs.map { case (k, _) => k -> s.conf.getOption(k) }
+    gateConfs.foreach { case (k, v) => s.conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => s.conf.set(k, v)
       case (k, None) => s.conf.unset(k)
@@ -197,9 +199,11 @@ object StreamQueries {
     * count, the staging layout `version` and the corpus CONTENT
     * fingerprint (r13 verdict #3: same path + regenerated data must
     * re-stage, not replay stale bytes; nFiles is part of it so a dir
-    * staged under an old batch count is never silently reused). */
-  private def stageOnce(stageKey: String, nFiles: Int, version: String,
-      corpusDir: String)(write: String => Unit): String = phase(gateTag(stageKey), "stage") {
+    * staged under an old batch count is never silently reused). Staging
+    * runs under the run's [[gateConfs]]. */
+  private def stageOnce(s: SparkSession, phase: Phases, stageKey: String,
+      nFiles: Int, version: String, corpusDir: String)(
+      write: String => Unit): String = phase("stage") { withGateConfs(s) {
     val key = s"$stageKey|n$nFiles|$version|fp${dirFingerprint(corpusDir)}"
     stagedDirs.computeIfAbsent(key, { _ =>
       import scala.util.hashing.MurmurHash3.stringHash
@@ -225,14 +229,14 @@ object StreamQueries {
       }
       dir
     })
-  }
+  } }
 
   private def wipe(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(wipe)
     f.delete()
   }
 
-  /** The diag/phase name of a gate: its stage key's head ("s03"). */
+  /** The diag name of a gate: its stage key's head ("s03"). */
   private def gateTag(stageKey: String): String = stageKey.takeWhile(_ != '|')
 
   /** Janino compiles so far in this JVM (Spark's public codegen metric:
@@ -240,9 +244,24 @@ object StreamQueries {
   private def codegenCompiles(): Long =
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+  /** Wall time of each harness phase of one replay run, in the order
+    * the phases ran (staging check, query start, await or publish/flush,
+    * teardown, sink localization): the complement of the per-batch
+    * progress in the run's replay diag, where it lands as `phase_ms`. */
+  private final class Phases {
+    private val ms = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def apply[T](name: String)(body: => T): T = {
+      val t0 = System.nanoTime()
+      try body finally ms(name) = (System.nanoTime() - t0) / 1e6
+    }
+    def json: String = ms.map { case (k, v) =>
+      s""""$k":${"%.1f".formatLocal(java.util.Locale.ROOT, v)}"""
+    }.mkString("{", ",", "}")
+  }
+
   /** Start, drive and tear down one replay run — the one path both replay
     * drivers take, so every gate starts under the same scoped confs
-    * ([[withQuietMaintenance]]) and releases the same resources.
+    * ([[gateConfs]]) and releases the same resources.
     *
     * Every invocation gets a fresh checkpoint and sink name (Bench runs
     * each query four times in one session — a reused checkpoint would
@@ -250,26 +269,28 @@ object StreamQueries {
     * would refuse to start). `source(dir)` opens the input stream for the
     * run's scratch `dir`; `transform` is the operator under test, written
     * to a memory sink; `drive(q, dir)` runs the started query to
-    * completion. Teardown stops the query, records its progress and
-    * replay diag, and unloads the state stores. The sink is then
+    * completion. Teardown stops the query, takes its replay diag, and
+    * unloads the state stores. The sink is then
     * localized (r11 advisory: a Bench session — 6+ gates × 4 runs —
     * retained ~24 full sink tables in driver heap and left checkpoint
     * litter on disk): it is collected into a LOCAL DataFrame (gate outputs
     * are oracle-sized — hundreds to a few thousand rows), the memory table
     * is dropped, and the run's checkpoint/watch tree is deleted. A run
     * that THROWS (transform failure, a died stream) is released the same
-    * way, best-effort, before the error propagates. */
+    * way, best-effort, before the error propagates. The diag, with the
+    * run's `phase_ms`, is written last, on both paths. */
   private def runGate(s: SparkSession, stageKey: String, staged: String,
-      outputMode: String, trigger: Option[Trigger])(
+      phase: Phases, outputMode: String, trigger: Option[Trigger])(
       source: String => DataFrame)(transform: DataFrame => DataFrame)(
       drive: (StreamingQuery, String) => Unit): DataFrame = {
     val run = s"graft_stream_sink_${runSeq.incrementAndGet()}_" +
       java.util.UUID.randomUUID.toString.take(8)
     val dir = s"$fastTmpDir/$run"
     val tag = gateTag(stageKey)
-    try withQuietMaintenance(s) {
+    var diag: Seq[String] = Nil
+    try withGateConfs(s) {
       val compiles0 = codegenCompiles()
-      val q = phase(tag, "start") {
+      val q = phase("start") {
         val writer = transform(source(dir)).writeStream
           .format("memory")
           .queryName(run)
@@ -277,13 +298,12 @@ object StreamQueries {
           .option("checkpointLocation", s"$dir/ckpt")
         trigger.fold(writer)(writer.trigger).start()
       }
-      try drive(q, dir) finally phase(tag, "teardown") {
+      try drive(q, dir) finally phase("teardown") {
         if (q.isActive) q.stop()
-        dumpProgress(q)
-        captureReplayDiag(q, staged, stageKey, codegenCompiles() - compiles0)
+        diag = replayDiag(q, staged, tag, codegenCompiles() - compiles0)
         unloadStateStores()
       }
-      phase(tag, "localize") {
+      phase("localize") {
         val sink = s.table(run)
         val out = s.createDataFrame(
           java.util.Arrays.asList(sink.collect(): _*), sink.schema)
@@ -295,7 +315,8 @@ object StreamQueries {
       try s.catalog.dropTempView(run) catch { case _: Throwable => }
       wipe(new java.io.File(dir))
       throw t
-    }
+    } finally if (diag.nonEmpty)
+      writeReplayDiag(tag, diag :+ s""""phase_ms":${phase.json}""")
   }
 
   /** Stage `src` as `nFiles` parquet files, replay them one file per
@@ -307,15 +328,16 @@ object StreamQueries {
       nFiles: Int, stageKey: String, corpusDir: String,
       outputMode: String = "append")(
       transform: DataFrame => DataFrame): DataFrame = {
-    val staged = stageOnce(stageKey, nFiles, "v1", corpusDir) { sd =>
+    val phase = new Phases
+    val staged = stageOnce(s, phase, stageKey, nFiles, "v1", corpusDir) { sd =>
       src.repartition(nFiles).write.mode("overwrite").parquet(s"$sd/src")
     }
-    runGate(s, stageKey, staged, outputMode, Some(Trigger.AvailableNow()))(_ =>
+    runGate(s, stageKey, staged, phase, outputMode, Some(Trigger.AvailableNow()))(_ =>
       s.readStream
         .schema(src.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$staged/src"))(transform) { (q, _) =>
-      phase(gateTag(stageKey), "await") { q.awaitTermination() }
+      phase("await") { q.awaitTermination() }
     }
   }
 
@@ -405,7 +427,8 @@ object StreamQueries {
     // stage each range ONCE as a single sequence-named parquet file
     // (b000.parquet, b001.parquet, …) under ranges/ — reused across
     // invocations and JVMs like every other staged corpus
-    val staged = stageOnce(stageKey, nFiles, "v4", corpusDir) { sd =>
+    val phase = new Phases
+    val staged = stageOnce(s, phase, stageKey, nFiles, "v4", corpusDir) { sd =>
       new java.io.File(s"$sd/ranges").mkdirs()
       for (k <- 0 until nFiles) {
         src.where(col(fileCol) === k).drop(fileCol)
@@ -418,8 +441,7 @@ object StreamQueries {
           java.nio.file.Paths.get(f"$sd/ranges/b$k%03d.parquet"))
       }
     }
-    val tag = gateTag(stageKey)
-    runGate(s, stageKey, staged, outputMode, trigger = None) { dir =>
+    runGate(s, stageKey, staged, phase, outputMode, trigger = None) { dir =>
       val watch = new java.io.File(s"$dir/watch")
       watch.mkdirs()
       s.readStream
@@ -470,7 +492,7 @@ object StreamQueries {
           logOffsetRe.findFirstMatchIn(body).map(_.group(1).toLong).getOrElse(-1L)
         }
       } catch { case _: java.io.IOException => -1L }
-      phase(tag, "publish") { for (k <- 0 until nFiles) {
+      phase("publish") { for (k <- 0 until nFiles) {
         // barrier: file k becomes visible only after file k-1 is locked
         // into a batch (reserved logOffset >= k-1) — order equals
         // publish order; see the reservedFiles() contract above.
@@ -502,7 +524,7 @@ object StreamQueries {
           new java.io.File(watch, f"b$k%03d.parquet").toPath,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       } }
-      phase(tag, "flush") {
+      phase("flush") {
       // pre-quiescence barrier: processAllAvailable resets noNewData and
       // returns on the NEXT no-new-data trigger — a trigger whose
       // directory listing predates the last rename could set that flag
@@ -529,53 +551,42 @@ object StreamQueries {
     }
   }
 
-  /** Forensics from the MOST RECENT replay, captured after every run
-    * (r13 verdict "next" #2: a driver-session s03 hash red has now
-    * arrived twice with zero artifacts to explain it): every batch's
-    * progress JSON plus the staged-corpus manifest (file name, size,
-    * SHA-256). The s03 gate persists this — together with an in-session
-    * batch-vs-stream row diff — whenever its own self-compare diverges,
-    * so the next driver red carries its mechanism instead of a bare
-    * hash mismatch. Single-threaded like the drive loop itself. */
-  final case class ReplayDiag(stagedDir: String, progress: Seq[String],
-                              manifest: Seq[(String, Long, String)])
-  private[graft] var lastReplayDiag: Option[ReplayDiag] = None
-
-  private def captureReplayDiag(q: StreamingQuery, staged: String,
-      stageKey: String, compiles: Long): Unit = {
+  /** Forensics of one replay run, kept PER GATE and unconditionally
+    * (r13 verdict "next" #2: a driver hash red arrived twice with zero
+    * artifacts to explain it; gate corpora are KBs, so this is cheap):
+    * the JSON fields of every batch's progress, the staged-corpus
+    * manifest (file name, size, SHA-256) and the run's Janino compiles.
+    * Best-effort like all diag plumbing: a failure yields no fields. */
+  private def replayDiag(q: StreamingQuery, staged: String, gate: String,
+      compiles: Long): Seq[String] = try {
     def sha256(f: java.io.File): String = {
       val md = java.security.MessageDigest.getInstance("SHA-256")
       md.digest(java.nio.file.Files.readAllBytes(f.toPath))
         .map(b => f"$b%02x").mkString
     }
-    try {
-      val files = filesUnder(new java.io.File(staged)).map(f =>
-        (f.getPath.stripPrefix(staged + "/"), f.length, sha256(f)))
-      lastReplayDiag =
-        Some(ReplayDiag(staged, q.recentProgress.toIndexedSeq.map(_.json), files))
-      // persist the last execution's forensics PER GATE, unconditionally
-      // (cheap: gate corpora are KBs) — s03's in-session self-compare is
-      // the deep diagnostic, but a driver red on ANY replay gate should
-      // at least leave its batch sequence + staged-byte identity behind
-      val gate = gateTag(stageKey)
-      def js(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
-        .replace("\n", "\\n") + "\""
-      val dir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_replay_diag")
-      java.nio.file.Files.createDirectories(dir)
-      java.nio.file.Files.writeString(dir.resolve(s"$gate.json"), Seq(
-        "\"gate\":" + js(gate),
-        "\"wall_ms\":" + System.currentTimeMillis,
-        "\"staged_dir\":" + js(staged),
-        "\"codegen_compiles\":" + compiles,
-        "\"staged_manifest\":" + files.map { case (n, len, h) =>
-          s"""{"file":${js(n)},"bytes":$len,"sha256":${js(h)}}"""
-        }.mkString("[", ",", "]"),
-        "\"batch_progress\":" +
-          q.recentProgress.toIndexedSeq.map(p => js(p.json)).mkString("[", ",", "]")
-      ).mkString("{", ",", "}"))
-    } catch { case _: Throwable => lastReplayDiag = None }
-  }
+    def js(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
+      .replace("\n", "\\n") + "\""
+    val files = filesUnder(new java.io.File(staged)).map(f =>
+      (f.getPath.stripPrefix(staged + "/"), f.length, sha256(f)))
+    Seq(
+      "\"gate\":" + js(gate),
+      "\"wall_ms\":" + System.currentTimeMillis,
+      "\"staged_dir\":" + js(staged),
+      "\"codegen_compiles\":" + compiles,
+      "\"staged_manifest\":" + files.map { case (n, len, h) =>
+        s"""{"file":${js(n)},"bytes":$len,"sha256":${js(h)}}"""
+      }.mkString("[", ",", "]"),
+      "\"batch_progress\":" +
+        q.recentProgress.toIndexedSeq.map(p => js(p.json)).mkString("[", ",", "]"))
+  } catch { case _: Throwable => Nil }
+
+  /** Write a replay diag to `java.io.tmpdir/graft_replay_diag/<gate>.json`. */
+  private def writeReplayDiag(gate: String, fields: Seq[String]): Unit = try {
+    val dir = java.nio.file.Paths.get(
+      System.getProperty("java.io.tmpdir"), "graft_replay_diag")
+    java.nio.file.Files.createDirectories(dir)
+    java.nio.file.Files.writeString(dir.resolve(s"$gate.json"), fields.mkString("{", ",", "}"))
+  } catch { case _: Throwable => () }
 
   /** Merge the canonical value hash of a gate's FINAL answer into its
     * replay-diag artifact (r14 verdict "next" #8: cross-round forensics
@@ -597,47 +608,6 @@ object StreamQueries {
     }
   } catch { case _: Throwable => () }
 
-  /** -Dgraft.stream.phase.debug: wall time per HARNESS phase to stderr
-    * (staging check, query start, publish/barrier loop, final
-    * quiescence, teardown, sink localization) — attributes a gate's
-    * non-trigger overhead, the complement of the per-batch replay diag
-    * (r18, guide §1: measure before touching the fixed costs). */
-  private val phaseDebug = sys.props.contains("graft.stream.phase.debug")
-  private def phase[T](gate: String, name: String)(body: => T): T =
-    if (!phaseDebug) body
-    else {
-      val t0 = System.nanoTime()
-      try body finally System.err.println(
-        f"[stream-phase] $gate $name ${(System.nanoTime() - t0) / 1e6}%.1f ms")
-    }
-
-  /** -Dgraft.stream.debug: per-batch progress to stderr (input rows,
-    * watermark, sink rows) — the first thing to look at when a replay
-    * gate's row count is off. */
-  private def dumpProgress(q: StreamingQuery): Unit =
-    if (sys.props.contains("graft.stream.debug"))
-      q.recentProgress.foreach { p =>
-        System.err.println(s"[stream-debug] ${q.name} batch=${p.batchId} " +
-          s"in=${p.numInputRows} wm=${p.eventTime.get("watermark")} " +
-          s"out=${Option(p.sink).map(_.numOutputRows).getOrElse(-1L)}")
-      }
-
-  /** Run `body` with the session's shuffle-partition count scoped down
-    * for the stream: a stateful micro-batch materializes ONE STATE STORE
-    * PER SHUFFLE PARTITION PER BATCH, so a 4-batch test-scale replay at
-    * 32 partitions pays 128 state-store setups for a corpus that fits in
-    * 4. The stream captures the setting at START, so scoping it around
-    * `start()`+`awaitTermination()` is complete; the restored value is
-    * what every batch query after the gate sees. On a real cluster the
-    * production path sizes this to the stream's key cardinality, not to
-    * the gate's corpus. */
-  private def withFewShufflePartitions[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, sys.props.getOrElse("graft.stream.gate.partitions", "4"))
-    try body finally s.conf.set(key, prev)
-  }
-
   private def docs(s: SparkSession, d: String): DataFrame =
     Tables.read(s, s"$d/documents.parquet")
 
@@ -657,91 +627,6 @@ object StreamQueries {
       .selectExpr(cols :+
         (s"CAST(least(${nRanges - 1}, $idCol * $nRanges DIV _maxp1) " +
           "AS INT) AS _file"): _*)
-
-  /** The batch packing semantics (the s03 oracle's SQL re-expressed in
-    * Spark) applied to any (source, doc_id, text) frame: per source, the
-    * running token offset in doc_id order; a doc's bin is `off DIV 2048`.
-    * Gate-scale only (the self-compare below) — the global per-source
-    * window is exactly what the production packer avoids. */
-  private def packingBatch(df: DataFrame): DataFrame =
-    df.selectExpr("source", "doc_id",
-        "CAST(size(split(text, ' ')) AS BIGINT) AS n_tok")
-      .selectExpr("source", "doc_id", "n_tok",
-        "sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id " +
-          "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tok AS off")
-      .selectExpr("source", "doc_id", "n_tok", "off DIV 2048 AS bin")
-
-  /** s03's driver-red self-diagnosis (r13 verdict "next" #2: the gate
-    * has gone driver-red on hash twice — r11, r13 — with zero artifacts;
-    * neither the judge's isolated+full-battery runs nor the 80/80
-    * determinism soak reproduce it). After every replay the gate now
-    * compares its stream answer IN-SESSION against the batch packing of
-    * (a) the source table and (b) the very staged bytes it replayed. On
-    * any divergence it persists the row-level diff, every batch's
-    * progress JSON, and the staged-file manifest (name/size/SHA-256) to
-    * `S03_DIAG.json` (cwd + tmpdir) before returning the stream answer —
-    * so the next driver red arrives with its mechanism attached. The
-    * (a)-vs-(b) split attributes the failure: stream==staged-batch but
-    * !=source-batch means STALE STAGED BYTES; stream!=staged-batch means
-    * a genuine order/state defect in the replay. */
-  private def selfCheckPacking(s: SparkSession, d: String,
-      streamed: DataFrame): Unit = try {
-    val diag = lastReplayDiag
-    def diff(expect: DataFrame, got: DataFrame): Array[String] = {
-      val e = expect.selectExpr("source", "doc_id", "n_tok AS e_tok", "bin AS e_bin")
-      val g = got.selectExpr("source", "doc_id", "n_tok AS g_tok", "bin AS g_bin")
-      e.join(g, Seq("source", "doc_id"), "full_outer")
-        .where("e_tok IS DISTINCT FROM g_tok OR e_bin IS DISTINCT FROM g_bin")
-        .orderBy("source", "doc_id")
-        .limit(200).collect().map(_.toString)
-    }
-    val srcDiff = diff(packingBatch(docs(s, d)), streamed)
-    // the diag is persisted UNCONDITIONALLY since r15 (r14 verdict
-    // "next" #1: the absence-of-artifact inference worked, but a
-    // positive artifact — "stream==batch, here is my value hash H" —
-    // is stronger evidence when a driver red arrives)
-    val stagedDiff =
-      if (srcDiff.isEmpty) None
-      else diag.map(g =>
-        diff(packingBatch(s.read.parquet(s"${g.stagedDir}/ranges")), streamed))
-    val canon = graft.CanonicalHash.of(streamed)
-    def js(x: String) = "\"" + x.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replace("\n", "\\n") + "\""
-    val body = Seq(
-      "\"query\":\"s03_stream_packing\"",
-      "\"wall_ms\":" + System.currentTimeMillis,
-      "\"sf_dir\":" + js(d),
-      "\"verdict\":" + js(
-        if (srcDiff.isEmpty)
-          "STREAM==BATCH: in-session self-compare clean; canon_sha256 is " +
-            "the sorted-row value hash of the stream answer (see CanonicalHash)"
-        else if (stagedDiff.exists(_.isEmpty))
-          "stream equals batch-over-STAGED bytes but not batch-over-source: STALE STAGED CORPUS"
-        else "stream diverges from batch over the very bytes it replayed: ORDER/STATE defect"),
-      "\"canon_sha256\":" + js(canon),
-      "\"source_vs_stream_diff\":" + srcDiff.map(js).mkString("[", ",", "]"),
-      "\"staged_vs_stream_diff\":" +
-        stagedDiff.map(_.map(js).mkString("[", ",", "]")).getOrElse("null"),
-      "\"staged_dir\":" + diag.map(g => js(g.stagedDir)).getOrElse("null"),
-      "\"staged_manifest\":" + diag.map(_.manifest.map { case (n, len, h) =>
-        s"""{"file":${js(n)},"bytes":$len,"sha256":${js(h)}}"""
-      }.mkString("[", ",", "]")).getOrElse("null"),
-      "\"batch_progress\":" + diag.map(_.progress.map(js).mkString("[", ",", "]"))
-        .getOrElse("null")
-    ).mkString("{", ",", "}")
-    for (p <- Seq(
-        java.nio.file.Paths.get("S03_DIAG.json"),
-        java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"), "graft_s03_diag.json")))
-      try java.nio.file.Files.writeString(p, body)
-      catch { case _: Throwable => }
-    if (srcDiff.nonEmpty)
-      System.err.println("[s03-diag] batch-vs-stream divergence: " +
-        s"${srcDiff.length} row(s) differ; diagnostics at S03_DIAG.json")
-  } catch { case t: Throwable =>
-    // the self-check must never turn a green gate red on its own
-    System.err.println(s"[s03-diag] self-check failed: $t")
-  }
 
   /** documents ∪ re-keyed copies of every 5th doc — the same duplicate
     * corpus the batch dedup family (t01, t27/t28) verifies against. */
@@ -814,6 +699,66 @@ object StreamQueries {
     }
   }
 
+  /** Far-future sentinel rows for the last ordered range file (`rows`
+    * are each row's columns between `ts` and `_file`): in-batch rows
+    * cannot see their watermark, whose jump lands at batch end, so the
+    * final flush batch finalizes every real row. */
+  private def sentinels(s: SparkSession, rows: String*): DataFrame =
+    s.sql(rows.map(r => s"SELECT timestamp'2030-01-01 00:00:00' AS ts, $r, " +
+      "CAST(3 AS INT) AS _file").mkString(" UNION ALL "))
+
+  /** s04/s05's input: the events as (ts, user, value) in event-id ranges,
+    * plus one sentinel. */
+  private def eventValues(s: SparkSession, d: String): DataFrame =
+    withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
+        "ts", "user_id AS user", "value")
+      .unionByName(sentinels(s, "CAST(0 AS BIGINT) AS user, CAST(0.0 AS DOUBLE) AS value"))
+
+  /** s11/s17: the status stream (every 10th event) joined by `joinType`
+    * with the remaining events within 6 hours per user. The query
+    * watermark is the MIN across the two sides' watermark operators, so
+    * the last range carries one sentinel passing each side's filter
+    * (ids -1 and -10, distinct far-future users). */
+  private def statusJoin(s: SparkSession, d: String, gate: String,
+      joinType: String): DataFrame = {
+    val src = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
+        "ts", "user_id AS user", "event_id AS id")
+      .unionByName(sentinels(s, "CAST(0 AS BIGINT) AS user, CAST(-1 AS BIGINT) AS id",
+        "CAST(1 AS BIGINT) AS user, CAST(-10 AS BIGINT) AS id"))
+    val sp = s
+    import sp.implicits._
+    replayOrderedToCompletion(s, src, "_file", nFiles = 4,
+        stageKey = s"$gate|$d", corpusDir = d)(st =>
+      StreamOps.intervalJoinTwo(
+        st.where("id % 10 <> 0").as[StreamOps.EvId],
+        st.where("id % 10 = 0").as[StreamOps.EvId],
+        joinType = joinType))
+  }
+
+  /** s12/s14/s15/s16: the status stream (every 10th event, side 0) is the
+    * versioned table and the remaining events (side 1) probe it through
+    * `join`. A far-future LEFT sentinel in the last range flushes the
+    * pending probes (the s10 pattern); its own probe never emits and is
+    * filtered by id. Answers are (event_id, quantized status). */
+  private def asofGate(s: SparkSession, d: String, gate: String)(
+      join: Dataset[StreamOps.AsofIn] => Dataset[StreamOps.AsofOut]): DataFrame = {
+    val src = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
+        "ts", "user_id AS user", "event_id AS id",
+        "CAST(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END AS INT) AS side",
+        "value AS v")
+      .unionByName(sentinels(s, "CAST(0 AS BIGINT) AS user, CAST(-1 AS BIGINT) AS id, " +
+        "CAST(1 AS INT) AS side, CAST(0.0 AS DOUBLE) AS v"))
+    val sp = s
+    import sp.implicits._
+    replayOrderedToCompletion(s, src, "_file", nFiles = 4,
+        stageKey = s"$gate|$d", corpusDir = d)(st =>
+      join(st.as[StreamOps.AsofIn]).toDF())
+      .where("id >= 0")
+      .selectExpr("id AS event_id",
+        "coalesce(CAST(floor(v * 64) AS BIGINT), -1) AS status_q")
+      .orderBy("event_id")
+  }
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // STATELESS streaming kernel under the oracle: the Gopher repetition
@@ -850,10 +795,8 @@ object StreamQueries {
     "s02_stream_dedup" -> ((s, d) => {
       val src = docsWithDups(s, d)
         .selectExpr("timestamp_seconds(1700000000) AS ts", "doc_id", "text")
-      withFewShufflePartitions(s) {
-        replayToCompletion(s, src, nFiles = 4, stageKey = s"s02|$d", corpusDir = d)(st =>
-          StreamOps.dedupStream(asDocStream(st), watermark = "1 second"))
-      }
+      replayToCompletion(s, src, nFiles = 4, stageKey = s"s02|$d", corpusDir = d)(st =>
+        StreamOps.dedupStream(asDocStream(st), watermark = "1 second"))
         .select("h")
         .orderBy("h")
     }),
@@ -872,14 +815,11 @@ object StreamQueries {
         "doc_id", "source", "text")
       val sp = s
       import sp.implicits._
-      val streamed = withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, src, "_file", nFiles = 4,
-            stageKey = s"s03|$d", corpusDir = d)(st =>
-          StreamOps.packSequences(st.as[StreamOps.SrcDoc]).toDF())
-      }
+      replayOrderedToCompletion(s, src, "_file", nFiles = 4,
+          stageKey = s"s03|$d", corpusDir = d)(st =>
+        StreamOps.packSequences(st.as[StreamOps.SrcDoc]).toDF())
         .selectExpr("source", "doc_id", "n_tok", "bin")
-      selfCheckPacking(s, d, streamed)
-      streamed.orderBy("source", "doc_id")
+        .orderBy("source", "doc_id")
     }),
 
     // WATERMARKED WINDOWED AGGREGATION under the oracle: sliding
@@ -904,19 +844,12 @@ object StreamQueries {
       // reader — JoinOps.normalizedEvents — for every event-based gate;
       // all gate sessions run UTC, so the wall-clock reading IS the
       // instant, matching the oracle's epoch_us arithmetic
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "value")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(0.0 AS DOUBLE) AS value, CAST(3 AS INT) AS _file")
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s04|$d", corpusDir = d)(st =>
-          StreamOps.slidingStats(st.as[StreamOps.Ev],
-            sumExpr = "sum(CAST(floor(value * 64) AS BIGINT))"))
-      }
+      replayOrderedToCompletion(s, eventValues(s, d), "_file",
+          nFiles = 4, stageKey = s"s04|$d", corpusDir = d)(st =>
+        StreamOps.slidingStats(st.as[StreamOps.Ev],
+          sumExpr = "sum(CAST(floor(value * 64) AS BIGINT))"))
         .where("ws < timestamp'2029-01-01 00:00:00'")
         .selectExpr("unix_seconds(ws) AS ws_s", "n", "s AS vq")
         .orderBy("ws_s")
@@ -930,19 +863,12 @@ object StreamQueries {
     // construction (new session iff ts − prev ≥ 5s). Session starts
     // carry event-time microseconds, so the gate compares unix_micros.
     "s05_stream_sessions" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "value")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(0.0 AS DOUBLE) AS value, CAST(3 AS INT) AS _file")
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s05|$d", corpusDir = d)(st =>
-          StreamOps.sessionStats(st.as[StreamOps.Ev],
-            sumExpr = "sum(CAST(floor(value * 64) AS BIGINT))"))
-      }
+      replayOrderedToCompletion(s, eventValues(s, d), "_file",
+          nFiles = 4, stageKey = s"s05|$d", corpusDir = d)(st =>
+        StreamOps.sessionStats(st.as[StreamOps.Ev],
+          sumExpr = "sum(CAST(floor(value * 64) AS BIGINT))"))
         .where("ws < timestamp'2029-01-01 00:00:00'")
         .selectExpr("unix_micros(ws) AS ws_us", "user", "n", "s AS vq")
         .orderBy("ws_us", "user")
@@ -962,11 +888,9 @@ object StreamQueries {
         "CAST(floor(value * 64) AS DOUBLE) AS value")
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, src, "_file", nFiles = 4,
-            stageKey = s"s06|$d", corpusDir = d, outputMode = "update")(st =>
-          StreamOps.runningTotals(st.as[StreamOps.Ev]).toDF())
-      }
+      replayOrderedToCompletion(s, src, "_file", nFiles = 4,
+          stageKey = s"s06|$d", corpusDir = d, outputMode = "update")(st =>
+        StreamOps.runningTotals(st.as[StreamOps.Ev]).toDF())
         .groupBy("user")
         .agg(max(struct(col("n"), col("total"))).as("m"))
         .selectExpr("user", "m.total AS total", "m.n AS n")
@@ -989,11 +913,9 @@ object StreamQueries {
         "ts", "user_id AS user", "event_id AS id")
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, src, "_file", nFiles = 4,
-            stageKey = s"s07|$d", corpusDir = d)(st =>
-          StreamOps.intervalJoin(st.as[StreamOps.EvId]))
-      }
+      replayOrderedToCompletion(s, src, "_file", nFiles = 4,
+          stageKey = s"s07|$d", corpusDir = d)(st =>
+        StreamOps.intervalJoin(st.as[StreamOps.EvId]))
         .orderBy("u", "a", "b")
     }),
 
@@ -1009,11 +931,9 @@ object StreamQueries {
       val lr = cached(s"lr|$d", d)(dsirLr(s, d))
       val src = docs(s, d)
         .selectExpr("timestamp_seconds(1700000000) AS ts", "doc_id", "text")
-      val sink = withFewShufflePartitions(s) {
-        replayToCompletion(s, src, nFiles = 4, stageKey = s"s08|$d", corpusDir = d,
-            outputMode = "update")(st =>
-          StreamOps.dsirTopK(asDocStream(st), lr, k = 25).toDF())
-      }
+      val sink = replayToCompletion(s, src, nFiles = 4, stageKey = s"s08|$d",
+          corpusDir = d, outputMode = "update")(st =>
+        StreamOps.dsirTopK(asDocStream(st), lr, k = 25).toDF())
       val last = sink.groupBy("g").agg(max("ver").as("ver"))
       sink.join(last, Seq("g", "ver"))
         .orderBy(desc("w"), col("doc_id"))
@@ -1057,17 +977,12 @@ object StreamQueries {
     "s10_stream_interval_outer" -> ((s, d) => {
       val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
         "ts", "user_id AS user", "event_id AS id")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(3 AS INT) AS _file")
+      val sentinel = sentinels(s, "CAST(0 AS BIGINT) AS user, CAST(-1 AS BIGINT) AS id")
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s10|$d", corpusDir = d)(st =>
-          StreamOps.intervalJoin(st.as[StreamOps.EvId],
-            joinType = "left_outer"))
-      }
+      replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
+          nFiles = 4, stageKey = s"s10|$d", corpusDir = d)(st =>
+        StreamOps.intervalJoin(st.as[StreamOps.EvId], joinType = "left_outer"))
         .where("a >= 0")
         .selectExpr("u", "a", "coalesce(b, -1L) AS b")
         .orderBy("u", "a", "b")
@@ -1078,33 +993,14 @@ object StreamQueries {
     // status stream (every 10th event) full-outer-joined with the
     // remaining events within 6 hours per user — matched pairs plus
     // every partnerless row of EITHER side exactly once with -1 on the
-    // other. BOTH sides' NULL emissions are watermark-driven and the
-    // query watermark is the MIN across the two watermark operators, so
-    // the last ordered range carries TWO sentinels — one passing each
-    // side's filter (ids -1 and -10, distinct far-future users) — and
-    // the completed replay must equal the batch FULL range join.
-    "s11_stream_interval_full" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "event_id AS id")
-      val sentinels = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(3 AS INT) AS _file " +
-          "UNION ALL SELECT timestamp'2030-01-01 00:00:00', CAST(1 AS BIGINT), " +
-          "CAST(-10 AS BIGINT), CAST(3 AS INT)")
-      val sp = s
-      import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinels), "_file",
-            nFiles = 4, stageKey = s"s11|$d", corpusDir = d)(st =>
-          StreamOps.intervalJoinTwo(
-            st.where("id % 10 <> 0").as[StreamOps.EvId],
-            st.where("id % 10 = 0").as[StreamOps.EvId],
-            joinType = "full_outer"))
-      }
+    // other. BOTH sides' NULL emissions are watermark-driven, so the
+    // last ordered range carries `statusJoin`'s two sentinels, and the
+    // completed replay must equal the batch FULL range join.
+    "s11_stream_interval_full" -> ((s, d) =>
+      statusJoin(s, d, "s11", "full_outer")
         .where("(a IS NULL OR a >= 0) AND (b IS NULL OR b >= 0)")
         .selectExpr("u", "coalesce(a, -1L) AS a", "coalesce(b, -1L) AS b")
-        .orderBy("u", "a", "b")
-    }),
+        .orderBy("u", "a", "b")),
 
     // RIGHT-OUTER STREAM-STREAM JOIN under the oracle (r13 verdict gap
     // #2: s10 gates left-outer, s11 full-outer; right-outer existed
@@ -1112,69 +1008,28 @@ object StreamQueries {
     // streaming gate). Same two derived streams as s11; matched pairs
     // emit eagerly, and every partnerless STATUS row (the right side)
     // emits exactly once with a = -1 once the watermark passes its
-    // eviction horizon. Both sides' watermarks must advance (the query
-    // watermark is the MIN across the two operators), so the last
-    // ordered range carries s11's two sentinels — one passing each
-    // side's filter. Partnerless LEFT rows must NOT emit: the gate
+    // eviction horizon, which s11's two sentinels drive. Partnerless
+    // LEFT rows must NOT emit: the gate
     // keeps every a = -1 row visible, so a leaked left NULL arrives as
     // an extra row and fails the oracle compare (StreamingSpec pins the
     // same contract at spec scale).
-    "s17_stream_interval_right" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "event_id AS id")
-      val sentinels = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(3 AS INT) AS _file " +
-          "UNION ALL SELECT timestamp'2030-01-01 00:00:00', CAST(1 AS BIGINT), " +
-          "CAST(-10 AS BIGINT), CAST(3 AS INT)")
-      val sp = s
-      import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinels), "_file",
-            nFiles = 4, stageKey = s"s17|$d", corpusDir = d)(st =>
-          StreamOps.intervalJoinTwo(
-            st.where("id % 10 <> 0").as[StreamOps.EvId],
-            st.where("id % 10 = 0").as[StreamOps.EvId],
-            joinType = "right_outer"))
-      }
+    "s17_stream_interval_right" -> ((s, d) =>
+      statusJoin(s, d, "s17", "right_outer")
         .where("(a IS NULL OR a >= 0) AND b >= 0")
         .selectExpr("u", "coalesce(a, -1L) AS a", "b")
-        .orderBy("u", "a", "b")
-    }),
+        .orderBy("u", "a", "b")),
 
     // STREAMING AS-OF (TEMPORAL) JOIN under the oracle — the online
     // twin of the batch j01 enrichment, and an operator Structured
     // Streaming's own join surface cannot express (stream-stream joins
-    // bound both sides; as-of has no lower bound). The status stream
-    // (every 10th event) is the versioned table side, the remaining
-    // events probe it, and each probe must attach the latest status at
-    // or before its own timestamp — emitted only when the watermark
-    // passes the probe (an earlier status could arrive until then), so
-    // a far-future LEFT sentinel rides in the last ordered range file
-    // to flush the tail (the s10 pattern; its own pending probe never
-    // emits and is filtered by id). The completed replay must equal
-    // DuckDB's native ASOF LEFT JOIN — j01's oracle verbatim.
-    "s12_stream_asof_join" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "event_id AS id",
-        "CAST(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END AS INT) AS side",
-        "value AS v")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(1 AS INT) AS side, " +
-          "CAST(0.0 AS DOUBLE) AS v, CAST(3 AS INT) AS _file")
-      val sp = s
-      import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s12|$d", corpusDir = d)(st =>
-          StreamOps.asofJoin(st.as[StreamOps.AsofIn]).toDF())
-      }
-        .where("id >= 0")
-        .selectExpr("id AS event_id",
-          "coalesce(CAST(floor(v * 64) AS BIGINT), -1) AS status_q")
-        .orderBy("event_id")
-    }),
+    // bound both sides; as-of has no lower bound). Each probe must
+    // attach the latest status at or before its own timestamp — emitted
+    // only when the watermark passes the probe (an earlier status could
+    // arrive until then; `asofGate`'s sentinel flushes the tail). The
+    // completed replay must equal DuckDB's native ASOF LEFT JOIN — j01's
+    // oracle verbatim.
+    "s12_stream_asof_join" -> ((s, d) =>
+      asofGate(s, d, "s12")(StreamOps.asofJoin(_))),
 
     // STREAMING AS-OF WITH TOLERANCE under the oracle — s12's temporal
     // join with j05's staleness bound (a status older than 30 minutes
@@ -1183,28 +1038,9 @@ object StreamQueries {
     // timing are s12's unchanged. Oracle = j05's (DuckDB ASOF + the
     // distance CASE) verbatim — batch and stream must agree on every
     // void.
-    "s14_stream_asof_tolerance" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "event_id AS id",
-        "CAST(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END AS INT) AS side",
-        "value AS v")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(1 AS INT) AS side, " +
-          "CAST(0.0 AS DOUBLE) AS v, CAST(3 AS INT) AS _file")
-      val sp = s
-      import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s14|$d", corpusDir = d)(st =>
-          StreamOps.asofJoin(st.as[StreamOps.AsofIn],
-            toleranceUs = Some(30L * 60 * 1000000)).toDF())
-      }
-        .where("id >= 0")
-        .selectExpr("id AS event_id",
-          "coalesce(CAST(floor(v * 64) AS BIGINT), -1) AS status_q")
-        .orderBy("event_id")
-    }),
+    "s14_stream_asof_tolerance" -> ((s, d) =>
+      asofGate(s, d, "s14")(StreamOps.asofJoin(_,
+        toleranceUs = Some(30L * 60 * 1000000)))),
 
     // STREAMING FORWARD AS-OF under the oracle — "the first status at
     // or after each event, within 30 minutes" (the order→fill shape).
@@ -1214,28 +1050,9 @@ object StreamQueries {
     // match farther than the horizon attaches as NULL. Oracle = DuckDB
     // forward ASOF + the distance CASE — earliest-at-or-after equals
     // earliest-within-horizon exactly when the CASE voids the rest.
-    "s15_stream_asof_forward" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "event_id AS id",
-        "CAST(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END AS INT) AS side",
-        "value AS v")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(1 AS INT) AS side, " +
-          "CAST(0.0 AS DOUBLE) AS v, CAST(3 AS INT) AS _file")
-      val sp = s
-      import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s15|$d", corpusDir = d)(st =>
-          StreamOps.asofJoinForward(st.as[StreamOps.AsofIn],
-            horizonUs = 30L * 60 * 1000000).toDF())
-      }
-        .where("id >= 0")
-        .selectExpr("id AS event_id",
-          "coalesce(CAST(floor(v * 64) AS BIGINT), -1) AS status_q")
-        .orderBy("event_id")
-    }),
+    "s15_stream_asof_forward" -> ((s, d) =>
+      asofGate(s, d, "s15")(StreamOps.asofJoinForward(_,
+        horizonUs = 30L * 60 * 1000000))),
 
     // STREAMING NEAREST AS-OF under the oracle — the closer of the
     // unbounded backward match and the horizon-bounded forward match,
@@ -1244,28 +1061,9 @@ object StreamQueries {
     // a stream). Completes the direction matrix: batch j01/j03/j04/j05
     // ⇔ stream s12/s15/s16/s14. Oracle composes DuckDB's own backward
     // and forward ASOF with the horizon and distance rules in SQL.
-    "s16_stream_asof_nearest" -> ((s, d) => {
-      val real = withRangeFile(JoinOps.normalizedEvents(s, d), "event_id", 4,
-        "ts", "user_id AS user", "event_id AS id",
-        "CAST(CASE WHEN event_id % 10 = 0 THEN 0 ELSE 1 END AS INT) AS side",
-        "value AS v")
-      val sentinel = s.sql(
-        "SELECT timestamp'2030-01-01 00:00:00' AS ts, CAST(0 AS BIGINT) AS user, " +
-          "CAST(-1 AS BIGINT) AS id, CAST(1 AS INT) AS side, " +
-          "CAST(0.0 AS DOUBLE) AS v, CAST(3 AS INT) AS _file")
-      val sp = s
-      import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayOrderedToCompletion(s, real.unionByName(sentinel), "_file",
-            nFiles = 4, stageKey = s"s16|$d", corpusDir = d)(st =>
-          StreamOps.asofJoinNearest(st.as[StreamOps.AsofIn],
-            horizonUs = 30L * 60 * 1000000).toDF())
-      }
-        .where("id >= 0")
-        .selectExpr("id AS event_id",
-          "coalesce(CAST(floor(v * 64) AS BIGINT), -1) AS status_q")
-        .orderBy("event_id")
-    }),
+    "s16_stream_asof_nearest" -> ((s, d) =>
+      asofGate(s, d, "s16")(StreamOps.asofJoinNearest(_,
+        horizonUs = 30L * 60 * 1000000))),
 
     // STREAMING NEAR-DUP CANDIDATES under the oracle — previously the
     // ONE spec-only streaming operator (its emitted pair set depends on
@@ -1290,11 +1088,9 @@ object StreamQueries {
         "CAST(t AS INT) AS band", "CAST(bh AS BIGINT) AS bh", "h AS sig")
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayToCompletion(s, src, nFiles = 4, stageKey = s"s18|$d",
-            corpusDir = d)(st =>
-          StreamOps.nearDupCandidates(st.as[StreamOps.SigDoc], w = wMax).toDF())
-      }
+      replayToCompletion(s, src, nFiles = 4, stageKey = s"s18|$d",
+          corpusDir = d)(st =>
+        StreamOps.nearDupCandidates(st.as[StreamOps.SigDoc], w = wMax).toDF())
         .where("ham <= 1")
         .selectExpr("a", "b", "CAST(ham AS BIGINT) AS ham")
         .distinct()
@@ -1303,12 +1099,13 @@ object StreamQueries {
 
     // STREAMING END-TO-END PIPELINE under the oracle — t36's four-stage
     // chain as one continuous query (quality → within-watermark dedup →
-    // broadcast decontamination → split), with the split keyed on the
-    // CONTENT HASH so every output column is survivor-invariant: the
-    // unordered replay is exact no matter which duplicate each
-    // micro-batch keeps. All rows share one event time, so no hash
-    // evicts mid-replay and each text survives exactly once; the gate
-    // aggregates the kept stream per (split, source) — all-integer.
+    // broadcast decontamination → split), deduped on (content hash,
+    // source) and split on the hash, so every output column is a
+    // function of the dedup key: the unordered replay is exact no matter
+    // which duplicate each micro-batch keeps. All rows share one event
+    // time, so no key evicts mid-replay and each (text, source) survives
+    // exactly once; the gate aggregates the kept stream per (split,
+    // source) — all-integer.
     "s13_stream_pipeline" -> ((s, d) => {
       val src = docsWithDups(s, d)
         .selectExpr("timestamp_seconds(1700000000) AS ts", "doc_id",
@@ -1317,10 +1114,8 @@ object StreamQueries {
         .selectExpr("md5(text) AS h").distinct()
       val sp = s
       import sp.implicits._
-      withFewShufflePartitions(s) {
-        replayToCompletion(s, src, nFiles = 4, stageKey = s"s13|$d", corpusDir = d)(st =>
-          StreamOps.pipelineClean(st.as[StreamOps.SrcDoc], evalH))
-      }
+      replayToCompletion(s, src, nFiles = 4, stageKey = s"s13|$d", corpusDir = d)(st =>
+        StreamOps.pipelineClean(st.as[StreamOps.SrcDoc], evalH))
         .groupBy("split", "source")
         .agg(expr("CAST(count(*) AS BIGINT)").as("n_docs"),
           expr("CAST(sum(n_tok) AS BIGINT)").as("n_tokens"),

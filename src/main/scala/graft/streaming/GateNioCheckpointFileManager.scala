@@ -46,8 +46,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * points checkpoints at a DFS falls back to the stock manager by
   * simply not setting `spark.sql.streaming.checkpointFileManagerClass`
   * (the gate harness sets it, scoped per replay, via
-  * `StreamQueries.gateCheckpointConfs`; `-Dgraft.stream.ckpt.manager=
-  * default` restores stock behavior). Fault-tolerance semantics are
+  * `StreamQueries.gateCheckpointConfs`). Fault-tolerance semantics are
   * unchanged: same temp-then-rename atomicity, same
   * FileAlreadyExistsException on a lost WAL race, same recursive
   * delete/list/open surface (OrderedReplaySpec and the 307-query

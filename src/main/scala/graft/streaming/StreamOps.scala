@@ -195,24 +195,15 @@ object StreamOps {
     * batch t36 composite, chaining the same four stages over a document
     * stream in ONE continuous query: stateless QUALITY filter →
     * within-watermark exact DEDUP (the only stateful stage, keyed on
-    * the 128-bit content hash, evicted by watermark) → broadcast
-    * DECONTAMINATION anti-join against the static eval-hash table →
-    * SPLIT assignment. The split keys on the CONTENT HASH, not doc_id,
-    * so the emitted rows are survivor-invariant: whichever duplicate
-    * the dedup keeps inside a micro-batch, every output column (h,
-    * split, source, n_tok, q) is text-derived and identical — the
-    * property that makes the unordered replay gate (s13) exact.
-    *
-    * DATA ASSUMPTION (r13 ADVICE): `source` is the one emitted column
-    * NOT derived from the text — survivor-invariance for it holds only
-    * because duplicates of a text share their source (true of the gate
-    * corpus and of the re-crawl/re-shard duplication this stage
-    * models). If identical text can arrive from DIFFERENT sources, the
-    * surviving row's source is whichever copy the batch kept — drop
-    * `source` downstream or pre-normalize it (e.g. min(source) per
-    * hash) before relying on it; the s13 oracle's DISTINCT
-    * (h, source, …) agrees with the operator only under this
-    * assumption.
+    * the 128-bit content hash and the source, evicted by watermark) →
+    * broadcast DECONTAMINATION anti-join against the static eval-hash
+    * table → SPLIT assignment. The dedup keys on (content hash, source) and
+    * the split on the CONTENT HASH, not doc_id, so the emitted rows are
+    * survivor-invariant: whichever duplicate the dedup keeps inside a
+    * micro-batch, every output column (h, split, source, n_tok, q) is a
+    * function of the dedup key — the property that makes the unordered
+    * replay gate (s13) exact. A text that arrives from two sources is
+    * kept once per source, like the batch DISTINCT (h, source, …).
     *
     * Scale: one stateful hash-partitioned operator, one broadcast,
     * everything else codegen projections. */
@@ -225,7 +216,7 @@ object StreamOps {
         "/ size(split(text, ' '))) AS BIGINT)"))
       .where("n_tok >= 20 AND q >= 35000")
     scored.withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("h")
+      .dropDuplicatesWithinWatermark("h", "source")
       .join(broadcast(evalHashes), Seq("h"), "left_anti")
       .selectExpr(
         "CASE WHEN substring(h, 1, 1) IN ('0', '1') THEN 'val' ELSE 'train' " +
@@ -280,48 +271,8 @@ object StreamOps {
     * emission timing are unchanged (a stale version still occupies the
     * current-version slot; it just stops attaching). */
   def asofJoin(in: Dataset[AsofIn], watermark: String = "12 hours",
-               toleranceUs: Option[Long] = None): Dataset[AsofOut] = {
-    import in.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    def us(t: Timestamp): Long = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    in.withWatermark("ts", watermark)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[AsofState, AsofOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state) =>
-          val wm = state.getCurrentWatermarkMs()
-          var st = state.getOption.getOrElse(AsofState(Nil, Nil))
-          if (!state.hasTimedOut) {
-            val live = rows.filter(r => r.ts.getTime >= wm).toList
-            st = AsofState(
-              st.rights ++ live.collect { case r if r.side == 0 => (us(r.ts), r.id, r.v) },
-              st.lefts ++ live.collect { case r if r.side == 1 => (us(r.ts), r.id) })
-          }
-          // resolve every probe STRICTLY behind the watermark (a future
-          // right row may still tie a probe at exactly the watermark)
-          val (ready, pending) = st.lefts.partition(l => Math.floorDiv(l._1, 1000L) < wm)
-          val out = ready.sortBy(l => (l._1, l._2)).map { case (lus, id) =>
-            val m = (st.rights.filter(_._1 <= lus) match {
-              case Nil => None
-              case cs => Some(cs.maxBy(r => (r._1, r._2)))
-            }).filter(r => toleranceUs.forall(lus - r._1 <= _))
-            AsofOut(user, id, new Timestamp(Math.floorDiv(lus, 1000L)), m.map(_._3))
-          }
-          // prune rights: everything at/after the earliest still-relevant
-          // instant survives; below it only the reigning current version
-          val horizonUs = (wm * 1000 :: pending.map(_._1)).min
-          val (hi, lo) = st.rights.partition(_._1 >= horizonUs)
-          val best = lo match {
-            case Nil => Nil
-            case cs => List(cs.maxBy(r => (r._1, r._2)))
-          }
-          state.update(AsofState(best ++ hi, pending))
-          if (pending.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(pending.map(l => Math.floorDiv(l._1, 1000L)).min, wm) + 1)
-          out.iterator
-      }
-  }
+               toleranceUs: Option[Long] = None): Dataset[AsofOut] =
+    asofResolve(in, watermark, backward = true, toleranceUs, horizonUs = 0L)
 
   /** Streaming FORWARD as-of join — "the first right row at or after
     * each probe", bounded by `horizonUs` (the batch forward direction
@@ -339,42 +290,7 @@ object StreamOps {
   def asofJoinForward(in: Dataset[AsofIn], horizonUs: Long,
                       watermark: String = "12 hours"): Dataset[AsofOut] = {
     require(horizonUs > 0, s"forward as-of needs a positive horizon, got $horizonUs")
-    import in.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.OutputMode
-    def us(t: Timestamp): Long = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
-    in.withWatermark("ts", watermark)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[AsofState, AsofOut](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        case (user, rows, state) =>
-          val wm = state.getCurrentWatermarkMs()
-          var st = state.getOption.getOrElse(AsofState(Nil, Nil))
-          if (!state.hasTimedOut) {
-            val live = rows.filter(r => r.ts.getTime >= wm).toList
-            st = AsofState(
-              st.rights ++ live.collect { case r if r.side == 0 => (us(r.ts), r.id, r.v) },
-              st.lefts ++ live.collect { case r if r.side == 1 => (us(r.ts), r.id) })
-          }
-          // a probe is final once no right inside its window can arrive
-          val (ready, pending) = st.lefts.partition(l =>
-            Math.floorDiv(l._1 + horizonUs, 1000L) < wm)
-          val out = ready.sortBy(l => (l._1, l._2)).map { case (lus, id) =>
-            val m = st.rights
-              .filter(r => r._1 >= lus && r._1 <= lus + horizonUs) match {
-                case Nil => None
-                case cs => Some(cs.minBy(r => (r._1, -r._2)))
-              }
-            AsofOut(user, id, new Timestamp(Math.floorDiv(lus, 1000L)), m.map(_._3))
-          }
-          // forward never reaches back: rights below every still-relevant
-          // probe (and the watermark) drop outright
-          val horizonLow = (wm * 1000 :: pending.map(_._1)).min
-          state.update(AsofState(st.rights.filter(_._1 >= horizonLow), pending))
-          if (pending.nonEmpty)
-            state.setTimeoutTimestamp(
-              math.max(Math.floorDiv(pending.map(_._1).min + horizonUs, 1000L), wm) + 1)
-          out.iterator
-      }
+    asofResolve(in, watermark, backward = false, toleranceUs = None, horizonUs)
   }
 
   /** Streaming NEAREST as-of join — whichever of the backward match
@@ -393,9 +309,35 @@ object StreamOps {
   def asofJoinNearest(in: Dataset[AsofIn], horizonUs: Long,
                       watermark: String = "12 hours"): Dataset[AsofOut] = {
     require(horizonUs > 0, s"nearest as-of needs a positive forward horizon")
+    asofResolve(in, watermark, backward = true, toleranceUs = None, horizonUs)
+  }
+
+  /** The one keyed-state machine behind the three as-of joins, set by
+    * which candidates a probe at `lus` has:
+    *
+    *  - `backward`: the latest right with `rts <= lus` (ties to the
+    *    larger id), voided when older than `toleranceUs`;
+    *  - `horizonUs > 0`: the earliest right in `(lus, lus + horizon]`
+    *    (ties to the larger id); the lower bound is inclusive when there
+    *    is no backward side, since a simultaneous right is otherwise the
+    *    backward row. With both, the closer wins and a tie goes back.
+    *
+    * The rest follows. A probe is ready once the watermark is strictly
+    * past `lus + horizon` (a right at exactly the watermark may still
+    * arrive), and a key with pending probes times out at the earliest
+    * such instant. Rights below every pending probe and the watermark
+    * drop, except that a backward side keeps the latest of them: the
+    * current version any future probe can still reach back to. */
+  private def asofResolve(in: Dataset[AsofIn], watermark: String,
+      backward: Boolean, toleranceUs: Option[Long],
+      horizonUs: Long): Dataset[AsofOut] = {
     import in.sparkSession.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     def us(t: Timestamp): Long = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000
+    val latest = Ordering.by((r: (Long, Long, Double)) => (r._1, r._2))
+    val earliest = Ordering.by((r: (Long, Long, Double)) => (r._1, -r._2))
+    // with a backward side, a simultaneous right is the backward row
+    val fwdFrom = if (backward) 1L else 0L
     in.withWatermark("ts", watermark)
       .groupByKey(_.user)
       .flatMapGroupsWithState[AsofState, AsofOut](
@@ -412,33 +354,24 @@ object StreamOps {
           val (ready, pending) = st.lefts.partition(l =>
             Math.floorDiv(l._1 + horizonUs, 1000L) < wm)
           val out = ready.sortBy(l => (l._1, l._2)).map { case (lus, id) =>
-            val back = st.rights.filter(_._1 <= lus) match {
-              case Nil => None
-              case cs => Some(cs.maxBy(r => (r._1, r._2)))
-            }
-            val fwd = st.rights
-              .filter(r => r._1 > lus && r._1 <= lus + horizonUs) match {
-                case Nil => None
-                case cs => Some(cs.minBy(r => (r._1, -r._2)))
-              }
-            // closer side wins; ties (and the only-backward case) take
-            // backward — a simultaneous right IS the backward row (d=0)
+            val back =
+              if (!backward) None
+              else st.rights.filter(_._1 <= lus).maxOption(latest)
+                .filter(r => toleranceUs.forall(lus - r._1 <= _))
+            val fwd =
+              if (horizonUs == 0L) None
+              else st.rights.filter(r => r._1 >= lus + fwdFrom && r._1 <= lus + horizonUs)
+                .minOption(earliest)
             val m = (back, fwd) match {
-              case (Some(b), Some(f)) =>
-                if (lus - b._1 <= f._1 - lus) Some(b) else Some(f)
-              case (b, f) => b.orElse(f)
+              case (Some(b), Some(f)) => if (lus - b._1 <= f._1 - lus) back else fwd
+              case _ => back.orElse(fwd)
             }
             AsofOut(user, id, new Timestamp(Math.floorDiv(lus, 1000L)), m.map(_._3))
           }
-          // prune like the backward parent: keep the reigning current
-          // version below the horizon (future probes may reach back)
           val horizonLow = (wm * 1000 :: pending.map(_._1)).min
           val (hi, lo) = st.rights.partition(_._1 >= horizonLow)
-          val best = lo match {
-            case Nil => Nil
-            case cs => List(cs.maxBy(r => (r._1, r._2)))
-          }
-          state.update(AsofState(best ++ hi, pending))
+          val current = if (backward) lo.maxOption(latest).toList else Nil
+          state.update(AsofState(current ++ hi, pending))
           if (pending.nonEmpty)
             state.setTimeoutTimestamp(
               math.max(Math.floorDiv(pending.map(_._1).min + horizonUs, 1000L), wm) + 1)

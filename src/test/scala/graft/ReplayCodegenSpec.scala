@@ -19,7 +19,8 @@ import graft.operators.StreamQueries
   * Counted with Spark's public `CodegenMetrics.METRIC_COMPILATION_TIME`
   * histogram (one update per Janino compile). s01 covers the AvailableNow
   * driver, s06 the ordered driver; each repeat must also give run 1's
-  * answer. */
+  * answer. Each run's replay diag must also carry `phase_ms`, the wall
+  * time of every harness phase its driver ran. */
 class ReplayCodegenSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -55,5 +56,26 @@ class ReplayCodegenSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"(compiles per run: ${runs.map(_._1).mkString(", ")})")
         assert(hash == first, s"run ${i + 2} of $gate changed its answer")
       }
+    }
+
+  /** Harness phases each driver runs, in order: the AvailableNow driver
+    * awaits termination, the ordered driver publishes then flushes. */
+  private val phases = Map(
+    "s01_stream_gopher" -> Seq("stage", "start", "await", "teardown", "localize"),
+    "s06_stream_totals" -> Seq("stage", "start", "publish", "flush", "teardown", "localize"))
+
+  for ((gate, want) <- phases)
+    test(s"$gate: the replay diag records phase_ms for every harness phase") {
+      val diag = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+        "graft_replay_diag", s"${gate.takeWhile(_ != '_')}.json")
+      java.nio.file.Files.deleteIfExists(diag)
+      StreamQueries.queries(gate)(spark, sfDir)
+      val body = java.nio.file.Files.readString(diag)
+      val phaseMs = """"phase_ms":\{([^}]*)\}""".r.findFirstMatchIn(body)
+        .map(_.group(1)).getOrElse(fail(s"no phase_ms in $diag: $body"))
+      val got = """"(\w+)":(\d+\.\d)""".r.findAllMatchIn(phaseMs)
+        .map(m => m.group(1) -> m.group(2).toDouble).toSeq
+      assert(got.map(_._1) == want, s"phase_ms of $gate: $phaseMs")
+      assert(got.forall(_._2 >= 0), s"negative phase time in $phaseMs")
     }
 }

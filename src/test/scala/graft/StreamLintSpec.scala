@@ -70,7 +70,7 @@ class StreamLintSpec extends AnyFunSuite with BeforeAndAfterAll {
     "asofJoinNearest" -> NarrowKey(
       "user — nearest as-of, union of the backward/forward state shapes"),
     "pipelineClean" -> HashKey(
-      "h = md5(text) — within-watermark dedup state + broadcast anti-join"),
+      "(h = md5(text), source) — within-watermark dedup state; h alone for the broadcast anti-join"),
     "enrich" -> NarrowKey("user — stream-static broadcast, no stream state"),
     "filterContaminated" -> HashKey("h = md5(text) — broadcast anti join"),
     "filterContaminatedBloom" -> HashKey("(_gbh1, _gbh2) — two-seed xxhash64 pair"),

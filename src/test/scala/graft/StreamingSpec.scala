@@ -863,6 +863,37 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("streaming pipeline keeps one row per (text, source), in either arrival order") {
+    // the s13 oracle dedups on DISTINCT (h, source, n_tok, q): a text
+    // that arrives from two sources is one document per source, so the
+    // stream must not let the first-arriving source swallow the other
+    val sp = spark
+    implicit val sqlCtx = sp.sqlContext
+    import sp.implicits._
+    import StreamOps.SrcDoc
+    val good = Array.fill(30)("alpha beta gamma delta").mkString(" ")
+    val evalH = Seq("never seen").toDF("text").selectExpr("md5(text) AS h")
+    for ((first, second) <- Seq(("s1", "s2"), ("s2", "s1"))) {
+      val in = MemoryStream[SrcDoc]
+      val name = s"spipe_$first"
+      val q = StreamOps.pipelineClean(in.toDS(), evalH)
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      def sources() = spark.table(name).collect().map(_.getString(1)).toSeq.sorted
+      try {
+        in.addData(SrcDoc(ts(1), 1, first, good))
+        q.processAllAvailable()
+        // the other source's copy is kept; a same-source copy in a later
+        // batch still drops
+        in.addData(SrcDoc(ts(1), 2, second, good), SrcDoc(ts(1), 3, first, good))
+        q.processAllAvailable()
+        in.addData(SrcDoc(ts(1), 4, second, good))
+        q.processAllAvailable()
+        assert(sources() == Seq("s1", "s2"),
+          s"$first first: want one row per source, got ${sources()}")
+      } finally q.stop()
+    }
+  }
+
   test("streaming as-of join: watermark-gated emission, latest-at-or-before, late drop") {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
