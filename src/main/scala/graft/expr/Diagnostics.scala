@@ -18,15 +18,6 @@ package graft.expr
   */
 object Diagnostics {
 
-  private def collect(root: VecExpr): Seq[VecExpr] = {
-    val seen = scala.collection.mutable.LinkedHashMap[String, VecExpr]()
-    def walk(e: VecExpr): Unit = {
-      if (!seen.contains(e.name)) { seen(e.name) = e; e.children.foreach(walk) }
-    }
-    walk(root)
-    seen.values.toSeq
-  }
-
   /** Consumer counts over the DEDUPLICATED DAG: each distinct parent
     * contributes its child edges exactly once. (Counting on every visit
     * would double-count everything below a shared subtree — the d02
@@ -54,7 +45,7 @@ object Diagnostics {
     * content-addressed consumer counting against DuckDB. */
   def exprTableRows(root: VecExpr): Seq[(String, Long, Int, Long, Long)] = {
     val consumers = consumerCounts(root)
-    collect(root).map { e =>
+    root.distinctNodes.map { e =>
       val (lo, hi) = e.transferBytes
       (VecExpr.opOf(e), e.length, consumers(e.name), lo, hi)
     }
@@ -64,7 +55,7 @@ object Diagnostics {
     * `expr_table`): id, op, static length, consumers, own moved bytes. */
   def exprTable(root: VecExpr): String = {
     val consumers = consumerCounts(root)
-    val rows = collect(root).map { e =>
+    val rows = root.distinctNodes.map { e =>
       val (lo, hi) = e.transferBytes
       val hiS = if (hi < 0) "?" else hi.toString
       (e.name.take(8), e.token, if (e.length < 0) "?" else e.length.toString,
@@ -87,7 +78,7 @@ object Diagnostics {
     * drawn child→parent with arrowheads, cost labels from
     * [[VecExpr.transferBytes]]. Pure text — no rendering dependency. */
   def flowSvg(root: VecExpr): String = {
-    val nodes = collect(root)
+    val nodes = root.distinctNodes
     val depth = scala.collection.mutable.Map[String, Int]()
     def d(e: VecExpr): Int = depth.getOrElseUpdate(e.name,
       if (e.children.isEmpty) 0 else 1 + e.children.map(d).max)
@@ -133,7 +124,7 @@ object Diagnostics {
     * reference's expr_flow, as text). Shared subtrees collapse to one
     * node because edges key on content names. */
   def flowDot(root: VecExpr): String = {
-    val nodes = collect(root)
+    val nodes = root.distinctNodes
     val ids = nodes.map(_.name).zipWithIndex.toMap
     val sb = new StringBuilder("digraph exprflow {\n  rankdir=BT;\n")
     nodes.foreach { e =>

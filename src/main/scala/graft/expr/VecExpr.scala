@@ -89,9 +89,9 @@ sealed trait VecExpr {
     * `count(*)` in closed form, so the layout model (autoChunk, RowBytes)
     * is gated against DuckDB, not just spec'd. */
   /** The DAG's distinct nodes in DFS preorder (shared subtrees once,
-    * content-addressed by [[name]]) — the walk [[chunkReportRows]] and
-    * [[chunkReport]] both report over. */
-  private def distinctNodes: Seq[VecExpr] = {
+    * content-addressed by [[name]]) — the walk [[chunkReportRows]],
+    * [[chunkReport]] and the [[Diagnostics]] tables all report over. */
+  private[expr] def distinctNodes: Seq[VecExpr] = {
     val nodes = scala.collection.mutable.LinkedHashMap[String, VecExpr]()
     def walk(e: VecExpr): Unit =
       if (!nodes.contains(e.name)) { nodes(e.name) = e; e.children.foreach(walk) }

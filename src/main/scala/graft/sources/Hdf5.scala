@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -972,11 +972,20 @@ object Hdf5 {
     * skip bit in the chunk's filter mask. */
   def parseData(bytes: Array[Byte], ds: H5Dataset): Array[Double] = {
     if (ds.dataAddr == -3L) return parseChunked(bytes, ds)
+    // copyOfRange zero-pads a range past the end: a truncated file must
+    // fail here, not read its lost tail as zeros
+    require(ds.dataAddr == -2L ||
+      ds.dataAddr >= 0 && ds.dataAddr + ds.dataSize <= bytes.length,
+      s"${ds.name}: contiguous data at ${ds.dataAddr} (+${ds.dataSize} bytes) " +
+        s"runs past the ${bytes.length}-byte file")
     val payload =
       if (ds.dataAddr == -2L) ds.compact
       else java.util.Arrays.copyOfRange(bytes, ds.dataAddr.toInt,
         (ds.dataAddr + ds.dataSize).toInt)
-    decodeValues(payload, ds.dtype, ds.shape.product.toInt)
+    val n = ds.shape.product.toInt
+    require(payload.length.toLong >= n.toLong * ds.dtype.tail.toInt,
+      s"${ds.name}: ${payload.length} data bytes cannot hold $n ${ds.dtype} values")
+    decodeValues(payload, ds.dtype, n)
   }
 
   private def parseChunked(bytes: Array[Byte], ds: H5Dataset): Array[Double] = {
@@ -1047,93 +1056,53 @@ object Hdf5 {
 
   /** Write the element table as a stack of `<blk>.h5` files (dataset
     * `name` in each, `blockSize` elements per file, last ragged) — the
-    * `to_npy_stack` shape with HDF5 block files: one task per block,
-    * gaps densified to zero, absent blocks emitted by the driver. */
+    * `to_npy_stack` shape with HDF5 block files, through the one stack
+    * writer [[NpyStack]] shares: one task per block, gaps densified to
+    * zero, absent blocks emitted by the driver. */
   def writeStack(elements: DataFrame, dir: String, blockSize: Long, n: Long,
-                 name: String = "data"): Unit = {
-    val sess = elements.sparkSession
-    val (fs0, base0) = StoreIO.fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    import sess.implicits._
-    val numBlocks = ((n + blockSize - 1) / blockSize).max(0)
-    val bconf = sess.sparkContext.broadcast(
-      new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $blockSize AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        val vals = new Array[Double](len)
-        it.foreach { case (_, idx, v) => vals((idx % blockSize).toInt) = v }
-        val (fs, base) = StoreIO.fsOf(dir, bconf.value.value)
-        StoreIO.writeFile(fs, new Path(base, s"$blk.h5"),
-          h5Bytes(Seq((name, vals, Seq(len.toLong)))))
-        blk
-      }.collect().toSet
-    var blk = 0L
-    while (blk < numBlocks) {
-      if (!written.contains(blk)) {
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        StoreIO.writeFile(fs0, new Path(base0, s"$blk.h5"),
-          h5Bytes(Seq((name, new Array[Double](len), Seq(len.toLong)))))
-      }
-      blk += 1
-    }
-  }
+                 name: String = "data"): Unit =
+    NpyStack.writeStack(StoreIO.asNd(elements, Seq(n), "idx"), dir, blockSize, H5Block(name))
 
-  /** Read a `.h5` stack back as the element table `(idx, v)`: block
-    * counts from an O(numBlocks) driver pass over metadata prefixes,
-    * payloads decoded distributedly. */
-  def readStack(s: SparkSession, dir: String, name: String = "data"): DataFrame = {
-    import s.implicits._
-    val hconf = s.sparkContext.hadoopConfiguration
-    val (fs, base) = StoreIO.fsOf(dir, hconf)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    // metadata prefix pass with escalation: conforming files may place
-    // object headers / SNODs past any fixed prefix (big attributes, many
-    // datasets), so grow the window before concluding the file is bad —
-    // and fail LOUDLY rather than with a raw index error
-    def datasetsOf(nm: String) = {
+  /** Read a `.h5` stack back as the element table `(idx, v)` through the
+    * one stack reader [[NpyStack]] shares: block counts from an
+    * O(numBlocks) driver pass over metadata prefixes, payloads decoded
+    * distributedly. */
+  def readStack(s: SparkSession, dir: String, name: String = "data"): DataFrame =
+    NpyStack.readStack(s, dir, H5Block(name))._1
+
+  /** The `.h5` block codec of a stack: dataset `name`, flattened. */
+  private final case class H5Block(name: String) extends NpyStack.BlockCodec {
+    def ext: String = ".h5"
+
+    /** Metadata prefix pass with escalation: conforming files may place
+      * object headers / SNODs past any fixed prefix (big attributes, many
+      * datasets), so grow the window before concluding the file is bad —
+      * and fail LOUDLY rather than with a raw index error. */
+    def shape(fs: FileSystem, p: Path): Seq[Long] = {
       val sizes = Seq(4096, 65536, 1 << 20)
       var last: Throwable = null
       val parsed = sizes.iterator.map { k =>
-        try Some(datasets(StoreIO.readPrefix(fs, new Path(base, nm), k)))
+        try Some(datasets(StoreIO.readPrefix(fs, p, k)))
         catch {
           case e: IndexOutOfBoundsException => last = e; None
           case e: java.nio.BufferUnderflowException => last = e; None
         }
       }.collectFirst { case Some(ds) => ds }
-      parsed.getOrElse(throw new IllegalArgumentException(
-        s"$nm: root-group metadata not parseable within ${sizes.last} bytes " +
+      val ds = parsed.getOrElse(throw new IllegalArgumentException(
+        s"${p.getName}: root-group metadata not parseable within ${sizes.last} bytes " +
           "(unsupported layout or corrupt file)", last))
+      Seq(dataset(ds, p.getName).shape.product)
     }
-    StoreIO.listNames(dir, hconf).foreach { nm =>
-      if (nm.endsWith(".h5")) {
-        val ds = datasetsOf(nm).find(_.name == name)
-          .getOrElse(throw new IllegalArgumentException(s"$nm: no dataset '$name'"))
-        counts += ((nm.stripSuffix(".h5").toLong, ds.shape.product))
-      }
-    }
-    require(counts.nonEmpty, s"no .h5 blocks under $dir")
-    val sorted = counts.sortBy(_._1)
-    require(sorted.map(_._1) == (0L until sorted.size).toSeq,
-      s"stack blocks not contiguous (got ids ${sorted.map(_._1).toSeq}) — a " +
-        "missing block file would silently shift every later index")
-    val starts: Map[Long, Long] = sorted.map(_._1).zip(
-      sorted.scanLeft(0L) { case (acc, (_, c)) => acc + c }.dropRight(1)).toMap
-    val bc = s.sparkContext.broadcast((starts, name))
-    s.read.format("binaryFile").option("pathGlobFilter", "*.h5").load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val (st, dsName) = bc.value
-        val blk = path.split("/").last.stripSuffix(".h5").toLong
-        val ds = datasets(content).find(_.name == dsName).get
-        val off = st(blk)
-        parseData(content, ds).iterator.zipWithIndex.map { case (v, i) => (off + i, v) }
-      }.toDF("idx", "v")
+
+    def encode(vals: Array[Double], shape: Seq[Long]): Array[Byte] =
+      h5Bytes(Seq((name, vals, shape)))
+
+    def decode(bytes: Array[Byte]): Array[Double] =
+      parseData(bytes, dataset(datasets(bytes), "block"))
+
+    private def dataset(ds: Seq[H5Dataset], file: String): H5Dataset =
+      ds.find(_.name == name)
+        .getOrElse(throw new IllegalArgumentException(s"$file: no dataset '$name'"))
   }
 
   /** Read one dataset of a single `.h5` file as the element table — a

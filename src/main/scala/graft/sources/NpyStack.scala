@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,12 +12,18 @@ import org.apache.spark.sql.functions._
   *
   * The NPY header (magic + v1.0 + LE uint16 header length + python-dict
   * literal, '<f8' little-endian float64) is emitted and parsed in pure
-  * Scala. Reading follows the reference's two-phase shape: block shapes
-  * come from an O(numBlocks) driver pass over the 128-byte headers (the
-  * reference reads `.npy` headers eagerly the same way), the payloads are
-  * decoded in one distributed `binaryFile` scan with the block-offset map
-  * broadcast — data bytes never touch the driver. All store IO routes
-  * through [[StoreIO]] (Hadoop FileSystem), so the stack may live on any
+  * Scala; a payload whose length disagrees with the header's shape, or a
+  * header running past the file, is rejected with an
+  * `IllegalArgumentException`. The stack code itself ([[readStack]],
+  * [[writeStack]]) is shared with [[Hdf5]]'s `.h5` stacks — the two differ
+  * only in the [[BlockCodec]]. Reading follows the reference's two-phase
+  * shape: block shapes come from an O(numBlocks) driver pass over header
+  * prefixes (the reference reads `.npy` headers eagerly the same way),
+  * block ids must be contiguous, and the payloads are decoded in one
+  * distributed `binaryFile` scan — data bytes never touch the driver. The
+  * rank-1 entry points [[read]]/[[write]] are the rank-generic
+  * [[readNd]]/[[writeNd]] at rank 1. All store IO routes through
+  * [[StoreIO]] (Hadoop FileSystem), so the stack may live on any
   * configured scheme, not just a driver-shared local filesystem. */
 object NpyStack {
 
@@ -49,91 +55,108 @@ object NpyStack {
     buf.array()
   }
 
-  /** Parse NPY v1.0 bytes → values (validates magic/dtype). */
-  def parseNpy(bytes: Array[Byte]): Array[Double] = {
+  /** Validated magic + version; the declared header length. */
+  private def headerLen(bytes: Array[Byte]): Int = {
     require(bytes.length >= 10 && Magic.indices.forall(i => bytes(i) == Magic(i)),
       "not an NPY file")
     require(bytes(6) == 1, s"unsupported NPY version ${bytes(6)}")
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    buf.position(8)
-    val hlen = buf.getShort() & 0xffff
+    ((bytes(9) & 0xff) << 8) | (bytes(8) & 0xff)
+  }
+
+  /** Parse NPY v1.0 bytes → values. Validates magic, dtype and layout,
+    * and that the payload holds exactly the header shape's values. */
+  def parseNpy(bytes: Array[Byte]): Array[Double] = {
+    val hlen = headerLen(bytes)
+    require(10L + hlen <= bytes.length,
+      s"NPY header length $hlen runs past the ${bytes.length}-byte file")
     val header = new String(bytes, 10, hlen, "ASCII")
     require(header.contains("'<f8'"), s"only '<f8' supported, got: $header")
     require(header.contains("False"), "fortran_order not supported")
-    val n = (bytes.length - 10 - hlen) / 8
-    val out = new Array[Double](n)
-    buf.position(10 + hlen)
+    val n = countOf(shapeIn(header))
+    val payload = bytes.length - 10L - hlen
+    require(payload == n * 8,
+      s"NPY payload of $payload bytes does not hold the header's $n values ($header)")
+    val out = new Array[Double](n.toInt)
+    val buf = ByteBuffer.wrap(bytes, 10 + hlen, payload.toInt).order(ByteOrder.LITTLE_ENDIAN)
     var i = 0
-    while (i < n) { out(i) = buf.getDouble(); i += 1 }
+    while (i < out.length) { out(i) = buf.getDouble(); i += 1 }
     out
   }
 
-  /** Parse only the element count from a header prefix (first 128 bytes). */
-  def parseCount(prefix: Array[Byte]): Long = parseShape(prefix).product
+  /** Parse only the element count from a header prefix. */
+  def parseCount(prefix: Array[Byte]): Long = countOf(parseShape(prefix))
 
-  /** Parse the shape tuple from a header prefix. */
+  /** Parse the shape tuple from a header prefix (the header may run past
+    * the prefix; the shape tuple must not). */
   def parseShape(prefix: Array[Byte]): Seq[Long] = {
-    val hlen = ((prefix(9) & 0xff) << 8) | (prefix(8) & 0xff)
-    val header = new String(prefix, 10, math.min(hlen, prefix.length - 10), "ASCII")
+    val hlen = headerLen(prefix)
+    shapeIn(new String(prefix, 10, math.min(hlen, prefix.length - 10), "ASCII"))
+  }
+
+  private def shapeIn(header: String): Seq[Long] = {
     val m = "\\(([\\d,\\s]*)\\)".r.findFirstMatchIn(header)
       .getOrElse(throw new IllegalArgumentException(s"no shape in: $header"))
     val dims = "\\d+".r.findAllIn(m.group(1)).map(_.toLong).toSeq
     if (dims.isEmpty) throw new IllegalArgumentException(s"empty shape in: $header")
+    countOf(dims) // rejects a shape whose volume overflows
     dims
   }
 
-  /** Write the element table as a stack of `<blk>.npy` files, `blockSize`
-    * elements per file (last file ragged). One task per block.
-    *
-    * `n` is the logical array length: every block is densified to its
-    * exact `[blk*blockSize, min((blk+1)*blockSize, n))` range with values
-    * placed by `idx % blockSize` and gaps zero-filled — element tables are
-    * sparse (zeros dropped), and positioning by sort order would silently
-    * compact gaps and shift every subsequent value. Blocks with no
-    * elements at all are emitted as all-zero files from the driver loop
-    * below, so read-side offsets stay aligned. */
-  def write(elements: DataFrame, dir: String, blockSize: Long, n: Long): Unit = {
-    val sess = elements.sparkSession
-    val (fs0, base0) = StoreIO.fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    import sess.implicits._
-    val numBlocks = ((n + blockSize - 1) / blockSize).max(0)
-    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
-    val bconf = sess.sparkContext.broadcast(
-      new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $blockSize AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        val vals = new Array[Double](len)
-        it.foreach { case (_, idx, v) => vals((idx % blockSize).toInt) = v }
-        val (fs, base) = StoreIO.fsOf(dir, bconf.value.value) // driver's conf
-        StoreIO.writeFile(fs, new Path(base, s"$blk.npy"), npyBytes(vals))
-        (blk, len.toLong)
-      }.collect() // drives the write job; returns O(numBlocks) stats
-    // blocks with zero surviving elements never reach mapGroups — emit
-    // their all-zero files here so the stack has no holes
-    val have = written.map(_._1).toSet
-    var blk = 0L
-    while (blk < numBlocks) {
-      if (!have.contains(blk)) {
-        val len = (math.min((blk + 1) * blockSize, n) - blk * blockSize).toInt
-        StoreIO.writeFile(fs0, new Path(base0, s"$blk.npy"),
-          npyBytes(new Array[Double](len)))
-      }
-      blk += 1
+  /** Volume of a shape, refusing one past what an array can hold. */
+  private def countOf(shape: Seq[Long]): Long =
+    shape.foldLeft(1L) { (acc, d) =>
+      require(d == 0 || acc <= Int.MaxValue / d, s"shape $shape too large for one block")
+      acc * d
     }
+
+  /** One block-file format of an axis-0 stack: the file extension, the
+    * block shape a driver-side header read declares, and the codec of a
+    * dense C-order block. `decode` must return exactly the values the
+    * header declares or throw `IllegalArgumentException`. */
+  private[sources] trait BlockCodec extends Serializable {
+    def ext: String
+    def shape(fs: FileSystem, p: Path): Seq[Long]
+    def encode(vals: Array[Double], shape: Seq[Long]): Array[Byte]
+    def decode(bytes: Array[Byte]): Array[Double]
   }
 
+  private object Npy extends BlockCodec {
+    def ext: String = ".npy"
+    def shape(fs: FileSystem, p: Path): Seq[Long] = parseShape(StoreIO.readPrefix(fs, p, 256))
+    def encode(vals: Array[Double], shape: Seq[Long]): Array[Byte] = npyBytesNd(vals, shape)
+    def decode(bytes: Array[Byte]): Array[Double] = parseNpy(bytes)
+  }
+
+  /** Write the element table as a stack of `<blk>.npy` files, `blockSize`
+    * elements per file (last file ragged) — [[writeNd]] at rank 1. */
+  def write(elements: DataFrame, dir: String, blockSize: Long, n: Long): Unit =
+    writeNd(StoreIO.asNd(elements, Seq(n), "idx"), dir, blockSize)
+
   /** Write an N-d array as a `.npy` stack split along AXIS 0 (the
-    * reference's `to_npy_stack` contract, `io/_to_npy_stack.py:13`:
+    * reference's `to_npy_stack` contract, `io/_to_npy_stack.py:13`):
     * `blockRows` rows of the leading axis per file, each file a full
-    * C-order N-d block, last file ragged). One task per block; blocks
-    * with no surviving elements are emitted all-zero by the driver. */
-  def writeNd(nd: graft.NdArray, dir: String, blockRows: Long): Unit = {
+    * C-order N-d block, last file ragged. */
+  def writeNd(nd: graft.NdArray, dir: String, blockRows: Long): Unit =
+    writeStack(nd, dir, blockRows, Npy)
+
+  /** Read a `.npy` stack back as the element table `(idx, v)`. */
+  def read(s: SparkSession, dir: String): DataFrame = readStack(s, dir, Npy)._1
+
+  /** Read an N-d `.npy` stack back as a [[graft.NdArray]]. */
+  def readNd(s: SparkSession, dir: String): graft.NdArray = {
+    val (flat, shape) = readStack(s, dir, Npy)
+    graft.NdArray.fromFlat(flat, shape)
+  }
+
+  /** Write `nd` as a stack of `<blk><ext>` block files, `blockRows` rows
+    * of axis 0 per block. One task per block; every block is densified to
+    * its exact row range with values placed by coordinate and gaps
+    * zero-filled — element tables are sparse (zeros dropped), and placing
+    * by sort order would silently compact gaps and shift every later
+    * value. Blocks with no elements at all are emitted as all-zero files
+    * from the driver loop, so read-side offsets stay aligned. */
+  private[sources] def writeStack(nd: graft.NdArray, dir: String, blockRows: Long,
+                                  codec: BlockCodec): Unit = {
     val shape = nd.shape
     val rank = shape.length
     val rest = shape.tail
@@ -149,106 +172,71 @@ object NpyStack {
       (1 until rank).map(a => s"c$a * ${restStrides(a - 1)}L")).mkString(" + ")
     val inBounds = (0 until rank).map(a => s"c$a >= 0 AND c$a < ${shape(a)}")
       .mkString(" AND ")
-    val bconf = sess.sparkContext.broadcast(
-      new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val written = nd.df
-      .where(inBounds)
-      .selectExpr(s"c0 DIV $blockRows AS b", s"($pSql) AS p", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (b, it) =>
-        val len = math.min((b + 1) * blockRows, rows) - b * blockRows
-        val vals = new Array[Double]((len * restVol).toInt)
-        it.foreach { case (_, p, v) => vals(p.toInt) = v }
-        val (fs, base) = StoreIO.fsOf(dir, bconf.value.value)
-        StoreIO.writeFile(fs, new Path(base, s"$b.npy"),
-          npyBytesNd(vals, len +: rest))
-        b
-      }.collect().toSet
+    val blockShape = (b: Long) => (math.min((b + 1) * blockRows, rows) - b * blockRows) +: rest
+    def put(fs: FileSystem, base: Path, b: Long, vals: Array[Double]): Unit =
+      StoreIO.writeFile(fs, new Path(base, s"$b${codec.ext}"), codec.encode(vals, blockShape(b)))
+    val written = StoreIO.writeBlocks(
+      nd.df.where(inBounds).selectExpr(s"c0 DIV $blockRows AS b", s"($pSql) AS p", "v")
+        .as[(Long, Long, Double)], 0.0)(b => blockShape(b).product.toInt) { (conf, b, vals) =>
+      val (fs, base) = StoreIO.fsOf(dir, conf)
+      put(fs, base, b, vals)
+    }
     var b = 0L
     while (b < numBlocks) {
-      if (!written.contains(b)) {
-        val len = math.min((b + 1) * blockRows, rows) - b * blockRows
-        StoreIO.writeFile(fs0, new Path(base0, s"$b.npy"),
-          npyBytesNd(new Array[Double]((len * restVol).toInt), len +: rest))
-      }
+      if (!written(b)) put(fs0, base0, b, new Array[Double](blockShape(b).product.toInt))
       b += 1
     }
   }
 
-  /** Read an N-d `.npy` stack back as a [[graft.NdArray]]: the driver
-    * reads each block's shape tuple (O(numBlocks) header prefixes, all
-    * trailing extents must agree), payloads decode distributedly to flat
-    * row-major positions. */
-  def readNd(s: SparkSession, dir: String): graft.NdArray = {
+  /** Read a stack of `<blk><ext>` block files as the flat row-major table
+    * `(idx, v)` plus the stacked shape: the driver reads each block's
+    * shape from its header (O(numBlocks) prefixes; ids must be contiguous
+    * and all trailing extents must agree), then the payloads decode in
+    * one distributed `binaryFile` scan to flat positions from the block's
+    * row offset. A block whose payload disagrees with its header fails
+    * with an `IllegalArgumentException` naming the file. */
+  private[sources] def readStack(s: SparkSession, dir: String,
+                                 codec: BlockCodec): (DataFrame, Seq[Long]) = {
     import s.implicits._
     val hconf = s.sparkContext.hadoopConfiguration
     val (fs, base) = StoreIO.fsOf(dir, hconf)
-    val shapes = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]
-    StoreIO.listNames(dir, hconf).foreach { name =>
-      if (name.endsWith(".npy")) {
-        val prefix = StoreIO.readPrefix(fs, new Path(base, name), 256)
-        shapes += ((name.stripSuffix(".npy").toLong, parseShape(prefix)))
-      }
-    }
-    require(shapes.nonEmpty, s"no .npy blocks under $dir")
-    val sorted = shapes.sortBy(_._1)
-    require(sorted.map(_._1) == (0L until sorted.size).toSeq,
-      s"stack blocks not contiguous (got ids ${sorted.map(_._1)}) — a missing " +
+    val shapes = StoreIO.listNames(dir, hconf).filter(_.endsWith(codec.ext)).map { name =>
+      (name.stripSuffix(codec.ext).toLong, codec.shape(fs, new Path(base, name)))
+    }.sortBy(_._1)
+    require(shapes.nonEmpty, s"no ${codec.ext} blocks under $dir")
+    require(shapes.map(_._1) == (0L until shapes.size).toSeq,
+      s"stack blocks not contiguous (got ids ${shapes.map(_._1)}) — a missing " +
         "block file would silently shift every later index")
-    val rest = sorted.head._2.tail
-    sorted.foreach { case (b, sh) =>
+    val rest = shapes.head._2.tail
+    shapes.foreach { case (b, sh) =>
       require(sh.tail == rest, s"block $b trailing shape ${sh.tail} != $rest")
     }
     val restVol = rest.product
-    val totalRows = sorted.map(_._2.head).sum
-    val rowStarts: Map[Long, Long] = sorted.map(_._1).zip(
-      sorted.scanLeft(0L) { case (acc, (_, sh)) => acc + sh.head }.dropRight(1)).toMap
-    val bc = s.sparkContext.broadcast((rowStarts, restVol))
+    val starts = shapes.map(_._1).zip(
+      shapes.scanLeft(0L) { case (acc, (_, sh)) => acc + sh.head * restVol })
+    val counts = shapes.map { case (b, sh) => b -> sh.product }.toMap
+    val bc = s.sparkContext.broadcast((starts.toMap, counts))
     // pathGlobFilter, NOT an in-path `*.npy` glob: a glob inside load()'s
     // path makes FileStreamSink.hasMetadata probe the literal glob string
     // as a file and log a WARN + stack trace on every read
-    val flat = s.read.format("binaryFile").option("pathGlobFilter", "*.npy").load(dir)
+    val flat = s.read.format("binaryFile").option("pathGlobFilter", s"*${codec.ext}").load(dir)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]
       .flatMap { case (path, content) =>
-        val (starts, rv) = bc.value
-        val blk = path.split("/").last.stripSuffix(".npy").toLong
-        val off = starts(blk) * rv
-        parseNpy(content).iterator.zipWithIndex.map { case (v, i) => (off + i, v) }
+        val (st, n) = bc.value
+        val blk = path.split("/").last.stripSuffix(codec.ext).toLong
+        val vals =
+          try {
+            val v = codec.decode(content)
+            require(v.length == n(blk), s"${v.length} values where the manifest read ${n(blk)}")
+            v
+          } catch {
+            case e: IllegalArgumentException =>
+              throw new IllegalArgumentException(s"$path: ${e.getMessage}", e)
+          }
+        val off = st(blk)
+        vals.iterator.zipWithIndex.map { case (v, i) => (off + i, v) }
       }.toDF("idx", "v")
-    graft.NdArray.fromFlat(flat, totalRows +: rest)
-  }
-
-  /** Read a `.npy` stack back as the element table `(idx, v)`. */
-  def read(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    // phase 1 (driver, O(numBlocks)): block counts from 128-byte headers
-    val hconf = s.sparkContext.hadoopConfiguration
-    val (fs, base) = StoreIO.fsOf(dir, hconf)
-    val counts = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-    StoreIO.listNames(dir, hconf).foreach { name =>
-      if (name.endsWith(".npy")) {
-        val prefix = StoreIO.readPrefix(fs, new Path(base, name), 128)
-        counts += ((name.stripSuffix(".npy").toLong, parseCount(prefix)))
-      }
-    }
-    val sorted = counts.sortBy(_._1)
-    require(sorted.map(_._1) == (0L until sorted.size).toSeq,
-      s"stack blocks not contiguous (got ids ${sorted.map(_._1)}) — a missing " +
-        "block file would silently shift every later index")
-    val starts: Map[Long, Long] = sorted.map(_._1).zip(
-      sorted.scanLeft(0L) { case (acc, (_, n)) => acc + n }.dropRight(1)).toMap
-    val bc = s.sparkContext.broadcast(starts)
-
-    // phase 2 (distributed): decode payloads, emit (offset + i, v)
-    s.read.format("binaryFile").option("pathGlobFilter", "*.npy").load(dir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, content) =>
-        val blk = path.split("/").last.stripSuffix(".npy").toLong
-        val start = bc.value(blk)
-        parseNpy(content).iterator.zipWithIndex.map { case (v, i) => (start + i, v) }
-      }.toDF("idx", "v")
+    (flat, shapes.map(_._2.head).sum +: rest)
   }
 }

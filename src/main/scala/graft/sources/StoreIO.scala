@@ -1,7 +1,10 @@
 package graft.sources
 
+import scala.reflect.ClassTag
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Java-serializable carrier for a Hadoop `Configuration` (which is
   * `Writable`, not `Serializable`), so executor-side store writes see the
@@ -21,18 +24,47 @@ final class SerializableHadoopConf(@transient var value: Configuration)
   }
 }
 
-/** Store IO for the chunked-file connectors ([[Zarr]], [[NpyStack]]),
-  * routed through the Hadoop FileSystem API so a store may live on any
-  * configured scheme — local disk, HDFS, or an object store — rather than
-  * a filesystem shared between driver and executors. Callers with a
-  * SparkSession in scope pass `sparkContext.hadoopConfiguration` (and ship
-  * it into executor closures via [[SerializableHadoopConf]]) so
+/** Store IO for the array stores ([[Zarr]], [[TileDb]] and the `.npy` /
+  * `.h5` block stacks of [[NpyStack]] and [[Hdf5]]), routed through the
+  * Hadoop FileSystem API so a store may live on any configured scheme —
+  * local disk, HDFS, or an object store — rather than a filesystem shared
+  * between driver and executors. Callers with a SparkSession in scope pass
+  * `sparkContext.hadoopConfiguration`, and [[writeBlocks]] ships it into
+  * the executor-side block writes via [[SerializableHadoopConf]], so
   * `spark.hadoop.*` settings — the standard way object-store credentials
-  * are configured — apply to chunk writes as well as the `binaryFile`
+  * are configured — apply to block writes as well as the `binaryFile`
   * reads; the default-resource `Configuration` is only the no-session
-  * fallback. Bulk chunk READS never come through here — they ride Spark's
+  * fallback. Bulk block READS never come through here — they ride Spark's
   * distributed `binaryFile` source. */
 object StoreIO {
+
+  /** An element or cell table as the N-d array the rank-generic writers
+    * take: `coords` name its coordinate columns in axis order. */
+  private[sources] def asNd(table: DataFrame, shape: Seq[Long], coords: String*): graft.NdArray =
+    new graft.NdArray(
+      table.selectExpr(coords.zipWithIndex.map { case (c, a) => s"$c AS c$a" } :+ "v": _*),
+      shape, dense = false, graft.NdArray.axes(shape.length))
+
+  /** The block-write loop of every array store. `cells` holds
+    * `(block id, position in the block's dense C-order array, value)`
+    * rows; the rows of one block meet in one task, which fills a dense
+    * array of `size(block)` values (positions without a row keep `fill`)
+    * and hands it to `write` on the executor with the DRIVER's Hadoop
+    * conf. Returns the ids of the blocks written — each store decides
+    * what a block without rows becomes. */
+  private[sources] def writeBlocks[V: ClassTag](cells: Dataset[(Long, Long, V)], fill: V)
+      (size: Long => Int)(write: (Configuration, Long, Array[V]) => Unit): Set[Long] = {
+    val spark = cells.sparkSession
+    val conf = spark.sparkContext.broadcast(
+      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
+    import spark.implicits._
+    cells.groupByKey(_._1).mapGroups { (b, it) =>
+      val vals = Array.fill(size(b))(fill)
+      it.foreach { case (_, p, v) => vals(p.toInt) = v }
+      write(conf.value.value, b, vals)
+      b
+    }.collect().toSet
+  }
 
   /** Fallback only — the XML default-resource parse is paid once per JVM. */
   private[sources] lazy val defaultConf = new Configuration()

@@ -51,6 +51,11 @@ import org.apache.spark.sql.functions._
   * (outside every fragment's domain) are generated from `spark.range`
   * over driver-computed uncovered intervals, never materialized per cell
   * on the driver.
+  *
+  * One path per direction: [[read]]/[[write]] are [[readNd]]/[[writeNd]]
+  * at rank 1, and a fragment whose payload does not hold exactly its
+  * domain's cells is rejected with an `IllegalArgumentException` naming
+  * the file, never read short or spilled into a neighbour's cells.
   */
 object TileDb {
 
@@ -85,7 +90,7 @@ object TileDb {
 
   def parseSchema(bytes: Array[Byte]): Schema = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(buf.getInt() == SchemaMagic, "not a graft-subset TileDB schema")
+    require(bytes.length >= 18 && buf.getInt() == SchemaMagic, "not a graft-subset TileDB schema")
     val v = buf.getInt()
     require(v == Version, s"unsupported schema version $v")
     val arrayType = buf.get()
@@ -96,6 +101,8 @@ object TileDb {
     require(nattr == 1,
       "keyword 'attribute' must be provided when loading a multi-attribute TileDB array")
     val rank = buf.getInt()
+    require(rank >= 0 && bytes.length == 18 + rank * 24L + 8,
+      s"schema of ${bytes.length} bytes does not hold rank $rank")
     val dims = (0 until rank).map { _ =>
       val lo = buf.getLong(); val hi = buf.getLong(); val t = buf.getLong()
       require(lo == 0, s"only zero-based domains supported (got lo=$lo)")
@@ -117,11 +124,16 @@ object TileDb {
 
   def parseFragMeta(bytes: Array[Byte]): Seq[(Long, Long)] = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    require(buf.getInt() == FragMagic, "not a graft-subset TileDB fragment metadata")
+    require(bytes.length >= 12 && buf.getInt() == FragMagic,
+      "not a graft-subset TileDB fragment metadata")
     val v = buf.getInt()
     require(v == Version, s"unsupported fragment metadata version $v")
     val rank = buf.getInt()
+    require(rank >= 0 && bytes.length == 12 + rank * 16L + 8,
+      s"fragment metadata of ${bytes.length} bytes does not hold rank $rank")
     val dom = (0 until rank).map(_ => (buf.getLong(), buf.getLong()))
+    require(dom.forall { case (lo, hi) => lo >= 0 && lo <= hi },
+      s"fragment domain $dom has an empty or negative extent")
     val cells = buf.getLong()
     require(cells == dom.map { case (lo, hi) => hi - lo + 1 }.product,
       s"fragment cell count $cells does not match domain $dom")
@@ -163,55 +175,12 @@ object TileDb {
   }
 
   /** Write the 1-d element table `(idx, v)` into `uri` at logical write
-    * timestamp `ts`, restricted to the inclusive subarray [lo, hi]. One
-    * FRAGMENT PER BLOCK TASK (block = `blockCells` consecutive cells):
-    * this is TileDB's native parallel-write model — immutable subarray
-    * fragments plus commit markers — so there is no shared-file append
-    * and no data through the driver. Gaps inside [lo, hi] densify to the
-    * schema fill value (the fragment claims its whole subarray, exactly
-    * as a TileDB dense write does). */
+    * timestamp `ts`, restricted to the inclusive subarray [lo, hi] —
+    * [[writeNd]] at rank 1 over the existing schema's extent. */
   def write(elements: DataFrame, uri: String, ts: Long,
-            lo: Long = 0L, hi: Long = -1L, blockCells: Long = 1L << 20): Unit = {
-    val sess = elements.sparkSession
-    val (fs0, base0) = StoreIO.fsOf(uri, sess.sparkContext.hadoopConfiguration)
-    val schema = parseSchema(StoreIO.readFile(fs0, schemaPath(fs0, base0)))
-    require(schema.shape.length == 1, s"write() is 1-d; use writeNd for rank ${schema.shape.length}")
-    val n = schema.shape.head
-    val hi1 = if (hi < 0) n - 1 else hi
-    require(lo >= 0 && hi1 < n && lo <= hi1, s"subarray [$lo,$hi1] outside domain [0,${n - 1}]")
-    import sess.implicits._
-    val fill = schema.fill
-    val bconf = sess.sparkContext.broadcast(
-      new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration))
-    val numBlocks = (hi1 - lo) / blockCells + 1
-    val written = elements
-      .where(col("idx") >= lo && col("idx") <= hi1)
-      .selectExpr(s"(idx - $lo) DIV $blockCells AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val b0 = lo + blk * blockCells
-        val b1 = math.min(b0 + blockCells - 1, hi1)
-        val vals = Array.fill((b1 - b0 + 1).toInt)(fill)
-        it.foreach { case (_, idx, v) => vals((idx - b0).toInt) = v }
-        writeFragment(uri, bconf.value.value, ts, Seq((b0, b1)), vals)
-        blk
-      }.collect().toSet
-    // blocks with no surviving elements still claim their subarray (a
-    // dense write covers the whole range) — emit their fill fragments
-    // DISTRIBUTED (a driver loop over a million-block subarray would
-    // serialize what the per-block tasks parallelize)
-    val missing = (0L until numBlocks).filterNot(written)
-    if (missing.nonEmpty) {
-      val (loC, hiC, bcC, fillC) = (lo, hi1, blockCells, fill)
-      sess.createDataset(missing).foreach { blk =>
-        val b0 = loC + blk * bcC
-        val b1 = math.min(b0 + bcC - 1, hiC)
-        writeFragment(uri, bconf.value.value, ts, Seq((b0, b1)),
-          Array.fill((b1 - b0 + 1).toInt)(fillC))
-      }
-    }
-  }
+            lo: Long = 0L, hi: Long = -1L, blockCells: Long = 1L << 20): Unit =
+    writeNd(StoreIO.asNd(elements, oneD(schemaOf(elements.sparkSession, uri), "write").shape,
+      "idx"), uri, ts, blockCells, lo, hi)
 
   /** Emit one committed fragment: dir + a0.tdb + metadata + commit marker.
     * The marker is written LAST — a crashed task leaves an uncommitted
@@ -242,10 +211,23 @@ object TileDb {
     new Path(dir, latest)
   }
 
+  /** The latest array schema under `uri`. */
+  private def schemaOf(s: SparkSession, uri: String): Schema = {
+    val (fs, base) = StoreIO.fsOf(uri, s.sparkContext.hadoopConfiguration)
+    parseSchema(StoreIO.readFile(fs, schemaPath(fs, base)))
+  }
+
+  private def oneD(schema: Schema, op: String): Schema = {
+    require(schema.shape.length == 1,
+      s"$op() is 1-d; rank ${schema.shape.length} needs ${op}Nd")
+    schema
+  }
+
   // ----------------------------------------------------------------- read
 
   /** Committed fragments only (name, t1, t2, uuid, domain), ascending by
-    * (t2, uuid) — the shadowing order. O(numFragments) driver pass. */
+    * (t2, uuid) — the shadowing order. O(numFragments) driver pass. Every
+    * fragment domain must lie inside the schema's. */
   private def fragManifest(s: SparkSession, uri: String): (Schema, Seq[(String, Long, String, Seq[(Long, Long)])]) = {
     val conf = s.sparkContext.hadoopConfiguration
     val (fs, base) = StoreIO.fsOf(uri, conf)
@@ -261,28 +243,103 @@ object TileDb {
         val dom = parseFragMeta(StoreIO.readFile(fs,
           new Path(new Path(fragsDir, name), "__fragment_metadata.tdb")))
         require(dom.length == schema.shape.length, s"rank mismatch in $name")
+        require(dom.zip(schema.shape).forall { case ((lo, hi), n) => hi < n },
+          s"fragment $name domain $dom outside the array shape ${schema.shape}")
         (name, t2, uuid, dom)
       }
       .sortBy { case (_, t2, uuid, _) => (t2, uuid) }
     (schema, frags)
   }
 
-  /** Read the dense 1-d array as the element table `(idx, v)`: one
-    * distributed `binaryFile` scan over every committed fragment's
-    * `a0.tdb`, then the TileDB shadowing merge — the cell value from the
-    * fragment with the greatest (t2, uuid) wins — as a `max_by` over a
-    * rank computed from the driver's O(numFragments) manifest. Cells no
-    * fragment covers surface as the schema fill value, generated from
-    * `spark.range` over the driver-merged uncovered intervals. */
+  /** Read the dense 1-d array as the element table `(idx, v)` —
+    * [[readNd]]'s flat table at rank 1. */
   def read(s: SparkSession, uri: String): DataFrame = {
+    val (flat, schema) = readFlat(s, uri)
+    oneD(schema, "read")
+    flat
+  }
+
+  /** Write an N-d array as row-block fragments along axis 0 at logical
+    * write timestamp `ts`, restricted to the inclusive row subarray
+    * [lo, hi] (`hi` < 0: the array's last row). One FRAGMENT PER BLOCK
+    * TASK (block = `blockRows` consecutive rows × the full trailing dims):
+    * this is TileDB's native parallel-write model — immutable subarray
+    * fragments plus commit markers — so there is no shared-file append
+    * and no data through the driver. Gaps inside the subarray densify to
+    * the schema fill value (a fragment claims its whole subarray, exactly
+    * as a TileDB dense write does); blocks with no rows at all still
+    * claim theirs, written as fill fragments by distributed tasks. The
+    * array is created first (fill 0) when `uri` has no schema. */
+  def writeNd(a: graft.NdArray, uri: String, ts: Long, blockRows: Long,
+              lo: Long = 0L, hi: Long = -1L): Unit = {
+    val s = a.df.sparkSession
+    val shape = a.shape
+    createArrayIfAbsent(s, uri, Schema(shape, blockRows +: shape.tail))
+    val schema = schemaOf(s, uri)
+    val hi1 = if (hi < 0) shape.head - 1 else hi
+    require(lo >= 0 && hi1 < schema.shape.head && lo <= hi1,
+      s"subarray [$lo,$hi1] outside domain [0,${schema.shape.head - 1}]")
+    import s.implicits._
+    val fill = schema.fill
+    val restVol = shape.tail.product
+    val strides = shape.scanRight(1L)(_ * _).tail
+    val pSql = (s"(c0 - $lo) % $blockRows * ${restVol}L" +:
+      shape.indices.tail.map(d => s"c$d * ${strides(d)}L")).mkString(" + ")
+    val inBounds = (s"c0 >= $lo AND c0 <= $hi1" +:
+      shape.indices.map(d => s"c$d >= 0 AND c$d < ${shape(d)}")).mkString(" AND ")
+    val domOf = (blk: Long) => {
+      val r0 = lo + blk * blockRows
+      (r0, math.min(r0 + blockRows - 1, hi1)) +: shape.tail.map(d => (0L, d - 1))
+    }
+    val size = (blk: Long) => domOf(blk).map { case (l, h) => h - l + 1 }.product.toInt
+    val written = StoreIO.writeBlocks(a.df.where(inBounds)
+      .selectExpr(s"(c0 - $lo) DIV $blockRows AS b", s"($pSql) AS p", "v")
+      .as[(Long, Long, Double)], fill)(size) { (conf, blk, vals) =>
+      writeFragment(uri, conf, ts, domOf(blk), vals)
+    }
+    // blocks with no surviving elements still claim their subarray (a
+    // dense write covers the whole range) — emit their fill fragments
+    // DISTRIBUTED (a driver loop over a million-block subarray would
+    // serialize what the per-block tasks parallelize)
+    val missing = (0L to (hi1 - lo) / blockRows).filterNot(written)
+    if (missing.nonEmpty) {
+      val bconf = s.sparkContext.broadcast(
+        new SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
+      s.createDataset(missing).foreach { blk =>
+        writeFragment(uri, bconf.value.value, ts, domOf(blk), Array.fill(size(blk))(fill))
+      }
+    }
+  }
+
+  private def createArrayIfAbsent(s: SparkSession, uri: String, schema: Schema): Unit = {
+    val (fs, base) = StoreIO.fsOf(uri, s.sparkContext.hadoopConfiguration)
+    if (!fs.exists(new Path(base, "__schema"))) createArray(s, uri, schema)
+  }
+
+  /** Read an N-d dense array as a [[graft.NdArray]]. */
+  def readNd(s: SparkSession, uri: String): graft.NdArray = {
+    val (flat, schema) = readFlat(s, uri)
+    graft.NdArray.fromFlat(flat, schema.shape)
+  }
+
+  /** The one fragment reader behind [[read]] and [[readNd]]: the flat
+    * row-major table `(idx, v)` of the array plus its schema. One
+    * distributed `binaryFile` scan over every committed fragment's
+    * `a0.tdb` decodes each fragment row-major within its rectangular
+    * domain (a payload that does not hold exactly the domain's cells
+    * fails with an `IllegalArgumentException` naming the file), then the
+    * TileDB shadowing merge — the cell value from the fragment with the
+    * greatest (t2, uuid) wins — runs as a `max_by` over a rank from the
+    * driver's O(numFragments) manifest. Cells no fragment covers come
+    * back as the schema fill value, generated from `spark.range`. */
+  private def readFlat(s: SparkSession, uri: String): (DataFrame, Schema) = {
     import s.implicits._
     val (schema, frags) = fragManifest(s, uri)
-    require(schema.shape.length == 1, s"read() is 1-d; rank ${schema.shape.length} needs readNd")
-    val n = schema.shape.head
-    // shadowing rank by manifest order; ranks are dense 0..f-1
-    val rankOf: Map[String, (Int, Long)] =
-      frags.zipWithIndex.map { case ((name, _, _, dom), r) => name -> (r, dom.head._1) }.toMap
-    val bc = s.sparkContext.broadcast(rankOf)
+    val shape = schema.shape
+    val strides = shape.scanRight(1L)(_ * _).tail // row-major global strides
+    val rankOf: Map[String, (Int, Seq[(Long, Long)])] =
+      frags.zipWithIndex.map { case ((name, _, _, dom), r) => name -> (r, dom) }.toMap
+    val bc = s.sparkContext.broadcast((rankOf, strides))
     // EXPLICIT file paths from the manifest, not a directory scan:
     // Spark's file index silently drops `_`-prefixed paths (metadata-file
     // convention), which is every TileDB fragment dir — a recursive
@@ -295,104 +352,13 @@ object TileDb {
         .select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
-          val fname = path.split("/").dropRight(1).last
-          bc.value.get(fname).iterator.flatMap { case (r, lo) =>
-            val buf = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
-            (0 until content.length / 8).iterator.map(i => (lo + i, buf.getDouble(i * 8), r))
-          }
-        }.toDF("idx", "v", "r")
-    val merged = decoded.groupBy("idx").agg(expr("max_by(v, r)").as("v"))
-    // fill the gaps: complement of the union of fragment domains
-    val covered = frags.map(_._4.head).sortBy(_._1)
-      .foldLeft(List.empty[(Long, Long)]) {
-        case ((alo, ahi) :: rest, (lo, hi)) if lo <= ahi + 1 =>
-          (alo, math.max(ahi, hi)) :: rest
-        case (acc, iv) => iv :: acc
-      }.reverse
-    val gaps = ((-1L +: covered.map(_._2)) :+ n)
-      .zip(covered.map(_._1) :+ n)
-      .collect { case (prevHi, nextLo) if nextLo > prevHi + 1 => (prevHi + 1, nextLo) }
-    val fill = schema.fill
-    gaps.foldLeft(merged) { case (df, (g0, g1)) =>
-      df.unionByName(s.range(g0, g1).select(col("id").as("idx"), lit(fill).as("v")))
-    }
-  }
-
-  /** Write an N-d array as row-block fragments along axis 0 (subarray =
-    * `[r0, r1] × full trailing dims` per block), the same blocking as
-    * [[NpyStack.writeNd]] — each block task emits its own fragment. */
-  def writeNd(a: graft.NdArray, uri: String, ts: Long, blockRows: Long): Unit = {
-    val s = a.elements.sparkSession
-    val shape = a.shape
-    createArrayIfAbsent(s, uri, Schema(shape, blockRows +: shape.tail))
-    import s.implicits._
-    val restVol = shape.tail.product
-    val bconf = s.sparkContext.broadcast(
-      new SerializableHadoopConf(s.sparkContext.hadoopConfiguration))
-    val numBlocks = (shape.head + blockRows - 1) / blockRows
-    val nRows = shape.head
-    val strides = shape.scanRight(1L)(_ * _).tail
-    val idxSql = shape.indices.map(a => s"c$a * ${strides(a)}L").mkString(" + ")
-    val inBounds = shape.indices.map(a => s"c$a >= 0 AND c$a < ${shape(a)}").mkString(" AND ")
-    val written = a.df // (c0..cR-1, v) → row-major (idx, v)
-      .where(inBounds)
-      .selectExpr(s"($idxSql) AS idx", "v")
-      .selectExpr(s"idx DIV (${blockRows * restVol}) AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val r0 = blk * blockRows
-        val r1 = math.min(r0 + blockRows, nRows) - 1
-        val base = r0 * restVol
-        val vals = new Array[Double](((r1 - r0 + 1) * restVol).toInt)
-        it.foreach { case (_, idx, v) => vals((idx - base).toInt) = v }
-        val dom = (r0, r1) +: shape.tail.map(d => (0L, d - 1))
-        writeFragment(uri, bconf.value.value, ts, dom, vals)
-        blk
-      }.collect().toSet
-    // fill fragments for untouched row-blocks, distributed (see write)
-    val missing = (0L until numBlocks).filterNot(written)
-    if (missing.nonEmpty) {
-      val (brC, nrC, rvC, tailDims) = (blockRows, nRows, restVol, shape.tail)
-      s.createDataset(missing).foreach { blk =>
-        val r0 = blk * brC
-        val r1 = math.min(r0 + brC, nrC) - 1
-        writeFragment(uri, bconf.value.value, ts,
-          (r0, r1) +: tailDims.map(d => (0L, d - 1)),
-          new Array[Double](((r1 - r0 + 1) * rvC).toInt))
-      }
-    }
-  }
-
-  private def createArrayIfAbsent(s: SparkSession, uri: String, schema: Schema): Unit = {
-    val (fs, base) = StoreIO.fsOf(uri, s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(base, "__schema"))) createArray(s, uri, schema)
-  }
-
-  /** Read an N-d dense array (same manifest + shadowing merge as
-    * [[read]]; fragments are rectangular subarrays, decoded row-major
-    * within their domain and mapped to global row-major positions). */
-  def readNd(s: SparkSession, uri: String): graft.NdArray = {
-    import s.implicits._
-    val (schema, frags) = fragManifest(s, uri)
-    val shape = schema.shape
-    val strides = shape.scanRight(1L)(_ * _).tail // row-major global strides
-    val rankOf: Map[String, (Int, Seq[(Long, Long)])] =
-      frags.zipWithIndex.map { case ((name, _, _, dom), r) => name -> (r, dom) }.toMap
-    val bc = s.sparkContext.broadcast((rankOf, strides))
-    // explicit manifest paths — see read() for why a directory scan
-    // under `_`-prefixed fragment dirs returns nothing
-    val decoded =
-      if (frags.isEmpty) s.range(0).selectExpr("id AS idx", "CAST(0 AS DOUBLE) AS v", "0 AS r")
-      else s.read.format("binaryFile")
-        .load(frags.map { case (name, _, _, _) => s"$uri/__fragments/$name/a0.tdb" }: _*)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
           val (rk, st) = bc.value
           val fname = path.split("/").dropRight(1).last
           rk.get(fname).iterator.flatMap { case (r, dom) =>
             val ext = dom.map { case (lo, hi) => hi - lo + 1 }
+            require(content.length == ext.product * 8,
+              s"$path: ${content.length} bytes, but fragment domain $dom holds " +
+                s"${ext.product} float64 cells")
             val sub = ext.scanRight(1L)(_ * _).tail // row-major within subarray
             val buf = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
             (0 until content.length / 8).iterator.map { i =>
@@ -406,36 +372,32 @@ object TileDb {
           }
         }.toDF("idx", "v", "r")
     val merged = decoded.groupBy("idx").agg(expr("max_by(v, r)").as("v"))
-    // Densify uncovered cells to the schema fill, like the 1-d read():
-    // writeNd/tiledbSink fragments span the FULL trailing dims, so the
-    // uncovered region is a union of axis-0 row intervals, and a row
-    // interval is CONTIGUOUS in row-major flat index — each gap is one
-    // cheap range union. A hand-written fragment that is partial in a
-    // trailing dim leaves in-row holes this row-interval model cannot
-    // see, so such stores must use fill == 0 (absent-cell ≙ 0 is the
-    // cell table's native semantics; fill == 0 also skips the unions).
+    // Densify uncovered cells to the schema fill: write/writeNd/tiledbSink
+    // fragments span the FULL trailing dims, so the uncovered region is a
+    // union of axis-0 row intervals, and a row interval is CONTIGUOUS in
+    // row-major flat index — each gap is one cheap range union. A
+    // hand-written fragment that is partial in a trailing dim leaves
+    // in-row holes this row-interval model cannot see, so such stores
+    // must use fill == 0 (absent-cell ≙ 0 is the cell table's native
+    // semantics).
     val rowVol = shape.tail.product
     val fullTail = frags.forall { case (_, _, _, dom) =>
       dom.tail.zip(shape.tail).forall { case ((lo, hi), n) => lo == 0 && hi == n - 1 } }
     require(fullTail || schema.fill == 0.0,
-      s"readNd: partial-trailing-dim fragments need fill == 0, schema has ${schema.fill}")
-    val dense =
-      if (schema.fill == 0.0) merged
-      else {
-        val covered = frags.map(_._4.head).sortBy(_._1)
-          .foldLeft(List.empty[(Long, Long)]) {
-            case ((alo, ahi) :: rest, (lo, hi)) if lo <= ahi + 1 =>
-              (alo, math.max(ahi, hi)) :: rest
-            case (acc, iv) => iv :: acc
-          }.reverse
-        val gaps = ((-1L +: covered.map(_._2)) :+ shape.head)
-          .zip(covered.map(_._1) :+ shape.head)
-          .collect { case (prevHi, nextLo) if nextLo > prevHi + 1 => (prevHi + 1, nextLo) }
-        gaps.foldLeft(merged) { case (df, (g0, g1)) =>
-          df.unionByName(s.range(g0 * rowVol, g1 * rowVol)
-            .select(col("id").as("idx"), lit(schema.fill).as("v")))
-        }
-      }
-    graft.NdArray.fromFlat(dense.select(col("idx"), col("v")), shape)
+      s"partial-trailing-dim fragments need fill == 0, schema has ${schema.fill}")
+    val covered = frags.map(_._4.head).sortBy(_._1)
+      .foldLeft(List.empty[(Long, Long)]) {
+        case ((alo, ahi) :: rest, (lo, hi)) if lo <= ahi + 1 =>
+          (alo, math.max(ahi, hi)) :: rest
+        case (acc, iv) => iv :: acc
+      }.reverse
+    val gaps = ((-1L +: covered.map(_._2)) :+ shape.head)
+      .zip(covered.map(_._1) :+ shape.head)
+      .collect { case (prevHi, nextLo) if nextLo > prevHi + 1 => (prevHi + 1, nextLo) }
+    val dense = gaps.foldLeft(merged) { case (df, (g0, g1)) =>
+      df.unionByName(s.range(g0 * rowVol, g1 * rowVol)
+        .select(col("id").as("idx"), lit(schema.fill).as("v")))
+    }
+    (dense, schema)
   }
 }

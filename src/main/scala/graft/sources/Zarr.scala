@@ -5,7 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.{Deflater, Inflater}
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Zarr v2 + v3 source/sink (reference `from_zarr`/`to_zarr`,
@@ -18,15 +18,22 @@ import org.apache.spark.sql.functions._
   * everywhere).
   *
   * Supported happy path (matches the reference's `tests/test_zarr.py`
-  * round-trip semantics): float64 (write+read) plus int64/int32/float32
-  * on the READ side (int64 exactly via [[read1dLong]], the rest as exact
-  * doubles), order `C`; compressors `null`/`zlib`/`zstd`/`blosc` (v2 —
-  * blosc is the real-world default, decoded by the self-describing
+  * round-trip semantics): dtypes f8/f4/i4/u1 (read and write, as exact
+  * doubles) and i8 (exactly via [[read1dLong]]/[[write1dLong]], as
+  * doubles otherwise), order `C`; compressors `null`/`zlib`/`zstd`/`blosc`
+  * (v2 — blosc is the real-world default, decoded by the self-describing
   * [[Blosc]] frame codec) and the `bytes`(little) + optional
-  * `gzip`/`zstd`/`blosc` codec chain (v3), plus READ support for the v3
-  * `sharding_indexed` codec (offset/nbytes index + crc32c, inner chunks
-  * through the same codec chain). blosclz frames are
-  * rejected loudly, never silently misread.
+  * `gzip`/`zstd`/`blosc` codec chain (v3), plus the v3 `sharding_indexed`
+  * codec (offset/nbytes index + crc32c, inner chunks through the same
+  * codec chain) both ways. blosclz frames are rejected loudly, never
+  * silently misread.
+  *
+  * One path per direction, rank-generic: every read entry point is the
+  * one chunk reader (`readFlat`) — the flat row-major `(idx, v)` table,
+  * returned as is at rank 1 and wrapped by `NdArray.fromFlat` otherwise —
+  * and every write entry point is [[writeNd]]. The codec chain works on
+  * raw little-endian chunk bytes; the value type (DOUBLE, or the exact
+  * BIGINT of an integer store) is chosen once, at the table edge.
   *
   * Scale shape, same as [[NpyStack]]: the driver touches only the
   * O(numChunks) manifest (one small JSON + a directory listing); chunk
@@ -37,12 +44,11 @@ import org.apache.spark.sql.functions._
   * All store IO goes through the Hadoop FileSystem API (reads via Spark's
   * `binaryFile` source, metadata/chunk writes via `Path.getFileSystem`),
   * so the store may live on any configured scheme — local disk, HDFS, or
-  * an object store — not just a filesystem shared with the driver.
-  * Executors resolve the FileSystem from the chunk path's own URI with the
-  * DRIVER's `hadoopConfiguration`, serialized into the write closures via
-  * [[SerializableHadoopConf]] — so `spark.hadoop.*` settings (the usual
-  * home of object-store credentials) apply to chunk writes, matching the
-  * `binaryFile` read path.
+  * an object store — not just a filesystem shared with the driver. Chunk
+  * writes run on the executors through [[StoreIO.writeBlocks]] with the
+  * DRIVER's `hadoopConfiguration`, so `spark.hadoop.*` settings (the
+  * usual home of object-store credentials) apply to chunk writes,
+  * matching the `binaryFile` read path.
   */
 object Zarr {
 
@@ -368,6 +374,10 @@ object Zarr {
   }
 
   // ---- chunk codec ----------------------------------------------------------
+  //
+  // The codec chain (compressor, sharding, the crc32c shard index) works on
+  // RAW little-endian chunk bytes; a value type meets it only at the table
+  // edge — [[toRaw]] on write, [[doublesAt]]/[[longsAt]] on read.
 
   private def deflate(raw: Array[Byte]): Array[Byte] = {
     val d = new Deflater(1)
@@ -424,28 +434,7 @@ object Zarr {
     } finally in.close()
   }
 
-  def encodeChunk(vals: Array[Double], compressor: Option[String],
-                  dtype: String = "<f8"): Array[Byte] = {
-    val raw = new Array[Byte](vals.length * itemSize(dtype))
-    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    dtype match {
-      case "<f8" => vals.foreach(bb.putDouble)
-      case "<f4" => vals.foreach(v => bb.putFloat(v.toFloat))
-      // integer narrowing REFUSES non-integral / out-of-range values: a
-      // numpy-style silent C cast would round-trip different numbers than
-      // were written and fail the store's read-back oracle much later
-      case "<i4" => vals.foreach { v =>
-        require(v == Math.rint(v) && v >= Int.MinValue && v <= Int.MaxValue,
-          s"value $v not exactly representable as <i4")
-        bb.putInt(v.toInt)
-      }
-      case "|u1" => vals.foreach { v =>
-        require(v == Math.rint(v) && v >= 0 && v <= 255,
-          s"value $v not exactly representable as |u1")
-        bb.put(v.toInt.toByte)
-      }
-      case other => sys.error(s"encodeChunk supports <f8/<f4/<i4/|u1, got $other")
-    }
+  private def compress(raw: Array[Byte], compressor: Option[String]): Array[Byte] =
     compressor match {
       case Some("zlib")  => deflate(raw)
       case Some("gzip")  => gzipBytes(raw)
@@ -454,6 +443,23 @@ object Zarr {
       case Some("blosc-bit") => Blosc.compress(raw, 8, bitShuffle = true)
       case _             => raw
     }
+
+  /** Decompressed chunk payload, at least `rawLen` bytes. */
+  private def decompress(bytes: Array[Byte], rawLen: Int,
+                         compressor: Option[String]): Array[Byte] = {
+    val raw = compressor match {
+      case Some("zlib")  => inflate(bytes, rawLen)
+      case Some("gzip")  => gunzip(bytes, rawLen)
+      case Some("zstd")  =>
+        try com.github.luben.zstd.Zstd.decompress(bytes, rawLen)
+        catch { case e: com.github.luben.zstd.ZstdException =>
+          throw new java.io.IOException(s"corrupt zstd chunk: ${e.getMessage}", e)
+        }
+      case Some("blosc") | Some("blosc-bit") => Blosc.decompress(bytes)
+      case _             => bytes
+    }
+    require(raw.length >= rawLen, s"chunk too short: ${raw.length} < $rawLen")
+    raw
   }
 
   private def itemSize(dtype: String): Int = dtype match {
@@ -466,83 +472,70 @@ object Zarr {
   private def isIntDtype(dtype: String): Boolean =
     dtype == "<i8" || dtype == "<i4" || dtype == "|u1"
 
-  /** Decompressed chunk payload bytes (shared by the double and exact-long
-    * value decoders). */
-  private def rawChunk(bytes: Array[Byte], nVals: Int, compressor: Option[String],
-                       isz: Int): Array[Byte] = {
-    val raw = compressor match {
-      case Some("zlib")  => inflate(bytes, nVals * isz)
-      case Some("gzip")  => gunzip(bytes, nVals * isz)
-      case Some("zstd")  =>
-        try com.github.luben.zstd.Zstd.decompress(bytes, nVals * isz)
-        catch { case e: com.github.luben.zstd.ZstdException =>
-          throw new java.io.IOException(s"corrupt zstd chunk: ${e.getMessage}", e)
-        }
-      case Some("blosc") | Some("blosc-bit") => Blosc.decompress(bytes)
-      case _             => bytes
+  private def le(raw: Array[Byte]): ByteBuffer =
+    ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
+
+  /** Dense chunk values as raw little-endian `dtype` bytes. Integer
+    * narrowing REFUSES non-integral / out-of-range values: a numpy-style
+    * silent C cast would round-trip different numbers than were written
+    * and fail the store's read-back oracle much later. An `Array[Long]`
+    * is the exact int64 edge (`<i8` only). */
+  private def toRaw(vals: Array[_], dtype: String): Array[Byte] = {
+    val bb = le(new Array[Byte](vals.length * itemSize(dtype)))
+    def exact(v: Double, lo: Double, hi: Double): Double = {
+      require(v == Math.rint(v) && v >= lo && v <= hi,
+        s"value $v not exactly representable as $dtype")
+      v
     }
-    require(raw.length >= nVals * isz, s"chunk too short: ${raw.length} < ${nVals * isz}")
-    raw
+    (vals, dtype) match {
+      case (ls: Array[Long], "<i8")   => ls.foreach(bb.putLong)
+      case (ds: Array[Double], "<f8") => ds.foreach(bb.putDouble)
+      case (ds: Array[Double], "<f4") => ds.foreach(v => bb.putFloat(v.toFloat))
+      case (ds: Array[Double], "<i8") => ds.foreach(v => bb.putLong(
+        exact(v, Long.MinValue.toDouble, Math.nextDown(-Long.MinValue.toDouble)).toLong))
+      case (ds: Array[Double], "<i4") =>
+        ds.foreach(v => bb.putInt(exact(v, Int.MinValue, Int.MaxValue).toInt))
+      case (ds: Array[Double], "|u1") =>
+        ds.foreach(v => bb.put(exact(v, 0, 255).toInt.toByte))
+      case _ => sys.error(s"no $dtype encoding for ${vals.getClass.getSimpleName}")
+    }
+    bb.array()
   }
+
+  /** Value reader of a raw chunk, as a double: int64 is exact in a double
+    * up to 2^53 — beyond that the exact BIGINT edge is [[longsAt]]. */
+  private def doublesAt(dtype: String): (ByteBuffer, Int) => Double = dtype match {
+    case "<f8" => (bb, p) => bb.getDouble(p * 8)
+    case "<i8" => (bb, p) => bb.getLong(p * 8).toDouble
+    case "<i4" => (bb, p) => bb.getInt(p * 4).toDouble
+    case "<f4" => (bb, p) => bb.getFloat(p * 4).toDouble
+    case "|u1" => (bb, p) => (bb.get(p) & 0xFF).toDouble
+  }
+
+  /** Exact int64 value reader — values above 2^53 survive bit-for-bit. */
+  private def longsAt(dtype: String): (ByteBuffer, Int) => Long = dtype match {
+    case "<i8" => (bb, p) => bb.getLong(p * 8)
+    case "<i4" => (bb, p) => bb.getInt(p * 4).toLong
+    case other => sys.error(s"exact int64 read of non-integer dtype $other")
+  }
+
+  def encodeChunk(vals: Array[Double], compressor: Option[String],
+                  dtype: String = "<f8"): Array[Byte] =
+    compress(toRaw(vals, dtype), compressor)
 
   def decodeChunk(bytes: Array[Byte], nVals: Int, compressor: Option[String],
                   dtype: String = "<f8"): Array[Double] = {
-    val isz = itemSize(dtype)
-    val raw = rawChunk(bytes, nVals, compressor, isz)
-    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    // int64 is exact in a double up to 2^53 — the element-table value type;
-    // beyond that use the exact read1dLong path
-    dtype match {
-      case "<f8" => Array.fill(nVals)(bb.getDouble)
-      case "<i8" => Array.fill(nVals)(bb.getLong.toDouble)
-      case "<i4" => Array.fill(nVals)(bb.getInt.toDouble)
-      case "<f4" => Array.fill(nVals)(bb.getFloat.toDouble)
-      case "|u1" => Array.fill(nVals)((bb.get & 0xFF).toDouble)
-    }
+    val bb = le(decompress(bytes, nVals * itemSize(dtype), compressor))
+    val at = doublesAt(dtype)
+    Array.tabulate(nVals)(at(bb, _))
   }
 
-  /** Exact int64 chunk decode — no pass through double, values above 2^53
-    * survive bit-for-bit. */
-  def decodeChunkLong(bytes: Array[Byte], nVals: Int,
-                      compressor: Option[String], dtype: String): Array[Long] = {
-    val isz = itemSize(dtype)
-    val raw = rawChunk(bytes, nVals, compressor, isz)
-    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    dtype match {
-      case "<i8" => Array.fill(nVals)(bb.getLong)
-      case "<i4" => Array.fill(nVals)(bb.getInt.toLong)
-      case other => sys.error(s"decodeChunkLong on non-integer dtype $other")
-    }
-  }
-
-  def encodeChunkLong(vals: Array[Long], compressor: Option[String]): Array[Byte] = {
-    val raw = new Array[Byte](vals.length * 8)
-    val bb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-    vals.foreach(bb.putLong)
-    compressor match {
-      case Some("zlib")  => deflate(raw)
-      case Some("gzip")  => gzipBytes(raw)
-      case Some("zstd")  => com.github.luben.zstd.Zstd.compress(raw, 3)
-      case Some("blosc") => Blosc.compress(raw, 8)
-      case Some("blosc-bit") => Blosc.compress(raw, 8, bitShuffle = true)
-      case _             => raw
-    }
-  }
-
-  /** Decode one chunk OBJECT to the full dense C-order chunk values — a
-    * plain chunk, or (v3 `sharding_indexed`) a shard file: the
-    * `(offset: u64, nbytes: u64)` index is read from `index_location`,
-    * crc32c-verified, and each present inner chunk decodes through the
-    * same data codec chain; absent inner chunks (offset = 2⁶⁴−1) take
-    * `fill_value`. */
-  /** C-order coordinate walk shared by both shard codec halves and both
-    * value types: for shard-local inner-chunk entry `e` and within-inner
-    * position `p`, the position in the full dense shard (outer chunk)
-    * array. Rank-generic. */
+  /** C-order coordinate walk shared by both shard codec halves: for
+    * shard-local inner-chunk entry `e` and within-inner position `p`, the
+    * position in the full dense shard (outer chunk) array. Rank-generic. */
   private def shardPos(m: Meta): (Int, Int) => Int = {
     val inner = m.shard.getOrElse(sys.error("shardPos on an unsharded meta"))
     val grid = m.chunks.zip(inner).map { case (c, i) => c / i }
-    def stridesOf(sh: Seq[Long]): Seq[Long] = sh.scanRight(1L)(_ * _).tail
     val cst = stridesOf(m.chunks) // within-shard C-order strides
     val ist = stridesOf(inner)    // within-inner-chunk strides
     val gst = stridesOf(grid)     // inner-chunk grid strides
@@ -570,7 +563,7 @@ object Zarr {
     val idxOff = if (m.indexLoc == "start") 0 else content.length - idxBytes
     val crc = new java.util.zip.CRC32C
     crc.update(content, idxOff, nEntries * 16)
-    val bb = ByteBuffer.wrap(content).order(ByteOrder.LITTLE_ENDIAN)
+    val bb = le(content)
     require(bb.getInt(idxOff + nEntries * 16) == crc.getValue.toInt,
       "shard index crc32c mismatch")
     Array.tabulate(nEntries) { e =>
@@ -583,102 +576,81 @@ object Zarr {
     }
   }
 
-  def decodeChunkFull(content: Array[Byte], m: Meta): Array[Double] = m.shard match {
-    case None => decodeChunk(content, intChunk(m.chunks.product), m.compressor, m.dtype)
-    case Some(inner) =>
-      val innerVol = intChunk(inner.product)
-      val out = Array.fill(intChunk(m.chunks.product))(m.fill)
-      val pos = shardPos(m)
-      shardIndex(content, m).zipWithIndex.foreach { case ((offset, nb), e) =>
-        if (offset != -1L) {
-          val vals = decodeChunk(
-            java.util.Arrays.copyOfRange(content, offset.toInt, (offset + nb).toInt),
-            innerVol, m.compressor, m.dtype)
-          var p = 0
-          while (p < innerVol) { out(pos(e, p)) = vals(p); p += 1 }
+  /** Decode one chunk OBJECT to the raw bytes of its full dense C-order
+    * chunk — a plain chunk, or (v3 `sharding_indexed`) a shard file: the
+    * `(offset: u64, nbytes: u64)` index is read from `index_location`,
+    * crc32c-verified, and each present inner chunk decodes through the
+    * same data codec chain; absent inner chunks take `fill_value`. */
+  private def chunkRaw(content: Array[Byte], m: Meta): Array[Byte] = {
+    val isz = itemSize(m.dtype)
+    val vol = intChunk(m.chunks.product)
+    m.shard match {
+      case None => decompress(content, vol * isz, m.compressor)
+      case Some(inner) =>
+        val innerVol = intChunk(inner.product)
+        val fill = toRaw(Array(m.fill), m.dtype)
+        val out = new Array[Byte](vol * isz)
+        if (fill.exists(_ != 0))
+          (0 until vol).foreach(p => System.arraycopy(fill, 0, out, p * isz, isz))
+        val pos = shardPos(m)
+        shardIndex(content, m).zipWithIndex.foreach { case ((offset, nb), e) =>
+          if (offset != -1L) {
+            val raw = decompress(
+              java.util.Arrays.copyOfRange(content, offset.toInt, (offset + nb).toInt),
+              innerVol * isz, m.compressor)
+            var p = 0
+            while (p < innerVol) {
+              System.arraycopy(raw, p * isz, out, pos(e, p) * isz, isz); p += 1
+            }
+          }
         }
-      }
-      out
+        out
+    }
   }
 
-  /** Exact int64 twin of [[decodeChunkFull]] (r12 verdict gap #4: sharded
-    * Long stores) — same index/crc/coordinate walk, values never pass
-    * through double. */
-  def decodeChunkFullLong(content: Array[Byte], m: Meta): Array[Long] = m.shard match {
-    case None =>
-      decodeChunkLong(content, intChunk(m.chunks.product), m.compressor, m.dtype)
-    case Some(inner) =>
-      val innerVol = intChunk(inner.product)
-      val out = Array.fill(intChunk(m.chunks.product))(m.fill.toLong)
-      val pos = shardPos(m)
-      shardIndex(content, m).zipWithIndex.foreach { case ((offset, nb), e) =>
-        if (offset != -1L) {
-          val vals = decodeChunkLong(
-            java.util.Arrays.copyOfRange(content, offset.toInt, (offset + nb).toInt),
-            innerVol, m.compressor, m.dtype)
-          var p = 0
-          while (p < innerVol) { out(pos(e, p)) = vals(p); p += 1 }
-        }
-      }
-      out
+  def decodeChunkFull(content: Array[Byte], m: Meta): Array[Double] = {
+    val bb = le(chunkRaw(content, m))
+    val at = doublesAt(m.dtype)
+    Array.tabulate(intChunk(m.chunks.product))(at(bb, _))
   }
 
-  /** Concatenate encoded inner chunks in C-order grid order and append
+  /** Encode one full dense chunk's raw bytes as its chunk OBJECT — the
+    * write half of [[chunkRaw]]. A shard concatenates its inner chunks
+    * (each through the data codec chain, C-order grid order) and appends
     * the `(offset: u64, nbytes: u64)` index plus its crc32c at
     * `index_location` = end. */
-  private def assembleShard(nEntries: Int)(encAt: Int => Array[Byte]): Array[Byte] = {
-    val body = new java.io.ByteArrayOutputStream()
-    val idx = ByteBuffer.allocate(nEntries * 16 + 4).order(ByteOrder.LITTLE_ENDIAN)
-    var e = 0
-    while (e < nEntries) {
-      val enc = encAt(e)
-      idx.putLong(body.size().toLong)
-      idx.putLong(enc.length.toLong)
-      body.write(enc)
-      e += 1
-    }
-    val crc = new java.util.zip.CRC32C
-    crc.update(idx.array(), 0, nEntries * 16)
-    idx.putInt(crc.getValue.toInt)
-    body.write(idx.array())
-    body.toByteArray
+  private def encodeObject(raw: Array[Byte], m: Meta): Array[Byte] = m.shard match {
+    case None => compress(raw, m.compressor)
+    case Some(inner) =>
+      require(m.indexLoc == "end", "zarr shard writes use index_location=end")
+      val isz = itemSize(m.dtype)
+      val innerVol = inner.product.toInt
+      val nEntries = m.chunks.zip(inner).map { case (c, i) => c / i }.product.toInt
+      val pos = shardPos(m)
+      val body = new java.io.ByteArrayOutputStream()
+      val idx = ByteBuffer.allocate(nEntries * 16 + 4).order(ByteOrder.LITTLE_ENDIAN)
+      var e = 0
+      while (e < nEntries) {
+        val chunk = new Array[Byte](innerVol * isz)
+        var p = 0
+        while (p < innerVol) {
+          System.arraycopy(raw, pos(e, p) * isz, chunk, p * isz, isz); p += 1
+        }
+        val enc = compress(chunk, m.compressor)
+        idx.putLong(body.size().toLong)
+        idx.putLong(enc.length.toLong)
+        body.write(enc)
+        e += 1
+      }
+      val crc = new java.util.zip.CRC32C
+      crc.update(idx.array(), 0, nEntries * 16)
+      idx.putInt(crc.getValue.toInt)
+      body.write(idx.array())
+      body.toByteArray
   }
 
-  /** Encode one shard (the write half of [[decodeChunkFull]]'s
-    * `sharding_indexed` branch): each inner chunk runs through the same
-    * data codec chain as a plain chunk. Rank-generic — the coordinate
-    * walk mirrors the reader's exactly. */
-  def encodeShard(vals: Array[Double], m: Meta): Array[Byte] = {
-    val inner = m.shard.getOrElse(sys.error("encodeShard on an unsharded meta"))
-    require(m.indexLoc == "end", "encodeShard writes index_location=end")
-    val innerVol = inner.product.toInt
-    val nEntries = m.chunks.zip(inner).map { case (c, i) => c / i }.product.toInt
-    val pos = shardPos(m)
-    assembleShard(nEntries) { e =>
-      val chunkVals = new Array[Double](innerVol)
-      var p = 0
-      while (p < innerVol) { chunkVals(p) = vals(pos(e, p)); p += 1 }
-      encodeChunk(chunkVals, m.compressor, m.dtype)
-    }
-  }
-
-  /** Exact int64 twin of [[encodeShard]] — values never pass through
-    * double, so int64 beyond 2^53 shard bit-for-bit. */
-  def encodeShardLong(vals: Array[Long], m: Meta): Array[Byte] = {
-    val inner = m.shard.getOrElse(sys.error("encodeShardLong on an unsharded meta"))
-    require(m.indexLoc == "end", "encodeShardLong writes index_location=end")
-    require(m.dtype == "<i8", s"encodeShardLong writes <i8, got ${m.dtype}")
-    val innerVol = inner.product.toInt
-    val nEntries = m.chunks.zip(inner).map { case (c, i) => c / i }.product.toInt
-    val pos = shardPos(m)
-    assembleShard(nEntries) { e =>
-      val chunkVals = new Array[Long](innerVol)
-      var p = 0
-      while (p < innerVol) { chunkVals(p) = vals(pos(e, p)); p += 1 }
-      encodeChunkLong(chunkVals, m.compressor)
-    }
-  }
-
+  /** Row-major strides of a shape. */
+  private def stridesOf(sh: Seq[Long]): Seq[Long] = sh.scanRight(1L)(_ * _).tail
   import StoreIO.{fsOf, writeFile}
   import org.apache.hadoop.conf.Configuration
 
@@ -826,8 +798,8 @@ object Zarr {
     * `.zmetadata`, chunk objects under `root/member` — the
     * `open_consolidated(root)[member]` shape. */
   def read1dConsolidated(s: SparkSession, root: String, member: String): DataFrame =
-    read1dWithMeta(s, if (member.isEmpty) root else s"$root/$member",
-      readMetaConsolidated(root, member, s.sparkContext.hadoopConfiguration))
+    readFlat(s, if (member.isEmpty) root else s"$root/$member",
+      readMetaConsolidated(root, member, s.sparkContext.hadoopConfiguration), 1)
 
   /** Glob (relative to the store dir) matching exactly the rank-`rank`
     * chunk objects for this meta's key encoding. */
@@ -844,9 +816,9 @@ object Zarr {
     * literal glob string as a file and log a WARN + full stack trace on
     * every read (polluting the stdout contract's tail window). Nested
     * layouts (`sep == "/"`) use `recursiveFileLookup`; flat layouts use a
-    * filename `pathGlobFilter`. Non-chunk litter is still dropped
-    * downstream by the `.zarray`/`zarr.json` filters and [[chunkCoords]].
-    * Callers guard the empty-store case before invoking. */
+    * filename `pathGlobFilter`. Non-chunk litter (metadata files,
+    * checksums) is dropped by [[chunkCoords]]. Callers guard the
+    * empty-store case before invoking. */
   private def chunkScan(s: SparkSession, dir: String, m: Meta): DataFrame = {
     val rd = s.read.format("binaryFile")
     if (m.sep == "/")
@@ -889,244 +861,213 @@ object Zarr {
     StoreIO.glob(dir, chunkGlob(m, rank), conf)
       .flatMap(p => chunkCoords(m, rank, p))
 
-  /** `fill_value` as a Spark SQL literal — NaN/±Infinity have no bare
-    * numeric literal form and must go through a string cast. */
-  private def fillSql(f: Double): String =
-    if (f.isNaN) "CAST('NaN' AS DOUBLE)"
+  /** `fill_value` as a Spark SQL literal of the table's value type —
+    * NaN/±Infinity have no bare numeric literal form and must go through
+    * a string cast. */
+  private def fillSql(f: Double, exact: Boolean): String =
+    if (exact) s"CAST(${f.toLong} AS BIGINT)"
+    else if (f.isNaN) "CAST('NaN' AS DOUBLE)"
     else if (f == Double.PositiveInfinity) "CAST('Infinity' AS DOUBLE)"
     else if (f == Double.NegativeInfinity) "CAST('-Infinity' AS DOUBLE)"
     else s"CAST($f AS DOUBLE)"
 
-  // ---- 1-d -----------------------------------------------------------------
+  // ---- read ------------------------------------------------------------------
 
-  /** Read a 1-d zarr array as the element table `(idx, v)`. Present chunks
-    * decode distributedly; chunks with no file contribute `fill_value`
-    * rows generated from `spark.range` (skipped entirely when fill is 0 —
-    * the element table's implicit-zero convention). */
+  /** Read a 1-d zarr array as the element table `(idx, v)`. */
   def read1d(s: SparkSession, dir: String): DataFrame =
-    read1dWithMeta(s, dir, readMeta(dir, s.sparkContext.hadoopConfiguration))
-
-  private def read1dWithMeta(s: SparkSession, dir: String, m: Meta): DataFrame = {
-    import s.implicits._
-    val hconf = s.sparkContext.hadoopConfiguration
-    require(m.shape.length == 1, s"read1d on ${m.shape.length}-d array")
-    val n = m.shape.head
-    val c = m.chunks.head
-    val present = presentChunks(dir, m, 1, hconf).map(_.head).toSet
-    val bc = s.sparkContext.broadcast((m, n, c))
-
-    // a store may legitimately have NO chunk objects (every chunk deferred
-    // to fill_value) — binaryFile refuses an empty glob, so skip the scan
-    val decoded =
-      if (present.isEmpty)
-        s.range(0).selectExpr("id AS idx", "CAST(0 AS DOUBLE) AS v")
-      else chunkScan(s, dir, m)
-        .where(not(col("path").endsWith(".zarray")) &&
-          not(col("path").endsWith("zarr.json")))
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val (meta, nn, cc) = bc.value
-          chunkCoords(meta, 1, path).iterator.flatMap { coords =>
-            val blk = coords.head
-            val start = blk * cc
-            val len = math.min(cc, nn - start).toInt // clip padded edge chunk
-            decodeChunkFull(content, meta).iterator.take(len)
-              .zipWithIndex.map { case (v, i) => (start + i, v) }
-          }
-        }.toDF("idx", "v")
-
-    val nChunks = m.chunkGrid.head
-    val missing = (0L until nChunks).filterNot(present.contains)
-    if (missing.isEmpty || m.fill == 0.0) decoded
-    else {
-      val md = s.createDataset(missing).toDF("blk")
-        .join(s.range(c).toDF("off"))
-        .selectExpr(s"blk * $c + off AS idx", s"${fillSql(m.fill)} AS v")
-        .where(col("idx") < n)
-      decoded.unionByName(md)
-    }
-  }
-
-  /** Write the element table as a 1-d zarr array of length `n`. Chunks
-    * densify by `idx` (gaps zero-filled); fully-absent chunks are written
-    * by the driver so the store is complete. `format` 2 writes a
-    * `.zarray` store (zlib/raw), 3 a `zarr.json` store (gzip/raw). */
-  def write1d(elements: DataFrame, dir: String, n: Long, chunk: Long,
-              compressor: Option[String] = None, format: Int = 2,
-              dtype: String = "<f8"): Unit = {
-    val sess = elements.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(format, Seq(n), Seq(chunk), compressor).copy(dtype = dtype)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
-    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $chunk AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val vals = new Array[Double](intChunk(chunk)) // full chunk, edge padded
-        it.foreach { case (_, idx, v) => vals((idx % chunk).toInt) = v }
-        val (meta, sconf) = bcm.value
-        val (fs, base) = fsOf(dir, sconf.value) // executor-side, driver's conf
-        writeFile(fs, new Path(base, meta.keyOf(Seq(blk))),
-          encodeChunk(vals, comp, meta.dtype))
-        blk
-      }.collect().toSet
-    var blk = 0L
-    val nChunks = (n + chunk - 1) / chunk
-    while (blk < nChunks) {
-      if (!written.contains(blk))
-        writeFile(fs0, new Path(base0, m.keyOf(Seq(blk))),
-          encodeChunk(new Array[Double](intChunk(chunk)), comp, dtype))
-      blk += 1
-    }
-  }
-
-  /** 1-d v3 `sharding_indexed` WRITE — the object-store scale tool: at 100 TB
-    * a small chunk size (right for reads) makes millions of tiny objects;
-    * sharding packs `chunk / inner` inner chunks into ONE object per
-    * shard, cutting object count by that factor while keeping the inner
-    * chunk the random-access unit. Same distributed shape as [[write1d]]
-    * (one group per shard, executor-side IO, driver fills absent shards);
-    * readable back by [[read1d]]'s `sharding_indexed` branch and by any
-    * conforming v3 reader. */
-  def write1dSharded(elements: DataFrame, dir: String, n: Long, chunk: Long,
-                     inner: Long, compressor: Option[String] = None,
-                     dtype: String = "<f8"): Unit = {
-    require(chunk % inner == 0, s"inner chunk $inner must divide the shard $chunk")
-    val sess = elements.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(3, Seq(n), Seq(chunk), compressor)
-      .copy(shard = Some(Seq(inner)), dtype = dtype)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $chunk AS blk", "idx", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val vals = new Array[Double](intChunk(chunk))
-        it.foreach { case (_, idx, v) => vals((idx % chunk).toInt) = v }
-        val (meta, sconf) = bcm.value
-        val (fs, base) = fsOf(dir, sconf.value)
-        writeFile(fs, new Path(base, meta.keyOf(Seq(blk))), encodeShard(vals, meta))
-        blk
-      }.collect().toSet
-    var blk = 0L
-    val nChunks = (n + chunk - 1) / chunk
-    while (blk < nChunks) {
-      if (!written.contains(blk))
-        writeFile(fs0, new Path(base0, m.keyOf(Seq(blk))),
-          encodeShard(new Array[Double](intChunk(chunk)), m))
-      blk += 1
-    }
-  }
+    readFlat(s, dir, readMeta(dir, s.sparkContext.hadoopConfiguration), 1)
 
   /** Read a 1-d int64/int32 zarr array EXACTLY as a `(idx, v: BIGINT)`
     * element table — no pass through double, so int64 values above 2^53
     * survive bit-for-bit (the reference carries real dtypes,
     * `_expr.py:213-219`; the double-valued [[read1d]] is exact only to
-    * 2^53). Same scale shape: O(numChunks) driver manifest, one
-    * distributed `binaryFile` scan. */
-  def read1dLong(s: SparkSession, dir: String): DataFrame = {
+    * 2^53). */
+  def read1dLong(s: SparkSession, dir: String): DataFrame =
+    readFlat(s, dir, readMeta(dir, s.sparkContext.hadoopConfiguration), 1, exact = true)
+
+  /** Read a 2-d zarr array as the cell table `(i, j, v)`. */
+  def read2d(s: SparkSession, dir: String): DataFrame = {
+    val m = readMeta(dir, s.sparkContext.hadoopConfiguration)
+    graft.NdArray.fromFlat(readFlat(s, dir, m, 2), m.shape).df.toDF("i", "j", "v")
+  }
+
+  /** Read a zarr array of ANY rank as a [[graft.NdArray]]. */
+  def readNd(s: SparkSession, dir: String): graft.NdArray = {
+    val m = readMeta(dir, s.sparkContext.hadoopConfiguration)
+    graft.NdArray.fromFlat(readFlat(s, dir, m, m.shape.length), m.shape)
+  }
+
+  /** The one chunk reader behind every read entry point: the flat
+    * row-major table `(idx, v)` of a rank-`rank` store. The driver touches
+    * only the O(numChunks) manifest; chunk objects decode in one
+    * distributed `binaryFile` scan to raw chunk bytes, and each in-bounds
+    * cell (exact integer stride arithmetic, padded edge cells skipped)
+    * reads out as `v` — DOUBLE, or with `exact` the exact BIGINT of an
+    * `<i8`/`<i4` store. Missing chunks contribute `fill_value` rows
+    * generated from `spark.range` (skipped when fill is 0 — the element
+    * table's implicit-zero convention). */
+  private def readFlat(s: SparkSession, dir: String, m: Meta, rank: Int,
+                       exact: Boolean = false): DataFrame = {
     import s.implicits._
-    val hconf = s.sparkContext.hadoopConfiguration
-    val m = readMeta(dir, hconf)
-    require(m.shape.length == 1, s"read1dLong on ${m.shape.length}-d array")
-    require(m.dtype == "<i8" || m.dtype == "<i4",
-      s"read1dLong needs an integer dtype, got ${m.dtype}")
-    val n = m.shape.head
-    val c = m.chunks.head
-    val present = presentChunks(dir, m, 1, hconf).map(_.head).toSet
-    val bc = s.sparkContext.broadcast((m, n, c))
-    val decoded =
-      if (present.isEmpty)
-        s.range(0).selectExpr("id AS idx", "CAST(0 AS BIGINT) AS v")
-      else chunkScan(s, dir, m)
-        .where(not(col("path").endsWith(".zarray")) &&
-          not(col("path").endsWith("zarr.json")))
-        .select(col("path"), col("content"))
+    require(m.shape.length == rank, s"rank-$rank read of a ${m.shape.length}-d array")
+    require(!exact || m.dtype == "<i8" || m.dtype == "<i4",
+      s"exact int64 read needs an integer dtype, got ${m.dtype}")
+    val present = presentChunks(dir, m, rank, s.sparkContext.hadoopConfiguration)
+      .map(_.toVector).toSet
+    val chunkVol = intChunk(m.chunks.product)
+    val vType = if (exact) "BIGINT" else "DOUBLE"
+    def cells[V](at: String => (ByteBuffer, Int) => V, enc: Encoder[V]): DataFrame =
+      chunkScan(s, dir, m).select(col("path"), col("content"))
         .as[(String, Array[Byte])]
         .flatMap { case (path, content) =>
-          val (meta, nn, cc) = bc.value
-          chunkCoords(meta, 1, path).iterator.flatMap { coords =>
-            val start = coords.head * cc
-            val len = math.min(cc, nn - start).toInt
-            decodeChunkFullLong(content, meta) // plain chunk or shard
-              .iterator.take(len)
-              .zipWithIndex.map { case (v, i) => (start + i, v) }
+          chunkCoords(m, rank, path).iterator.flatMap { bcoords =>
+            val bb = le(chunkRaw(content, m))
+            val get = at(m.dtype)
+            chunkCells(m, bcoords).map { case (flat, p) => (flat, get(bb, p)) }
           }
-        }.toDF("idx", "v")
-    val missing = (0L until m.chunkGrid.head).filterNot(present.contains)
+        }(Encoders.tuple(Encoders.scalaLong, enc)).toDF("idx", "v")
+    // a store may legitimately have NO chunk objects (every chunk deferred
+    // to fill_value) — binaryFile refuses an empty glob, so skip the scan
+    val decoded =
+      if (present.isEmpty) s.range(0).selectExpr("id AS idx", s"CAST(0 AS $vType) AS v")
+      else if (exact) cells(longsAt, Encoders.scalaLong)
+      else cells(doublesAt, Encoders.scalaDouble)
+
+    val grid = m.chunkGrid
+    val gst = stridesOf(grid)
+    val cst = stridesOf(m.chunks)
+    val missing = (0L until grid.product).filterNot { i =>
+      present.contains(grid.indices.map(a => (i / gst(a)) % grid(a)).toVector)
+    }
     if (missing.isEmpty || m.fill == 0.0) decoded
     else {
-      val fillL = m.fill.toLong
-      val md = s.createDataset(missing).toDF("blk")
-        .join(s.range(c).toDF("off"))
-        .selectExpr(s"blk * $c + off AS idx", s"CAST($fillL AS BIGINT) AS v")
-        .where(col("idx") < n)
-      decoded.unionByName(md)
+      // per-axis coords from (missing block flat idx, in-chunk position),
+      // all exact integer arithmetic in one projection
+      val coordSql = grid.indices.map { a =>
+        s"((b DIV ${gst(a)}L) % ${grid(a)}L) * ${m.chunks(a)}L + (p DIV ${cst(a)}L) % ${m.chunks(a)}L"
+      }
+      val flatSql = coordSql.zip(stridesOf(m.shape))
+        .map { case (c, sa) => s"($c) * ${sa}L" }.mkString(" + ")
+      val boundPred = coordSql.zip(m.shape).map { case (c, n) => s"($c) < $n" }.mkString(" AND ")
+      decoded.unionByName(s.createDataset(missing).toDF("b")
+        .join(s.range(chunkVol).toDF("p"))
+        .where(boundPred)
+        .selectExpr(s"$flatSql AS idx", s"${fillSql(m.fill, exact)} AS v"))
     }
   }
 
-  /** Write a `(idx, v: BIGINT)` element table as a 1-d int64 zarr array —
-    * exact twin of [[write1d]] for values beyond double precision.
-    * `inner` (v3 only) writes a `sharding_indexed` store: `chunk / inner`
-    * int64 inner chunks packed per shard object, the exact-Long twin of
-    * [[write1dSharded]] (r12 verdict gap #4). */
+  /** `(flat row-major index, in-chunk C-order position)` of every in-bounds
+    * cell of the chunk at grid coordinates `bcoords`. */
+  private def chunkCells(m: Meta, bcoords: Seq[Long]): Iterator[(Long, Int)] = {
+    val r = m.shape.length
+    val cs = m.chunks.toArray
+    val shape = m.shape.toArray
+    val lst = stridesOf(m.chunks).toArray
+    val fst = stridesOf(m.shape).toArray
+    val b = bcoords.toArray
+    Iterator.range(0, intChunk(m.chunks.product)).flatMap { p =>
+      var flat = 0L; var a = 0
+      while (a < r && flat >= 0) {
+        val coord = b(a) * cs(a) + (p / lst(a)) % cs(a)
+        flat = if (coord >= shape(a)) -1L else flat + coord * fst(a) // padded edge cell
+        a += 1
+      }
+      if (flat >= 0) Iterator.single((flat, p)) else Iterator.empty
+    }
+  }
+
+  // ---- write -----------------------------------------------------------------
+
+  /** Write the element table as a 1-d zarr array of length `n`. `format`
+    * 2 writes a `.zarray` store, 3 a `zarr.json` store. */
+  def write1d(elements: DataFrame, dir: String, n: Long, chunk: Long,
+              compressor: Option[String] = None, format: Int = 2,
+              dtype: String = "<f8"): Unit =
+    writeNd(StoreIO.asNd(elements, Seq(n), "idx"), dir, Seq(chunk), compressor, format,
+      dtype = dtype)
+
+  /** 1-d v3 `sharding_indexed` write — the object-store scale tool: at
+    * 100 TB a small chunk size (right for reads) makes millions of tiny
+    * objects; sharding packs `chunk / inner` inner chunks into ONE object
+    * per shard, cutting object count by that factor while keeping the
+    * inner chunk the random-access unit. */
+  def write1dSharded(elements: DataFrame, dir: String, n: Long, chunk: Long,
+                     inner: Long, compressor: Option[String] = None,
+                     dtype: String = "<f8"): Unit =
+    writeNd(StoreIO.asNd(elements, Seq(n), "idx"), dir, Seq(chunk), compressor, 3,
+      Some(Seq(inner)), dtype)
+
+  /** Write a `(idx, v: BIGINT)` element table as a 1-d int64 zarr array,
+    * exact beyond double precision. `inner` (v3 only) writes a
+    * `sharding_indexed` store. */
   def write1dLong(elements: DataFrame, dir: String, n: Long, chunk: Long,
                   compressor: Option[String] = None, format: Int = 2,
-                  inner: Option[Long] = None): Unit = {
-    inner.foreach { i =>
-      require(format == 3, "sharded writes are a zarr v3 feature")
-      require(chunk % i == 0, s"inner chunk $i must divide the shard $chunk")
+                  inner: Option[Long] = None): Unit =
+    writeNd(StoreIO.asNd(elements.selectExpr("idx", "CAST(v AS BIGINT) AS v"), Seq(n), "idx"),
+      dir, Seq(chunk), compressor, format, inner.map(Seq(_)), "<i8")
+
+  /** Write a cell table `(i, j, v)` as a 2-d zarr array. */
+  def write2d(cells: DataFrame, dir: String, rows: Long, cols: Long,
+              chunkR: Long, chunkC: Long,
+              compressor: Option[String] = None, format: Int = 2): Unit =
+    writeNd(StoreIO.asNd(cells, Seq(rows, cols), "i", "j"), dir, Seq(chunkR, chunkC),
+      compressor, format)
+
+  /** Write a [[graft.NdArray]] of any rank as a zarr store with the given
+    * chunk shape — the one writer behind every write entry point: one
+    * task per chunk (the rows keyed by flat block index), full C-order
+    * chunks with edge padding and zero-filled gaps, absent blocks written
+    * by the driver so the store is complete. `dtype` `<i8` takes the
+    * exact BIGINT value path (the array's `v` must be BIGINT); the others
+    * encode DOUBLE values. `shard` (v3 only) wraps the codec chain in
+    * `sharding_indexed`: each written object packs `chunks/shard` inner
+    * chunks behind a crc32c index — the 100 TB object-count lever. */
+  def writeNd(nd: graft.NdArray, dir: String, chunks: Seq[Long],
+              compressor: Option[String] = None, format: Int = 2,
+              shard: Option[Seq[Long]] = None, dtype: String = "<f8"): Unit = {
+    val shape = nd.shape
+    require(chunks.length == shape.length && chunks.forall(_ > 0),
+      s"bad chunk shape $chunks for $shape")
+    shard.foreach { inner =>
+      require(format == 3, "sharding_indexed is a zarr v3 codec")
+      require(inner.length == chunks.length &&
+        inner.zip(chunks).forall { case (i, c) => i > 0 && c % i == 0 },
+        s"inner chunk shape $inner must divide the shard shape $chunks")
     }
-    val sess = elements.sparkSession
+    val sess = nd.df.sparkSession
     val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
     fs0.mkdirs(base0)
-    val m = metaFor(format, Seq(n), Seq(chunk), compressor)
-      .copy(dtype = "<i8", shard = inner.map(Seq(_)))
+    val m = metaFor(format, shape, chunks, compressor).copy(dtype = dtype, shard = shard)
     writeMeta(fs0, base0, m)
     import sess.implicits._
-    val comp = compressor
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = elements
-      .where(col("idx") >= 0 && col("idx") < n)
-      .selectExpr(s"idx DIV $chunk AS blk", "idx", "CAST(v AS BIGINT) AS v")
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (blk, it) =>
-        val vals = new Array[Long](intChunk(chunk))
-        it.foreach { case (_, idx, v) => vals((idx % chunk).toInt) = v }
-        val (meta, sconf) = bcm.value
-        val enc = if (meta.shard.isDefined) encodeShardLong(vals, meta)
-                  else encodeChunkLong(vals, comp)
-        val (fs, base) = fsOf(dir, sconf.value)
-        writeFile(fs, new Path(base, meta.keyOf(Seq(blk))), enc)
-        blk
-      }.collect().toSet
-    var blk = 0L
-    val nChunks = (n + chunk - 1) / chunk
-    while (blk < nChunks) {
-      if (!written.contains(blk)) {
-        val empty = new Array[Long](intChunk(chunk))
-        writeFile(fs0, new Path(base0, m.keyOf(Seq(blk))),
-          if (m.shard.isDefined) encodeShardLong(empty, m)
-          else encodeChunkLong(empty, comp))
-      }
-      blk += 1
+    val rank = shape.length
+    val grid = m.chunkGrid
+    val gst = stridesOf(grid)
+    val cst = stridesOf(chunks)
+    val chunkVol = intChunk(chunks.product)
+    // flat block index + in-chunk C-order position, exact integer projections
+    val bSql = (0 until rank)
+      .map(a => s"(c$a DIV ${chunks(a)}L) * ${gst(a)}L").mkString(" + ")
+    val pSql = (0 until rank)
+      .map(a => s"(c$a % ${chunks(a)}L) * ${cst(a)}L").mkString(" + ")
+    val inBounds = (0 until rank).map(a => s"c$a >= 0 AND c$a < ${shape(a)}")
+      .mkString(" AND ")
+    val cells = nd.df.where(inBounds).selectExpr(s"($bSql) AS b", s"($pSql) AS p", "v")
+    val keyOf = (b: Long) => m.keyOf(grid.indices.map(a => (b / gst(a)) % grid(a)))
+    // a function value, not a local def: passing an eta-expanded local
+    // def here made the block-write task unserializable
+    val put = (conf: Configuration, b: Long, vals: Array[_]) => {
+      val (fs, base) = fsOf(dir, conf)
+      writeFile(fs, new Path(base, keyOf(b)), encodeObject(toRaw(vals, m.dtype), m))
+    }
+    val written =
+      if (dtype == "<i8") StoreIO.writeBlocks(cells.as[(Long, Long, Long)], 0L)(_ => chunkVol)(put)
+      else StoreIO.writeBlocks(cells.as[(Long, Long, Double)], 0.0)(_ => chunkVol)(put)
+    val empty = encodeObject(new Array[Byte](chunkVol * itemSize(dtype)), m)
+    var b = 0L
+    while (b < grid.product) {
+      if (!written(b)) writeFile(fs0, new Path(base0, keyOf(b)), empty)
+      b += 1
     }
   }
 
@@ -1153,251 +1094,4 @@ object Zarr {
     else
       writeFile(fs, new Path(base, ".zarray"),
         metaJson(m).getBytes(StandardCharsets.UTF_8))
-
-  // ---- 2-d -----------------------------------------------------------------
-
-  /** Read a 2-d zarr array as the cell table `(i, j, v)`. */
-  def read2d(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val hconf = s.sparkContext.hadoopConfiguration
-    val m = readMeta(dir, hconf)
-    require(m.shape.length == 2, s"read2d on ${m.shape.length}-d array")
-    val Seq(rows, cols) = m.shape
-    val Seq(cr, cc) = m.chunks
-    val bc = s.sparkContext.broadcast(m)
-    val present = presentChunks(dir, m, 2, hconf)
-      .map { case Seq(a, b) => (a, b) }.toSet
-
-    val decoded =
-      if (present.isEmpty)
-        s.range(0).selectExpr("id AS i", "id AS j", "CAST(0 AS DOUBLE) AS v")
-      else chunkScan(s, dir, m)
-        .where(not(col("path").endsWith(".zarray")) &&
-          not(col("path").endsWith("zarr.json")))
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val meta = bc.value
-          chunkCoords(meta, 2, path).iterator.flatMap { case Seq(bi, bj) =>
-            val r0 = bi * cr; val c0 = bj * cc
-            val nr = math.min(cr, rows - r0).toInt
-            val nc = math.min(cc, cols - c0).toInt
-            val vals = decodeChunkFull(content, meta)
-            for {
-              ri <- (0 until nr).iterator
-              ci <- (0 until nc).iterator
-            } yield (r0 + ri, c0 + ci, vals(ri * cc.toInt + ci))
-          }
-        }.toDF("i", "j", "v")
-
-    if (m.fill == 0.0) decoded
-    else {
-      val Seq(gr, gc) = m.chunkGrid
-      val missing = for {
-        bi <- 0L until gr; bj <- 0L until gc if !present.contains((bi, bj))
-      } yield (bi, bj)
-      if (missing.isEmpty) decoded
-      else {
-        val md = s.createDataset(missing).toDF("bi", "bj")
-          .join(s.range(cr).toDF("ri")).join(s.range(cc).toDF("ci"))
-          .selectExpr(s"bi * $cr + ri AS i", s"bj * $cc + ci AS j",
-            s"${fillSql(m.fill)} AS v")
-          .where(col("i") < rows && col("j") < cols)
-        decoded.unionByName(md)
-      }
-    }
-  }
-
-  // ---- N-d (any rank) ------------------------------------------------------
-
-  /** Read a zarr array of ANY rank as a [[graft.NdArray]] (the reference
-    * is N-d throughout; 1-d/2-d above stay the tuned element/cell-table
-    * fast paths). Same scale shape: O(numChunks) driver manifest, one
-    * distributed `binaryFile` scan, chunk payloads decoded to flat
-    * row-major positions (exact integer stride arithmetic) and rebuilt as
-    * the coordinate table via `NdArray.fromFlat`. Missing chunks
-    * contribute `fill_value` rows generated from `spark.range` (skipped
-    * when fill is 0 — implicit-zero convention). */
-  def readNd(s: SparkSession, dir: String): graft.NdArray = {
-    import s.implicits._
-    val hconf = s.sparkContext.hadoopConfiguration
-    val m = readMeta(dir, hconf)
-    val rank = m.shape.length
-    val present = presentChunks(dir, m, rank, hconf).map(_.toVector).toSet
-    val bc = s.sparkContext.broadcast(m)
-    // row-major strides over the FULL shape and the chunk shape
-    def stridesOf(sh: Seq[Long]): Seq[Long] = sh.scanRight(1L)(_ * _).tail
-    val st = stridesOf(m.shape)
-    val cst = stridesOf(m.chunks)
-    val chunkVol = m.chunks.product
-    // same driver-side guard writeNd applies: a store whose metadata
-    // declares an oversized chunk would otherwise silently truncate the
-    // Long→Int product in the decode loop (wrong size / negative alloc)
-    require(chunkVol <= Int.MaxValue,
-      s"zarr chunk too large to decode: ${m.chunks.mkString("x")} = $chunkVol values")
-
-    val decoded: DataFrame =
-      if (present.isEmpty)
-        s.range(0).selectExpr("id AS idx", "CAST(0 AS DOUBLE) AS v")
-      else chunkScan(s, dir, m)
-        .select(col("path"), col("content"))
-        .as[(String, Array[Byte])]
-        .flatMap { case (path, content) =>
-          val meta = bc.value
-          val r = meta.shape.length
-          val cs = meta.chunks
-          val lst = cs.scanRight(1L)(_ * _).tail
-          val fst = meta.shape.scanRight(1L)(_ * _).tail
-          chunkCoords(meta, r, path).iterator.flatMap { bcoords =>
-            val nVals = cs.product.toInt
-            val vals = decodeChunkFull(content, meta)
-            (0 until nVals).iterator.flatMap { p =>
-              var flat = 0L; var ok = true; var a = 0
-              while (a < r && ok) {
-                val coord = bcoords(a) * cs(a) + (p / lst(a)) % cs(a)
-                if (coord >= meta.shape(a)) ok = false // padded edge cell
-                else flat += coord * fst(a)
-                a += 1
-              }
-              if (ok) Iterator.single((flat, vals(p))) else Iterator.empty
-            }
-          }
-        }.toDF("idx", "v")
-
-    val grid = m.chunkGrid
-    val gst = stridesOf(grid)
-    val missing = (for {
-      i <- 0L until grid.product
-      bcoords = grid.indices.map(a => (i / gst(a)) % grid(a))
-      if !present.contains(bcoords.toVector)
-    } yield i).toSeq
-    val withFill =
-      if (missing.isEmpty || m.fill == 0.0) decoded
-      else {
-        // per-axis coords from (missing block flat idx, in-chunk position),
-        // all exact integer arithmetic in one projection
-        val coordSql = grid.indices.map { a =>
-          s"((b DIV ${gst(a)}L) % ${grid(a)}L) * ${m.chunks(a)}L + (p DIV ${cst(a)}L) % ${m.chunks(a)}L"
-        }
-        val flatSql = coordSql.zip(st).map { case (c, sa) => s"($c) * ${sa}L" }.mkString(" + ")
-        val boundPred = coordSql.zip(m.shape).map { case (c, n) => s"($c) < $n" }.mkString(" AND ")
-        val md = s.createDataset(missing).toDF("b")
-          .join(s.range(chunkVol).toDF("p"))
-          .where(boundPred)
-          .selectExpr(s"$flatSql AS idx", s"${fillSql(m.fill)} AS v")
-        decoded.unionByName(md)
-      }
-    graft.NdArray.fromFlat(withFill, m.shape)
-  }
-
-  /** Write a [[graft.NdArray]] of any rank as a zarr store with the given
-    * chunk shape — rank-generic twin of write1d/write2d: one task per
-    * chunk (groupBy the flat block index), full C-order chunks with edge
-    * padding, absent blocks filled by the driver so the store is
-    * complete. `shard` (v3 only) wraps the codec chain in
-    * `sharding_indexed`: each written object packs `chunks/shard` inner
-    * chunks behind a crc32c index — the 100 TB object-count lever, same
-    * semantics as [[write1dSharded]] at any rank. */
-  def writeNd(nd: graft.NdArray, dir: String, chunks: Seq[Long],
-              compressor: Option[String] = None, format: Int = 2,
-              shard: Option[Seq[Long]] = None): Unit = {
-    val shape = nd.shape
-    require(chunks.length == shape.length && chunks.forall(_ > 0),
-      s"bad chunk shape $chunks for $shape")
-    shard.foreach { inner =>
-      require(format == 3, "sharding_indexed is a zarr v3 codec")
-      require(inner.length == chunks.length &&
-        inner.zip(chunks).forall { case (i, c) => i > 0 && c % i == 0 },
-        s"inner chunk shape $inner must divide the shard shape $chunks")
-    }
-    val sess = nd.df.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(format, shape, chunks, compressor).copy(shard = shard)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
-    val rank = shape.length
-    val grid = m.chunkGrid
-    def stridesOf(sh: Seq[Long]): Seq[Long] = sh.scanRight(1L)(_ * _).tail
-    val gst = stridesOf(grid)
-    val cst = stridesOf(chunks)
-    val chunkVol = chunks.product
-    require(chunkVol <= Int.MaxValue, s"chunk too large: $chunkVol")
-    // flat block index + in-chunk C-order position, exact integer projections
-    val bSql = (0 until rank)
-      .map(a => s"(c$a DIV ${chunks(a)}L) * ${gst(a)}L").mkString(" + ")
-    val pSql = (0 until rank)
-      .map(a => s"(c$a % ${chunks(a)}L) * ${cst(a)}L").mkString(" + ")
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val inBounds = (0 until rank).map(a => s"c$a >= 0 AND c$a < ${shape(a)}")
-      .mkString(" AND ")
-    val written = nd.df
-      .where(inBounds)
-      .selectExpr(s"($bSql) AS b", s"($pSql) AS p", "v")
-      .as[(Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (b, it) =>
-        val vals = new Array[Double](chunkVol.toInt) // full chunk, edge padded
-        it.foreach { case (_, p, v) => vals(p.toInt) = v }
-        val (meta, sconf) = bcm.value
-        val g = meta.chunkGrid
-        val gs = g.scanRight(1L)(_ * _).tail
-        val bcoords = g.indices.map(a => (b / gs(a)) % g(a))
-        val (fs, base) = fsOf(dir, sconf.value) // executor-side, driver's conf
-        val enc = if (meta.shard.isDefined) encodeShard(vals, meta)
-                  else encodeChunk(vals, comp)
-        writeFile(fs, new Path(base, meta.keyOf(bcoords)), enc)
-        b
-      }.collect().toSet
-    val fillEnc =
-      if (m.shard.isDefined) encodeShard(new Array[Double](chunkVol.toInt), m)
-      else encodeChunk(new Array[Double](chunkVol.toInt), comp)
-    var b = 0L
-    while (b < grid.product) {
-      if (!written.contains(b)) {
-        val bcoords = grid.indices.map(a => (b / gst(a)) % grid(a))
-        writeFile(fs0, new Path(base0, m.keyOf(bcoords)), fillEnc)
-      }
-      b += 1
-    }
-  }
-
-  /** Write a cell table `(i, j, v)` as a 2-d zarr array. */
-  def write2d(cells: DataFrame, dir: String, rows: Long, cols: Long,
-              chunkR: Long, chunkC: Long,
-              compressor: Option[String] = None, format: Int = 2): Unit = {
-    val sess = cells.sparkSession
-    val (fs0, base0) = fsOf(dir, sess.sparkContext.hadoopConfiguration)
-    fs0.mkdirs(base0)
-    val m = metaFor(format, Seq(rows, cols), Seq(chunkR, chunkC), compressor)
-    writeMeta(fs0, base0, m)
-    import sess.implicits._
-    val comp = compressor
-    // ship the DRIVER's hadoop conf (carries spark.hadoop.* credentials)
-    val bcm = sess.sparkContext.broadcast(
-      (m, new SerializableHadoopConf(sess.sparkContext.hadoopConfiguration)))
-    val written = cells
-      .where(col("i") >= 0 && col("i") < rows && col("j") >= 0 && col("j") < cols)
-      .selectExpr(s"i DIV $chunkR AS bi", s"j DIV $chunkC AS bj", "i", "j", "v")
-      .as[(Long, Long, Long, Long, Double)]
-      .groupByKey(r => (r._1, r._2))
-      .mapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Long, Long, Double)]) =>
-        val (bi, bj) = key
-        val vals = new Array[Double]((chunkR * chunkC).toInt)
-        it.foreach { case (_, _, i, j, v) =>
-          vals(((i % chunkR) * chunkC + (j % chunkC)).toInt) = v
-        }
-        val (meta, sconf) = bcm.value
-        val (fs, base) = fsOf(dir, sconf.value) // executor-side, driver's conf
-        writeFile(fs, new Path(base, meta.keyOf(Seq(bi, bj))), encodeChunk(vals, comp))
-        (bi, bj)
-      }.collect().toSet
-    val gr = (rows + chunkR - 1) / chunkR
-    val gc = (cols + chunkC - 1) / chunkC
-    for (bi <- 0L until gr; bj <- 0L until gc if !written.contains((bi, bj)))
-      writeFile(fs0, new Path(base0, m.keyOf(Seq(bi, bj))),
-        encodeChunk(new Array[Double]((chunkR * chunkC).toInt), comp))
-  }
 }

@@ -16,6 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *     z01-z07, z09, z12 (2 each), z08, z10, z11 (4 each), q88 (2),
   *     h01 (2), h03, h04, h05, h06 (1 each), np01, np02 (2 each),
   *     td01 (2), td02 (4).
+  *   The last test pins these store counts, measured again at sf0.01.
   */
 class ConstructionJobsSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -42,5 +43,34 @@ class ConstructionJobsSpec extends AnyFunSuite {
     }
     assert(jobs.forall(_._2 == 0),
       jobs.filter(_._2 > 0).map { case (n, j) => s"$n: $j job(s)" }.mkString(", "))
+  }
+
+  /** Jobs each store round trip launches while it is built at sf0.01 —
+    * a ceiling: a change to the store read and write paths may lower a
+    * count, never raise it. */
+  private val storeJobs = Map(
+    "z01_zarr_roundtrip" -> 2, "z02_zarr_2d" -> 2, "z03_zarr_v3" -> 2,
+    "z04_zarr_nd" -> 2, "z05_zarr_zstd" -> 2, "z06_zarr_blosc" -> 2,
+    "z07_zarr_sharded" -> 2, "z08_zarr_i4_u1_write" -> 4, "z09_zarr_sharded_long" -> 2,
+    "z10_zarr_consolidated" -> 4, "z11_zarr_consolidated_v3" -> 4,
+    "z12_zarr_bitshuffle" -> 2, "q88_zarr_int64_exact" -> 2,
+    "h01_hdf5_roundtrip" -> 2, "h02_hdf5_datasets" -> 0, "h03_hdf5_chunked" -> 1,
+    "h04_hdf5_v4_latest" -> 1, "h05_hdf5_dense_group" -> 1, "h06_hdf5_nested_groups" -> 1,
+    "np01_npy_roundtrip" -> 2, "np02_npy_nd" -> 2,
+    "td01_tiledb_roundtrip" -> 2, "td02_tiledb_shadow" -> 4)
+
+  test("the store round trips launch no more construction jobs than pinned") {
+    val s = spark
+    val sc = s.sparkContext
+    val jobs = storeJobs.keys.toSeq.sorted.map { name =>
+      val group = s"construct-$name"
+      sc.setJobGroup(group, "construction")
+      try SparkEntry.queries(name)(s, sf) finally sc.clearJobGroup()
+      name -> sc.statusTracker.getJobIdsForGroup(group).length
+    }
+    val over = jobs.filter { case (n, j) => j > storeJobs(n) }
+    assert(over.isEmpty, over.map { case (n, j) =>
+      s"$n: $j job(s), pinned ${storeJobs(n)}" }.mkString(", ") +
+      s" (all: ${jobs.map { case (n, j) => s"$n=$j" }.mkString(" ")})")
   }
 }

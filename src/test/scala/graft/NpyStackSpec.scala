@@ -78,4 +78,46 @@ class NpyStackSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back(3) == ((3L, 7.5)) && back(97) == ((97L, -1.25)) && back(240) == ((240L, 9.0)))
     assert(back(4) == ((4L, 0.0)) && back(150) == ((150L, 0.0))) // gap + empty block
   }
+
+  /** The cause chain of a failed read holds an IllegalArgumentException
+    * naming `file`. */
+  private def rejects(file: String)(read: => Any): Unit = {
+    val err = intercept[Exception](read)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains(file)), err.toString)
+  }
+
+  private def stackOf(n: Int): String = {
+    val dir = Files.createTempDirectory("npybad").toString
+    val sp = spark
+    import sp.implicits._
+    NpyStack.write((0 until n).map(i => (i.toLong, i + 0.5)).toDF("idx", "v"), dir,
+      blockSize = 100, n = n)
+    dir
+  }
+
+  test("a truncated block is rejected, not read as missing cells") {
+    val dir = stackOf(250)
+    val f = java.nio.file.Paths.get(dir, "1.npy")
+    val bytes = Files.readAllBytes(f)
+    Files.write(f, bytes.take(bytes.length - 16)) // two values short
+    rejects("1.npy")(NpyStack.read(spark, dir).collect())
+  }
+
+  test("an over-long block is rejected, not spilled into the next block's range") {
+    val dir = stackOf(250)
+    val f = java.nio.file.Paths.get(dir, "0.npy")
+    Files.write(f, Files.readAllBytes(f) ++ NpyStack.npyBytes(Array(7.0, 8.0)).takeRight(16))
+    rejects("0.npy")(NpyStack.read(spark, dir).collect())
+  }
+
+  test("a header length past the end of the bytes throws IllegalArgumentException") {
+    val bytes = NpyStack.npyBytes(Array(1.0, 2.0))
+    val overrun = bytes.clone()
+    overrun(8) = 0xff.toByte; overrun(9) = 0x7f.toByte // 32767-byte header
+    val e = intercept[IllegalArgumentException](NpyStack.parseNpy(overrun))
+    assert(e.getMessage.contains("header length"), e.getMessage)
+    intercept[IllegalArgumentException](NpyStack.parseNpy(bytes.take(9)))
+  }
 }

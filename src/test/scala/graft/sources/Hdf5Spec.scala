@@ -21,6 +21,13 @@ class Hdf5Spec extends AnyFunSuite {
     assert(Hdf5.parseData(bytes, ds(1)).toSeq == xs.toSeq)
   }
 
+  test("a truncated contiguous dataset is rejected, not read as trailing zeros") {
+    val bytes = Hdf5.h5Bytes(Seq(("data", Array.tabulate(64)(i => i + 1.0), Seq(64L))))
+    val cut = bytes.take(bytes.length - 80)
+    val e = intercept[IllegalArgumentException](Hdf5.parseData(cut, Hdf5.datasets(cut).head))
+    assert(e.getMessage.contains("runs past"), e.getMessage)
+  }
+
   test("format invariants: signature, superblock v0, EOF address") {
     val bytes = Hdf5.h5Bytes(Seq(("d", Array(1.0, 2.0), Seq(2L))))
     assert((bytes(0) & 0xff) == 0x89 && new String(bytes.slice(1, 4)) == "HDF")

@@ -170,4 +170,37 @@ class TileDbSpec extends AnyFunSuite {
       assert(v == want, s"($i,$j,$k): got $v want $want")
     }
   }
+
+  /** A 1-d array of 300 cells in three 100-cell fragments, and the
+    * `a0.tdb` payload path of the fragment starting at cell `start`. */
+  private def threeFragments(start: Long): (String, java.nio.file.Path) = {
+    val s = spark
+    val uri = freshDir()
+    TileDb.createArray(s, uri, TileDb.Schema(Seq(300L), Seq(100L)))
+    TileDb.write(s.range(300).selectExpr("id AS idx", "CAST(id AS DOUBLE) AS v"),
+      uri, ts = 1L, blockCells = 100L)
+    val frag = StoreIO.listNames(s"$uri/__fragments")
+      .find(_.matches(f"__1_1_.{16}$start%016x_21")).get
+    (uri, java.nio.file.Paths.get(uri, "__fragments", frag, "a0.tdb"))
+  }
+
+  private def rejects(file: String)(read: => Any): Unit = {
+    val err = intercept[Exception](read)
+    val chain = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null).toSeq
+    assert(chain.exists(c => c.isInstanceOf[IllegalArgumentException] &&
+      c.getMessage.contains(file)), err.toString)
+  }
+
+  test("a truncated fragment payload is rejected, not read as missing cells") {
+    val (uri, a0) = threeFragments(100L)
+    val bytes = java.nio.file.Files.readAllBytes(a0)
+    java.nio.file.Files.write(a0, bytes.take(bytes.length - 8))
+    rejects(a0.getParent.getFileName.toString)(TileDb.read(spark, uri).collect())
+  }
+
+  test("an over-long fragment payload is rejected, not spilled past its domain") {
+    val (uri, a0) = threeFragments(200L)
+    java.nio.file.Files.write(a0, java.nio.file.Files.readAllBytes(a0) ++ new Array[Byte](16))
+    rejects(a0.getParent.getFileName.toString)(TileDb.readNd(spark, uri).elements.collect())
+  }
 }
