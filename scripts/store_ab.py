@@ -1,16 +1,17 @@
 #!/usr/bin/env python3
-"""A/B the 23 store round-trip queries between two source trees.
+"""A/B a list of queries between two source trees.
 
-Runs `graft.Bench` with SPARK_GRAFT_ONLY set to the store queries (zarr
-z01-z12, HDF5 h01-h06, npy np01-np02, TileDB td01-td02 and q88), once per
-tree per pair, alternating which tree goes first. Every Bench run starts
+Runs `graft.Bench` with SPARK_GRAFT_ONLY set to the queries, once per tree
+per pair, alternating which tree goes first. By default the queries are
+the 23 store round trips (zarr z01-z12, HDF5 h01-h06, npy np01-np02,
+TileDB td01-td02 and q88); `--queries` names others. Every Bench run starts
 in a fresh scratch working directory with its own `java.io.tmpdir`, so no
 `bench_detail.json` lands in either tree (PerfBudgetSpec reads the one at
 the repository root). Prints each query's steady median and quartiles per
 tree over the runs, and the change/parent ratio of the medians.
 
     python3 scripts/store_ab.py PARENT_TREE CHANGE_TREE --sf SF_DIR
-        [--pairs 5] [--cpus 4] [--work DIR]
+        [--queries q1,q2,...] [--pairs 5] [--cpus 4] [--work DIR]
 
 Each tree is built once with `sbt compile` and its runtime classpath
 exported. A query that errors in any run is reported, not timed.
@@ -50,9 +51,9 @@ def classpath(tree):
     return lines[-1]
 
 
-def bench(cp, sf, cpus, work):
+def bench(cp, queries, sf, cpus, work):
     cwd = tempfile.mkdtemp(prefix="bench_", dir=work)
-    env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(STORE_QUERIES),
+    env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(queries),
                SPARK_GRAFT_SF_DIR=sf, SPARK_GRAFT_CPUS=str(cpus))
     cmd = (["java"] + [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in OPENS]
            + ["-Xmx4g", "-Dspark.ui.enabled=false", f"-Djava.io.tmpdir={cwd}",
@@ -77,10 +78,13 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--pairs", type=int, default=5)
     ap.add_argument("--sf", required=True, help="generated tables, e.g. sf0.01")
+    ap.add_argument("--queries", default=",".join(STORE_QUERIES),
+                    help="comma-separated query names (default: the store queries)")
     ap.add_argument("--cpus", type=int, default=4)
     ap.add_argument("--work", default=None,
                     help="scratch dir for the Bench working dirs")
     a = ap.parse_args()
+    queries = [q for q in a.queries.split(",") if q]
     work = a.work or tempfile.mkdtemp(prefix="store_ab_")
     cps = {"parent": classpath(a.parent), "change": classpath(a.change)}
     steady = {"parent": {}, "change": {}}
@@ -88,7 +92,7 @@ def main():
     for i in range(a.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         for side in order:
-            qs, errs = bench(cps[side], a.sf, a.cpus, work)
+            qs, errs = bench(cps[side], queries, a.sf, a.cpus, work)
             errors[side].update(errs)
             for q, s in qs.items():
                 steady[side].setdefault(q, []).append(s)
@@ -96,7 +100,7 @@ def main():
                   f"{sum(qs.values()):.3f} s, errors {errs}", file=sys.stderr)
     print("| query | parent median [q1, q3] s | change median [q1, q3] s | change/parent |")
     print("|---|---|---|---|")
-    for q in STORE_QUERIES:
+    for q in queries:
         if q in errors["parent"] or q in errors["change"]:
             print(f"| {q} | error | error | - |")
             continue

@@ -2,31 +2,35 @@ package graft.linalg
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.DMatrix
 
-/** Blocked Cholesky factorization A = L·Lᵀ (reference
-  * `dask_array/linalg/_cholesky.py:27` — recursive blocked algorithm with
-  * driver-coordinated stages; here the right-looking panel variant):
+/** Blocked Cholesky and LU factorizations, triangular solves, `solve` and
+  * `inv` (reference `dask_array/linalg/_cholesky.py:27`, `_lu.py:27`,
+  * `_solve.py:20,163,225`), built from one set of pieces:
   *
-  * per block-column k — (1) ONLY the t×t diagonal tile is collected and
-  * factored in-core (O(t²) driver bytes per step — the irreducible
-  * sequential dependency), (2) the panel below it solves against the
-  * BROADCAST Lkkᵀ executor-side and stays distributed, (3) the trailing
-  * update A[i,j] -= L[i,k]·L[j,k]ᵀ joins the panel onto the trailing
-  * tiles via two broadcast joins — the Spark realization of ScaLAPACK's
-  * panel broadcast (the panel rides the torrent-broadcast path in compact
-  * binary form; user code never collects a block column and never
-  * re-emits data through `createDataFrame`). The O(n³) trailing FLOPs
-  * and all O(n²) panel solves stay on executors; L accumulates as the
-  * persisted panel tiles themselves, assembled lazily into elements.
+  *  - [[tileGrid]]: a DMatrix as a zero-filled t×t tile set (full grid, or
+  *    the lower block triangle for Cholesky), padded diagonal cells 1.0;
+  *  - the right-looking panel loops ([[cholPanelsOf]], [[luPanelsOf]],
+  *    [[solveTriCore]]): per block step (1) ONLY the t×t diagonal tile is
+  *    factored in-core (O(t²) driver bytes — the irreducible sequential
+  *    dependency), (2) the panel solves against the BROADCAST diagonal
+  *    factor executor-side and stays distributed, (3) the trailing update
+  *    broadcast-joins the panel onto the trailing tiles — the Spark
+  *    realization of ScaLAPACK's panel broadcast. The O(n³) trailing FLOPs
+  *    and all panel solves stay on executors;
+  *  - [[cellsOf]] and [[tilesOf]]: the panels a loop returns, as a trimmed
+  *    cell table or as the tile set the next solve consumes;
+  *  - [[substitute]]: the forward-then-backward solve that `solveSPD`,
+  *    `solveLU` and `inv` share.
+  *
   * Loop predicates are typed closures (step index captured, not inlined
-  * as a literal) so whole-stage codegen compiles ONCE per loop shape,
-  * not once per step; generations are localCheckpoint'ed to cut lineage
-  * (the panel re-enters the trailing join — nesting would grow plans
-  * 3^nb otherwise).
+  * as a literal) so whole-stage codegen compiles ONCE per loop shape, not
+  * once per step; generations are localCheckpoint'ed to cut lineage (the
+  * panel re-enters the trailing join — nesting would grow plans 3^nb
+  * otherwise).
   */
 object Cholesky {
 
@@ -37,11 +41,8 @@ object Cholesky {
     * in latency. This is the ScaLAPACK dispatch: local LAPACK below the
     * distribution crossover, blocked panels above it. The distributed
     * factor surfaces (cholesky/lu/inv and the matrix-RHS solves) are NOT
-    * size-dispatched — their outputs are O(n²) and stay on executors.
-    * Overridable (re-read per call so tests can pin either path) via
-    * -Dgraft.linalg.localSolveMax. */
-  private def LocalSolveMax: Long =
-    sys.props.getOrElse("graft.linalg.localSolveMax", "1024").toLong
+    * size-dispatched — their outputs are O(n²) and stay on executors. */
+  private val LocalSolveMax = 1024L
 
   /** Collect a small matrix to a row-major dense driver array (guarded
     * by [[LocalSolveMax]] call sites — O(n²) ≤ 8 MB by construction). */
@@ -66,8 +67,9 @@ object Cholesky {
     y
   }
 
-  /** Backward substitution U·x = y (driver, vector RHS). */
-  private def backwardVec(u: Array[Double], y: Array[Double], n: Int): Array[Double] = {
+  /** Backward substitution U·x = y (driver, vector RHS; also TSQR's
+    * R·x = Qᵀb). */
+  private[linalg] def backwardVec(u: Array[Double], y: Array[Double], n: Int): Array[Double] = {
     val x = new Array[Double](n)
     var i = n - 1
     while (i >= 0) {
@@ -78,16 +80,16 @@ object Cholesky {
     x
   }
 
-  /** Backward substitution Lᵀ·x = y with L stored lower (driver). */
-  private def backwardVecT(l: Array[Double], y: Array[Double], n: Int): Array[Double] = {
-    val x = new Array[Double](n)
-    var i = n - 1
-    while (i >= 0) {
-      var s = y(i); var k = i + 1
-      while (k < n) { s -= l(k * n + i) * x(k); k += 1 }
-      x(i) = s / l(i * n + i); i -= 1
+  /** Transpose of a row-major n×n array. */
+  private def transpose(a: Array[Double], n: Int): Array[Double] = {
+    val out = new Array[Double](n * n)
+    var i = 0
+    while (i < n) {
+      var j = 0
+      while (j < n) { out(j * n + i) = a(i * n + j); j += 1 }
+      i += 1
     }
-    x
+    out
   }
 
   /** In-core lower Cholesky of row-major SPD `a` (t×t). */
@@ -149,7 +151,6 @@ object Cholesky {
     }
   }
 
-
   /** Run `body` with AQE off: the panel loops execute dozens of tiny
     * per-step plans where adaptive re-planning is pure overhead (every
     * join is already a broadcast join; there is nothing to adapt). */
@@ -160,86 +161,116 @@ object Cholesky {
     try body finally s.conf.set(key, was)
   }
 
-  /** Distributed blocked Cholesky. `a` must be symmetric positive definite;
-    * only the lower triangle is read. Returns lower-triangular L. */
-  def cholesky(s: SparkSession, a: DMatrix, tile: Int = 512): DMatrix = withoutAQE(s) {
+  private type TileDS = Dataset[(Long, Long, Array[Double])]
+  private type PanelDS = Dataset[(Long, Array[Double])]
+  /** A loop's panels, each with its block index k: block COLUMN k keyed
+    * by row block, or block ROW k keyed by column block. */
+  private type Panels = Seq[(Long, PanelDS)]
+
+  /** Zero-filled t×t tile grid of `m` (row-major tiles keyed (bi, bj)),
+    * with `diagPad` putting 1.0 on diagonal cells past the logical edge so
+    * partial edge tiles stay positive definite / solvable. `lower` keeps
+    * only the block triangle bi ≥ bj and reads only the cells i ≥ j.
+    * The grid covers EVERY block of that shape, not just blocks with
+    * nonzero cells, because trailing updates create fill-in: an all-zero
+    * input block still receives A[i,j] -= L[i,k]·L[j,k]ᵀ and dropping it
+    * would silently corrupt the factorization (e.g. an arrowhead matrix
+    * whose interior blocks are zero). Lazy — callers checkpoint it. */
+  private def tileGrid(s: SparkSession, m: DMatrix, t: Int, diagPad: Boolean,
+                       lower: Boolean = false): TileDS = {
     import s.implicits._
-    val n = a.rows
-    val t = tile
     val tL = t.toLong
-    val lPanels = cholPanelsOf(s, a, tile)
-
-    // assemble L lazily from the persisted panels (lower triangle, trimmed
-    // to the logical edge) — no data returns to the driver
-    val lDF = lPanels.zipWithIndex.map { case (p, kIdx) =>
-      val j0 = kIdx.toLong * tL
-      val (tc, nc, tLc) = (t, n, tL)
-      p.flatMap { case (bi, arr) =>
-        for {
-          ti <- 0 until tc
-          tj <- 0 until tc
-          i = bi * tLc + ti
-          j = j0 + tj
-          if i < nc && j < nc && i >= j && arr(ti * tc + tj) != 0.0
-        } yield (i, j, arr(ti * tc + tj))
-      }.toDF("i", "j", "v")
-    }.reduce(_ unionByName _)
-      // materialize the assembled factor once: downstream consumers (tile
-      // grids of the triangular solves, matmuls) re-read a compact RDD
-      // instead of re-deriving every panel per action
-      .localCheckpoint(true)
-    new DMatrix(lDF, n, n, dense = false)
-  }
-
-  /** The factorization loop of [[cholesky]], returning L's block-column
-    * PANELS (column k's tiles keyed by row block) instead of a cell
-    * table — the tile-level form the triangular solves consume directly
-    * (tilesOfPanels), skipping a full cells-explode + re-grid shuffle
-    * per solve. */
-  private def cholPanelsOf(s: SparkSession, a: DMatrix, tile: Int)
-      : Seq[org.apache.spark.sql.Dataset[(Long, Array[Double])]] = withoutAQE(s) {
-    require(a.rows == a.cols, "cholesky needs a square matrix")
-    import s.implicits._
-    val n = a.rows
-    val t = tile
-    val tL = t.toLong
-    val nb = ((n + t - 1) / t).toInt
-
-    // lower-triangle tiles, densified; padded diagonal cells get 1.0 so
-    // partial edge tiles stay positive definite. The tile grid is
-    // materialized from the FULL lower triangle of (bi, bj) — not just
-    // blocks with nonzero cells — because trailing updates create fill-in:
-    // an all-zero input block still receives A[i,j] -= L[i,k]·L[j,k]ᵀ and
-    // dropping it would silently corrupt the factorization (e.g. an
-    // arrowhead matrix whose interior blocks are zero).
-    val grid = s.range(nb.toLong * nb)
-      .selectExpr(s"id DIV $nb AS bi", s"id % $nb AS bj")
-      .where("bi >= bj")
-    val present = a.df.where(col("i") >= col("j"))
+    val n = m.rows
+    val nbr = ((m.rows + t - 1) / t).toInt
+    val nbc = ((m.cols + t - 1) / t).toInt
+    val grid = s.range(nbr.toLong * nbc)
+      .selectExpr(s"id DIV $nbc AS bi", s"id % $nbc AS bj")
+    val present = (if (lower) m.df.where(col("i") >= col("j")) else m.df)
       .selectExpr(s"i DIV $tL AS bi", s"j DIV $tL AS bj",
         s"i % $tL AS ti", s"j % $tL AS tj", "v")
       .groupBy("bi", "bj")
       .agg(expr("collect_list(struct(ti, tj, v))").as("cells"))
     // tile partition count scales with the grid, not the session default —
     // a 4-block bench matrix shouldn't schedule 32-task stages per step
-    val parts = math.max(1, math.min(s.sparkContext.defaultParallelism, nb * nb))
-    var cur = grid.join(present, Seq("bi", "bj"), "left")
+    val parts = math.max(1, math.min(s.sparkContext.defaultParallelism, nbr * nbc))
+    (if (lower) grid.where("bi >= bj") else grid).join(present, Seq("bi", "bj"), "left")
       .selectExpr("bi", "bj",
         "coalesce(cells, CAST(array() AS ARRAY<STRUCT<ti: BIGINT, tj: BIGINT, v: DOUBLE>>)) AS cells")
       .repartition(parts, col("bi"), col("bj"))
       .as[(Long, Long, Array[(Long, Long, Double)])]
       .map { case (bi, bj, cells) =>
         val arr = new Array[Double](t * t)
-        if (bi == bj) {
+        if (diagPad && bi == bj) {
           var d = 0
-          while (d < t) {
-            if (bi * tL + d >= n) arr(d * t + d) = 1.0
-            d += 1
-          }
+          while (d < t) { if (bi * tL + d >= n) arr(d * t + d) = 1.0; d += 1 }
         }
         cells.foreach { case (ti, tj, v) => arr(ti.toInt * t + tj.toInt) = v }
         (bi, bj, arr)
-      }.localCheckpoint(true)
+      }
+  }
+
+  /** Panels → cell table (i, j, v), lazily: nonzero cells inside
+    * rows×cols that pass the caller's triangle filter `keep`. Block
+    * COLUMN panels (`byCol`) put tile cell (ti, tj) of row block b at
+    * (b·t + ti, k·t + tj); block ROW panels at (k·t + ti, b·t + tj). */
+  private def cellsOf(s: SparkSession, panels: Panels, byCol: Boolean, rows: Long,
+                      cols: Long, t: Int, keep: (Long, Long) => Boolean): DataFrame = {
+    import s.implicits._
+    val tL = t.toLong
+    panels.map { case (k, p) =>
+      val k0 = k * tL
+      p.flatMap { case (b, arr) =>
+        for {
+          ti <- 0 until t
+          tj <- 0 until t
+          i = if (byCol) b * tL + ti else k0 + ti
+          j = if (byCol) k0 + tj else b * tL + tj
+          if i < rows && j < cols && arr(ti * t + tj) != 0.0 && keep(i, j)
+        } yield (i, j, arr(ti * t + tj))
+      }.toDF("i", "j", "v")
+    }.reduce(_ unionByName _)
+  }
+
+  /** Panels → one checkpointed tile set keyed (bi, bj): column panels
+    * land at (b, k), row panels at (k, b). This is the tile-to-tile bridge
+    * between the factorizations and the triangular solves (and from one
+    * solve to the next) — the cell-table route (assemble to (i,j,v), then
+    * re-grid with a collect_list shuffle) moves every factor cell through
+    * TWO extra exchanges per solve, pure overhead at any scale. */
+  private def tilesOf(panels: Panels, byCol: Boolean): TileDS = {
+    val sess = panels.head._2.sparkSession
+    import sess.implicits._
+    panels.map { case (k, p) =>
+      p.map { case (b, arr) => if (byCol) (b, k, arr) else (k, b, arr) }
+    }.reduce(_ unionByName _).localCheckpoint(true)
+  }
+
+  private val lowerTri: (Long, Long) => Boolean = (i, j) => i >= j
+  private val upperTri: (Long, Long) => Boolean = (i, j) => j >= i
+  private val anyCell: (Long, Long) => Boolean = (_, _) => true
+
+  /** Distributed blocked Cholesky. `a` must be symmetric positive definite;
+    * only the lower triangle is read. Returns lower-triangular L,
+    * assembled lazily from the persisted panels and materialized once:
+    * downstream consumers (tile grids of the triangular solves, matmuls)
+    * re-read a compact RDD instead of re-deriving every panel per action. */
+  def cholesky(s: SparkSession, a: DMatrix, tile: Int = 512): DMatrix = withoutAQE(s) {
+    val n = a.rows
+    val l = cellsOf(s, cholPanelsOf(s, a, tile), byCol = true, n, n, tile, lowerTri)
+    new DMatrix(l.localCheckpoint(true), n, n, dense = false)
+  }
+
+  /** The factorization loop of [[cholesky]], returning L's block-column
+    * PANELS (column k's tiles keyed by row block) instead of a cell
+    * table — the tile-level form the triangular solves consume directly
+    * ([[tilesOf]]), skipping a full cells-explode + re-grid shuffle per
+    * solve. */
+  private def cholPanelsOf(s: SparkSession, a: DMatrix, tile: Int): Panels = withoutAQE(s) {
+    require(a.rows == a.cols, "cholesky needs a square matrix")
+    import s.implicits._
+    val t = tile
+    val nb = ((a.rows + t - 1) / t).toInt
+    var cur = tileGrid(s, a, t, diagPad = true, lower = true).localCheckpoint(true)
 
     // L's panels, kept DISTRIBUTED: (bi, tile) per block column k. Every
     // generation and panel is localCheckpoint'ed: the panel re-enters the
@@ -247,7 +278,7 @@ object Cholesky {
     // times per step (3^nb plan nodes — the lineage must be CUT, not just
     // the data cached). Checkpointed generations release via the context
     // cleaner as the loop drops its references.
-    val lPanels = ArrayBuffer.empty[org.apache.spark.sql.Dataset[(Long, Array[Double])]]
+    val lPanels = ArrayBuffer.empty[(Long, PanelDS)]
 
     var k = 0
     while (k < nb) {
@@ -267,7 +298,7 @@ object Cholesky {
         .map { case (bi, _, arr) =>
           (bi, if (bi == kk) bcLkk.value else localSolveXLt(arr, bcLkk.value, t))
         }
-      lPanels += lpan
+      lPanels += ((kk, lpan))
 
       if (k < nb - 1) {
         // (3) trailing update: broadcast-JOIN the panel onto the trailing
@@ -383,77 +414,30 @@ object Cholesky {
     * shape as [[cholesky]]). Requires a numerically safe (e.g. diagonally
     * dominant) matrix; the per-tile factorization asserts nonzero pivots. */
   def lu(s: SparkSession, a: DMatrix, tile: Int = 512): (DMatrix, DMatrix) = withoutAQE(s) {
-    import s.implicits._
     val n = a.rows
-    val t = tile
-    val tL = t.toLong
     val (lPanels, uPanels) = luPanelsOf(s, a, tile)
-
-    def assemble(panels: Seq[org.apache.spark.sql.Dataset[(Long, Array[Double])]],
-                 lower: Boolean): org.apache.spark.sql.DataFrame =
-      panels.zipWithIndex.map { case (p, kIdx) =>
-        val k0 = kIdx.toLong * tL
-        val (tc, nc, tLc, low) = (t, n, tL, lower)
-        p.flatMap { case (bk, arr) =>
-          for {
-            ti <- 0 until tc
-            tj <- 0 until tc
-            i = if (low) bk * tLc + ti else k0 + ti
-            j = if (low) k0 + tj else bk * tLc + tj
-            if i < nc && j < nc && arr(ti * tc + tj) != 0.0
-            if (low && i >= j) || (!low && j >= i)
-          } yield (i, j, arr(ti * tc + tj))
-        }.toDF("i", "j", "v")
-      }.reduce(_ unionByName _)
-
-    (new DMatrix(assemble(lPanels, lower = true).localCheckpoint(true), n, n, dense = false),
-      new DMatrix(assemble(uPanels, lower = false).localCheckpoint(true), n, n, dense = false))
+    val l = cellsOf(s, lPanels, byCol = true, n, n, tile, lowerTri)
+    val u = cellsOf(s, uPanels, byCol = false, n, n, tile, upperTri)
+    (new DMatrix(l.localCheckpoint(true), n, n, dense = false),
+      new DMatrix(u.localCheckpoint(true), n, n, dense = false))
   }
 
   /** The factorization loop of [[lu]], returning the factors as PANELS:
     * L's block column k keyed by row block, U's block row k keyed by
     * column block — the tile-level form [[inv]] and the tile solves
     * consume directly, skipping the cells-explode + re-grid shuffle. */
-  private def luPanelsOf(s: SparkSession, a: DMatrix, tile: Int)
-      : (Seq[org.apache.spark.sql.Dataset[(Long, Array[Double])]],
-         Seq[org.apache.spark.sql.Dataset[(Long, Array[Double])]]) = withoutAQE(s) {
+  private def luPanelsOf(s: SparkSession, a: DMatrix, tile: Int): (Panels, Panels) = withoutAQE(s) {
     require(a.rows == a.cols, "lu needs a square matrix")
     import s.implicits._
-    val n = a.rows
     val t = tile
-    val tL = t.toLong
-    val nb = ((n + t - 1) / t).toInt
-
-    // full (bi, bj) tile grid, zero-filled where the input has no cells —
-    // trailing updates fill in blocks that start all-zero (see cholesky)
-    val grid = s.range(nb.toLong * nb)
-      .selectExpr(s"id DIV $nb AS bi", s"id % $nb AS bj")
-    val present = a.df
-      .selectExpr(s"i DIV $tL AS bi", s"j DIV $tL AS bj",
-        s"i % $tL AS ti", s"j % $tL AS tj", "v")
-      .groupBy("bi", "bj")
-      .agg(expr("collect_list(struct(ti, tj, v))").as("cells"))
-    val parts = math.max(1, math.min(s.sparkContext.defaultParallelism, nb * nb))
-    var cur = grid.join(present, Seq("bi", "bj"), "left")
-      .selectExpr("bi", "bj",
-        "coalesce(cells, CAST(array() AS ARRAY<STRUCT<ti: BIGINT, tj: BIGINT, v: DOUBLE>>)) AS cells")
-      .repartition(parts, col("bi"), col("bj"))
-      .as[(Long, Long, Array[(Long, Long, Double)])]
-      .map { case (bi, bj, cells) =>
-        val arr = new Array[Double](t * t)
-        if (bi == bj) { // pad diagonal beyond n for partial edge tiles
-          var d = 0
-          while (d < t) { if (bi * tL + d >= n) arr(d * t + d) = 1.0; d += 1 }
-        }
-        cells.foreach { case (ti, tj, v) => arr(ti.toInt * t + tj.toInt) = v }
-        (bi, bj, arr)
-      }.localCheckpoint(true)
+    val nb = ((a.rows + t - 1) / t).toInt
+    var cur = tileGrid(s, a, t, diagPad = true).localCheckpoint(true)
 
     // distributed panels: L's block column k keyed by bi, U's block row k
     // keyed by bj — the factors accumulate as these checkpointed tile
     // sets (lineage CUT per step; see cholesky)
-    val lPanels = ArrayBuffer.empty[org.apache.spark.sql.Dataset[(Long, Array[Double])]]
-    val uPanels = ArrayBuffer.empty[org.apache.spark.sql.Dataset[(Long, Array[Double])]]
+    val lPanels = ArrayBuffer.empty[(Long, PanelDS)]
+    val uPanels = ArrayBuffer.empty[(Long, PanelDS)]
 
     var k = 0
     while (k < nb) {
@@ -474,8 +458,8 @@ object Cholesky {
         .map { case (_, bj, arr) =>
           (bj, if (bj == kk) bcUkk.value else localSolveLX(arr, bcLkk.value, t))
         }
-      lPanels += lCol
-      uPanels += uRow
+      lPanels += ((kk, lCol))
+      uPanels += ((kk, uRow))
 
       if (k < nb - 1) {
         // trailing update A[i,j] -= L[i,k]·U[k,j] via two broadcast joins
@@ -513,41 +497,6 @@ object Cholesky {
     x
   }
 
-  /** Full zero-filled tile grid of a DMatrix (rows×cols, t×t tiles), with
-    * `diagPad` on diagonal positions past the logical edge so triangular
-    * tiles stay solvable. Absent input tiles materialize as zero tiles —
-    * the trailing updates of the solves need them (same fill-in argument
-    * as [[cholesky]]). */
-  private def tileGrid(s: SparkSession, m: DMatrix, t: Int, diagPad: Boolean) = {
-    import s.implicits._
-    val tL = t.toLong
-    val nbr = ((m.rows + t - 1) / t).toInt
-    val nbc = ((m.cols + t - 1) / t).toInt
-    val n = m.rows
-    val grid = s.range(nbr.toLong * nbc)
-      .selectExpr(s"id DIV $nbc AS bi", s"id % $nbc AS bj")
-    val present = m.df
-      .selectExpr(s"i DIV $tL AS bi", s"j DIV $tL AS bj",
-        s"i % $tL AS ti", s"j % $tL AS tj", "v")
-      .groupBy("bi", "bj")
-      .agg(expr("collect_list(struct(ti, tj, v))").as("cells"))
-    val parts = math.max(1, math.min(s.sparkContext.defaultParallelism, nbr * nbc))
-    grid.join(present, Seq("bi", "bj"), "left")
-      .selectExpr("bi", "bj",
-        "coalesce(cells, CAST(array() AS ARRAY<STRUCT<ti: BIGINT, tj: BIGINT, v: DOUBLE>>)) AS cells")
-      .repartition(parts, col("bi"), col("bj"))
-      .as[(Long, Long, Array[(Long, Long, Double)])]
-      .map { case (bi, bj, cells) =>
-        val arr = new Array[Double](t * t)
-        if (diagPad && bi == bj) {
-          var d0 = 0
-          while (d0 < t) { if (bi * tL + d0 >= n) arr(d0 * t + d0) = 1.0; d0 += 1 }
-        }
-        cells.foreach { case (ti, tj, v) => arr(ti.toInt * t + tj.toInt) = v }
-        (bi, bj, arr)
-      }
-  }
-
   /** Block forward substitution with a MATRIX right-hand side: X with
     * L·X = B, both distributed tile sets (reference `solve_triangular`,
     * `linalg/_solve.py:20` — lower=True path). Right-looking, fully
@@ -563,26 +512,6 @@ object Cholesky {
   /** Block backward substitution: X with U·X = B (upper path). */
   def solveUpperTiles(s: SparkSession, u: DMatrix, b: DMatrix, tile: Int = 512): DMatrix = {
     solveTriTiles(s, u, b, tile, lower = false)
-  }
-
-  private type TileDS = org.apache.spark.sql.Dataset[(Long, Long, Array[Double])]
-  private type PanelDS = org.apache.spark.sql.Dataset[(Long, Array[Double])]
-
-  /** Factor panels → one checkpointed tile dataset: lower panels are
-    * block COLUMNS keyed by row block → (bi, k); upper panels are block
-    * ROWS keyed by column block → (k, bj). This is the tile-to-tile
-    * bridge between the factorizations and the triangular solves — the
-    * cell-table route (assemble to (i,j,v), then re-grid with a
-    * collect_list shuffle) moves every factor cell through TWO extra
-    * exchanges per solve, pure overhead at any scale. */
-  private def tilesOfPanels(panels: Seq[PanelDS], lower: Boolean): TileDS = {
-    val sess = panels.head.sparkSession
-    import sess.implicits._
-    panels.zipWithIndex.map { case (p, k) =>
-      val kk = k.toLong
-      val low = lower
-      p.map { case (bk, arr) => if (low) (bk, kk, arr) else (kk, bk, arr) }
-    }.reduce(_ unionByName _).localCheckpoint(true)
   }
 
   /** Identity right-hand side as tiles, generated — no shuffle, no
@@ -622,17 +551,7 @@ object Cholesky {
   private def transposeTiles(tiles: TileDS, t: Int): TileDS = {
     val sess = tiles.sparkSession
     import sess.implicits._
-    val tc = t
-    tiles.map { case (bi, bj, arr) =>
-      val out = new Array[Double](tc * tc)
-      var i = 0
-      while (i < tc) {
-        var j = 0
-        while (j < tc) { out(j * tc + i) = arr(i * tc + j); j += 1 }
-        i += 1
-      }
-      (bj, bi, out)
-    }
+    tiles.map { case (bi, bj, arr) => (bj, bi, transpose(arr, t)) }
   }
 
   private def solveTriTiles(s: SparkSession, f: DMatrix, b: DMatrix, tile: Int,
@@ -647,15 +566,14 @@ object Cholesky {
     val fTiles = tileGrid(s, f, tile, diagPad = true).localCheckpoint(true)
     val bTiles = tileGrid(s, b, tile, diagPad = false).localCheckpoint(true)
     val xPanels = solveTriCore(s, fTiles, bTiles, n, tile, lower)
-    new DMatrix(xCells(s, xPanels, n, m, tile), n, m, dense = false)
+    new DMatrix(cellsOf(s, xPanels, byCol = false, n, m, tile, anyCell), n, m, dense = false)
   }
 
   /** The block substitution loop over tile sets (see [[solveLowerTiles]]
     * for the algorithm shape). `fTiles`/`bTiles` must be materialized
     * (checkpointed) tile datasets; returns X's block-row panels. */
   private def solveTriCore(s: SparkSession, fTiles: TileDS, bTilesIn: TileDS,
-                           n: Long, tile: Int, lower: Boolean)
-      : Seq[(Long, PanelDS)] = withoutAQE(s) {
+                           n: Long, tile: Int, lower: Boolean): Panels = withoutAQE(s) {
     import s.implicits._
     val t = tile
     val nb = ((n + t - 1) / t).toInt
@@ -698,35 +616,23 @@ object Cholesky {
     xPanels.toSeq
   }
 
-  /** X panels → cell table (i, j, v), trimmed to the logical edge. */
-  private def xCells(s: SparkSession, xPanels: Seq[(Long, PanelDS)],
-                     n: Long, m: Long, tile: Int): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val tL = tile.toLong
-    xPanels.map { case (kk, p) =>
-      val i0 = kk * tL
-      val (tc, nc, mc, tLc) = (tile, n, m, tL)
-      p.flatMap { case (bj, arr) =>
-        for {
-          ti <- 0 until tc
-          tj <- 0 until tc
-          i = i0 + ti
-          j = bj * tLc + tj
-          if i < nc && j < mc && arr(ti * tc + tj) != 0.0
-        } yield (i, j, arr(ti * tc + tj))
-      }.toDF("i", "j", "v")
-    }.reduce(_ unionByName _)
+  /** X with L·U·X = B for factor tile sets `lT` (lower) and `uT`
+    * (upper): the forward block solve, then the backward block solve on
+    * its result as tiles. `uT` is by-name: a factor built from panels is
+    * checkpointed only once the forward solve has run. Returns X's
+    * block-row panels. */
+  private def substitute(s: SparkSession, lT: TileDS, uT: => TileDS, rhs: TileDS,
+                         n: Long, tile: Int): Panels = {
+    val y = solveTriCore(s, lT, rhs, n, tile, lower = true)
+    solveTriCore(s, uT, tilesOf(y, byCol = false), n, tile, lower = false)
   }
 
-  /** X panels → tile set keyed (block row, block col) — the form the
-    * NEXT chained solve consumes as its right-hand side. */
-  private def xTiles(xPanels: Seq[(Long, PanelDS)]): TileDS = {
-    val sess = xPanels.head._2.sparkSession
-    import sess.implicits._
-    xPanels.map { case (kk, p) =>
-      val k = kk
-      p.map { case (bj, arr) => (k, bj, arr) }
-    }.reduce(_ unionByName _).localCheckpoint(true)
+  /** A one-column solution's panels → the driver vector x. */
+  private def vecOf(s: SparkSession, x: Panels, n: Long, tile: Int): Array[Double] = {
+    val out = new Array[Double](n.toInt)
+    cellsOf(s, x, byCol = false, n, 1, tile, anyCell).collect()
+      .foreach(r => out(r.getLong(0).toInt) = r.getDouble(2))
+    out
   }
 
   /** Matrix inverse via LU (reference `inv`, `linalg/_solve.py:225` —
@@ -741,56 +647,63 @@ object Cholesky {
     // — no factor or intermediate ever takes the cells-explode + re-grid
     // round trip (two full exchanges of n² cells per solve saved)
     val (lp, up) = luPanelsOf(s, a, tile)
-    val lT = tilesOfPanels(lp, lower = true)
-    val uT = tilesOfPanels(up, lower = false)
-    val y = solveTriCore(s, lT, eyeTiles(s, n, tile), n, tile, lower = true)
-    val x = solveTriCore(s, uT, xTiles(y), n, tile, lower = false)
-    new DMatrix(xCells(s, x, n, n, tile), n, n, dense = false)
+    val lT = tilesOf(lp, byCol = true)
+    val uT = tilesOf(up, byCol = false)
+    val x = substitute(s, lT, uT, eyeTiles(s, n, tile), n, tile)
+    new DMatrix(cellsOf(s, x, byCol = false, n, n, tile, anyCell), n, n, dense = false)
+  }
+
+  private def checkSolve(a: DMatrix, b: Array[Double]): Unit = {
+    require(a.rows == a.cols, "solve needs a square matrix")
+    require(b.length == a.rows, s"rhs length ${b.length} != ${a.rows}")
   }
 
   /** General (non-SPD) solve A·x = b via LU + two triangular solves
-    * (reference `solve`, `linalg/_solve.py:163`). */
+    * (reference `solve`, `linalg/_solve.py:163`): in-core up to
+    * [[LocalSolveMax]], blocked above it. */
   def solveLU(s: SparkSession, a: DMatrix, b: Array[Double], tile: Int = 512): Array[Double] = withoutAQE(s) {
-    require(a.rows == a.cols, "solve needs a square matrix")
-    require(b.length == a.rows, s"rhs length ${b.length} != ${a.rows}")
-    val n = a.rows.toInt
-    if (a.rows <= LocalSolveMax) { // see LocalSolveMax: local-LAPACK tier
+    checkSolve(a, b)
+    if (a.rows > LocalSolveMax) solveLUBlocked(s, a, b, tile)
+    else {
+      val n = a.rows.toInt
       val (l, u) = localLU(denseOf(a), n)
-      return backwardVec(u, forwardVec(l, b, n), n)
+      backwardVec(u, forwardVec(l, b, n), n)
     }
-    val (lp, up) = luPanelsOf(s, a, tile)
-    val y = solveTriCore(s, tilesOfPanels(lp, lower = true),
-      vecTiles(s, b, tile), n, tile, lower = true)
-    val x = solveTriCore(s, tilesOfPanels(up, lower = false),
-      xTiles(y), n, tile, lower = false)
-    val out = new Array[Double](n)
-    xCells(s, x, n, 1, tile).collect()
-      .foreach(r => out(r.getLong(0).toInt) = r.getDouble(2))
-    out
   }
 
-  /** Solve A·x = b for SPD A via Cholesky + two distributed blocked
-    * triangular solves, Lᵀ handled as a transpose of the one factor
-    * (reference `solve`, `linalg/_solve.py:163`). The O(n) vector is the
-    * only data that touches the driver. */
+  /** The blocked tier of [[solveLU]], at any size. */
+  private[graft] def solveLUBlocked(s: SparkSession, a: DMatrix, b: Array[Double],
+                                    tile: Int): Array[Double] = withoutAQE(s) {
+    val (lp, up) = luPanelsOf(s, a, tile)
+    vecOf(s, substitute(s, tilesOf(lp, byCol = true), tilesOf(up, byCol = false),
+      vecTiles(s, b, tile), a.rows, tile), a.rows, tile)
+  }
+
+  /** Solve A·x = b for SPD A via Cholesky + two triangular solves, Lᵀ
+    * handled as a transpose of the one factor (reference `solve`,
+    * `linalg/_solve.py:163`): in-core up to [[LocalSolveMax]], blocked
+    * above it. */
   def solveSPD(s: SparkSession, a: DMatrix, b: Array[Double], tile: Int = 512): Array[Double] = withoutAQE(s) {
-    require(a.rows == a.cols, "solve needs a square matrix")
-    require(b.length == a.rows, s"rhs length ${b.length} != ${a.rows}")
-    val n = a.rows.toInt
-    if (a.rows <= LocalSolveMax) { // see LocalSolveMax: local-LAPACK tier
+    checkSolve(a, b)
+    if (a.rows > LocalSolveMax) solveSPDBlocked(s, a, b, tile)
+    else {
+      val n = a.rows.toInt
       val l = localChol(denseOf(a), n)
-      return backwardVecT(l, forwardVec(l, b, n), n)
+      backwardVec(transpose(l, n), forwardVec(l, b, n), n)
     }
-    val lT = tilesOfPanels(cholPanelsOf(s, a, tile), lower = true)
-    val y = solveTriCore(s, lT, vecTiles(s, b, tile), n, tile, lower = true)
+  }
+
+  /** The blocked tier of [[solveSPD]], at any size: two distributed
+    * blocked triangular solves; the O(n) vector is the only data that
+    * touches the driver. */
+  private[graft] def solveSPDBlocked(s: SparkSession, a: DMatrix, b: Array[Double],
+                                     tile: Int): Array[Double] = withoutAQE(s) {
+    val lT = tilesOf(cholPanelsOf(s, a, tile), byCol = true)
     // Lᵀ materialized once: solveTriCore consumes its factor from ~3
     // actions per block step, and a lazy transposed view would redo the
     // O(n²) transpose map on every one of them
-    val ltT = transposeTiles(lT, tile).localCheckpoint(true)
-    val x = solveTriCore(s, ltT, xTiles(y), n, tile, lower = false)
-    val out = new Array[Double](n)
-    xCells(s, x, n, 1, tile).collect()
-      .foreach(r => out(r.getLong(0).toInt) = r.getDouble(2))
-    out
+    val x = substitute(s, lT, transposeTiles(lT, tile).localCheckpoint(true),
+      vecTiles(s, b, tile), a.rows, tile)
+    vecOf(s, x, a.rows, tile)
   }
 }

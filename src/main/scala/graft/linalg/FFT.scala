@@ -219,30 +219,13 @@ object FFT {
 
   /** 2-d FFT of a complex cell table `(i, j, re, im)` with shape
     * rows×cols, any extents (reference `fft2` via fft_wrap,
-    * fft.py:119): FFT each row, then each column — two grouped stages,
-    * each an independent in-core transform per line, so parallelism is
-    * rows (then cols) and no line ever crosses tasks. */
+    * fft.py:119): [[fftn]] at rank 2 over `(j, i)` renamed to its
+    * `(c0, c1)` and back, so each row transforms first, then each column. */
   def fft2(s: SparkSession, df: DataFrame, rows: Long, cols: Long,
-           inverse: Boolean = false): DataFrame = {
-    import s.implicits._
-    val inv = inverse
-    val scale = if (inverse) 1.0 / (rows * cols) else 1.0
-    def pass(d: DataFrame, lineKey: String, posKey: String, lineLen: Long): DataFrame =
-      d.select(col(lineKey).as("lk"), col(posKey).as("pk"), col("re"), col("im"))
-        .as[(Long, Long, Double, Double)]
-        .groupByKey(_._1)
-        .flatMapGroups { (lk, it) =>
-          val re = new Array[Double](lineLen.toInt)
-          val im = new Array[Double](lineLen.toInt)
-          it.foreach { case (_, p, r, i0) => re(p.toInt) = r; im(p.toInt) = i0 }
-          fftInPlace(re, im, inv)
-          (0 until lineLen.toInt).iterator.map(p => (lk, p.toLong, re(p), im(p)))
-        }.toDF(lineKey, posKey, "re", "im")
-    val afterRows = pass(df, "i", "j", cols)
-    pass(afterRows, "j", "i", rows)
-      .select(col("i"), col("j"),
-        (col("re") * scale).as("re"), (col("im") * scale).as("im"))
-  }
+           inverse: Boolean = false): DataFrame =
+    fftn(s, df.select(col("j").as("c0"), col("i").as("c1"), col("re"), col("im")),
+      Seq(cols, rows), inverse)
+      .select(col("c1").as("i"), col("c0").as("j"), col("re"), col("im"))
 
   /** N-d FFT of a complex cell table `(c0..c{r-1}, re, im)` (reference
     * `fftn`/`ifftn` via fft_wrap, fft.py:240,243): the DFT separates per
@@ -252,7 +235,7 @@ object FFT {
     * the other extents (the natural line count), no line ever crosses
     * tasks, and the exchange per pass is one hash shuffle on the line
     * key. Extents may be any length (Bluestein covers non-powers-of-two).
-    * rank 1/2 delegate nothing — the same loop covers them. */
+    * The same loop covers every rank; [[fft2]] is this at rank 2. */
   def fftn(s: SparkSession, df: DataFrame, shape: Seq[Long],
            inverse: Boolean = false): DataFrame = {
     import s.implicits._

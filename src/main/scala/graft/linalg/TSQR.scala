@@ -1,24 +1,30 @@
 package graft.linalg
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.DMatrix
 
 /** Tall-skinny QR and SVD (reference `dask_array/linalg/_qr.py:560` tsqr,
-  * `linalg/_svd.py:170`): the classic two-level TSQR —
+  * `linalg/_svd.py:170`): the classic TSQR —
   *
   *  1. rows are grouped into blocks of [[defaultBlockRows]]; each block
-  *     gets an in-core Householder QR (`mapGroups`, one task per block);
-  *  2. the p stacked k×k R factors (tiny: O(p·k²)) are QR'd in-core on the
-  *     driver — exactly the reference's `StackRFactors` → `InCoreQR` step;
-  *  3. Q = Q_block · Q2_block, a block-local k×k multiply, emitted back as
-  *     a distributed element table.
+  *     gets an in-core Householder QR ([[blockQR]], one task per block);
+  *  2. the block R factors combine up a tree: each node stacks its
+  *     children's k×k R factors and QRs the stack in one task
+  *     ([[combineRs]] — the reference's `StackRFactors` → `InCoreQR`);
+  *     the ≤ splitEvery factors left at the root combine on the driver,
+  *     with signs normalized so diag(R) ≥ 0 ([[rootCombine]]);
+  *  3. Q = Q_block · (product of the k×k Q slices down the tree), a
+  *     block-local multiply, emitted back as a distributed element table.
   *
-  * Only O(p·k²) bytes ever reach the driver (the reference makes the same
-  * assumption); the n×k data stays partitioned throughout. Signs are
-  * normalized so diag(R) ≥ 0, making the factorization unique and
-  * deterministic for full-rank inputs.
+  * [[tsqr]] runs this with a persisted level per tree round (Q needs the
+  * levels on the way down); [[rFactor]] chains the same kernels lazily
+  * for R alone. `lstsq`, `lstsqFull` and `singularValues` are built from
+  * their R (and Q). Only O(splitEvery·k²) bytes of factors ever reach the
+  * driver (the reference makes the same assumption); the n×k data stays
+  * partitioned throughout. The sign normalization makes the
+  * factorization unique and deterministic for full-rank inputs.
   */
 object TSQR {
 
@@ -120,59 +126,72 @@ object TSQR {
     c
   }
 
-  /** Eigenvalues of a symmetric k×k matrix (cyclic Jacobi), descending. */
-  def symEigvals(a0: Array[Double], n: Int): Array[Double] = {
-    val a = a0.clone()
-    var sweep = 0
-    var off = Double.MaxValue
-    while (sweep < 100 && off > 1e-22) {
-      off = 0.0
-      var p = 0
-      while (p < n) {
-        var q = p + 1
-        while (q < n) {
-          off += a(p * n + q) * a(p * n + q)
-          q += 1
-        }
-        p += 1
-      }
-      if (off > 1e-22) {
-        p = 0
-        while (p < n) {
-          var q = p + 1
-          while (q < n) {
-            val apq = a(p * n + q)
-            if (math.abs(apq) > 1e-300) {
-              val theta = (a(q * n + q) - a(p * n + p)) / (2 * apq)
-              val t = math.signum(theta) match {
-                case 0.0 => 1.0
-                case sg  => sg / (math.abs(theta) + math.sqrt(theta * theta + 1))
-              }
-              val c = 1.0 / math.sqrt(t * t + 1)
-              val s = t * c
-              var r = 0
-              while (r < n) {
-                val arp = a(r * n + p); val arq = a(r * n + q)
-                a(r * n + p) = c * arp - s * arq
-                a(r * n + q) = s * arp + c * arq
-                r += 1
-              }
-              r = 0
-              while (r < n) {
-                val apr = a(p * n + r); val aqr = a(q * n + r)
-                a(p * n + r) = c * apr - s * aqr
-                a(q * n + r) = s * apr + c * aqr
-                r += 1
-              }
-            }
-            q += 1
-          }
-          p += 1
-        }
-      }
-      sweep += 1
+  /** The rows of `mat` as (row id, its (column, value) cells), grouped
+    * into blocks of `blockRows` ids — the element table stores implicit
+    * zeros sparsely, so [[blockQR]] places values by column index. */
+  private def rowBlocks(s: SparkSession, mat: DMatrix, blockRows: Int)
+      : KeyValueGroupedDataset[Long, (Long, Array[(Long, Double)])] = {
+    import s.implicits._
+    mat.df.groupBy("i")
+      .agg(expr("collect_list(struct(j, v))").as("cells"))
+      .as[(Long, Array[(Long, Double)])]
+      .groupByKey { case (i, _) => i / blockRows }
+  }
+
+  /** In-core QR of one row block: rows sorted by id, placed densely and
+    * zero-padded to k rows when the block is shorter (ragged tail, sparse
+    * row gaps) — QR([A;0]) has the same R, and the padded Q rows are
+    * dropped. Returns (row ids, Q trimmed to those rows, R). */
+  private def blockQR(rows: Iterator[(Long, Array[(Long, Double)])], k: Int)
+      : (Array[Long], Array[Double], Array[Double]) = {
+    val rs = rows.toArray.sortBy(_._1)
+    val m = rs.length
+    val mp = math.max(m, k)
+    val a = new Array[Double](mp * k)
+    var i = 0
+    while (i < m) {
+      rs(i)._2.foreach { case (j, v) => a(i * k + j.toInt) = v }
+      i += 1
     }
-    (0 until n).map(i => a(i * n + i)).sortBy(-_).toArray
+    val (q, r) = localQR(a, mp, k)
+    (rs.map(_._1), java.util.Arrays.copyOf(q, m * k), r)
+  }
+
+  /** One tree node's combine: its children's k×k R factors, stacked in
+    * rank order and QR'd in-core. Returns (each child's k×k slice of the
+    * stack's Q, keyed by child rank; the node's R). */
+  private def combineRs(children: Iterator[(Long, Array[Double])], k: Int)
+      : (Array[(Long, Array[Double])], Array[Double]) = {
+    val ch = children.toArray.sortBy(_._1)
+    val stacked = new Array[Double](ch.length * k * k)
+    ch.zipWithIndex.foreach { case ((_, r), i) =>
+      System.arraycopy(r, 0, stacked, i * k * k, k * k)
+    }
+    val (q, r) = localQR(stacked, ch.length * k, k)
+    (ch.zipWithIndex.map { case ((cr, _), i) =>
+      (cr, java.util.Arrays.copyOfRange(q, i * k * k, (i + 1) * k * k))
+    }, r)
+  }
+
+  /** The root combine on the driver: [[combineRs]] normalized so
+    * diag(R) ≥ 0 — a negative diagonal entry flips its R row and the
+    * matching column of every child's Q slice. */
+  private def rootCombine(children: Array[(Long, Array[Double])], k: Int)
+      : (Array[(Long, Array[Double])], Array[Double]) = {
+    val (chunks, r) = combineRs(children.iterator, k)
+    var j = 0
+    while (j < k) {
+      if (r(j * k + j) < 0) {
+        var c = j
+        while (c < k) { r(j * k + c) = -r(j * k + c); c += 1 }
+        chunks.foreach { case (_, q) =>
+          var i = 0
+          while (i < k) { q(i * k + j) = -q(i * k + j); i += 1 }
+        }
+      }
+      j += 1
+    }
+    (chunks, r)
   }
 
   /** Tree fan-in for the R-combine (reference tsqr recursion,
@@ -188,11 +207,7 @@ object TSQR {
     * driver. A single-level collect of all per-block R factors would be
     * O(numBlocks·k²) driver bytes — fine at p≈100, an OOM at p≈10⁶ fine
     * blocks over 100 TB. Q factors then propagate back DOWN the levels as
-    * distributed k×k joins: factor(child) = chunk(child) · factor(parent).
-    *
-    * Blocks shorter than k rows (ragged tail, sparse row gaps) are
-    * zero-padded to k before the local QR — QR([A;0]) has the same R, and
-    * the padded Q rows are dropped on emit. */
+    * distributed k×k joins: factor(child) = chunk(child) · factor(parent). */
   def tsqr(s: SparkSession, mat: DMatrix, blockRows: Int = defaultBlockRows,
            splitEvery: Int = defaultSplitEvery): (DMatrix, Array[Double]) = {
     require(splitEvery >= 2, s"splitEvery must be >= 2, got $splitEvery")
@@ -200,54 +215,26 @@ object TSQR {
     val k = mat.cols.toInt
     val n = mat.rows
 
-    // assemble dense rows (the element table stores implicit zeros
-    // sparsely — place values by column index), then per-block local QR
-    val rowDs = mat.df.groupBy("i")
-      .agg(expr("collect_list(struct(j, v))").as("cells"))
-      .as[(Long, Array[(Long, Double)])]
-
-    val blockQR = rowDs
-      .groupByKey { case (i, _) => i / blockRows }
-      .mapGroups { (b, it) =>
-        val rs = it.toArray.sortBy(_._1)
-        val m = rs.length
-        val mp = math.max(m, k) // zero-pad short blocks up to k rows
-        val a = new Array[Double](mp * k)
-        var i = 0
-        while (i < m) {
-          rs(i)._2.foreach { case (j, v) => a(i * k + j.toInt) = v }
-          i += 1
-        }
-        val (q, r) = localQR(a, mp, k)
-        (b, rs.map(_._1), java.util.Arrays.copyOf(q, m * k), r)
-      }
+    val blockQRs = rowBlocks(s, mat, blockRows)
+      .mapGroups { (b, it) => val (ids, q, r) = blockQR(it, k); (b, ids, q, r) }
       .persist()
 
     // dense ranks for tree addressing (block ids can be sparse); only the
     // 8-byte ids reach the driver, never the k×k factors
-    val blockIds = blockQR.map(_._1).collect().sorted
+    val blockIds = blockQRs.map(_._1).collect().sorted
     val rankOf = blockIds.zipWithIndex.map { case (b, i) => (b, i.toLong) }.toMap
     val bcRank = s.sparkContext.broadcast(rankOf)
 
     // upward sweep: (rank, R) → grouped stacks, one level per round;
     // each level keeps (childRank, parentRank, k×k chunk) distributed
     val kk = k
-    var rs = blockQR.map { case (b, _, _, r) => (bcRank.value(b), r) }
+    var rs = blockQRs.map { case (b, _, _, r) => (bcRank.value(b), r) }
     var levels = List.empty[org.apache.spark.rdd.RDD[(Long, (Long, Array[Double]))]]
-    var cached = List[AnyRef](blockQR) // everything to free once Q is materialized
+    var cached = List[AnyRef](blockQRs) // everything to free once Q is materialized
     var width = blockIds.length.toLong
     while (width > splitEvery) {
       val lvl = rs.groupByKey(_._1 / splitEvery).mapGroups { (parent, it) =>
-        val ch = it.toArray.sortBy(_._1)
-        val g = ch.length
-        val stacked = new Array[Double](g * kk * kk)
-        ch.zipWithIndex.foreach { case ((_, r), i) =>
-          System.arraycopy(r, 0, stacked, i * kk * kk, kk * kk)
-        }
-        val (q2, rNew) = localQR(stacked, g * kk, kk)
-        val chunks = ch.zipWithIndex.map { case ((cr, _), i) =>
-          (cr, java.util.Arrays.copyOfRange(q2, i * kk * kk, (i + 1) * kk * kk))
-        }
+        val (chunks, rNew) = combineRs(it, kk)
         (parent, rNew, chunks)
       }.persist()
       lvl.count()
@@ -260,34 +247,14 @@ object TSQR {
       width = (width + splitEvery - 1) / splitEvery
     }
 
-    // final driver QR over the ≤ splitEvery surviving R factors
-    val top = rs.collect().sortBy(_._1)
-    val p = top.length
-    val stacked = new Array[Double](p * k * k)
-    top.zipWithIndex.foreach { case ((_, r), bi) =>
-      System.arraycopy(r, 0, stacked, bi * k * k, k * k)
-    }
-    val (q2all, rFinal) = localQR(stacked, p * k, k)
-
-    // normalize: diag(R) >= 0 (flip R rows + Q2 columns)
-    var j = 0
-    while (j < k) {
-      if (rFinal(j * k + j) < 0) {
-        var c = j
-        while (c < k) { rFinal(j * k + c) = -rFinal(j * k + c); c += 1 }
-        var i = 0
-        while (i < p * k) { q2all(i * k + j) = -q2all(i * k + j); i += 1 }
-      }
-      j += 1
-    }
+    // final driver combine over the ≤ splitEvery surviving R factors
+    val (top, rFinal) = rootCombine(rs.collect(), k)
 
     // downward sweep: factor(child) = chunk(child) · factor(parent),
     // one distributed join per level (node count shrinks 16× per level up,
     // so every join is against the SMALLER upper level)
     var factors: org.apache.spark.rdd.RDD[(Long, Array[Double])] =
-      s.sparkContext.parallelize(top.zipWithIndex.map { case ((rk, _), bi) =>
-        (rk, java.util.Arrays.copyOfRange(q2all, bi * k * k, (bi + 1) * k * k))
-      }.toSeq)
+      s.sparkContext.parallelize(top.toSeq)
     levels.foreach { lvl =>
       factors = lvl.join(factors).map { case (_, ((childRank, chunk), fac)) =>
         (childRank, mul(chunk, fac, kk, kk, kk))
@@ -299,7 +266,7 @@ object TSQR {
     // one dataset per tree level) can be released immediately — without
     // this, repeated tsqr calls (e.g. svd_compressed power iterations)
     // accumulate dead cached levels in executor storage.
-    val qRDD = blockQR.rdd
+    val qRDD = blockQRs.rdd
       .map { case (b, ids, q, _) => (bcRank.value(b), (ids, q)) }
       .join(factors)
       .flatMap { case (_, ((ids, q), fac)) =>
@@ -326,59 +293,22 @@ object TSQR {
     * action, no cache. Use when only R / singular values are needed. */
   def rFactor(s: SparkSession, mat: DMatrix, blockRows: Int = defaultBlockRows,
               splitEvery: Int = defaultSplitEvery): Array[Double] = {
+    require(splitEvery >= 2, s"splitEvery must be >= 2, got $splitEvery")
     import s.implicits._
     val k = mat.cols.toInt
-    val rowDs = mat.df.groupBy("i")
-      .agg(expr("collect_list(struct(j, v))").as("cells"))
-      .as[(Long, Array[(Long, Double)])]
-    val kk = k
-    val blockR = rowDs
-      .groupByKey { case (i, _) => i / blockRows }
-      .mapGroups { (b, it) =>
-        val rs = it.toArray.sortBy(_._1)
-        val m = rs.length
-        val mp = math.max(m, kk)
-        val a = new Array[Double](mp * kk)
-        var i = 0
-        while (i < m) {
-          rs(i)._2.foreach { case (j, v) => a(i * kk + j.toInt) = v }
-          i += 1
-        }
-        (b, localQR(a, mp, kk)._2)
-      }
-    require(splitEvery >= 2, s"splitEvery must be >= 2, got $splitEvery")
-    var rs0 = blockR.map { case (b, r) => (b, r) }
+    var rs = rowBlocks(s, mat, blockRows)
+      .mapGroups { (b, it) => (b, blockQR(it, k)._3) }
     // block ids lie in [0, span); grouping on id DIV splitEvery maps that
     // to [0, ceil(span/splitEvery)) per round — span is an upper bound on
     // the surviving width even when ids are sparse, so the round count is
     // known up front from the STATIC row count (no extra job at all)
     var span = (mat.rows + blockRows - 1) / blockRows
     while (span > splitEvery) {
-      rs0 = rs0.groupByKey(_._1 / splitEvery).mapGroups { (parent, it) =>
-        val ch = it.toArray.sortBy(_._1)
-        val stacked = new Array[Double](ch.length * kk * kk)
-        ch.zipWithIndex.foreach { case ((_, r), i) =>
-          System.arraycopy(r, 0, stacked, i * kk * kk, kk * kk)
-        }
-        (parent, localQR(stacked, ch.length * kk, kk)._2)
-      }
+      rs = rs.groupByKey(_._1 / splitEvery)
+        .mapGroups { (parent, it) => (parent, combineRs(it, k)._2) }
       span = (span + splitEvery - 1) / splitEvery
     }
-    val top = rs0.collect().sortBy(_._1)
-    val stacked = new Array[Double](top.length * k * k)
-    top.zipWithIndex.foreach { case ((_, r), bi) =>
-      System.arraycopy(r, 0, stacked, bi * k * k, k * k)
-    }
-    val (_, rFinal) = localQR(stacked, top.length * k, k)
-    var j = 0
-    while (j < k) {
-      if (rFinal(j * k + j) < 0) {
-        var c = j
-        while (c < k) { rFinal(j * k + c) = -rFinal(j * k + c); c += 1 }
-      }
-      j += 1
-    }
-    rFinal
+    rootCombine(rs.collect(), k)._2
   }
 
   /** Short-fat QR (reference `sfqr`, `dask_array/linalg/_qr.py:529`) —
@@ -413,109 +343,57 @@ object TSQR {
     (q, qt.matmul(a))
   }
 
-  /** Least squares min ‖Ax − b‖ via TSQR (reference `lstsq`,
-    * `dask_array/linalg/_solve.py:305` — QR-based): x = R⁻¹·(Qᵀb). Qᵀb is
-    * one distributed mat-vec (broadcast b); the k×k back-substitution runs
-    * on the driver. */
-  def lstsq(s: SparkSession, mat: DMatrix, b: Array[Double]): Array[Double] = {
+  /** x = R⁻¹·(Qᵀb) from one [[tsqr]]: Qᵀb is one distributed mat-vec
+    * (broadcast b), the k×k back-substitution runs on the driver, and
+    * Q's cache is released before returning. Returns (x, R). */
+  private def qrSolve(s: SparkSession, mat: DMatrix, b: Array[Double])
+      : (Array[Double], Array[Double]) = {
     require(b.length == mat.rows, "rhs length must match rows")
     val k = mat.cols.toInt
     val (q, r) = tsqr(s, mat)
-    import s.implicits._
-    val bdf = b.zipWithIndex.toSeq.map { case (v, i) => (i.toLong, v) }.toDF("i", "bv")
     val qtb = new Array[Double](k)
-    q.elements.join(broadcast(bdf), "i")
+    q.elements.join(broadcast(vecDF(s, b, "i", "bv")), "i")
       .groupBy("j").agg(sum(expr("v * bv")).as("s"))
       .collect().foreach(row => qtb(row.getLong(0).toInt) = row.getDouble(1))
-    q.df.unpersist() // Q served its one purpose; free the tsqr cache
-    // back-substitute R x = Qᵀb
-    val x = new Array[Double](k)
-    var i = k - 1
-    while (i >= 0) {
-      var acc = qtb(i)
-      var j = i + 1
-      while (j < k) { acc -= r(i * k + j) * x(j); j += 1 }
-      x(i) = acc / r(i * k + i)
-      i -= 1
-    }
-    x
+    q.df.unpersist()
+    (Cholesky.backwardVec(r, qtb, k), r)
   }
+
+  /** A driver vector as a two-column (index, value) table. */
+  private def vecDF(s: SparkSession, x: Array[Double], idx: String, v: String): DataFrame = {
+    import s.implicits._
+    x.zipWithIndex.toSeq.map { case (xv, i) => (i.toLong, xv) }.toDF(idx, v)
+  }
+
+  /** Least squares min ‖Ax − b‖ via TSQR (reference `lstsq`,
+    * `dask_array/linalg/_solve.py:305` — QR-based): x = R⁻¹·(Qᵀb). */
+  def lstsq(s: SparkSession, mat: DMatrix, b: Array[Double]): Array[Double] =
+    qrSolve(s, mat, b)._1
 
   /** lstsq with the reference's full outputs (reference `LstsqRank`/
     * `LstsqSingular`, `linalg/_solve.py:305`): solution, squared residual
     * ‖Ax−b‖² (one distributed pass), numerical rank, singular values.
     * ONE TSQR sweep serves everything — x comes from its R + Qᵀb, the
-    * singular values from the SAME R (sv(A) = sv(R)) — and the Q cache is
-    * released before returning. Requires full column rank for the
-    * solution itself (QR-based). */
+    * singular values from the SAME R (sv(A) = sv(R)). Requires full
+    * column rank for the solution itself (QR-based). */
   def lstsqFull(s: SparkSession, mat: DMatrix, b: Array[Double])
       : (Array[Double], Double, Int, Array[Double]) = {
-    require(b.length == mat.rows, "rhs length must match rows")
-    val k = mat.cols.toInt
-    val (q, r) = tsqr(s, mat)
-    import s.implicits._
-    val bdf0 = b.zipWithIndex.toSeq.map { case (v, i) => (i.toLong, v) }.toDF("i", "bv")
-    val qtb = new Array[Double](k)
-    q.elements.join(broadcast(bdf0), "i")
-      .groupBy("j").agg(sum(expr("v * bv")).as("s"))
-      .collect().foreach(row => qtb(row.getLong(0).toInt) = row.getDouble(1))
-    q.df.unpersist() // tsqr materializes Q; nothing below needs it
-    // back-substitute R x = Qᵀb
-    val x = new Array[Double](k)
-    var i = k - 1
-    while (i >= 0) {
-      var acc = qtb(i)
-      var j = i + 1
-      while (j < k) { acc -= r(i * k + j) * x(j); j += 1 }
-      x(i) = acc / r(i * k + i)
-      i -= 1
-    }
-    // sv(A) = sv(R): reuse the R already in hand
-    val rtr = new Array[Double](k * k)
-    i = 0
-    while (i < k) {
-      var j = 0
-      while (j < k) {
-        var sum0 = 0.0
-        var l = 0
-        while (l < k) { sum0 += r(l * k + i) * r(l * k + j); l += 1 }
-        rtr(i * k + j) = sum0
-        j += 1
-      }
-      i += 1
-    }
-    val sv = symEigvals(rtr, k).map(e => math.sqrt(math.max(e, 0.0)))
+    val (x, r) = qrSolve(s, mat, b)
+    val sv = SVD.localSVD(r, mat.cols.toInt)._2 // sv(A) = sv(R)
     val tol = sv.headOption.getOrElse(0.0) * 1e-12 * math.max(mat.rows, mat.cols)
     val rank = sv.count(_ > tol)
-    val xdf = x.zipWithIndex.toSeq.map { case (v, j) => (j.toLong, v) }.toDF("j", "xv")
     // residual over ALL rows incl. zero rows of A: left join Ax onto b
-    val ax = mat.df.join(broadcast(xdf), "j")
+    val ax = mat.df.join(broadcast(vecDF(s, x, "j", "xv")), "j")
       .groupBy("i").agg(sum(expr("v * xv")).as("axv"))
-    val res = bdf0.join(ax, Seq("i"), "left")
+    val res = vecDF(s, b, "i", "bv").join(ax, Seq("i"), "left")
       .selectExpr("power(bv - coalesce(axv, 0.0), 2) AS r2")
       .agg(sum("r2")).collect()(0).getDouble(0)
     (x, res, rank, sv)
   }
 
-  /** Singular values via TSQR: sv(A) = sv(R) = sqrt(eig(RᵀR)) (reference
-    * `linalg/_svd.py:170` builds SVD from the same TSQR pieces). Uses the
-    * R-only sweep — no Q is ever materialized. */
-  def singularValues(s: SparkSession, mat: DMatrix): Array[Double] = {
-    val k = mat.cols.toInt
-    val r = rFactor(s, mat)
-    val rtr = new Array[Double](k * k)
-    var i = 0
-    while (i < k) {
-      var j = 0
-      while (j < k) {
-        var sum = 0.0
-        var l = 0
-        while (l < k) { sum += r(l * k + i) * r(l * k + j); l += 1 }
-        rtr(i * k + j) = sum
-        j += 1
-      }
-      i += 1
-    }
-    symEigvals(rtr, k).map(e => math.sqrt(math.max(e, 0.0)))
-  }
+  /** Singular values via TSQR: sv(A) = sv(R) = sqrt(eig(RᵀR)), descending
+    * (reference `linalg/_svd.py:170` builds SVD from the same TSQR
+    * pieces). Uses the R-only sweep — no Q is ever materialized. */
+  def singularValues(s: SparkSession, mat: DMatrix): Array[Double] =
+    SVD.localSVD(rFactor(s, mat), mat.cols.toInt)._2
 }

@@ -396,11 +396,7 @@ object Zarr {
     var off = 0
     try {
       while (!inf.finished() && off < rawLen) {
-        val n =
-          try inf.inflate(out, off, rawLen - off)
-          catch { case e: java.util.zip.DataFormatException =>
-            throw new java.io.IOException(s"corrupt zlib chunk: ${e.getMessage}", e)
-          }
+        val n = inf.inflate(out, off, rawLen - off)
         // a truncated chunk makes inflate return 0 with the stream
         // unfinished — fail loudly instead of spinning an executor forever
         if (n == 0 && !inf.finished())
@@ -409,6 +405,14 @@ object Zarr {
               (if (inf.needsInput()) " (truncated input)" else ""))
         off += n
       }
+      if (off < rawLen)
+        throw new java.io.IOException(s"corrupt zlib chunk: only $off/$rawLen bytes")
+      // the stream must END at rawLen: more output is a chunk longer than
+      // its declared volume
+      if (!inf.finished() && (inf.inflate(new Array[Byte](1)) > 0 || !inf.finished()))
+        throw new java.io.IOException(s"corrupt zlib chunk: does not end at $rawLen bytes")
+    } catch { case e: java.util.zip.DataFormatException =>
+      throw new java.io.IOException(s"corrupt zlib chunk: ${e.getMessage}", e)
     } finally inf.end()
     out
   }
@@ -430,6 +434,8 @@ object Zarr {
       if (off < rawLen)
         throw new java.io.IOException(
           s"corrupt gzip chunk: only $off/$rawLen bytes")
+      if (in.read() >= 0)
+        throw new java.io.IOException(s"corrupt gzip chunk: does not end at $rawLen bytes")
       out
     } finally in.close()
   }
@@ -444,7 +450,8 @@ object Zarr {
       case _             => raw
     }
 
-  /** Decompressed chunk payload, at least `rawLen` bytes. */
+  /** Decompressed chunk payload of exactly `rawLen` bytes: a shorter or
+    * longer one is not the chunk's declared volume. */
   private def decompress(bytes: Array[Byte], rawLen: Int,
                          compressor: Option[String]): Array[Byte] = {
     val raw = compressor match {
@@ -458,7 +465,8 @@ object Zarr {
       case Some("blosc") | Some("blosc-bit") => Blosc.decompress(bytes)
       case _             => bytes
     }
-    require(raw.length >= rawLen, s"chunk too short: ${raw.length} < $rawLen")
+    require(raw.length == rawLen,
+      s"chunk holds ${raw.length} bytes, its volume is $rawLen")
     raw
   }
 

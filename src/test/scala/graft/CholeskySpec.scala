@@ -177,24 +177,13 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
     ax.foreach { case (i, v) => assert(math.abs(v - b(i)) < 1e-7, s"Ax($i)=$v") }
   }
 
-  /** Run `body` with the local-tier crossover pinned to `max`. */
-  private def withLocalSolveMax[A](max: Long)(body: => A): A = {
-    val key = "graft.linalg.localSolveMax"
-    val old = sys.props.get(key)
-    sys.props(key) = max.toString
-    try body finally old match {
-      case Some(v) => sys.props(key) = v
-      case None    => sys.props -= key
-    }
-  }
-
   test("solve tiers agree: distributed panel path == local LAPACK path") {
     val n = 48
     val a = spd(n)
     val b = Array.tabulate(n)(i => ((i * 5) % 11).toDouble - 3)
-    // n=48 ≤ default 1024 → local tier; pin max=0 → distributed tier
+    // n=48 ≤ 1024 → local tier; the blocked entry → distributed tier
     val xLocal = Cholesky.solveSPD(spark, a, b, tile = 16)
-    val xDist = withLocalSolveMax(0)(Cholesky.solveSPD(spark, a, b, tile = 16))
+    val xDist = Cholesky.solveSPDBlocked(spark, a, b, tile = 16)
     xLocal.zip(xDist).zipWithIndex.foreach { case ((lv, dv), i) =>
       assert(math.abs(lv - dv) < 1e-8, s"x($i): local $lv vs distributed $dv")
     }
@@ -203,7 +192,7 @@ class CholeskySpec extends AnyFunSuite with BeforeAndAfterAll {
       base.elements.unionByName(DMatrix.eye(spark, n).map(s"v * $n").elements)
         .groupBy("i", "j").agg(sum("v").as("v")), n, n, dense = true)
     val yLocal = Cholesky.solveLU(spark, g, b, tile = 16)
-    val yDist = withLocalSolveMax(0)(Cholesky.solveLU(spark, g, b, tile = 16))
+    val yDist = Cholesky.solveLUBlocked(spark, g, b, tile = 16)
     yLocal.zip(yDist).zipWithIndex.foreach { case ((lv, dv), i) =>
       assert(math.abs(lv - dv) < 1e-8, s"x($i): local $lv vs distributed $dv")
     }

@@ -16,7 +16,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *     z01-z07, z09, z12 (2 each), z08, z10, z11 (4 each), q88 (2),
   *     h01 (2), h03, h04, h05, h06 (1 each), np01, np02 (2 each),
   *     td01 (2), td02 (4).
-  *   The last test pins these store counts, measured again at sf0.01.
+  *   The store test pins these counts, measured again at sf0.01; the
+  *   linalg test pins the blocked-factorization and TSQR driver loops
+  *   (l01-l12) the same way.
   */
 class ConstructionJobsSpec extends AnyFunSuite {
   import TestSpark.spark
@@ -32,15 +34,28 @@ class ConstructionJobsSpec extends AnyFunSuite {
     // gapped matrix, whose zero probe must not launch a job either
     "m10_eye_matmul")
 
-  test("the floor sample builds its DataFrames without launching a job") {
-    val s = spark
-    val sc = s.sparkContext
-    val jobs = floorSample.map { name =>
+  /** Jobs each query launches while its DataFrame is built at sf0.01. */
+  private def constructionJobs(names: Seq[String]): Seq[(String, Int)] = {
+    val sc = spark.sparkContext
+    names.map { name =>
       val group = s"construct-$name"
       sc.setJobGroup(group, "construction")
-      try SparkEntry.queries(name)(s, sf) finally sc.clearJobGroup()
+      try SparkEntry.queries(name)(spark, sf) finally sc.clearJobGroup()
       name -> sc.statusTracker.getJobIdsForGroup(group).length
     }
+  }
+
+  /** Fails on any query over its pinned ceiling, listing every count. */
+  private def assertCeiling(pinned: Map[String, Int]): Unit = {
+    val jobs = constructionJobs(pinned.keys.toSeq.sorted)
+    val over = jobs.filter { case (n, j) => j > pinned(n) }
+    assert(over.isEmpty, over.map { case (n, j) =>
+      s"$n: $j job(s), pinned ${pinned(n)}" }.mkString(", ") +
+      s" (all: ${jobs.map { case (n, j) => s"$n=$j" }.mkString(" ")})")
+  }
+
+  test("the floor sample builds its DataFrames without launching a job") {
+    val jobs = constructionJobs(floorSample)
     assert(jobs.forall(_._2 == 0),
       jobs.filter(_._2 > 0).map { case (n, j) => s"$n: $j job(s)" }.mkString(", "))
   }
@@ -60,17 +75,20 @@ class ConstructionJobsSpec extends AnyFunSuite {
     "td01_tiledb_roundtrip" -> 2, "td02_tiledb_shadow" -> 4)
 
   test("the store round trips launch no more construction jobs than pinned") {
-    val s = spark
-    val sc = s.sparkContext
-    val jobs = storeJobs.keys.toSeq.sorted.map { name =>
-      val group = s"construct-$name"
-      sc.setJobGroup(group, "construction")
-      try SparkEntry.queries(name)(s, sf) finally sc.clearJobGroup()
-      name -> sc.statusTracker.getJobIdsForGroup(group).length
-    }
-    val over = jobs.filter { case (n, j) => j > storeJobs(n) }
-    assert(over.isEmpty, over.map { case (n, j) =>
-      s"$n: $j job(s), pinned ${storeJobs(n)}" }.mkString(", ") +
-      s" (all: ${jobs.map { case (n, j) => s"$n=$j" }.mkString(" ")})")
+    assertCeiling(storeJobs)
+  }
+
+  /** Jobs each linalg query launches while it is built at sf0.01 — the
+    * driver loops of the blocked factorizations and the TSQR tree. A
+    * ceiling, like the store counts: moving a loop into the plan may
+    * lower a count, never raise it. */
+  private val linalgJobs = Map(
+    "l01_tsqr_rtr" -> 3, "l02_svd_frobenius" -> 3, "l03_cholesky_trace" -> 16,
+    "l04_inv" -> 36, "l05_svd_full" -> 23, "l06_svd_compressed" -> 35,
+    "l07_lstsq" -> 11, "l08_solve_lu" -> 1, "l09_lu_reconstruct" -> 15,
+    "l10_solve_spd" -> 1, "l11_sfqr" -> 1, "l12_matrix_norms" -> 0)
+
+  test("the linalg queries launch no more construction jobs than pinned") {
+    assertCeiling(linalgJobs)
   }
 }

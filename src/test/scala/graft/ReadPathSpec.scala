@@ -28,8 +28,8 @@ class ReadPathSpec extends AnyFunSuite {
     "src/main/scala/graft/Verify.scala" -> """spark.read.parquet(s"$outDir/$name")""")
 
   /** The `graft.*` system properties src/main may read: the stream
-    * scratch root, the expression block size and the local-solve cutoff. */
-  private val knobs = Set("graft.stream.tmpdir", "graft.block.size", "graft.linalg.localSolveMax")
+    * scratch root and the expression block size. */
+  private val knobs = Set("graft.stream.tmpdir", "graft.block.size")
 
   private val bareRead = """read\s*\.\s*parquet\s*\(""".r
   private val propRead =

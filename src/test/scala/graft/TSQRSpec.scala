@@ -90,6 +90,20 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(math.abs(r(x) - r1(x)) < 1e-8, s"tree vs flat R mismatch at $x")
   }
 
+  test("rFactor gives tsqr's R bit for bit: multi-level tree, ragged tail, row gaps") {
+    // 530 rows in blocks of 4: 133 blocks, more than splitEvery² = 9, so
+    // both sweeps combine over 4 tree levels; the last block holds 2 rows,
+    // and every block misses its rows with i % 7 = 3, so blocks fall short
+    // of k = 5 rows and take the zero-padding path
+    val n = 530; val k = 5
+    val gapped = new DMatrix(tall(n, k).elements.where("i % 7 <> 3"), n, k, dense = false)
+    val (q, r) = TSQR.tsqr(spark, gapped, blockRows = 4, splitEvery = 3)
+    q.df.unpersist()
+    val rOnly = TSQR.rFactor(spark, gapped, blockRows = 4, splitEvery = 3)
+    def bits(m: Array[Double]) = m.map(java.lang.Double.doubleToLongBits).toSeq
+    assert(bits(rOnly) == bits(r), s"rFactor ${rOnly.toSeq} vs tsqr ${r.toSeq}")
+  }
+
   test("ragged short tail block (rows % blockRows < k) does not crash") {
     val n = 103; val k = 4 // 64 + 32 + 7-row tail < k? no: tail 7 > 4; use blockRows 25 → tail 3
     val a = tall(n, k)

@@ -258,6 +258,29 @@ class ZarrSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage.contains("corrupt zlib chunk"), e.getMessage)
   }
 
+  test("a raw or blosc chunk longer than its volume is rejected, not cut to it") {
+    val vals = Array(1.5, 2.5, 3.5)
+    for (c <- Seq(None, Some("blosc"))) {
+      val e = intercept[IllegalArgumentException](
+        Zarr.decodeChunk(Zarr.encodeChunk(vals, c), 2, c))
+      assert(e.getMessage.contains("24 bytes"), s"$c: ${e.getMessage}")
+    }
+  }
+
+  test("a zlib, gzip or zstd stream must end at the chunk's volume") {
+    val vals = Array.tabulate(64)(_.toDouble)
+    for (c <- Seq("zlib", "gzip", "zstd")) {
+      val full = Zarr.encodeChunk(vals, Some(c))
+      // the stream holds 64 values: declared 32 (over-long) or 128 (short)
+      for (n <- Seq(32, 128)) {
+        val e = intercept[Exception](Zarr.decodeChunk(full, n, Some(c)))
+        assert(e.isInstanceOf[java.io.IOException] || e.isInstanceOf[IllegalArgumentException],
+          s"$c as $n values: $e")
+      }
+      assert(Zarr.decodeChunk(full, 64, Some(c)).sameElements(vals), c)
+    }
+  }
+
   test("v2 blosc accepted (real-world default); unknown compressor rejected") {
     val json =
       """{"chunks": [4], "compressor": {"id": "blosc", "cname": "lz4"},
