@@ -158,8 +158,8 @@ object TSQR {
   }
 
   /** One tree node's combine: its children's k×k R factors, stacked in
-    * rank order and QR'd in-core. Returns (each child's k×k slice of the
-    * stack's Q, keyed by child rank; the node's R). */
+    * id order and QR'd in-core. Returns (each child's k×k slice of the
+    * stack's Q, keyed by child id; the node's R). */
   private def combineRs(children: Iterator[(Long, Array[Double])], k: Int)
       : (Array[(Long, Array[Double])], Array[Double]) = {
     val ch = children.toArray.sortBy(_._1)
@@ -219,19 +219,16 @@ object TSQR {
       .mapGroups { (b, it) => val (ids, q, r) = blockQR(it, k); (b, ids, q, r) }
       .persist()
 
-    // dense ranks for tree addressing (block ids can be sparse); only the
-    // 8-byte ids reach the driver, never the k×k factors
-    val blockIds = blockQRs.map(_._1).collect().sorted
-    val rankOf = blockIds.zipWithIndex.map { case (b, i) => (b, i.toLong) }.toMap
-    val bcRank = s.sparkContext.broadcast(rankOf)
-
-    // upward sweep: (rank, R) → grouped stacks, one level per round;
-    // each level keeps (childRank, parentRank, k×k chunk) distributed
+    // upward sweep: (node id, R) → grouped stacks, one level per round;
+    // each level keeps (child id, parent id, k×k chunk) distributed. Tree
+    // nodes are addressed by block id, as in [[rFactor]], so the round
+    // count follows from the static row count and the two build the
+    // same tree (and R) even when whole row blocks are absent
     val kk = k
-    var rs = blockQRs.map { case (b, _, _, r) => (bcRank.value(b), r) }
+    var rs = blockQRs.map { case (b, _, _, r) => (b, r) }
     var levels = List.empty[org.apache.spark.rdd.RDD[(Long, (Long, Array[Double]))]]
     var cached = List[AnyRef](blockQRs) // everything to free once Q is materialized
-    var width = blockIds.length.toLong
+    var width = (n + blockRows - 1) / blockRows
     while (width > splitEvery) {
       val lvl = rs.groupByKey(_._1 / splitEvery).mapGroups { (parent, it) =>
         val (chunks, rNew) = combineRs(it, kk)
@@ -256,8 +253,8 @@ object TSQR {
     var factors: org.apache.spark.rdd.RDD[(Long, Array[Double])] =
       s.sparkContext.parallelize(top.toSeq)
     levels.foreach { lvl =>
-      factors = lvl.join(factors).map { case (_, ((childRank, chunk), fac)) =>
-        (childRank, mul(chunk, fac, kk, kk, kk))
+      factors = lvl.join(factors).map { case (_, ((child, chunk), fac)) =>
+        (child, mul(chunk, fac, kk, kk, kk))
       }
     }
 
@@ -267,7 +264,7 @@ object TSQR {
     // this, repeated tsqr calls (e.g. svd_compressed power iterations)
     // accumulate dead cached levels in executor storage.
     val qRDD = blockQRs.rdd
-      .map { case (b, ids, q, _) => (bcRank.value(b), (ids, q)) }
+      .map { case (b, ids, q, _) => (b, (ids, q)) }
       .join(factors)
       .flatMap { case (_, ((ids, q), fac)) =>
         val qf = mul(q, fac, ids.length, kk, kk)

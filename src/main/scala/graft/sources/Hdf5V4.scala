@@ -30,8 +30,14 @@ import java.nio.{ByteBuffer, ByteOrder}
   *  - Jenkins lookup3 checksums on every versioned structure the
   *    writer emits, so the files are externally conforming.
   *
-  * The writer ([[h5BytesV4]]) emits exactly this subset so round trips
-  * prove each index codec against itself byte-up — the h03 pattern.
+  * The writers ([[h5BytesV4]], [[h5BytesV4Dense]]) emit exactly this
+  * subset so round trips prove each index codec against itself byte-up
+  * — the h03 pattern. They share one superblock-v3 emitter (`V3File`:
+  * the superblock and lookup3-checksummed `OHDR`s) and one set of
+  * message bodies (dataspace, f8 type, fill value, compact link
+  * messages); chunks come from [[Hdf5.encodeChunks]], the v1 writer's
+  * encoder. The readers use [[Hdf5.Rd]], so every index walk is bounds
+  * checked, and visit each B-tree node once.
   * Scale contract unchanged from [[Hdf5]]: indexes are walked on
   * executors during a distributed binaryFile scan; the stack remains
   * the write-side scale path. */
@@ -153,31 +159,12 @@ object Hdf5V4 {
 
   // ------------------------------------------------------------- readers
 
-  private final class Rd(val bytes: Array[Byte]) {
-    val buf: ByteBuffer = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def u8(p: Int): Int = bytes(p) & 0xff
-    def u16(p: Int): Int = buf.getShort(p) & 0xffff
-    def i32(p: Int): Int = buf.getInt(p)
-    def i64(p: Int): Long = buf.getLong(p)
-    def ascii(p: Int, n: Int): String = new String(bytes, p, n, "ASCII")
-    def varU(p: Int, n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v |= (bytes(p + k) & 0xffL) << (8 * k); k += 1 }
-      v
-    }
-  }
-
-  /** One chunk-index entry in [[Hdf5]]'s shape: (addr, storedSize,
-    * filterMask, element offsets of the chunk corner). */
-  private[sources] type ChunkEntry = (Long, Int, Int, Seq[Long])
+  import Hdf5.{H5Chunk, Rd}
 
   /** Enumerate the chunks of a v4-layout dataset from its index
     * structure. `chunkBytes` is the unfiltered full-chunk byte size
     * (the stored size for every unfiltered index client). */
-  private[sources] def chunkIndex(bytes: Array[Byte], ds: Hdf5.H5Dataset,
-                                  chunkBytes: Long): Seq[ChunkEntry] = {
-    val rd = new Rd(bytes)
+  private[sources] def chunkIndex(rd: Rd, ds: Hdf5.H5Dataset, chunkBytes: Int): Seq[H5Chunk] = {
     val rank = ds.shape.length
     val grid = ds.shape.zip(ds.chunkDims).map { case (s, c) => (s + c - 1) / c }
     val nChunks = grid.product
@@ -200,80 +187,93 @@ object Hdf5V4 {
         else if (filtered) {
           require(ds.idxParams.length == 2,
             s"${ds.name}: filtered single-chunk index missing size/mask")
-          Seq((ds.btreeAddr, ds.idxParams(0).toInt, ds.idxParams(1).toInt,
+          Seq(H5Chunk(ds.btreeAddr, ds.idxParams(0).toInt, ds.idxParams(1).toInt,
             Seq.fill(rank)(0L)))
-        } else Seq((ds.btreeAddr, chunkBytes.toInt, 0, Seq.fill(rank)(0L)))
+        } else Seq(H5Chunk(ds.btreeAddr, chunkBytes, 0, Seq.fill(rank)(0L)))
 
       case 2 => // implicit: unfiltered chunks contiguous in C grid order
         require(!filtered, s"${ds.name}: implicit index cannot carry filters")
         if (ds.btreeAddr == Undef) Nil
-        else (0L until nChunks).map(k =>
-          (ds.btreeAddr + k * chunkBytes, chunkBytes.toInt, 0, cornerOf(k)))
+        else {
+          require(nChunks * chunkBytes <= rd.bytes.length - ds.btreeAddr,
+            s"${ds.name}: $nChunks implicit-index chunks at ${ds.btreeAddr} " +
+              s"run past the ${rd.bytes.length}-byte file")
+          (0L until nChunks).map(k =>
+            H5Chunk(ds.btreeAddr + k * chunkBytes, chunkBytes, 0, cornerOf(k)))
+        }
 
       case 3 => readFixedArray(rd, ds, chunkBytes, cornerOf)
       case 4 => readExtensibleArray(rd, ds, chunkBytes, nChunks, cornerOf)
       case 5 => readBtree2(rd, ds, rank, chunkBytes)
-      case other => sys.error(s"${ds.name}: unknown chunk index type $other")
+      case other => throw new IllegalArgumentException(s"${ds.name}: unknown chunk index type $other")
     }
   }
 
-  private def decodeEntry(rd: Rd, p: Int, entrySize: Int, filtered: Boolean,
-                          chunkBytes: Long): (Long, Int, Int) = {
+  /** One fixed- or extensible-array element at `p`: the chunk address,
+    * then (filtered clients only) its stored size and filter mask. */
+  private def entryAt(rd: Rd, p: Long, entrySize: Int, filtered: Boolean,
+                      chunkBytes: Int, corner: => Seq[Long]): Option[H5Chunk] = {
     val addr = rd.i64(p)
-    if (!filtered) (addr, chunkBytes.toInt, 0)
+    if (addr == Undef) None
+    else if (!filtered) Some(H5Chunk(addr, chunkBytes, 0, corner))
     else {
       val szLen = entrySize - 12
-      (addr, rd.varU(p + 8, szLen).toInt, rd.i32(p + 8 + szLen))
+      Some(H5Chunk(addr, rd.varU(p + 8, szLen).toInt, rd.i32(p + 8 + szLen), corner))
     }
+  }
+
+  /** The header fields shared by the fixed and extensible arrays: the
+    * signature and version, and whether the client is a filtered chunk
+    * index (client 1) or an unfiltered one (client 0). */
+  private def arrayHeader(rd: Rd, h: Long, sig: String, what: String, ds: Hdf5.H5Dataset): Boolean = {
+    require(rd.ascii(h, 4) == sig, s"${ds.name}: bad $what header")
+    require(rd.u8(h + 4) == 0, s"${ds.name}: $what version ${rd.u8(h + 4)}")
+    val client = rd.u8(h + 5)
+    require(client == 0 || client == 1,
+      s"${ds.name}: $what client $client is not a chunk index")
+    val entrySize = rd.u8(h + 6)
+    // address (8), then for a filtered client a 1..8-byte size and a mask (4)
+    require(if (client == 1) entrySize >= 13 && entrySize <= 20 else entrySize == 8,
+      s"${ds.name}: $what element size $entrySize")
+    client == 1
   }
 
   /** `FAHD` header + `FADB` data block (paged or not). */
-  private def readFixedArray(rd: Rd, ds: Hdf5.H5Dataset, chunkBytes: Long,
-                             cornerOf: Long => Seq[Long]): Seq[ChunkEntry] = {
+  private def readFixedArray(rd: Rd, ds: Hdf5.H5Dataset, chunkBytes: Int,
+                             cornerOf: Long => Seq[Long]): Seq[H5Chunk] = {
     if (ds.btreeAddr == Undef) return Nil
-    val h = ds.btreeAddr.toInt
-    require(rd.ascii(h, 4) == "FAHD", s"${ds.name}: bad fixed-array header")
-    require(rd.u8(h + 4) == 0, s"${ds.name}: fixed-array version ${rd.u8(h + 4)}")
-    val client = rd.u8(h + 5)
-    require(client == 0 || client == 1,
-      s"${ds.name}: fixed-array client $client is not a chunk index")
-    val filtered = client == 1
+    val h = ds.btreeAddr
+    val filtered = arrayHeader(rd, h, "FAHD", "fixed-array", ds)
     val entrySize = rd.u8(h + 6)
     val pageBits = rd.u8(h + 7)
     val maxEntries = rd.i64(h + 8)
-    val dblkAddr = rd.i64(h + 16)
-    if (dblkAddr == Undef) return Nil
-    val d = dblkAddr.toInt
+    val d = rd.i64(h + 16)
+    if (d == Undef) return Nil
     require(rd.ascii(d, 4) == "FADB", s"${ds.name}: bad fixed-array data block")
+    require(pageBits < 63, s"${ds.name}: fixed-array page bits $pageBits")
     val pageN = 1L << pageBits
-    val out = Seq.newBuilder[ChunkEntry]
+    val out = Seq.newBuilder[H5Chunk]
     if (maxEntries <= pageN) { // non-paged: entries follow the prefix
       var k = 0L
-      var p = d + 14
       while (k < maxEntries) {
-        val (addr, sz, mask) = decodeEntry(rd, p, entrySize, filtered, chunkBytes)
-        if (addr != Undef) out += ((addr, sz, mask, cornerOf(k)))
-        p += entrySize; k += 1
+        out ++= entryAt(rd, d + 14 + k * entrySize, entrySize, filtered, chunkBytes, cornerOf(k))
+        k += 1
       }
     } else { // paged: init bitmap + checksum, then pages each with a checksum
-      val npages = ((maxEntries + pageN - 1) / pageN).toInt
-      val bmBytes = (npages + 7) / 8
-      var pageStart = d + 14 + bmBytes + 4
-      var pg = 0
+      val npages = (maxEntries + pageN - 1) / pageN
+      var pageStart = d + 14 + (npages + 7) / 8 + 4
+      var pg = 0L
       while (pg < npages) {
-        val inPage = math.min(pageN, maxEntries - pg.toLong * pageN)
-        val live = (rd.u8(d + 14 + pg / 8) & (1 << (pg % 8))) != 0
-        if (live) {
+        val inPage = math.min(pageN, maxEntries - pg * pageN)
+        if ((rd.u8(d + 14 + pg / 8) & (1 << (pg % 8).toInt)) != 0) { // live page
           var j = 0L
-          var p = pageStart
           while (j < inPage) {
-            val (addr, sz, mask) = decodeEntry(rd, p, entrySize, filtered, chunkBytes)
-            if (addr != Undef)
-              out += ((addr, sz, mask, cornerOf(pg.toLong * pageN + j)))
-            p += entrySize; j += 1
+            out ++= entryAt(rd, pageStart + j * entrySize, entrySize, filtered, chunkBytes,
+              cornerOf(pg * pageN + j))
+            j += 1
           }
         }
-        pageStart += (inPage * entrySize).toInt + 4
+        pageStart += inPage * entrySize + 4
         pg += 1
       }
     }
@@ -284,110 +284,100 @@ object Hdf5V4 {
     * `EASB` super blocks. Chunks map to elements by PLAIN C-order grid
     * index — valid when the unlimited dimension is dim 0 (HDF5 swizzles
     * the unlimited dim to the front; for dim 0 that is the identity),
-    * which [[Hdf5.parseDatasetOH]] enforces via maxDims. */
-  private def readExtensibleArray(rd: Rd, ds: Hdf5.H5Dataset, chunkBytes: Long,
+    * which [[Hdf5.parseDatasetOH]] enforces via maxDims. Elements at or
+    * past the header's max index set were never stored. */
+  private def readExtensibleArray(rd: Rd, ds: Hdf5.H5Dataset, chunkBytes: Int,
                                   nChunks: Long,
-                                  cornerOf: Long => Seq[Long]): Seq[ChunkEntry] = {
+                                  cornerOf: Long => Seq[Long]): Seq[H5Chunk] = {
     if (ds.btreeAddr == Undef) return Nil
-    val h = ds.btreeAddr.toInt
-    require(rd.ascii(h, 4) == "EAHD", s"${ds.name}: bad extensible-array header")
-    require(rd.u8(h + 4) == 0, s"${ds.name}: extensible-array version")
-    val client = rd.u8(h + 5)
-    require(client == 0 || client == 1,
-      s"${ds.name}: extensible-array client $client is not a chunk index")
-    val filtered = client == 1
+    val h = ds.btreeAddr
+    val filtered = arrayHeader(rd, h, "EAHD", "extensible-array", ds)
     val es = rd.u8(h + 6)
     val g = EaGeom(idxElmts = rd.u8(h + 8), minElts = rd.u8(h + 9),
       minPtrs = rd.u8(h + 10), maxBits = rd.u8(h + 7), pageBits = rd.u8(h + 11))
-    val iblkAddr = rd.i64(h + 12 + 48)
-    if (iblkAddr == Undef) return Nil
-    val ib = iblkAddr.toInt
+    require(g.pageBits < 63 && g.maxBits <= 64, s"${ds.name}: extensible-array geometry $g")
+    val maxIdxSet = math.min(nChunks, rd.i64(h + 12 + 32))
+    val ib = rd.i64(h + 12 + 48)
+    if (ib == Undef) return Nil
     require(rd.ascii(ib, 4) == "EAIB", s"${ds.name}: bad EA index block")
     val ibElems = ib + 14
     val ibDblks = ibElems + g.idxElmts * es
-    val ibSblks = ibDblks + g.ndblkAddrs * 8
+    val ibSblks = ibDblks + g.ndblkAddrs * 8L
     val pageN = 1L << g.pageBits
     def npagesOf(u: Int): Int =
       if (g.dblkNelmts(u) > pageN) (g.dblkNelmts(u) / pageN).toInt else 0
     // super block layout: prefix(14) + blockOffset + [page-init bitmaps,
     // one byte-aligned block of ceil(npages/8) per data block, when the
     // sblk's data blocks are paged] + dblk addresses. Memoized per u.
-    val sblkLayout = scala.collection.mutable.HashMap.empty[Int, (Int, Int)]
-    def sblkOf(u: Int, sbAddr: Long): (Int, Int) = // (bitmapBase, addrBase)
+    val sblkLayout = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+    def sblkOf(u: Int, s0: Long): (Long, Long) = // (bitmapBase, addrBase)
       sblkLayout.getOrElseUpdate(u, {
-        val s0 = sbAddr.toInt
         require(rd.ascii(s0, 4) == "EASB", s"${ds.name}: bad EA super block")
         val bm = s0 + 14 + g.offSize
         val bmBytes =
-          if (npagesOf(u) > 0) g.ndblks(u) * ((npagesOf(u) + 7) / 8) else 0
+          if (npagesOf(u) > 0) g.ndblks(u).toLong * ((npagesOf(u) + 7) / 8) else 0L
         (bm, bm + bmBytes)
       })
     val dblkSigSeen = scala.collection.mutable.HashSet.empty[Long]
-    val out = Seq.newBuilder[ChunkEntry]
+    val out = Seq.newBuilder[H5Chunk]
     var k = 0L
-    while (k < nChunks) {
-      val p: Int =
-        if (k < g.idxElmts) ibElems + (k * es).toInt
+    while (k < maxIdxSet) {
+      val p: Long =
+        if (k < g.idxElmts) ibElems + k * es
         else {
           val (u, dblkIn, within, startDblk) = g.locate(k - g.idxElmts)
           val globalDblk = startDblk + dblkIn
           val npages = npagesOf(u)
-          var bitmapBase = -1
-          val dblkAddr =
+          var bitmapBase = -1L
+          val db =
             if (u < g.iblkNsblks) {
               require(npages == 0, s"${ds.name}: paged EA data block " +
                 "addressed from the index block — unsupported (no page-init " +
                 "storage exists there); refusing rather than misread")
-              rd.i64(ibDblks + globalDblk * 8)
+              rd.i64(ibDblks + globalDblk * 8L)
             } else {
-              val sbAddr = rd.i64(ibSblks + (u - g.iblkNsblks) * 8)
+              val sbAddr = rd.i64(ibSblks + (u - g.iblkNsblks) * 8L)
               if (sbAddr == Undef) Undef
               else {
                 val (bm, addrs) = sblkOf(u, sbAddr)
                 bitmapBase = bm
-                rd.i64(addrs + dblkIn * 8)
+                rd.i64(addrs + dblkIn * 8L)
               }
             }
-          if (dblkAddr == Undef) -1 // unallocated data block: all fill
+          if (db == Undef) -1L // unallocated data block: all fill
           else {
-            val db = dblkAddr.toInt
-            if (dblkSigSeen.add(dblkAddr))
+            if (dblkSigSeen.add(db))
               require(rd.ascii(db, 4) == "EADB", s"${ds.name}: bad EA data block")
-            if (npages == 0) db + 14 + g.offSize + (within * es).toInt
+            if (npages == 0) db + 14 + g.offSize + within * es
             else {
               // paged: prefix(14) + blockOffset + checksum(4), then pages
               // of pageN elements each followed by their own checksum;
               // an uninitialized page (sblk bitmap bit clear) is fill
-              val page = (within / pageN).toInt
+              val page = within / pageN
               val initSize = (npages + 7) / 8
-              val bit = rd.u8(bitmapBase + dblkIn * initSize + page / 8)
-              if ((bit & (1 << (page % 8))) == 0) -1
-              else db + 18 + g.offSize +
-                page * ((pageN * es).toInt + 4) + ((within % pageN) * es).toInt
+              val bit = rd.u8(bitmapBase + dblkIn.toLong * initSize + page / 8)
+              if ((bit & (1 << (page % 8).toInt)) == 0) -1L
+              else db + 18 + g.offSize + page * (pageN * es + 4) + (within % pageN) * es
             }
           }
         }
-      if (p >= 0) {
-        val (addr, sz, mask) = decodeEntry(rd, p, es, filtered, chunkBytes)
-        if (addr != Undef) out += ((addr, sz, mask, cornerOf(k)))
-      }
+      if (p >= 0) out ++= entryAt(rd, p, es, filtered, chunkBytes, cornerOf(k))
       k += 1
     }
     out.result()
   }
 
-  /** `BTHD` + `BTIN`/`BTLF` walk, record types 10 (unfiltered) and 11
-    * (filtered); any depth — internal-node pointer widths follow the
-    * H5B2 node_info recurrence. Records carry SCALED offsets. */
   /** Generic v2 B-tree record walk: visits every record of the tree at
     * `hdrAddr` in tree order, calling `onRecord(byteOffset)` with the
-    * record's position. Returns the record size from the header, or -1
-    * if the tree is empty/undefined. `okType` gates the header's record
-    * type (chunk indexes use 10/11; dense-group name indexes use 5). */
+    * record's position; any depth — internal-node pointer widths follow
+    * the H5B2 node_info recurrence. `okType` gates the header's record
+    * type (chunk indexes use 10/11; dense-group name indexes use 5).
+    * Every node is visited once, and the depth stays under 64 (deeper
+    * trees overflow the recurrence), so a corrupt pointer cannot loop. */
   private def walkBt2(rd: Rd, hdrAddr: Long, what: String,
-                      okType: Int => Boolean)(onRecord: Int => Unit): Int = {
-    if (hdrAddr == Undef) return -1
-    val h = hdrAddr.toInt
+                      okType: Int => Boolean)(onRecord: Long => Unit): Unit = {
+    if (hdrAddr == Undef) return
+    val h = hdrAddr
     require(rd.ascii(h, 4) == "BTHD", s"$what: bad v2 B-tree header")
     require(rd.u8(h + 4) == 0, s"$what: v2 B-tree version")
     val btType = rd.u8(h + 5)
@@ -397,14 +387,15 @@ object Hdf5V4 {
     val depth = rd.u16(h + 12)
     val rootAddr = rd.i64(h + 16)
     val rootNrec = rd.u16(h + 24)
-    if (rootAddr == Undef) return rrec
+    if (rootAddr == Undef) return
+    require(rrec > 0 && nodeSize > 10 && depth < 64,
+      s"$what: v2 B-tree node size $nodeSize, record size $rrec, depth $depth")
     // node_info recurrence (H5B2hdr): pointer-field widths per level
     val leafMax = (nodeSize - 10) / rrec
     val maxNrecSize = (log2gen(leafMax) + 7) / 8
     val cumMax = new Array[Long](depth + 1)
     val cumMaxSize = new Array[Int](depth + 1)
     cumMax(0) = leafMax
-    cumMaxSize(0) = 0
     var u = 1
     while (u <= depth) {
       val ptr = 8 + maxNrecSize + cumMaxSize(u - 1)
@@ -413,51 +404,48 @@ object Hdf5V4 {
       cumMaxSize(u) = (log2gen(cumMax(u)) + 7) / 8
       u += 1
     }
-    def walk(addr: Long, nrec: Int, level: Int): Unit = {
-      val n = addr.toInt
-      if (level == 0) {
-        require(rd.ascii(n, 4) == "BTLF", s"$what: bad v2 B-tree leaf")
-        var i = 0
-        while (i < nrec) { onRecord(n + 6 + i * rrec); i += 1 }
-      } else {
-        require(rd.ascii(n, 4) == "BTIN", s"$what: bad v2 B-tree internal node")
-        var i = 0
-        while (i < nrec) { onRecord(n + 6 + i * rrec); i += 1 }
-        val ptrBase = n + 6 + nrec * rrec
+    val seen = scala.collection.mutable.HashSet.empty[Long]
+    def walk(n: Long, nrec: Int, level: Int): Unit = {
+      require(seen.add(n), s"$what: v2 B-tree node at $n is reached twice")
+      require(rd.ascii(n, 4) == (if (level == 0) "BTLF" else "BTIN"),
+        s"$what: bad v2 B-tree ${if (level == 0) "leaf" else "internal node"}")
+      var i = 0
+      while (i < nrec) { onRecord(n + 6 + i.toLong * rrec); i += 1 }
+      if (level > 0) {
+        val ptrBase = n + 6 + nrec.toLong * rrec
         val ptrSize = 8 + maxNrecSize + (if (level > 1) cumMaxSize(level - 1) else 0)
         var j = 0
         while (j <= nrec) {
-          val cAddr = rd.i64(ptrBase + j * ptrSize)
-          val cNrec = rd.varU(ptrBase + j * ptrSize + 8, maxNrecSize).toInt
-          walk(cAddr, cNrec, level - 1)
+          val at = ptrBase + j.toLong * ptrSize
+          walk(rd.i64(at), rd.varU(at + 8, maxNrecSize).toInt, level - 1)
           j += 1
         }
       }
     }
     walk(rootAddr, rootNrec, depth)
-    rrec
   }
 
+  /** `BTHD` + `BTIN`/`BTLF` chunk index, record types 10 (unfiltered)
+    * and 11 (filtered). Records carry SCALED offsets. */
   private def readBtree2(rd: Rd, ds: Hdf5.H5Dataset, rank: Int,
-                          chunkBytes: Long): Seq[ChunkEntry] = {
+                         chunkBytes: Int): Seq[H5Chunk] = {
     if (ds.btreeAddr == Undef) return Nil
-    val h = ds.btreeAddr.toInt
+    val h = ds.btreeAddr
     require(rd.ascii(h, 4) == "BTHD", s"${ds.name}: bad v2 B-tree header")
     val btType = rd.u8(h + 5)
     require(btType == 10 || btType == 11,
       s"${ds.name}: v2 B-tree record type $btType is not a chunk index")
     val filtered = btType == 11
-    val rrecHdr = rd.u16(h + 10)
-    val szLen = if (filtered) rrecHdr - 12 - 8 * rank else 0
-    val out = Seq.newBuilder[ChunkEntry]
-    walkBt2(rd, ds.btreeAddr, ds.name, t => t == 10 || t == 11) { p =>
+    val szLen = if (filtered) rd.u16(h + 10) - 12 - 8 * rank else 0
+    require(szLen >= 0 && szLen <= 8, s"${ds.name}: v2 B-tree record size")
+    val out = Seq.newBuilder[H5Chunk]
+    walkBt2(rd, h, ds.name, t => t == 10 || t == 11) { p =>
       val addr = rd.i64(p)
       val (sz, mask, offBase) =
-        if (filtered) (rd.varU(p + 8, szLen).toInt, rd.i32(p + 8 + szLen),
-          p + 12 + szLen)
-        else (chunkBytes.toInt, 0, p + 8)
+        if (filtered) (rd.varU(p + 8, szLen).toInt, rd.i32(p + 8 + szLen), p + 12 + szLen)
+        else (chunkBytes, 0, p + 8)
       val corner = (0 until rank).map(a => rd.i64(offBase + 8 * a) * ds.chunkDims(a))
-      if (addr != Undef) out += ((addr, sz, mask, corner))
+      if (addr != Undef) out += H5Chunk(addr, sz, mask, corner)
     }
     out.result()
   }
@@ -485,12 +473,11 @@ object Hdf5V4 {
     * space at the default cparams — thousands of links; child
     * INDIRECT blocks would mean ~100k+ links in one group).
     * Returns (linkName, objectHeaderAddr) pairs, hard links only. */
-  private[sources] def denseLinks(bytes: Array[Byte], heapAddr: Long,
+  private[sources] def denseLinks(rd: Rd, heapAddr: Long,
                                   nameBtAddr: Long): Seq[(String, Long)] = {
-    val rd = new Rd(bytes)
     require(heapAddr != Undef && nameBtAddr != Undef,
       "dense group without fractal heap + name index addresses")
-    val h = heapAddr.toInt
+    val h = heapAddr
     require(rd.ascii(h, 4) == "FRHP", "bad fractal heap signature")
     require(rd.u8(h + 4) == 0, s"fractal heap version ${rd.u8(h + 4)}")
     val idLen = rd.u16(h + 5)
@@ -525,7 +512,7 @@ object Hdf5V4 {
     def rowSize(r: Int): Long = if (r < 2) startBlk else startBlk << (r - 1)
     val fileAddrOf: Long => Long =
       if (curRows == 0) { // root IS a direct block covering [0, size)
-        require(rd.ascii(rootAddr.toInt, 4) == "FHDB", "bad root direct block")
+        require(rd.ascii(rootAddr, 4) == "FHDB", "bad root direct block")
         off => {
           require(off >= dblkHdr, s"heap offset $off inside the block header")
           rootAddr + off
@@ -535,16 +522,15 @@ object Hdf5V4 {
           s"fractal heap root indirect block has $curRows rows (> " +
             s"$maxDirectRows direct rows) — child indirect blocks " +
             "unsupported, refusing rather than misread links")
-        val fib = rootAddr.toInt
-        require(rd.ascii(fib, 4) == "FHIB", "bad root indirect block")
+        require(rd.ascii(rootAddr, 4) == "FHIB", "bad root indirect block")
         // (heapOff, size, fileAddr) per allocated child direct block
-        val entryBase = fib + 5 + 8 + offSize
+        val entryBase = rootAddr + 5 + 8 + offSize
         val blocks = Seq.newBuilder[(Long, Long, Long)]
         var heapOff = 0L
         var k = 0
         while (k < curRows * width) {
           val sz = rowSize(k / width)
-          val addr = rd.i64(entryBase + 8 * k)
+          val addr = rd.i64(entryBase + 8L * k)
           if (addr != Undef) blocks += ((heapOff, sz, addr))
           heapOff += sz
           k += 1
@@ -555,7 +541,8 @@ object Hdf5V4 {
             require(off - bOff >= dblkHdr,
               s"heap offset $off inside a direct block header")
             bAddr + (off - bOff)
-          case None => sys.error(s"heap offset $off outside every direct block")
+          case None => throw new IllegalArgumentException(
+            s"heap offset $off outside every direct block")
         }
       }
 
@@ -563,35 +550,103 @@ object Hdf5V4 {
     // parse each managed heap object as a version-1 link message body
     val links = Seq.newBuilder[(String, Long)]
     walkBt2(rd, nameBtAddr, "dense-group name index", _ == 5) { rec =>
-      val idAt = rec + 4
-      val idFlags = rd.u8(idAt)
+      val idFlags = rd.u8(rec + 4)
       require((idFlags & 0xf0) == 0, // version 0 (bits 6-7), managed (bits 4-5)
         f"heap id version/type byte 0x$idFlags%02x is not a managed v0 id")
-      val heapOff = rd.varU(idAt + 1, offSize)
-      val p0 = fileAddrOf(heapOff).toInt
-      // link message body, version 1 (same wire format as message 0x06)
-      require(rd.u8(p0) == 1, s"link message version ${rd.u8(p0)} in heap")
-      val lflags = rd.u8(p0 + 1)
-      var p = p0 + 2
-      val linkType =
-        if ((lflags & 0x08) != 0) { val t = rd.u8(p); p += 1; t } else 0
-      if ((lflags & 0x04) != 0) p += 8 // creation order
-      if ((lflags & 0x10) != 0) p += 1 // charset
-      val nlenSize = 1 << (lflags & 0x03)
-      val nameLen = rd.varU(p, nlenSize)
-      p += nlenSize
-      val name = rd.ascii(p, nameLen.toInt)
-      p += nameLen.toInt
-      // same loud-reject policy as the compact and v0 paths
-      require(linkType == 0,
-        s"'$name': link type $linkType (soft/external) unsupported — " +
-          "refusing rather than skip silently")
-      links += ((name, rd.i64(p)))
+      links += Hdf5.linkAt(rd, fileAddrOf(rd.varU(rec + 5, offSize)))
     }
     links.result()
   }
 
   // ------------------------------------------------------------- writer
+
+  /** `v` as an `n`-byte little-endian field. */
+  private def putVarU(b: ByteBuffer, v: Long, n: Int): Unit = {
+    var x = v
+    var k = 0
+    while (k < n) { b.put((x & 0xff).toByte); x >>>= 8; k += 1 }
+  }
+
+  /** A structure's signature and version byte (0). */
+  private def putSig(b: ByteBuffer, sig: String): Unit = {
+    b.put(sig.getBytes("ASCII")); b.put(0.toByte)
+  }
+
+  /** A message body of exactly `n` bytes, written by `f`. */
+  private def body(n: Int)(f: ByteBuffer => Unit): Array[Byte] = {
+    val b = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
+    f(b)
+    require(b.position() == n, s"body wrote ${b.position()} of $n")
+    b.array()
+  }
+
+  private def ohdrSize(messages: Seq[(Int, Array[Byte])]): Int =
+    10 + messages.map(4 + _._2.length).sum + 4
+
+  /** A dataset's object-header messages: dataspace v2 (with max dims,
+    * dim 0 unlimited, when `unlimited0`), the f8 type, fill value v3
+    * (undefined), then `rest`. */
+  private def datasetMsgs(shape: Seq[Long], unlimited0: Boolean,
+                          rest: Seq[(Int, Array[Byte])]): Seq[(Int, Array[Byte])] = {
+    val space = body(4 + 8 * shape.length * (if (unlimited0) 2 else 1)) { b =>
+      b.put(2.toByte); b.put(shape.length.toByte)
+      b.put((if (unlimited0) 1 else 0).toByte); b.put(1.toByte) // flags, simple
+      shape.foreach(b.putLong)
+      if (unlimited0) { b.putLong(Undef); shape.tail.foreach(b.putLong) }
+    }
+    val fill = body(2) { b => b.put(3.toByte); b.put(0x12.toByte) }
+    Seq(0x0001 -> space, 0x0003 -> Hdf5.F8Type, 0x0005 -> fill) ++ rest
+  }
+
+  /** A version-1 hard-link message body (1-byte name length). */
+  private def linkMsg(nm: String, target: Long): Array[Byte] =
+    body(2 + 1 + nm.length + 8) { b =>
+      b.put(1.toByte); b.put(0.toByte) // version, flags: 1-byte name len, hard
+      b.put(nm.length.toByte); b.put(nm.getBytes("ASCII"))
+      b.putLong(target)
+    }
+
+  /** A group's object-header messages: link info (dense storage when
+    * `heap` and `nameIndex` are defined), group info, and one compact
+    * link message per entry of `links`. */
+  private def groupMsgs(links: Seq[(String, Long)], heap: Long = Undef,
+                        nameIndex: Long = Undef): Seq[(Int, Array[Byte])] =
+    Seq(0x0002 -> body(18) { b =>
+      b.put(0.toByte); b.put(0.toByte) // version, flags: no creation order
+      b.putLong(heap); b.putLong(nameIndex)
+    }, 0x000A -> body(2) { b => b.put(0.toByte); b.put(0.toByte) }) ++
+      links.map { case (nm, at) => 0x0006 -> linkMsg(nm, at) }
+
+  /** The one superblock-v3 file emitter: the whole file's buffer with
+    * the superblock written, and the checksummed object headers both
+    * latest-format writers put into it. */
+  private final class V3File(eof: Long, rootOh: Long) {
+    require(eof <= Int.MaxValue, s"file would be $eof bytes (> 2 GiB)")
+    val buf: ByteBuffer = ByteBuffer.allocate(eof.toInt).order(ByteOrder.LITTLE_ENDIAN)
+
+    /** Appends the lookup3 checksum of the bytes from `start` on. */
+    def cksumAt(start: Int): Unit =
+      buf.putInt(lookup3(buf.array(), start, buf.position() - start))
+
+    def ohdr(addr: Long, messages: Seq[(Int, Array[Byte])]): Unit = {
+      require(buf.position() == addr, s"OHDR at ${buf.position()} != $addr")
+      val start = buf.position()
+      buf.put("OHDR".getBytes("ASCII"))
+      buf.put(2.toByte); buf.put(0x02.toByte) // flags: 4-byte chunk-0 size
+      buf.putInt(messages.map(4 + _._2.length).sum)
+      messages.foreach { case (t, b) =>
+        buf.put(t.toByte); buf.putShort(b.length.toShort); buf.put(0.toByte)
+        buf.put(b)
+      }
+      cksumAt(start)
+    }
+
+    buf.put(Hdf5.Sig)
+    buf.put(3.toByte); buf.put(8.toByte); buf.put(8.toByte); buf.put(0.toByte)
+    buf.putLong(0L); buf.putLong(Undef); buf.putLong(eof)
+    buf.putLong(rootOh)
+    cksumAt(0)
+  }
 
   /** Serialize ONE float64 dataset as a superblock-v3 / v2-object-header
     * / layout-v4 file — the `libver='latest'` shape — with the chosen
@@ -605,110 +660,24 @@ object Hdf5V4 {
                 deflate: Boolean = false, shuffle: Boolean = false,
                 fletcher: Boolean = false, faPageBits: Int = 10,
                 eaPageBits: Int = 10): Array[Byte] = {
-    require(vals.length.toLong == shape.product,
-      s"$name: ${vals.length} values for shape $shape")
-    require(chunkDims.length == shape.length && chunkDims.forall(_ > 0),
-      s"$name: bad chunk dims $chunkDims for shape $shape")
-    require(name.nonEmpty && !name.contains('/'), s"bad dataset name '$name'")
+    Hdf5.checkChunked(name, vals, shape, chunkDims)
+    require(Seq("single", "implicit", "fixed", "ext", "btree2").contains(indexType),
+      s"unknown index type '$indexType'")
     val rank = shape.length
     val grid = shape.zip(chunkDims).map { case (s, c) => (s + c - 1) / c }
-    val cElems = chunkDims.product.toInt
-    val chunkBytes = cElems.toLong * 8
-    val filters: Seq[Int] = (if (shuffle) Seq(2) else Nil) ++
-      (if (deflate) Seq(1) else Nil) ++ (if (fletcher) Seq(3) else Nil)
+    val filters = Hdf5.filterIds(deflate, shuffle, fletcher)
     val filtered = filters.nonEmpty
     val isExt = indexType == "ext"
     if (indexType == "single")
       require(grid.product == 1, s"single-chunk index needs one chunk, grid $grid")
     if (indexType == "implicit")
       require(!filtered, "implicit index cannot carry filters")
-
-    // ---- chunk blobs in C grid order (corner offsets + filtered bytes)
-    val rowStrides = shape.scanRight(1L)(_ * _).tail
-    val corners = grid.foldLeft(Seq(Seq.empty[Long])) { (acc, g) =>
-      acc.flatMap(pre => (0L until g).map(k => pre :+ k))
-    }
-    val blobs: Seq[(Seq[Long], Array[Byte])] = corners.map { scaled =>
-      val off = scaled.zip(chunkDims).map { case (c, d) => c * d }
-      val buf = ByteBuffer.allocate(cElems * 8).order(ByteOrder.LITTLE_ENDIAN)
-      val local = new Array[Long](rank)
-      var i = 0
-      while (i < cElems) {
-        var inBounds = true
-        var flat = 0L
-        var a = 0
-        while (a < rank) {
-          val g = off(a) + local(a)
-          if (g >= shape(a)) { inBounds = false; a = rank }
-          else { flat += g * rowStrides(a); a += 1 }
-        }
-        buf.putDouble(if (inBounds) vals(flat.toInt) else 0.0)
-        var d = rank - 1
-        while (d >= 0) {
-          local(d) += 1
-          if (local(d) < chunkDims(d)) d = -1 else { local(d) = 0; d -= 1 }
-        }
-        i += 1
-      }
-      var payload = buf.array()
-      filters.foreach {
-        case 2 =>
-          val es = 8; val n = payload.length / es
-          val sh = new Array[Byte](payload.length)
-          var j = 0
-          while (j < es) {
-            var i2 = 0
-            while (i2 < n) { sh(j * n + i2) = payload(i2 * es + j); i2 += 1 }
-            j += 1
-          }
-          payload = sh
-        case 1 =>
-          val d = new java.util.zip.Deflater(6)
-          d.setInput(payload); d.finish()
-          val out = new java.io.ByteArrayOutputStream(payload.length)
-          val tmp = new Array[Byte](65536)
-          while (!d.finished()) out.write(tmp, 0, d.deflate(tmp))
-          d.end()
-          payload = out.toByteArray
-        case 3 =>
-          val ck = fletcher32(payload, 0, payload.length)
-          val w = ByteBuffer.allocate(payload.length + 4)
-            .order(ByteOrder.LITTLE_ENDIAN)
-          w.put(payload); w.putInt(ck)
-          payload = w.array()
-      }
-      (scaled, payload)
-    }
+    val blobs = Hdf5.encodeChunks(vals, shape, chunkDims, filters)
     val nChunks = blobs.size
-    val szLen = chunkSizeLen(chunkBytes)
+    val szLen = chunkSizeLen(chunkDims.product * 8)
+    val client = (if (filtered) 1 else 0).toByte
 
-    // ---- dataset OHDR message bodies (sizes first, bytes below)
-    val spaceBody = 4 + 8 * rank + (if (isExt) 8 * rank else 0)
-    val filterBody =
-      if (!filtered) -1
-      else 2 + filters.map(id => if (id == 3) 6 else 10).sum
-    val typeSpec = indexType match {
-      case "single"   => if (filtered) 12 else 0
-      case "implicit" => 0
-      case "fixed"    => 1
-      case "ext"      => 5
-      case "btree2"   => 6
-      case other      => sys.error(s"unknown index type '$other'")
-    }
-    val layoutBody = 5 + (rank + 1) * 8 + 1 + typeSpec + 8
-    val bodies0 = Seq(0x0001 -> spaceBody, 0x0003 -> 24, 0x0005 -> 2) ++
-      (if (filtered) Seq(0x000B -> filterBody) else Nil) ++
-      Seq(0x0008 -> layoutBody)
-    def ohdrSize(bodies: Seq[(Int, Int)]): Int =
-      10 + bodies.map(4 + _._2).sum + 4
-    val dsOhAddr = 48L
-    val dsOhSize = ohdrSize(bodies0)
-    val rootOhAddr = dsOhAddr + dsOhSize
-    val linkBody = 2 + 1 + name.length + 8
-    val rootOhSize = ohdrSize(Seq(0x0002 -> 18, 0x000A -> 2, 0x0006 -> linkBody))
-    val idxAddr = rootOhAddr + rootOhSize
-
-    // ---- index geometry / size
+    // ---- index geometry
     val es = if (filtered) 8 + szLen + 4 else 8
     val faPageN = 1L << faPageBits
     val faPaged = indexType == "fixed" && nChunks > faPageN
@@ -781,165 +750,102 @@ object Hdf5V4 {
     val idxSize: Long = indexType match {
       case "single" | "implicit" => 0L
       case "fixed" =>
-        28L + (if (!faPaged) 14L + nChunks.toLong * es + 4
-        else {
-          val bm = (faNPages + 7) / 8
-          var sz = 14L + bm + 4
-          var pg = 0
-          while (pg < faNPages) {
-            sz += math.min(faPageN, nChunks - pg.toLong * faPageN) * es + 4
-            pg += 1
-          }
-          sz
-        })
+        28L + 14L + (if (!faPaged) nChunks.toLong * es + 4
+        else (faNPages + 7) / 8 + 4 + nChunks.toLong * es + 4L * faNPages)
       case "ext" =>
         72L + eaIbSize + eaDblks.map(d => eaDbSize(d._1).toLong).sum +
           eaSblksUsed.map(u => eaSbSize(u).toLong).sum
       case "btree2" =>
         38L + (if (btDepth == 0) 1 else btLeafPlan.size + 1).toLong * btNodeSize
     }
-    val dataBase = idxAddr + idxSize
-    val dataAddrs = blobs.map(_._2.length.toLong).scanLeft(dataBase)(_ + _)
-    val eof = dataAddrs.last
-    require(eof <= Int.MaxValue, s"file would be $eof bytes (> 2 GiB)")
 
-    val buf = ByteBuffer.allocate(eof.toInt).order(ByteOrder.LITTLE_ENDIAN)
-    def cksumAt(start: Int): Unit = { // lookup3 over [start, pos), appended
-      val p = buf.position()
-      buf.putInt(lookup3(buf.array(), start, p - start))
-    }
-    // ---- superblock v3
-    buf.put(Array(0x89.toByte, 'H'.toByte, 'D'.toByte, 'F'.toByte,
-      '\r'.toByte, '\n'.toByte, 0x1a.toByte, '\n'.toByte))
-    buf.put(3.toByte); buf.put(8.toByte); buf.put(8.toByte); buf.put(0.toByte)
-    buf.putLong(0L); buf.putLong(Undef); buf.putLong(eof)
-    buf.putLong(rootOhAddr)
-    cksumAt(0)
-    require(buf.position() == 48, s"superblock size ${buf.position()}")
-
-    // ---- OHDR assembly helper
-    def ohdr(addr: Long, messages: Seq[(Int, Array[Byte])]): Unit = {
-      require(buf.position() == addr.toInt, s"OHDR at ${buf.position()} != $addr")
-      val start = buf.position()
-      buf.put("OHDR".getBytes("ASCII"))
-      buf.put(2.toByte); buf.put(0x02.toByte) // flags: 4-byte chunk-0 size
-      buf.putInt(messages.map(4 + _._2.length).sum)
-      messages.foreach { case (t, b) =>
-        buf.put(t.toByte); buf.putShort(b.length.toShort); buf.put(0.toByte)
-        buf.put(b)
-      }
-      cksumAt(start)
-    }
-    def body(n: Int)(f: ByteBuffer => Unit): Array[Byte] = {
-      val b = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
-      f(b)
-      require(b.position() == n, s"body wrote ${b.position()} of $n")
-      b.array()
-    }
-    // ---- dataset OHDR
-    val spaceMsg = body(spaceBody) { b =>
-      b.put(2.toByte); b.put(rank.toByte)
-      b.put((if (isExt) 1 else 0).toByte); b.put(1.toByte) // flags, simple
-      shape.foreach(b.putLong)
-      if (isExt) { b.putLong(Undef); shape.tail.foreach(b.putLong) } // dim 0 unlimited
-    }
-    val dtypeMsg = body(24) { b =>
-      b.put(0x11.toByte); b.put(0x20.toByte); b.put(0x3f.toByte); b.put(0.toByte)
-      b.putInt(8); b.putShort(0); b.putShort(64)
-      b.put(52.toByte); b.put(11.toByte); b.put(0.toByte); b.put(52.toByte)
-      b.putInt(1023); b.putInt(0)
-    }
-    val fillMsg = body(2) { b => b.put(3.toByte); b.put(0x12.toByte) }
-    val filterMsg = if (!filtered) null else body(filterBody) { b =>
+    // ---- object headers (their sizes do not depend on the addresses)
+    val filterMsg = body(2 + filters.map(id => if (id == 3) 6 else 10).sum) { b =>
       b.put(2.toByte); b.put(filters.size.toByte)
       filters.foreach { id =>
-        b.putShort(id.toShort); b.putShort(if (id == 3) 0 else 0) // flags
+        b.putShort(id.toShort); b.putShort(0) // flags
         if (id == 3) b.putShort(0) // no client values
         else { b.putShort(1); b.putInt(if (id == 1) 6 else 8) }
       }
     }
-    val layoutMsg = body(layoutBody) { b =>
-      b.put(4.toByte); b.put(2.toByte)
-      b.put((if (indexType == "single" && filtered) 0x02 else 0x00).toByte)
-      b.put((rank + 1).toByte); b.put(8.toByte)
-      chunkDims.foreach(b.putLong); b.putLong(8L) // trailing element size
-      indexType match {
-        case "single" =>
-          b.put(1.toByte)
-          if (filtered) { b.putLong(blobs.head._2.length.toLong); b.putInt(0) }
-          b.putLong(dataAddrs(0))
-        case "implicit" =>
-          b.put(2.toByte); b.putLong(dataBase)
-        case "fixed" =>
-          b.put(3.toByte); b.put(faPageBits.toByte); b.putLong(idxAddr)
-        case "ext" =>
-          b.put(4.toByte)
-          b.put(eaG.maxBits.toByte); b.put(eaG.idxElmts.toByte)
-          b.put(eaG.minPtrs.toByte); b.put(eaG.minElts.toByte)
-          b.put(eaG.pageBits.toByte)
-          b.putLong(idxAddr)
-        case "btree2" =>
-          b.put(5.toByte); b.putInt(btNodeSize)
-          b.put(100.toByte); b.put(40.toByte)
-          b.putLong(idxAddr)
-      }
+    val typeSpec = indexType match {
+      case "single" => if (filtered) 12 else 0
+      case "implicit" => 0
+      case "fixed" => 1
+      case "ext" => 5
+      case "btree2" => 6
     }
-    ohdr(dsOhAddr, Seq(0x0001 -> spaceMsg, 0x0003 -> dtypeMsg, 0x0005 -> fillMsg) ++
-      (if (filtered) Seq(0x000B -> filterMsg) else Nil) ++ Seq(0x0008 -> layoutMsg))
-    // ---- root group OHDR: link info + group info + one hard link
-    val linkInfo = body(18) { b =>
-      b.put(0.toByte); b.put(0.toByte); b.putLong(Undef); b.putLong(Undef)
-    }
-    val groupInfo = body(2) { b => b.put(0.toByte); b.put(0.toByte) }
-    val linkMsg = body(linkBody) { b =>
-      b.put(1.toByte); b.put(0.toByte) // version, flags: 1-byte name len, hard
-      b.put(name.length.toByte); b.put(name.getBytes("ASCII"))
-      b.putLong(dsOhAddr)
-    }
-    ohdr(rootOhAddr,
-      Seq(0x0002 -> linkInfo, 0x000A -> groupInfo, 0x0006 -> linkMsg))
+    def dsMsgs(idxAddr: Long, dataBase: Long) = datasetMsgs(shape, isExt,
+      (if (filtered) Seq(0x000B -> filterMsg) else Nil) :+
+        0x0008 -> body(5 + (rank + 1) * 8 + 1 + typeSpec + 8) { b =>
+          b.put(4.toByte); b.put(2.toByte)
+          b.put((if (indexType == "single" && filtered) 0x02 else 0x00).toByte)
+          b.put((rank + 1).toByte); b.put(8.toByte)
+          chunkDims.foreach(b.putLong); b.putLong(8L) // trailing element size
+          indexType match {
+            case "single" =>
+              b.put(1.toByte)
+              if (filtered) { b.putLong(blobs.head._2.length.toLong); b.putInt(0) }
+              b.putLong(dataBase)
+            case "implicit" =>
+              b.put(2.toByte); b.putLong(dataBase)
+            case "fixed" =>
+              b.put(3.toByte); b.put(faPageBits.toByte); b.putLong(idxAddr)
+            case "ext" =>
+              b.put(4.toByte)
+              b.put(eaG.maxBits.toByte); b.put(eaG.idxElmts.toByte)
+              b.put(eaG.minPtrs.toByte); b.put(eaG.minElts.toByte)
+              b.put(eaG.pageBits.toByte)
+              b.putLong(idxAddr)
+            case "btree2" =>
+              b.put(5.toByte); b.putInt(btNodeSize)
+              b.put(100.toByte); b.put(40.toByte)
+              b.putLong(idxAddr)
+          }
+        })
+    val dsOhAddr = 48L
+    val rootOhAddr = dsOhAddr + ohdrSize(dsMsgs(0L, 0L))
+    val rootMsgs = groupMsgs(Seq(name -> dsOhAddr))
+    val idxAddr = rootOhAddr + ohdrSize(rootMsgs)
+    val dataBase = idxAddr + idxSize
+    val dataAddrs = blobs.map(_._2.length.toLong).scanLeft(dataBase)(_ + _)
+
+    val file = new V3File(dataAddrs.last, rootOhAddr)
+    val buf = file.buf
+    file.ohdr(dsOhAddr, dsMsgs(idxAddr, dataBase))
+    file.ohdr(rootOhAddr, rootMsgs)
 
     // ---- the index structure
-    def putEntry(k: Int): Unit = {
-      buf.putLong(dataAddrs(k))
-      if (filtered) {
-        var v = blobs(k)._2.length.toLong
-        var b = 0
-        while (b < szLen) { buf.put((v & 0xff).toByte); v >>>= 8; b += 1 }
-        buf.putInt(0) // filter mask
-      }
+    def putEntry(b: ByteBuffer, k: Int): Unit = {
+      b.putLong(dataAddrs(k))
+      if (filtered) { putVarU(b, blobs(k)._2.length, szLen); b.putInt(0) } // size, mask
     }
+    def putElement(k: Int): Unit = // an extensible-array slot, unset past the chunks
+      if (k < nChunks) putEntry(buf, k) else { buf.putLong(Undef); buf.put(new Array[Byte](es - 8)) }
     indexType match {
       case "single" | "implicit" => ()
       case "fixed" =>
         val h0 = buf.position()
-        buf.put("FAHD".getBytes("ASCII")); buf.put(0.toByte)
-        buf.put((if (filtered) 1 else 0).toByte)
+        putSig(buf, "FAHD"); buf.put(client)
         buf.put(es.toByte); buf.put(faPageBits.toByte)
         buf.putLong(nChunks.toLong); buf.putLong(idxAddr + 28)
-        cksumAt(h0)
+        file.cksumAt(h0)
         val d0 = buf.position()
-        buf.put("FADB".getBytes("ASCII")); buf.put(0.toByte)
-        buf.put((if (filtered) 1 else 0).toByte)
+        putSig(buf, "FADB"); buf.put(client)
         buf.putLong(idxAddr)
         if (!faPaged) {
-          (0 until nChunks).foreach(putEntry)
-          cksumAt(d0)
+          (0 until nChunks).foreach(putEntry(buf, _))
+          file.cksumAt(d0)
         } else {
-          val bm = (faNPages + 7) / 8
-          (0 until bm).foreach(i => buf.put({ // all pages initialized
-            var m = 0
-            (0 until 8).foreach(b => if (i * 8 + b < faNPages) m |= (1 << b))
-            m.toByte
-          }))
-          cksumAt(d0)
-          var pg = 0
-          while (pg < faNPages) {
+          (0 until (faNPages + 7) / 8).foreach { i => // all pages initialized
+            buf.put(((1 << math.min(8, faNPages - i * 8)) - 1).toByte)
+          }
+          file.cksumAt(d0)
+          (0 until faNPages).foreach { pg =>
             val p0 = buf.position()
-            val inPage = math.min(faPageN, nChunks - pg.toLong * faPageN).toInt
-            (0 until inPage).foreach(j => putEntry((pg * faPageN).toInt + j))
-            cksumAt(p0)
-            pg += 1
+            val inPage = math.min(faPageN, nChunks - pg * faPageN).toInt
+            (0 until inPage).foreach(j => putEntry(buf, (pg * faPageN).toInt + j))
+            file.cksumAt(p0)
           }
         }
       case "ext" =>
@@ -951,8 +857,7 @@ object Hdf5V4 {
         eaDblks.foreach { case (u, g, _) => dbAddrs(g) = cur; cur += eaDbSize(u) }
         // EAHD
         val h0 = buf.position()
-        buf.put("EAHD".getBytes("ASCII")); buf.put(0.toByte)
-        buf.put((if (filtered) 1 else 0).toByte)
+        putSig(buf, "EAHD"); buf.put(client)
         buf.put(es.toByte); buf.put(eaG.maxBits.toByte)
         buf.put(eaG.idxElmts.toByte); buf.put(eaG.minElts.toByte)
         buf.put(eaG.minPtrs.toByte); buf.put(eaG.pageBits.toByte)
@@ -960,41 +865,32 @@ object Hdf5V4 {
         buf.putLong(eaSblksUsed.map(u => eaSbSize(u).toLong).sum)
         buf.putLong(eaDblks.size.toLong)
         buf.putLong(eaDblks.map(d => eaDbSize(d._1).toLong).sum)
-        buf.putLong(nChunks.toLong); buf.putLong(nChunks.toLong)
+        buf.putLong(nChunks.toLong); buf.putLong(nChunks.toLong) // max index set, realized
         buf.putLong(ibAddr)
-        cksumAt(h0)
+        file.cksumAt(h0)
         // EAIB
         val i0 = buf.position()
-        buf.put("EAIB".getBytes("ASCII")); buf.put(0.toByte)
-        buf.put((if (filtered) 1 else 0).toByte)
+        putSig(buf, "EAIB"); buf.put(client)
         buf.putLong(idxAddr)
-        (0 until eaG.idxElmts).foreach { k =>
-          if (k < nChunks) putEntry(k)
-          else { buf.putLong(Undef); (0 until es - 8).foreach(_ => buf.put(0.toByte)) }
-        }
-        (0 until eaG.ndblkAddrs).foreach(g =>
-          buf.putLong(dbAddrs.getOrElse(g, Undef)))
+        (0 until eaG.idxElmts).foreach(putElement)
+        (0 until eaG.ndblkAddrs).foreach(g => buf.putLong(dbAddrs.getOrElse(g, Undef)))
         (0 until eaG.nsblkAddrs).foreach(i =>
           buf.putLong(sbAddrs.getOrElse(eaG.iblkNsblks + i, Undef)))
-        cksumAt(i0)
+        file.cksumAt(i0)
         // EASBs
         eaSblksUsed.foreach { u =>
           val s0 = buf.position()
-          require(s0 == sbAddrs(u).toInt)
-          buf.put("EASB".getBytes("ASCII")); buf.put(0.toByte)
-          buf.put((if (filtered) 1 else 0).toByte)
+          require(s0 == sbAddrs(u))
+          putSig(buf, "EASB"); buf.put(client)
           buf.putLong(idxAddr)
-          (0 until eaG.offSize).foreach(_ => buf.put(0.toByte)) // block offset
+          putVarU(buf, 0L, eaG.offSize) // block offset
           if (eaNpages(u) > 0) { // page-init bitmaps: all pages written
             val initSize = (eaNpages(u) + 7) / 8
-            (0 until eaG.ndblks(u) * initSize).foreach(_ => buf.put(0xFF.toByte))
+            buf.put(Array.fill(eaG.ndblks(u) * initSize)(0xFF.toByte))
           }
-          val first = eaDblks.indexWhere(_._1 == u)
-          (0 until eaG.ndblks(u)).foreach { j =>
-            val g = eaDblks(first)._2 + j
-            buf.putLong(dbAddrs.getOrElse(g, Undef))
-          }
-          cksumAt(s0)
+          val first = eaDblks(eaDblks.indexWhere(_._1 == u))._2
+          (0 until eaG.ndblks(u)).foreach(j => buf.putLong(dbAddrs.getOrElse(first + j, Undef)))
+          file.cksumAt(s0)
         }
         // EADBs: elements in global order; paged blocks write a
         // header-only prefix (with its own checksum) then per-page
@@ -1002,28 +898,19 @@ object Hdf5V4 {
         var elem = eaG.idxElmts
         eaDblks.foreach { case (u, g, nel) =>
           val d0 = buf.position()
-          require(d0 == dbAddrs(g).toInt)
-          buf.put("EADB".getBytes("ASCII")); buf.put(0.toByte)
-          buf.put((if (filtered) 1 else 0).toByte)
+          require(d0 == dbAddrs(g))
+          putSig(buf, "EADB"); buf.put(client)
           buf.putLong(idxAddr)
-          var off = elem.toLong
-          (0 until eaG.offSize).foreach { _ =>
-            buf.put((off & 0xff).toByte); off >>>= 8
-          }
-          def elems(lo: Int, hi: Int): Unit = (lo until hi).foreach { j =>
-            val k = elem + j
-            if (k < nChunks) putEntry(k)
-            else { buf.putLong(Undef); (0 until es - 8).foreach(_ => buf.put(0.toByte)) }
-          }
+          putVarU(buf, elem.toLong, eaG.offSize)
           if (eaNpages(u) == 0) {
-            elems(0, nel.toInt)
-            cksumAt(d0)
+            (0 until nel.toInt).foreach(j => putElement(elem + j))
+            file.cksumAt(d0)
           } else {
-            cksumAt(d0) // header checksum precedes the pages
+            file.cksumAt(d0) // header checksum precedes the pages
             (0 until eaNpages(u)).foreach { pg =>
               val p0 = buf.position()
-              elems(pg * eaPageN.toInt, (pg + 1) * eaPageN.toInt)
-              cksumAt(p0)
+              (pg * eaPageN.toInt until (pg + 1) * eaPageN.toInt).foreach(j => putElement(elem + j))
+              file.cksumAt(p0)
             }
           }
           elem += nel.toInt
@@ -1032,50 +919,36 @@ object Hdf5V4 {
         val h0 = buf.position()
         val nodeAddrs = (0 until (if (btDepth == 0) 1 else btLeafPlan.size + 1))
           .map(i => idxAddr + 38 + i.toLong * btNodeSize)
-        val rootAddr = nodeAddrs.last // leaves first, root (or sole leaf) last?
-        buf.put("BTHD".getBytes("ASCII")); buf.put(0.toByte)
-        buf.put((if (filtered) 11 else 10).toByte)
+        val rootAddr = nodeAddrs.last // leaves first, root (or sole leaf) last
+        val recType = (if (filtered) 11 else 10).toByte
+        putSig(buf, "BTHD"); buf.put(recType)
         buf.putInt(btNodeSize); buf.putShort(btRrec.toShort)
         buf.putShort(btDepth.toShort)
         buf.put(100.toByte); buf.put(40.toByte)
         buf.putLong(rootAddr)
         buf.putShort((if (btDepth == 0) nChunks else btSeparators.size).toShort)
         buf.putLong(nChunks.toLong)
-        cksumAt(h0)
-        def record(b: ByteBuffer, k: Int): Unit = {
-          b.putLong(dataAddrs(k))
-          if (filtered) {
-            var v = blobs(k)._2.length.toLong
-            var j = 0
-            while (j < szLen) { b.put((v & 0xff).toByte); v >>>= 8; j += 1 }
-            b.putInt(0)
-          }
-          blobs(k)._1.foreach(b.putLong) // SCALED offsets
-        }
+        file.cksumAt(h0)
         def node(sig: String, recs: Seq[Int])(rest: ByteBuffer => Unit): Array[Byte] = {
           val b = ByteBuffer.allocate(btNodeSize).order(ByteOrder.LITTLE_ENDIAN)
-          b.put(sig.getBytes("ASCII")); b.put(0.toByte)
-          b.put((if (filtered) 11 else 10).toByte)
-          recs.foreach(record(b, _))
+          putSig(b, sig); b.put(recType)
+          recs.foreach { k => putEntry(b, k); blobs(k)._1.foreach(b.putLong) } // SCALED offsets
           rest(b)
-          val used = b.position()
-          b.putInt(lookup3(b.array(), 0, used))
+          b.putInt(lookup3(b.array(), 0, b.position()))
           b.array()
         }
         if (btDepth == 0) buf.put(node("BTLF", btLeafPlan.head)(_ => ()))
         else {
-          btLeafPlan.foreach(r => buf.put(node("BTLF", r.toSeq)(_ => ())))
+          btLeafPlan.foreach(r => buf.put(node("BTLF", r)(_ => ())))
           buf.put(node("BTIN", btSeparators) { b =>
             btLeafPlan.zipWithIndex.foreach { case (r, i) =>
               b.putLong(nodeAddrs(i))
-              var v = r.size.toLong
-              var j = 0
-              while (j < btMaxNrecSize) { b.put((v & 0xff).toByte); v >>>= 8; j += 1 }
+              putVarU(b, r.size.toLong, btMaxNrecSize)
             }
           })
         }
     }
-    require(buf.position() == dataBase.toInt,
+    require(buf.position() == dataBase,
       s"index wrote to ${buf.position()}, data expected at $dataBase")
     blobs.foreach { case (_, blob) => buf.put(blob) }
     buf.array()
@@ -1094,16 +967,12 @@ object Hdf5V4 {
     * h5BytesV4's job). Every structure carries its lookup3 checksum. */
   def h5BytesV4Dense(datasets: Seq[(String, Array[Double])],
                      startBlockSize: Int = 512): Array[Byte] = {
-    require(datasets.nonEmpty, "no datasets")
     val paths = datasets.map { case (nm, vs) => (nm.stripPrefix("/"), vs) }
-    require(paths.map(_._1).distinct.size == paths.size,
-      "dataset paths must be distinct")
-    paths.foreach { case (nm, _) =>
-      // split with limit -1 keeps trailing empty segments: 'a/b/' must
-      // be rejected here, not silently collapse onto 'a/b'
-      require(nm.nonEmpty && nm.split("/", -1).forall(s => s.nonEmpty && s.length <= 255),
-        s"bad dataset path '$nm'")
-    }
+    // nested paths create intermediate groups like h5py's
+    // create_dataset('/g/x'). The ROOT group stores its members DENSELY
+    // (the feature under test); subgroups use compact link messages
+    // (libhdf5's default below ~8 links)
+    val root = Hdf5.groupTree(paths.map(_._1), 255)
     require(Integer.bitCount(startBlockSize) == 1 && startBlockSize >= 64,
       s"startBlockSize $startBlockSize must be a power of two >= 64")
     val width = 4
@@ -1114,65 +983,31 @@ object Hdf5V4 {
     val lenSize = 2 // min(limit_enc(maxDirect), limit_enc(maxMan))
     val idLen = 1 + offSize + lenSize
     val dblkHdr = 5 + 8 + offSize + 4 // checksummed direct blocks
-
-    // ---- group tree (r16): nested paths create intermediate groups
-    // like h5py's create_dataset('/g/x'). The ROOT group stores its
-    // members DENSELY (the feature under test); subgroups use compact
-    // link messages (libhdf5's default below ~8 links — the dense read
-    // path is exercised at the root either way).
-    final class GNode {
-      val groups = scala.collection.mutable.TreeMap.empty[String, GNode]
-      val dss = scala.collection.mutable.TreeMap.empty[String, Int] // -> paths idx
-    }
-    val root = new GNode
-    paths.zipWithIndex.foreach { case ((nm, _), i) =>
-      val segs = nm.split('/')
-      var cur = root
-      segs.dropRight(1).foreach { g =>
-        require(!cur.dss.contains(g), s"'$g' is both a dataset and a group")
-        cur = cur.groups.getOrElseUpdate(g, new GNode)
-      }
-      require(!cur.groups.contains(segs.last),
-        s"'${segs.last}' is both a dataset and a group")
-      cur.dss(segs.last) = i
-    }
-    val subGroups = scala.collection.mutable.ArrayBuffer.empty[GNode]
-    def collect(n: GNode): Unit =
-      n.groups.values.foreach { c => subGroups += c; collect(c) }
-    collect(root)
+    val subGroups = root.preorder().tail.map(_._2)
     // root members drive the dense heap + name index
-    val rootMembers: Seq[String] = (root.groups.keys ++ root.dss.keys).toSeq.sorted
+    val rootMembers = root.members
     val n = rootMembers.size
 
     // ---- object headers (sizes first, addresses follow)
-    def ohSize(bodies: Seq[Int]): Int = 10 + bodies.map(4 + _).sum + 4
-    def linkBody(nm: String): Int = 2 + 1 + nm.length + 8
+    def dsMsgs(vals: Array[Double], at: Long) = datasetMsgs(Seq(vals.length.toLong), false,
+      Seq(0x0008 -> body(18) { b =>
+        b.put(4.toByte); b.put(1.toByte) // layout v4, class contiguous
+        b.putLong(at); b.putLong(vals.length * 8L)
+      }))
+    def grpMsgs(g: Hdf5.GNode, addrOf: String => Long) =
+      groupMsgs(g.members.map(nm => nm -> addrOf(nm)))
     val rootOhAddr = 48L
-    val rootOhSize = ohSize(Seq(18, 2)) // link info + group info, no links
-    def grpOhSize(g: GNode): Int = // toSeq BEFORE map: equal sizes must not dedupe
-      ohSize(Seq(18, 2) ++ (g.groups.keys ++ g.dss.keys).toSeq.map(linkBody))
-    val grpOhAddrs = new java.util.IdentityHashMap[GNode, java.lang.Long]()
-    var ohCursor = rootOhAddr + rootOhSize
-    subGroups.foreach { g =>
-      grpOhAddrs.put(g, ohCursor)
-      ohCursor += grpOhSize(g)
+    val grpEnds = subGroups.scanLeft(rootOhAddr + ohdrSize(groupMsgs(Nil))) {
+      (at, g) => at + ohdrSize(grpMsgs(g, _ => 0L))
     }
-    val dsOhSize = ohSize(Seq(12, 24, 2, 18)) // space/dtype/fill/contiguous
-    val dsOhAddrs = paths.indices.map(i => ohCursor + i.toLong * dsOhSize)
-    def memberAddr(g: GNode, nm: String): Long =
-      g.groups.get(nm) match {
-        case Some(c) => grpOhAddrs.get(c)
-        case None => dsOhAddrs(g.dss(nm))
-      }
+    val grpOhAddrs = subGroups.zip(grpEnds).toMap
+    val dsOhSize = ohdrSize(dsMsgs(Array.empty, 0L)) // space/dtype/fill/contiguous
+    val dsOhAddrs = paths.indices.map(i => grpEnds.last + i.toLong * dsOhSize)
+    def memberAddr(g: Hdf5.GNode)(nm: String): Long =
+      g.groups.get(nm).map(grpOhAddrs).getOrElse(dsOhAddrs(g.dss(nm)))
 
     // ---- heap objects (serialized v1 link messages) packed greedily
-    val linkBodies: Seq[Array[Byte]] = rootMembers.map { nm =>
-      val b = ByteBuffer.allocate(linkBody(nm)).order(ByteOrder.LITTLE_ENDIAN)
-      b.put(1.toByte); b.put(0.toByte) // version 1; flags: 1-byte name len, hard
-      b.put(nm.length.toByte); b.put(nm.getBytes("ASCII"))
-      b.putLong(memberAddr(root, nm))
-      b.array()
-    }
+    val linkBodies = rootMembers.map(nm => linkMsg(nm, memberAddr(root)(nm)))
     def rowSize(r: Int): Long =
       if (r < 2) startBlockSize.toLong else startBlockSize.toLong << (r - 1)
     val maxDirectRows = log2gen(maxDirect) - log2gen(startBlockSize.toLong) + 2
@@ -1189,7 +1024,7 @@ object Hdf5V4 {
     }
     val nBlocks = blk + 1
     val blockHeapOff = (0 until nBlocks).scanLeft(0L)((acc, k) => acc + rowSize(k / width))
-    val heapOffs = placed.zipWithIndex.map { case ((b, o), _) => blockHeapOff(b) + o }
+    val heapOffs = placed.map { case (b, o) => blockHeapOff(b) + o }
     val curRows = if (nBlocks == 1) 0 else (nBlocks + width - 1) / width
     require(curRows <= maxDirectRows,
       s"$n links need $curRows rows > $maxDirectRows direct rows — raise startBlockSize")
@@ -1203,11 +1038,10 @@ object Hdf5V4 {
     val btLeafMax = (btNodeSize - 10) / btRrec
     require(n <= btLeafMax,
       s"$n links exceed one leaf ($btLeafMax) — deeper name trees unwritten")
-    val hashed = rootMembers.indices
-      .map(i => (lookup3(rootMembers(i).getBytes("ASCII"), 0, rootMembers(i).length), i))
-    require(hashed.map(_._1).distinct.size == n,
+    val hashes = rootMembers.map(nm => lookup3(nm.getBytes("ASCII"), 0, nm.length))
+    require(hashes.distinct.size == n,
       "name-hash collision — pick different dataset names for the fixture")
-    val recOrder = hashed.sortBy(h => h._1.toLong & 0xffffffffL).map(_._2)
+    val recOrder = rootMembers.indices.sortBy(i => hashes(i).toLong & 0xffffffffL)
 
     // ---- remaining addresses
     val frhpAddr = dsOhAddrs.last + dsOhSize
@@ -1221,93 +1055,20 @@ object Hdf5V4 {
     val btlfAddr = bthdAddr + 38
     val dataBase = btlfAddr + btNodeSize
     val dataAddrs = paths.scanLeft(dataBase) { (acc, d) => acc + d._2.length * 8L }
-    val eof = dataAddrs.last
     val heapRootAddr = if (curRows == 0) dblkAddrs(0) else fibAddr
 
-    val buf = ByteBuffer.allocate(eof.toInt).order(ByteOrder.LITTLE_ENDIAN)
-    def cksumAt(start: Int): Unit = {
-      val p = buf.position()
-      buf.putInt(lookup3(buf.array(), start, p - start))
-    }
-    def ohdr(addr: Long, messages: Seq[(Int, Array[Byte])]): Unit = {
-      require(buf.position() == addr.toInt, s"OHDR at ${buf.position()} != $addr")
-      val start = buf.position()
-      buf.put("OHDR".getBytes("ASCII"))
-      buf.put(2.toByte); buf.put(0x02.toByte) // flags: 4-byte chunk-0 size
-      buf.putInt(messages.map(4 + _._2.length).sum)
-      messages.foreach { case (t, b) =>
-        buf.put(t.toByte); buf.putShort(b.length.toShort); buf.put(0.toByte)
-        buf.put(b)
-      }
-      cksumAt(start)
-    }
-    def body(sz: Int)(f: ByteBuffer => Unit): Array[Byte] = {
-      val b = ByteBuffer.allocate(sz).order(ByteOrder.LITTLE_ENDIAN)
-      f(b)
-      require(b.position() == sz, s"body wrote ${b.position()} of $sz")
-      b.array()
-    }
-
-    // ---- superblock v3
-    buf.put(Array(0x89.toByte, 'H'.toByte, 'D'.toByte, 'F'.toByte,
-      '\r'.toByte, '\n'.toByte, 0x1a.toByte, '\n'.toByte))
-    buf.put(3.toByte); buf.put(8.toByte); buf.put(8.toByte); buf.put(0.toByte)
-    buf.putLong(0L); buf.putLong(Undef); buf.putLong(eof)
-    buf.putLong(rootOhAddr)
-    cksumAt(0)
-    require(buf.position() == 48, s"superblock size ${buf.position()}")
-
-    // ---- root group OHDR: link info pointing at the heap + name index
-    val linkInfo = body(18) { b =>
-      b.put(0.toByte); b.put(0.toByte) // version, flags: no creation order
-      b.putLong(frhpAddr); b.putLong(bthdAddr)
-    }
-    val groupInfo = body(2) { b => b.put(0.toByte); b.put(0.toByte) }
-    ohdr(rootOhAddr, Seq(0x0002 -> linkInfo, 0x000A -> groupInfo))
-
-    // ---- subgroup OHDRs (compact link messages), pre-order
-    subGroups.foreach { g =>
-      val kids = (g.groups.keys ++ g.dss.keys).toSeq.sorted
-      val li = body(18) { b =>
-        b.put(0.toByte); b.put(0.toByte)
-        b.putLong(Undef); b.putLong(Undef) // compact: no heap, no name index
-      }
-      val linkMsgs = kids.map { nm =>
-        0x0006 -> body(linkBody(nm)) { b =>
-          b.put(1.toByte); b.put(0.toByte)
-          b.put(nm.length.toByte); b.put(nm.getBytes("ASCII"))
-          b.putLong(memberAddr(g, nm))
-        }
-      }
-      ohdr(grpOhAddrs.get(g), Seq(0x0002 -> li, 0x000A -> groupInfo) ++ linkMsgs)
-    }
-
-    // ---- dataset OHDRs (v4 contiguous layout)
+    val file = new V3File(dataAddrs.last, rootOhAddr)
+    val buf = file.buf
+    file.ohdr(rootOhAddr, groupMsgs(Nil, frhpAddr, bthdAddr))
+    subGroups.foreach(g => file.ohdr(grpOhAddrs(g), grpMsgs(g, memberAddr(g))))
     paths.zipWithIndex.foreach { case ((_, vals), i) =>
-      val spaceMsg = body(12) { b =>
-        b.put(2.toByte); b.put(1.toByte) // dataspace v2, rank 1
-        b.put(0.toByte); b.put(1.toByte) // flags, simple
-        b.putLong(vals.length.toLong)
-      }
-      val dtypeMsg = body(24) { b =>
-        b.put(0x11.toByte); b.put(0x20.toByte); b.put(0x3f.toByte); b.put(0.toByte)
-        b.putInt(8); b.putShort(0); b.putShort(64)
-        b.put(52.toByte); b.put(11.toByte); b.put(0.toByte); b.put(52.toByte)
-        b.putInt(1023); b.putInt(0)
-      }
-      val fillMsg = body(2) { b => b.put(3.toByte); b.put(0x12.toByte) }
-      val layoutMsg = body(18) { b =>
-        b.put(4.toByte); b.put(1.toByte) // layout v4, class contiguous
-        b.putLong(dataAddrs(i)); b.putLong(vals.length * 8L)
-      }
-      ohdr(dsOhAddrs(i), Seq(0x0001 -> spaceMsg, 0x0003 -> dtypeMsg,
-        0x0005 -> fillMsg, 0x0008 -> layoutMsg))
+      file.ohdr(dsOhAddrs(i), dsMsgs(vals, dataAddrs(i)))
     }
 
     // ---- fractal heap header (FRHP)
     val h0 = buf.position()
-    require(h0 == frhpAddr.toInt)
-    buf.put("FRHP".getBytes("ASCII")); buf.put(0.toByte)
+    require(h0 == frhpAddr)
+    putSig(buf, "FRHP")
     buf.putShort(idLen.toShort); buf.putShort(0) // no I/O filters
     buf.put(0x02.toByte) // flags: checksummed direct blocks
     buf.putInt(maxMan.toInt)
@@ -1323,38 +1084,28 @@ object Hdf5V4 {
     buf.putShort((if (curRows == 0) 1 else curRows).toShort) // starting rows
     buf.putLong(heapRootAddr)
     buf.putShort(curRows.toShort)
-    cksumAt(h0)
-    require(buf.position() == (frhpAddr + 146).toInt, "FRHP size drift")
+    file.cksumAt(h0)
 
     // ---- root indirect block (FHIB), when more than one direct block
     if (curRows > 0) {
       val f0 = buf.position()
-      require(f0 == fibAddr.toInt)
-      buf.put("FHIB".getBytes("ASCII")); buf.put(0.toByte)
+      putSig(buf, "FHIB")
       buf.putLong(frhpAddr)
-      var bo = 0L
-      (0 until offSize).foreach { _ => buf.put((bo & 0xff).toByte); bo >>>= 8 }
-      (0 until fibSlots).foreach { k =>
-        buf.putLong(if (k < nBlocks) dblkAddrs(k) else Undef)
-      }
-      cksumAt(f0)
+      putVarU(buf, 0L, offSize) // block offset
+      (0 until fibSlots).foreach(k => buf.putLong(if (k < nBlocks) dblkAddrs(k) else Undef))
+      file.cksumAt(f0)
     }
 
     // ---- direct blocks (FHDB): header + packed link messages, padded
     (0 until nBlocks).foreach { k =>
       val d0 = buf.position()
-      require(d0 == dblkAddrs(k).toInt)
-      buf.put("FHDB".getBytes("ASCII")); buf.put(0.toByte)
+      require(d0 == dblkAddrs(k))
+      putSig(buf, "FHDB")
       buf.putLong(frhpAddr)
-      var bo = blockHeapOff(k)
-      (0 until offSize).foreach { _ => buf.put((bo & 0xff).toByte); bo >>>= 8 }
-      val ckPos = buf.position()
-      buf.putInt(0) // checksum patched below (computed with field zeroed)
-      linkBodies.zipWithIndex.foreach { case (lb, i) =>
-        if (placed(i)._1 == k) {
-          buf.position(d0 + placed(i)._2)
-          buf.put(lb)
-        }
+      putVarU(buf, blockHeapOff(k), offSize)
+      val ckPos = buf.position() // checksum patched below (computed with field zeroed)
+      linkBodies.zip(placed).foreach { case (lb, (b, off)) =>
+        if (b == k) { buf.position(d0 + off); buf.put(lb) }
       }
       buf.position(d0 + rowSize(k / width).toInt) // zero padding to block size
       buf.putInt(ckPos, lookup3(buf.array(), d0, rowSize(k / width).toInt))
@@ -1362,36 +1113,29 @@ object Hdf5V4 {
 
     // ---- name index: BTHD + one BTLF (records hash-sorted)
     val b0 = buf.position()
-    require(b0 == bthdAddr.toInt)
-    buf.put("BTHD".getBytes("ASCII")); buf.put(0.toByte)
+    putSig(buf, "BTHD")
     buf.put(5.toByte) // record type 5: group name index
     buf.putInt(btNodeSize); buf.putShort(btRrec.toShort)
     buf.putShort(0) // depth
     buf.put(100.toByte); buf.put(40.toByte)
     buf.putLong(btlfAddr); buf.putShort(n.toShort)
     buf.putLong(n.toLong)
-    cksumAt(b0)
+    file.cksumAt(b0)
     val l0 = buf.position()
-    require(l0 == btlfAddr.toInt)
-    buf.put("BTLF".getBytes("ASCII")); buf.put(0.toByte)
+    putSig(buf, "BTLF")
     buf.put(5.toByte)
     recOrder.foreach { i =>
-      buf.putInt(hashed.find(_._2 == i).get._1)
+      buf.putInt(hashes(i))
       buf.put(0.toByte) // heap id: version 0, managed
-      var off = heapOffs(i)
-      (0 until offSize).foreach { _ => buf.put((off & 0xff).toByte); off >>>= 8 }
-      var len = linkBodies(i).length.toLong
-      (0 until lenSize).foreach { _ => buf.put((len & 0xff).toByte); len >>>= 8 }
+      putVarU(buf, heapOffs(i), offSize)
+      putVarU(buf, linkBodies(i).length.toLong, lenSize)
     }
-    cksumAt(l0)
+    file.cksumAt(l0)
     buf.position(l0 + btNodeSize) // node padding
 
     // ---- raw contiguous data
-    paths.zipWithIndex.foreach { case ((_, vals), i) =>
-      require(buf.position() == dataAddrs(i).toInt)
-      vals.foreach(buf.putDouble)
-    }
-    require(buf.position() == eof.toInt, s"wrote ${buf.position()} of $eof")
+    paths.foreach { case (_, vals) => vals.foreach(buf.putDouble) }
+    require(buf.position() == dataAddrs.last, s"wrote ${buf.position()} of ${dataAddrs.last}")
     buf.array()
   }
 }

@@ -104,6 +104,19 @@ class TSQRSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bits(rOnly) == bits(r), s"rFactor ${rOnly.toSeq} vs tsqr ${r.toSeq}")
   }
 
+  test("rFactor gives tsqr's R bit for bit when whole row blocks are absent") {
+    // blocks 3, 10 and 11 (rows 12-15 and 40-47) hold no row at all: both
+    // sweeps must still stack the same children at every tree node
+    val n = 530; val k = 5
+    val holed = new DMatrix(tall(n, k).elements.where("NOT (i DIV 4 IN (3, 10, 11))"),
+      n, k, dense = false)
+    val (q, r) = TSQR.tsqr(spark, holed, blockRows = 4, splitEvery = 3)
+    q.df.unpersist()
+    val rOnly = TSQR.rFactor(spark, holed, blockRows = 4, splitEvery = 3)
+    def bits(m: Array[Double]) = m.map(java.lang.Double.doubleToLongBits).toSeq
+    assert(bits(rOnly) == bits(r), s"rFactor ${rOnly.toSeq} vs tsqr ${r.toSeq}")
+  }
+
   test("ragged short tail block (rows % blockRows < k) does not crash") {
     val n = 103; val k = 4 // 64 + 32 + 7-row tail < k? no: tail 7 > 4; use blockRows 25 → tail 3
     val a = tall(n, k)

@@ -784,4 +784,165 @@ class Hdf5Spec extends AnyFunSuite {
     assert(e.getMessage.contains("layout class 3") &&
       e.getMessage.contains("virtual"), e.getMessage)
   }
+
+  // ------------------------------------------------- golden writer bytes
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b)
+      .map(x => f"$x%02x").mkString
+
+  /** One file per writer option on fixed inputs: `h5Bytes` flat and
+    * nested, `h5BytesChunked` under every filter subset, `h5BytesV4` under
+    * every index type with and without filters (plus the rank-2, paged,
+    * super-block and depth-1 index shapes), `h5BytesV4Dense` with one
+    * direct block, with a root indirect block, and nested. */
+  private def goldenFiles: Seq[(String, Array[Byte])] = {
+    val xs = Array.tabulate(37)(i => i * 1.5 - 3)
+    val ys = Array.tabulate(12)(i => (i % 5).toDouble)
+    val grid = Array.tabulate(7 * 9)(i => (i * 13 % 23) - 4.5)
+    val v0 = Seq(
+      "h5Bytes flat" -> Hdf5.h5Bytes(Seq(("beta", xs, Seq(37L)), ("alpha", ys, Seq(3L, 4L)))),
+      "h5Bytes nested" -> Hdf5.h5Bytes(Seq(("top", xs, Seq(37L)),
+        ("/grp/x", ys, Seq(3L, 4L)), ("grp/deeper/z", grid, Seq(7L, 9L)))))
+    val chunked = for (d <- Seq(false, true); s <- Seq(false, true); f <- Seq(false, true))
+      yield s"h5BytesChunked deflate=$d shuffle=$s fletcher=$f" ->
+        Hdf5.h5BytesChunked("d", grid, Seq(7L, 9L), Seq(3L, 4L),
+          deflate = d, shuffle = s, fletcher = f)
+    val v = Array.tabulate(2400)(i => ((i * 31) % 101) - 50.0)
+    def v4(n: Int, chunk: Long, idx: String, filt: Boolean, fa: Int = 10, ea: Int = 10) =
+      Hdf5V4.h5BytesV4("d", v.take(n), Seq(n.toLong), Seq(chunk), idx,
+        deflate = filt, shuffle = filt, fletcher = filt, faPageBits = fa, eaPageBits = ea)
+    val latest = for {
+      idx <- Seq("single", "implicit", "fixed", "ext", "btree2")
+      filt <- Seq(false, true) if !(idx == "implicit" && filt)
+    } yield s"h5BytesV4 $idx filters=$filt" ->
+      (if (idx == "single") v4(40, 64L, idx, filt) else v4(257, 16L, idx, filt))
+    val shapes = Seq(
+      "h5BytesV4 fixed rank-2" -> Hdf5V4.h5BytesV4("d", grid, Seq(7L, 9L), Seq(3L, 4L),
+        "fixed", deflate = true),
+      "h5BytesV4 btree2 rank-2" -> Hdf5V4.h5BytesV4("d", grid, Seq(7L, 9L), Seq(3L, 4L),
+        "btree2", shuffle = true, fletcher = true),
+      "h5BytesV4 fixed paged" -> v4(257, 16L, "fixed", filt = true, fa = 2),
+      "h5BytesV4 ext super block" -> v4(2400, 8L, "ext", filt = false),
+      "h5BytesV4 ext paged" -> v4(1200, 2L, "ext", filt = true, ea = 6),
+      "h5BytesV4 btree2 depth-1" -> v4(2000, 16L, "btree2", filt = false))
+    val dense = Seq(
+      "h5BytesV4Dense one block" -> Hdf5V4.h5BytesV4Dense((0 until 10).map(i =>
+        (s"data_$i", Array.tabulate(16 + i)(j => (j * 7 % 13) + i * 100.0)))),
+      "h5BytesV4Dense FHIB" -> Hdf5V4.h5BytesV4Dense((0 until 40).map(i =>
+        (f"measurement_series_$i%02d", Array.tabulate(8)(j => i * 1000.0 + j))),
+        startBlockSize = 64),
+      "h5BytesV4Dense nested" -> Hdf5V4.h5BytesV4Dense(Seq(
+        "alpha" -> xs, "g1/x" -> ys, "g1/sub/q" -> grid, "g2/z" -> xs.take(5))))
+    v0 ++ chunked ++ latest ++ shapes ++ dense
+  }
+
+  /** sha256 of each [[goldenFiles]] entry. */
+  private val goldenSha256: Map[String, String] = Map(
+    "h5Bytes flat" -> "135ddf13eab30f53f869ce7bcb934c085e268a25e6f515f6b5e8e2e262665e04",
+    "h5Bytes nested" -> "946e04ad457e87ce5f9527e8381fb3256a0011e8504265c87e2592679e036921",
+    "h5BytesChunked deflate=false shuffle=false fletcher=false" -> "491a25045a229e2600e1acddba349d03e8cac44748f02d739ccba61f4a6fdf97",
+    "h5BytesChunked deflate=false shuffle=false fletcher=true" -> "1b8fea6b3fc81e7deecadcd6910b881cb07529c1b371c60696ae30f1ad3f4a8d",
+    "h5BytesChunked deflate=false shuffle=true fletcher=false" -> "acf1ad92c7dfd65533d1b49b9b0563b458656d5ba6d35ffeb4deeabbfa7d2861",
+    "h5BytesChunked deflate=false shuffle=true fletcher=true" -> "18c0fe5915931e67ad7fb6dccbb8ed245f18957fda7629a096c7eaa1f0125270",
+    "h5BytesChunked deflate=true shuffle=false fletcher=false" -> "c62bf363baa401df8dc47082ffc7dbe90d33b37fdeb26643a06e6daeb77d5ea6",
+    "h5BytesChunked deflate=true shuffle=false fletcher=true" -> "7cc3da1a9670cc15c76476379b5e7fb74e0b47e84eb8ee5d75efd91110ba395b",
+    "h5BytesChunked deflate=true shuffle=true fletcher=false" -> "0e61e7590e5d8c079c2139e2fe04c6e26a842a14ac0b63461c6bff03d610c890",
+    "h5BytesChunked deflate=true shuffle=true fletcher=true" -> "84e01093de9c9748f96f14b5998062bc6e98d3c2cc1fc7f26e8c0f3e066e1f5b",
+    "h5BytesV4 btree2 depth-1" -> "3ece8bc6e7289c25b9b1b99e72288bc68fc0c1c5a170fcff7c89cebd903ae94b",
+    "h5BytesV4 btree2 filters=false" -> "58f42d0a8692cfd1c8dcf315fcd6e79379b0413555fa91f718dc591c9d95ae35",
+    "h5BytesV4 btree2 filters=true" -> "eb06aa3910c3e87040f755ab2eb20cee0938d8c22fdf9088474b98c5eb1b3865",
+    "h5BytesV4 btree2 rank-2" -> "4687a750e3ab21f57c02dc85a3f2354cfdc26114d0401057f2bdaee9beb816fc",
+    "h5BytesV4 ext filters=false" -> "d2b7af37eb8acbf42799edc98569bed87b5acc3a8e003f8dbc163f61d7a88be9",
+    "h5BytesV4 ext filters=true" -> "decc9bd6e59a8384231a69c316516214b2b53fe09a1bbb8d99c0d854c82c5775",
+    "h5BytesV4 ext paged" -> "d6fa3aefadf91fa116ed4a406535448bd74f9ea746aec6249b9ba9ca9cbacc85",
+    "h5BytesV4 ext super block" -> "bd0c229c80af10570958219b9cf007d248603ad04cece5ea955ecc342f8b35b1",
+    "h5BytesV4 fixed filters=false" -> "7a6c7084ef253c0fccf32d05bdf4d1d2df91f83a737e248b9b44ee410f5473b7",
+    "h5BytesV4 fixed filters=true" -> "9c17b70bdf92a20b9352c55cdc7636bca884964efe46d7e092ddca961316b794",
+    "h5BytesV4 fixed paged" -> "adbded6e4453d633914900e0e455dff433d72021fe87f75913c0472cbdbf23d8",
+    "h5BytesV4 fixed rank-2" -> "38643df2ada8a34e986f531e94efc1ad97d4f663177b61d642d714fb58d35751",
+    "h5BytesV4 implicit filters=false" -> "abd2d4d77dae577f7d04cb0edd778edd6088e8936df5a02dec7987bd80084653",
+    "h5BytesV4 single filters=false" -> "0aadcc6f1a632d87b390e08f4fb7f85b3b472971dae3df160e31f5bcff848633",
+    "h5BytesV4 single filters=true" -> "d3a191aaf977461dac33031ab1a2e1639cbf816481c4b3a9395964339f0840d8",
+    "h5BytesV4Dense FHIB" -> "b0cad84a418d20004b97c08cc2ce2324bb56ed8a38a5e8f34c51f51a1ec727c9",
+    "h5BytesV4Dense nested" -> "8bb18774d36e784255c9cb7fbe7eccb158dffabd8dcf2ff84fcba199b020e0c0",
+    "h5BytesV4Dense one block" -> "620f602ad857e0acca55932a52ef18143a1f27403a5234399476e9e7704b74ec")
+
+  test("golden writer bytes: every writer emits the pinned sha256 on fixed inputs") {
+    val got = goldenFiles.map { case (k, b) => k -> sha256(b) }
+    val diff = got.filter { case (k, h) => !goldenSha256.get(k).contains(h) }
+    assert(got.map(_._1).toSet == goldenSha256.keySet && diff.isEmpty,
+      diff.map { case (k, h) => s"\"$k\" -> \"$h\"," }.mkString("\n"))
+  }
+
+  // ------------------------------------- truncated and cyclic structures
+
+  /** Runs `f` on another thread and fails if it has no answer in 2 s. */
+  private def within2s[T](f: => T): T = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    scala.concurrent.Await.result(scala.concurrent.Future(f),
+      scala.concurrent.duration.Duration(2, "s"))
+  }
+
+  private def le(b: Array[Byte]) =
+    java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+
+  test("a truncated unfiltered chunk is rejected, not read as trailing zeros") {
+    val vals = Array.tabulate(100)(i => i + 1.0)
+    val v1 = Hdf5.h5BytesChunked("series", vals, Seq(100L), Seq(16L))
+    val v4 = Hdf5V4.h5BytesV4("series", vals, Seq(100L), Seq(16L), "implicit")
+    Seq(v1, v4).foreach { bytes =>
+      val cut = bytes.take(bytes.length - 80)
+      val e = intercept[IllegalArgumentException](
+        Hdf5.parseData(cut, Hdf5.datasets(cut).head))
+      assert(e.getMessage.contains("series") && e.getMessage.contains("past"),
+        e.getMessage)
+    }
+  }
+
+  test("a v2 object-header continuation back into its own chunk is rejected") {
+    // replace the dataset OHDR's layout message (its last) with a
+    // continuation whose OCHK target is chunk 0 itself, plus NIL filler
+    val bytes = Hdf5V4.h5BytesV4("d", Array.tabulate(64)(_.toDouble), Seq(64L),
+      Seq(16L), "fixed")
+    val bb = le(bytes)
+    val chunk0 = bb.getInt(48 + 6)
+    var p = 48 + 10
+    var layoutAt = -1
+    while (p < 48 + 10 + chunk0) {
+      if ((bytes(p) & 0xff) == 0x08) layoutAt = p
+      p += 4 + (bb.getShort(p + 1) & 0xffff)
+    }
+    val total = 4 + (bb.getShort(layoutAt + 1) & 0xffff)
+    val looped = bytes.clone()
+    val pb = le(looped)
+    pb.position(layoutAt)
+    pb.put(0x10.toByte); pb.putShort(16); pb.put(0.toByte)
+    pb.putLong(48L + 6); pb.putLong(chunk0 + 8L) // the "OCHK" block = chunk 0
+    pb.put(0.toByte); pb.putShort((total - 24).toShort); pb.put(0.toByte)
+    pb.putInt(48 + 10 + chunk0, Hdf5V4.lookup3(looped, 48, 10 + chunk0))
+    intercept[IllegalArgumentException](within2s(Hdf5.datasets(looped)))
+  }
+
+  test("a v1 group B-tree node that is its own child is rejected") {
+    val bytes = Hdf5.h5Bytes(Seq(("a", Array(1.0, 2.0), Seq(2L))))
+    val tree = sigAt(bytes, "TREE") // the root group's node (type 0)
+    assert(bytes(tree + 4) == 0)
+    val cyclic = bytes.clone()
+    cyclic(tree + 5) = 1 // level 1: its one child is a node, not a SNOD
+    le(cyclic).putLong(tree + 24 + 8, tree.toLong)
+    intercept[IllegalArgumentException](within2s(Hdf5.datasets(cyclic)))
+  }
+
+  test("a v1 chunk B-tree node that is its own child is rejected") {
+    val bytes = Hdf5.h5BytesChunked("d", Array.tabulate(64)(_.toDouble), Seq(64L),
+      Seq(16L))
+    val ds = Hdf5.datasets(bytes).head
+    val node = ds.btreeAddr.toInt
+    assert(new String(bytes, node, 4, "ASCII") == "TREE" && bytes(node + 4) == 1)
+    val cyclic = bytes.clone()
+    cyclic(node + 5) = 1
+    le(cyclic).putLong(node + 24 + 8 + 8 * 2, node.toLong) // entry 0's child
+    intercept[IllegalArgumentException](within2s(Hdf5.parseData(cyclic, ds)))
+  }
 }

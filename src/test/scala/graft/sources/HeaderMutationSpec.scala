@@ -102,4 +102,43 @@ class HeaderMutationSpec extends AnyFunSuite {
       (b, v) => putLE(b, 8, v, 4), (b, v) => putLE(b, 20, v, 4),
       (b, v) => putLE(b, fragMeta.length - 8, v, 4))))(TileDb.parseFragMeta)
   }
+
+  /** Field writers for an HDF5 file: each dim of the dataspace whose
+    * extent is `shape` (found as its run of little-endian u64s), and every
+    * 4-byte-aligned word of the file. */
+  private def h5Fields(file: Array[Byte], shape: Seq[Long]): Seq[(Array[Byte], Int) => Unit] = {
+    val dims = file.indexOfSlice(shape.flatMap(d => (0 until 8).map(k => (d >>> (8 * k)).toByte)))
+    assert(dims >= 0, s"no dataspace $shape in the fixture")
+    val dimFields = shape.indices.map(k => (b: Array[Byte], v: Int) => putLE(b, dims + 8 * k, v, 4))
+    dimFields ++ dimFields ++
+      (0 until file.length by 4).map(at => (b: Array[Byte], v: Int) => putLE(b, at, v, 4))
+  }
+
+  /** Every dataset of a mutant is listed and decoded. */
+  private def h5Sweep(what: String, file: Array[Byte], shape: Seq[Long], seed: Long): Unit =
+    sweep(what, mutants(file, file.length, seed, h5Fields(file, shape))) { b =>
+      Hdf5.datasets(b).foreach(Hdf5.parseData(b, _))
+    }
+
+  private val h5Vals = Array.tabulate(257)(i => ((i * 31) % 101) - 50.0)
+
+  test("HDF5 h5Bytes: mutants parse or fail with IllegalArgumentException") {
+    h5Sweep("h5Bytes", Hdf5.h5Bytes(Seq(("beta", h5Vals.take(37), Seq(37L)),
+      ("g/alpha", h5Vals.take(12), Seq(3L, 4L)))), Seq(3L, 4L), 1205L)
+  }
+
+  test("HDF5 h5BytesChunked (deflate, shuffle, fletcher32): mutants parse or fail with IllegalArgumentException") {
+    h5Sweep("h5BytesChunked", Hdf5.h5BytesChunked("d", h5Vals.take(63), Seq(7L, 9L),
+      Seq(3L, 4L), deflate = true, shuffle = true, fletcher = true), Seq(7L, 9L), 1206L)
+  }
+
+  Seq("single" -> 1207L, "implicit" -> 1208L, "fixed" -> 1209L, "ext" -> 1210L,
+    "btree2" -> 1211L).foreach { case (idx, seed) =>
+    test(s"HDF5 h5BytesV4 $idx index: mutants parse or fail with IllegalArgumentException") {
+      val (n, chunk) = if (idx == "single") (40, 64L) else (257, 16L)
+      val filtered = idx == "fixed" || idx == "btree2"
+      h5Sweep(s"h5BytesV4 $idx", Hdf5V4.h5BytesV4("d", h5Vals.take(n), Seq(n.toLong),
+        Seq(chunk), idx, deflate = filtered, shuffle = filtered), Seq(n.toLong), seed)
+    }
+  }
 }
