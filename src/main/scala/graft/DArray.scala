@@ -570,7 +570,7 @@ final class DArray(val exprTree: VecExpr, val ctx: Ctx) {
   def argtopk(k: Int): DataFrame = {
     // the rank window covers only the |k| TakeOrdered survivors; the
     // pmod partition key is constant-valued yet non-foldable, keeping
-    // the bounded window explicitly partitioned (see Blocked.wCarry);
+    // the bounded window explicitly partitioned (see BlockScan.sequential);
     // negative k ranks the smallest ascending (reference _topk.py:52)
     val ord = if (k >= 0) "v DESC, idx ASC" else "v ASC, idx ASC"
     topk(k).selectExpr(

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.operators.RangeCarrier
+
 /** Exact int64 compute surface — the COMPUTE half of dtype fidelity
   * (reference carries real dtypes end-to-end, `dask_array/_expr.py:213`;
   * the engine's main element table is DOUBLE, exact only below 2^53).
@@ -11,10 +13,13 @@ import org.apache.spark.sql.functions._
   * stays in BIGINT SQL — map/zip/slice are codegen'd projections/joins
   * exactly like the DOUBLE surface, aggregates are Spark's exact integer
   * aggregates, and `cumsum` is a range-partitioned two-phase prefix (the
-  * ExactQuantile/DistinctRank machinery: per-partition totals to the
-  * driver — O(numPartitions) — then a partition-local running sum; no
-  * global window, no double round-trip). Overflow follows two's
-  * complement (numpy's int64 contract, not an error).
+  * [[graft.operators.RangeCarrier]]: per-partition totals to the driver
+  * — O(numPartitions) — then a partition-local running sum; no global
+  * window, no double round-trip). Overflow raises everywhere: Spark's
+  * ANSI arithmetic (on by default since Spark 4) fails `map`, `zip` and
+  * `stats` with `ARITHMETIC_OVERFLOW`, and `cumsum` adds with
+  * `Math.addExact` (an `ArithmeticException`). numpy wraps silently; an
+  * exact surface that wrapped would hand back a wrong answer.
   *
   * Interop: `toDouble` lowers into the main DOUBLE surface when exactness
   * above 2^53 is no longer needed; zarr `<i8` stores round-trip through
@@ -40,8 +45,8 @@ final class LongArray(val elements: DataFrame) {
       .join(other.elements.withColumnRenamed("v", "v2"), "idx")
       .selectExpr("idx", s"CAST($sqlOverV1V2 AS BIGINT) AS v"))
 
-  /** Exact integer aggregate row: sum/min/max/count (sum wraps mod 2^64
-    * like numpy int64; callers needing wider sums cast to DECIMAL first). */
+  /** Exact integer aggregate row: sum/min/max/count (a sum past int64
+    * raises; callers needing wider sums cast to DECIMAL first). */
   def stats(): DataFrame =
     elements.agg(
       sum("v").cast("long").as("s"),
@@ -50,28 +55,23 @@ final class LongArray(val elements: DataFrame) {
 
   def sumExact(): Long = stats().collect()(0).getLong(0)
 
-  /** Exact prefix sum, scale shape: one range-partitioned sort, one
-    * O(numPartitions) totals pass, one partition-local running sum. Both
-    * passes see identical partitions — the RangePartitioner's boundaries
-    * are fixed at RDD construction. */
+  /** Exact prefix sum through the [[graft.operators.RangeCarrier]]: one
+    * range-partitioned sort on `idx`, one O(numPartitions) totals fold,
+    * one partition-local running sum. Both passes see identical
+    * partitions — the RangePartitioner's boundaries are fixed at RDD
+    * construction. Totals, offsets and running sums add with
+    * `Math.addExact`, so an overflow raises like every other op. */
   def cumsum(): LongArray = {
     val spark = elements.sparkSession
     import spark.implicits._
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val rdd = elements.select(col("idx").cast("long"), col("v").cast("long"))
-      .as[(Long, Long)]
-      .repartitionByRange(parts, col("idx"))
-      .sortWithinPartitions("idx")
-      .rdd
-    val totals = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var t = 0L; it.foreach(t += _._2); Iterator((i, t))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = totals.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val out = rdd.mapPartitionsWithIndex { case (i, it) =>
-      var acc = bc.value(i)
-      it.map { case (idx, v) => acc += v; (idx, acc) }
-    }
+    val rdd = RangeCarrier.sorted(
+      elements.select(col("idx").cast("long"), col("v").cast("long")), col("idx"))
+      .as[(Long, Long)].rdd
+    val out = RangeCarrier.fold(rdd, 0L)((t, r) => Math.addExact(t, r._2))(Math.addExact(_, _))
+      .pass { (start, it) =>
+        var acc = start
+        it.map { case (idx, v) => acc = Math.addExact(acc, v); (idx, acc) }
+      }
     new LongArray(out.toDF("idx", "v"))
   }
 

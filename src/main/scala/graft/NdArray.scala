@@ -412,72 +412,50 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long], val dense: Boolean,
     * with one SQL aggregate — `GROUP BY (cᵢ div kᵢ)`, a single
     * map-side-combinable aggregation at any rank. `trimExcess` follows
     * the reference's flag: trim ragged edges first (numpy-strict
-    * otherwise: every extent must divide). Requires a DENSE element
-    * table (absent cells would silently shrink count-sensitive
-    * aggregates like avg). */
+    * otherwise: every extent must divide). A gapped array is densified
+    * first: its absent cells are zeros, and count-sensitive aggregates
+    * like avg must see them. The result is dense. */
   def coarsen(factors: Seq[Long], sqlAggOverV: String,
               trimExcess: Boolean = false): NdArray = {
     require(factors.length == rank && factors.forall(_ > 0), s"bad factors $factors")
     require(shape.zip(factors).forall { case (n, k) => n >= k },
       s"factors $factors exceed extents $shape — even trimExcess has nothing left")
+    val src = if (dense) this else densify
     val base =
-      if (trimExcess) slice(shape.zip(factors).map { case (n, k) => (0L, n - n % k) })
+      if (trimExcess) src.slice(shape.zip(factors).map { case (n, k) => (0L, n - n % k) })
       else {
         require(shape.zip(factors).forall { case (n, k) => n % k == 0 },
           s"shape $shape not divisible by $factors (pass trimExcess=true to trim)")
-        this
+        src
       }
     val keys = (0 until rank).map(a => expr(s"${names(a)} DIV ${factors(a)}").as(names(a)))
     new NdArray(
       base.df.groupBy(keys: _*).agg(expr(sqlAggOverV).cast("double").as("v")),
-      base.shape.zip(factors).map { case (n, k) => n / k }, dense, names)
+      base.shape.zip(factors).map { case (n, k) => n / k }, dense = true, names)
   }
 
   /** Cumulative reduction along one axis at any rank (numpy
-    * `cumsum/cummin/cummax(axis=k)`; reference
-    * `reductions/_cumulative.py:100` runs the same per-block scan + carry
-    * chain per line). Scale shape: each "line" (fixed other coordinates)
-    * is cut into `blockSize` pieces — the in-line prefix scan runs in a
-    * window partitioned by (line, block), so no window group ever exceeds
-    * `blockSize` rows no matter how long the axis is; block totals carry
-    * forward through a window partitioned by line over the
-    * O(axisLen/blockSize) block rows. Never a whole-line (let alone
-    * global) unpartitioned sort. Requires a DENSE element table along the
-    * axis (like [[NdArray.fromFlat]] outputs); absent cells would break
-    * the running value's positions. */
+    * `cumsum/cummin/cummax/cumprod(axis=k)`, any [[graft.expr.BlockScan]]
+    * op; reference `reductions/_cumulative.py:100` runs the same per-block
+    * scan + carry chain per line). Scale shape: each "line" (fixed other
+    * coordinates) is cut into `blockSize` pieces — the in-line prefix
+    * scan runs in a window partitioned by (block, line), so no window
+    * group ever exceeds `blockSize` rows no matter how long the axis is;
+    * block totals carry forward through a window partitioned by line
+    * over the O(axisLen/blockSize) block rows. Never a whole-line (let
+    * alone global) unpartitioned sort. The running value needs every
+    * cell of a line, so a gapped array is densified first (its absent
+    * cells are zeros that count); the result is dense. */
   def cumAxis(axis: Int, op: String = "sum", blockSize: Long = 1024L): NdArray = {
     require(axis >= 0 && axis < rank, s"bad axis $axis for rank $rank")
-    import org.apache.spark.sql.expressions.Window
-    val others = (0 until rank).filterNot(_ == axis).map(names)
-    val (aggF, combine): (Column => Column, (Column, Column) => Column) = op match {
-      case "sum" => ((c: Column) => sum(c),
-        (l: Column, cr: Column) => l + coalesce(cr, lit(0.0)))
-      case "min" => ((c: Column) => min(c),
-        (l: Column, cr: Column) => when(cr.isNull, l).otherwise(least(l, cr)))
-      case "max" => ((c: Column) => max(c),
-        (l: Column, cr: Column) => when(cr.isNull, l).otherwise(greatest(l, cr)))
-      case other => throw new IllegalArgumentException(s"cumAxis op $other")
-    }
-    val base = df.withColumn("blk", expr(s"${names(axis)} DIV $blockSize"))
-    val grp = "blk" +: others
-    val wLocal = Window.partitionBy(grp.map(col): _*).orderBy(col(names(axis)))
-    val local = base.withColumn("lv", aggF(col("v")).over(wLocal))
-    // rank-1 has no off-axis coordinates: fall back to a constant-valued
-    // non-foldable key so the bounded carry stays an EXPLICITLY partitioned
-    // window (see Blocked.wCarry — a bare literal is stripped by
-    // EliminateWindowPartitions and re-triggers the global-window warning)
-    val carryKeys: Seq[Column] =
-      if (others.nonEmpty) others.map(col) else Seq(pmod(col("blk"), lit(1)))
-    val wCarry = Window.partitionBy(carryKeys: _*).orderBy(col("blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val carry = base.groupBy(grp.map(col): _*).agg(aggF(col("v")).as("bt"))
-      .withColumn("cr", aggF(col("bt")).over(wCarry))
-      .select(grp.map(col) :+ col("cr"): _*)
-    val joined = local.join(carry, grp)
+    val scan = graft.expr.BlockScan.op(op, order = col(names(axis)))
+    val base = (if (dense) df else densify.df)
+      .withColumn("blk", expr(s"${names(axis)} DIV $blockSize"))
+    val lines = (0 until rank).filterNot(_ == axis).map(names)
     new NdArray(
-      joined.select(names.map(col) :+
-        combine(col("lv"), col("cr")).cast("double").as("v"): _*),
-      shape, dense, names)
+      graft.expr.BlockScan.sequential(base, scan, col(names(axis)), lines)
+        .select(names.map(col) :+ scan.value.cast("double").as("v"): _*),
+      shape, dense = true, names)
   }
 
   /** Difference along one axis (numpy `diff(axis=k)`): a pure composition
@@ -502,7 +480,7 @@ final class NdArray(val df: DataFrame, val shape: Seq[Long], val dense: Boolean,
     * coordinate remap of a border slab — `reflect` (numpy 'symmetric':
     * ghost at distance d reads the d-th cell from the edge) or `wrap`
     * (periodic). Pure narrow projections + union: no shuffle, matching
-    * the 1-d/2-d halo design (`VecExpr.withTrailingHalo`). Folding this
+    * the 1-d/2-d halo design (`Blocked.withHalo`). Folding this
     * per axis composes corner ghosts automatically (a later axis extends
     * the earlier axis's ghosts too). */
   /** Ghost-extend every axis in ONE scan: each cell explodes to its

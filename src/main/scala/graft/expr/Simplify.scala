@@ -89,31 +89,8 @@ object Simplify {
   private def allDependentsAreSlices(node: VecExpr, parents: Map[String, List[VecExpr]]): Boolean =
     parents(node.name).forall(_.isInstanceOf[SliceVec])
 
-  private def rewrite(e: VecExpr, parents: Map[String, List[VecExpr]]): VecExpr = {
-    val withChildren = e match {
-      case MapVec(c, x)        => MapVec(rewrite(c, parents), x)
-      case ZipVec(a, b, x)     => ZipVec(rewrite(a, parents), rewrite(b, parents), x)
-      case SliceVec(c, lo, hi) => SliceVec(rewrite(c, parents), lo, hi)
-      case ZipOffsetVec(c, o, x) => ZipOffsetVec(rewrite(c, parents), o, x)
-      case RechunkVec(c, b)    => RechunkVec(rewrite(c, parents), b)
-      case StrideVec(c, st)    => StrideVec(rewrite(c, parents), st)
-      case FilterVec(c, p)     => FilterVec(rewrite(c, parents), p)
-      case ConcatVec(a, b)     => ConcatVec(rewrite(a, parents), rewrite(b, parents))
-      case SetItemVec(c, u)    => SetItemVec(rewrite(c, parents), u)
-      case CumVec(c, op)       => CumVec(rewrite(c, parents), op)
-      case DiffVec(c, n)       => DiffVec(rewrite(c, parents), n)
-      case SlidingVec(c, w, op, mc) => SlidingVec(rewrite(c, parents), w, op, mc)
-      case FfillVec(c)         => FfillVec(rewrite(c, parents))
-      case CoarsenVec(c, k, o) => CoarsenVec(rewrite(c, parents), k, o)
-      case FlipVec(c)          => FlipVec(rewrite(c, parents))
-      case RollVec(c, s)       => RollVec(rewrite(c, parents), s)
-      case GradientVec(c)      => GradientVec(rewrite(c, parents))
-      case StencilVec(c, d, k) => StencilVec(rewrite(c, parents), d, k)
-      case RepeatVec(c, k)     => RepeatVec(rewrite(c, parents), k)
-      case leaf                => leaf
-    }
-    simplifyNode(withChildren, parents)
-  }
+  private def rewrite(e: VecExpr, parents: Map[String, List[VecExpr]]): VecExpr =
+    simplifyNode(e.mapChildren(rewrite(_, parents)), parents)
 
   /** Spark's `CollapseProject` rule, on kernel text: substitute producer
     * `e1` into consumer `e2` when `e2` reads `v` at most once or `e1` is

@@ -3,7 +3,7 @@ package graft.expr
 import java.security.MessageDigest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -30,6 +30,11 @@ final case class Ctx(spark: SparkSession, dir: String) {
   */
 sealed trait VecExpr {
   def children: Seq[VecExpr]
+
+  /** The same node over `f` of each child — the one child rebuild every
+    * rewrite goes through ([[Simplify]]); abstract, so a new node cannot
+    * be skipped by it. */
+  def mapChildren(f: VecExpr => VecExpr): VecExpr
 
   /** Operation token incl. parameters — the content-addressing payload. */
   def token: String
@@ -182,6 +187,7 @@ final case class ColumnVec(
     region: Option[(Long, Long)] = None
 ) extends VecExpr {
   def children: Seq[VecExpr] = Nil
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = this
   def token: String = s"column[$table,$idxSql,$valueSql,$region]"
   /** A scoped region has a statically known length; a bare scan does not
     * (the reference's nan-chunks condition). */
@@ -215,6 +221,7 @@ final case class ColumnVec(
   * prevent); the label stays in the token for readable diagnostics. */
 final case class DelayedVec(thunk: () => Array[Double], label: String) extends VecExpr {
   def children: Seq[VecExpr] = Nil
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = this
   def token: String = s"delayed[$label#${DelayedVec.idOf(thunk)}]"
   def eval(ctx: Ctx): DataFrame = {
     val sp = ctx.spark
@@ -251,6 +258,7 @@ object DelayedVec {
 final case class GraphVec(source: DataFrame, idxSql: String, valueSql: String)
     extends VecExpr {
   def children: Seq[VecExpr] = Nil
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = this
   def token: String = s"graph[${GraphVec.idOf(source)},$idxSql,$valueSql]"
   def eval(ctx: Ctx): DataFrame =
     source.selectExpr(s"CAST($idxSql AS BIGINT) AS idx", s"CAST($valueSql AS DOUBLE) AS v")
@@ -278,6 +286,7 @@ object GraphVec {
   * `spark.range` (no materialization; Catalyst folds the affine map). */
 final case class RangeVec(start: Double, step: Double, n: Long) extends VecExpr {
   def children: Seq[VecExpr] = Nil
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = this
   def token: String = s"range[$start,$step,$n]"
   override def length: Long = n
   def eval(ctx: Ctx): DataFrame =
@@ -289,6 +298,7 @@ final case class RangeVec(start: Double, step: Double, n: Long) extends VecExpr 
   * `idx`). Chains fuse by substitution in [[Simplify]]. */
 final case class MapVec(child: VecExpr, exprSql: String) extends VecExpr {
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"map[$exprSql]"
   override def length: Long = child.length
   def eval(ctx: Ctx): DataFrame =
@@ -300,6 +310,7 @@ final case class MapVec(child: VecExpr, exprSql: String) extends VecExpr {
   * `dask_array/_expr.py:723-905`). Kernel over `v1`, `v2`. */
 final case class ZipVec(left: VecExpr, right: VecExpr, exprSql: String) extends VecExpr {
   def children: Seq[VecExpr] = Seq(left, right)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(left = f(left), right = f(right))
   def token: String = s"zip[$exprSql]"
   override def length: Long = if (left.length >= 0) left.length else right.length
   override def transferBytes: (Long, Long) = {
@@ -327,6 +338,7 @@ final case class ZipVec(left: VecExpr, right: VecExpr, exprSql: String) extends 
 final case class ZipOffsetVec(child: VecExpr, offset: Long, exprSql: String) extends VecExpr {
   require(offset > 0, s"offset must be positive, got $offset")
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"zipoffset[$offset,$exprSql]"
   override def length: Long =
     if (child.length >= 0) math.max(child.length - offset, 0) else -1
@@ -355,6 +367,7 @@ final case class ZipOffsetVec(child: VecExpr, offset: Long, exprSql: String) ext
 final case class SliceVec(child: VecExpr, lo: Long, hi: Long) extends VecExpr {
   require(lo >= 0 && hi >= lo, s"bad slice [$lo,$hi)")
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"slice[$lo,$hi]"
   override def length: Long = hi - lo
   def eval(ctx: Ctx): DataFrame =
@@ -370,6 +383,7 @@ final case class SliceVec(child: VecExpr, lo: Long, hi: Long) extends VecExpr {
 final case class StrideVec(child: VecExpr, step: Long) extends VecExpr {
   require(step > 0, s"step must be positive, got $step")
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"stride[$step]"
   override def length: Long =
     if (child.length >= 0) (child.length + step - 1) / step else -1
@@ -385,6 +399,7 @@ final case class StrideVec(child: VecExpr, step: Long) extends VecExpr {
   * maps to Spark's "row count unknown" native condition. */
 final case class FilterVec(child: VecExpr, predSql: String) extends VecExpr {
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"filter[$predSql]"
   def eval(ctx: Ctx): DataFrame = child.eval(ctx).where(predSql)
 }
@@ -396,6 +411,7 @@ final case class FilterVec(child: VecExpr, predSql: String) extends VecExpr {
   * statically known). */
 final case class ConcatVec(left: VecExpr, right: VecExpr) extends VecExpr {
   def children: Seq[VecExpr] = Seq(left, right)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(left = f(left), right = f(right))
   def token: String = "concat"
   override def length: Long =
     if (left.length >= 0 && right.length >= 0) left.length + right.length else -1L
@@ -425,6 +441,7 @@ final case class ConcatVec(left: VecExpr, right: VecExpr) extends VecExpr {
   * join). */
 final case class SetItemVec(child: VecExpr, updates: Seq[(Long, Double)]) extends VecExpr {
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"setitem[${updates.mkString(";")}]"
   override def length: Long = child.length
   def eval(ctx: Ctx): DataFrame = {
@@ -442,7 +459,8 @@ final case class SetItemVec(child: VecExpr, updates: Seq[(Long, Double)]) extend
   * `Window.orderBy(idx)` would collapse 100 TB onto one task; these plans
   * keep the heavy phase partitioned by block and spend the single-partition
   * window only on the numBlocks-row carry table (the reference runs the same
-  * carry chain on the driver). */
+  * carry chain on the driver). This object holds the block grid and the
+  * one halo builder and tail; the scans' carry is [[BlockScan]]. */
 object Blocked {
   /** Default rows per block. Small enough that sf0.01 testdata (10k rows)
     * already spans multiple blocks — the carry/halo paths are exercised by
@@ -464,55 +482,151 @@ object Blocked {
   def withBlk(df: DataFrame, b: Long = B): DataFrame =
     df.withColumn("blk", expr(s"idx DIV $b"))
 
-  /** In-block running window (partitioned — scales horizontally). */
-  def wLocal: org.apache.spark.sql.expressions.WindowSpec =
-    Window.partitionBy("blk").orderBy("idx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-  /** Strictly-preceding-blocks window over the tiny per-block summary table
-    * (O(√n) rows under [[autoChunk]] — the reference's driver-side carry
-    * chain). Partitioned by a CONSTANT-VALUED, NON-FOLDABLE key: same
-    * single-partition execution, but explicit — WindowExec's "No Partition
-    * Defined" warning does not apply to a deliberate bounded carry. A bare
-    * literal would NOT survive: Spark 4's `EliminateWindowPartitions`
-    * optimizer rule strips foldable partition expressions, degrading the
-    * spec back to the warning path; `pmod(blk, 1)` is 0 on every
-    * (non-negative) block id yet hangs off the column, so no rule folds it. */
-  def wCarry: org.apache.spark.sql.expressions.WindowSpec =
-    Window.partitionBy(pmod(col("blk"), lit(1)))
-      .orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
-
-  /** Union of own rows (`tblk = blk`) plus ghost copies of the last `halo`
-    * positions of each block into its successor (`tblk = blk+1`) — the halo
-    * exchange under `map_overlap` (reference `dask_array/_overlap.py:626`).
-    * Requires halo < B. */
-  def withTrailingHalo(df: DataFrame, halo: Long, b: Long = B): DataFrame = {
-    require(halo < b, s"halo $halo must be < block size $b")
-    val base = withBlk(df, b)
-    val own = base.withColumn("tblk", col("blk"))
-    if (halo <= 0) own
-    else own.unionByName(
-      base.where(expr(s"idx % $b >= ${b - halo}")).withColumn("tblk", col("blk") + 1))
+  /** Own rows (`tblk = blk`) plus ghost copies of each block's edge rows
+    * into its neighbors — the halo exchange under `map_overlap`
+    * (reference `dask_array/_overlap.py:626`): the last `before` rows of
+    * a block go to its successor (`tblk = blk + 1`, the rows a lag
+    * reads), the first `after` rows to its predecessor (`tblk = blk - 1`,
+    * the rows a lead reads). A grid `b` no larger than the halo is
+    * clamped up to halo + 1 rows per block, so each ghost slab reaches
+    * one neighbor only; callers read the returned `blk`/`tblk`, never `b`.
+    * Pure narrow projections and a union: no shuffle of its own. */
+  def withHalo(df: DataFrame, before: Long, after: Long, b: Long): DataFrame = {
+    val eb = math.max(b, math.max(before, after) + 1)
+    val base = withBlk(df, eb)
+    val ghosts =
+      (if (before > 0) Seq(base.where(expr(s"idx % $eb >= ${eb - before}"))
+        .withColumn("tblk", col("blk") + 1)) else Nil) ++
+      (if (after > 0) Seq(base.where(expr(s"idx % $eb < $after AND blk > 0"))
+        .withColumn("tblk", col("blk") - 1)) else Nil)
+    ghosts.foldLeft(base.withColumn("tblk", col("blk")))(_ unionByName _)
   }
 
-  /** Own rows plus ghost copies of each block's `halo` edge rows into BOTH
-    * neighbors (`tblk` ± 1) — the bidirectional exchange under central
-    * stencils ([[GradientVec]] is the halo=1 instance, [[StencilVec]] the
-    * general one). A requested b ≤ halo is clamped up to halo+1. */
-  def withBidirHalo(df: DataFrame, halo: Long, b: Long = B): DataFrame = {
-    // a chunk ≤ halo (e.g. rechunk(1).gradient) can't exchange with ONE
-    // neighbor only — clamp the working grid so each block holds at
-    // least halo+1 rows. Callers consume the returned blk/tblk columns,
-    // never the requested b, so the clamp is transparent to them.
-    val eb = math.max(b, halo + 1)
-    val base = withBlk(df, eb)
-    val own = base.withColumn("tblk", col("blk"))
-    if (halo <= 0) own
-    else own
-      .unionByName(base.where(expr(s"idx % $eb >= ${eb - halo}"))
-        .withColumn("tblk", col("blk") + 1))
-      .unionByName(base.where(expr(s"idx % $eb < $halo AND blk > 0"))
-        .withColumn("tblk", col("blk") - 1))
+  /** The one halo tail: [[withHalo]], then the columns `cols` builds
+    * over the window of each target block in `idx` order (ghosts
+    * included), keeping only the block's own rows. `cols` is the whole
+    * select list, and must carry `blk` and `tblk` through. */
+  def haloWindow(df: DataFrame, before: Long, after: Long, b: Long)(
+      cols: WindowSpec => Seq[Column]): DataFrame =
+    withHalo(df, before, after, b)
+      .select(cols(Window.partitionBy("tblk").orderBy("idx")): _*)
+      .where(col("tblk") === col("blk"))
+
+  /** The halo rows' own columns, in the order the stencil tails select. */
+  private[expr] val haloKeys: Seq[Column] = Seq(col("idx"), col("blk"), col("tblk"))
+}
+
+/** The block-scan op table: every cumulative in the engine — [[CumVec]],
+  * [[FfillVec]], [[CumBlellochVec]], `NdArray.cumAxis` and the t15 packing
+  * offsets — is one entry of it run through one of two carries. Each op
+  * is the reference's two-phase `CumReduction`
+  * (`dask_array/reductions/_cumulative.py:100,425-597`): a prefix scan
+  * inside each block plus a carry over the totals of the blocks before it.
+  *
+  * An op gives, per running column ([[BlockScan.Part]]), the aggregate
+  * the in-block window and the carry window both apply, the block total,
+  * and the combine of two adjacent totals (the Blelloch sweep's step);
+  * [[BlockScan.Op.value]] merges the running and carry columns into the
+  * output. sum, min and max run one column; prod runs the log-space
+  * triple (zero count, negative count, Σ log|v|), so a running product
+  * never overflows or underflows before the final `exp`; ffill carries
+  * the last non-null value.
+  *
+  * [[BlockScan.sequential]] runs the carry chain as a window over the
+  * strictly preceding blocks of each line; [[CumBlellochVec]] replaces
+  * only that chain, with its sweep over the same totals. */
+object BlockScan {
+  /** One running column: `agg(input)` over the in-block window is named
+    * `run`; `total`, aggregated per block, is named `tot`; `agg` of the
+    * totals over the carry window is named `carry`; `combine(earlier,
+    * later)` folds two adjacent totals. */
+  final case class Part(agg: Column => Column, input: Column, total: Column,
+                        combine: (Column, Column) => Column,
+                        run: String, tot: String, carry: String)
+
+  final case class Op(parts: Seq[Part], merge: (Seq[Column], Seq[Column]) => Column) {
+    /** The scanned value from the running columns and the named carry
+      * columns (a NULL carry: no earlier block). */
+    def value(carries: Seq[String]): Column = merge(parts.map(p => col(p.run)), carries.map(col))
+    def value: Column = value(parts.map(_.carry))
+  }
+
+  /** The table entry `name` over input column `x` in `order` (ffill's
+    * block total is the last non-null `x` in that order). */
+  def op(name: String, x: Column = col("v"), order: Column = col("idx")): Op = {
+    def one(agg: Column => Column, combine: (Column, Column) => Column, total: Column,
+            tot: String = "tot") =
+      Seq(Part(agg, x, total, combine, "lv", tot, "c"))
+    def plus(a: Column, b: Column): Column = a + b
+    name match {
+      case "sum" =>
+        Op(one(sum, plus, sum(x)), (l, c) => l(0) + coalesce(c(0), lit(0)))
+      case "min" | "max" =>
+        val (agg, combine): (Column => Column, (Column, Column) => Column) =
+          if (name == "min") (min, (a, b) => least(a, b)) else (max, (a, b) => greatest(a, b))
+        Op(one(agg, combine, agg(x)),
+          (l, c) => when(c(0).isNull, l(0)).otherwise(combine(l(0), c(0))))
+      case "prod" =>
+        def counted(s: String, y: Column) = Part(sum, y, sum(y), plus, s"l$s", s"b$s", s"c$s")
+        Op(Seq(counted("z", when(x === 0.0, 1).otherwise(0)),
+            counted("n", when(x < 0.0, 1).otherwise(0)),
+            counted("l", when(x =!= 0.0, log(abs(x))).otherwise(0.0))),
+          (l, c) => when(l(0) + coalesce(c(0), lit(0)) > 0, 0.0)
+            .otherwise(exp(l(2) + coalesce(c(2), lit(0))) *
+              pow(lit(-1.0), (l(1) + coalesce(c(1), lit(0))) % 2)))
+      case "ffill" =>
+        Op(one(last(_, ignoreNulls = true), (a, b) => coalesce(b, a),
+            max_by(x, when(x.isNotNull, order)), tot = "bl"),
+          (l, c) => coalesce(l(0), c(0)))
+      case other => throw new IllegalArgumentException(s"cum op $other")
+    }
+  }
+
+  /** `base` plus every part's running column, each over its (`blk`,
+    * `lines`) block in `order` — one select, so one Window operator
+    * computes them all. */
+  def running(base: DataFrame, op: Op, order: Column, lines: Seq[String] = Nil): DataFrame = {
+    val inBlock = Window.partitionBy(("blk" +: lines).map(col): _*).orderBy(order)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    base.select(col("*") +: op.parts.map(p => p.agg(p.input).over(inBlock).as(p.run)): _*)
+  }
+
+  /** One row per (`blk`, `lines`) block with every part's total. */
+  def totals(base: DataFrame, op: Op, lines: Seq[String] = Nil): DataFrame = {
+    val ts = op.parts.map(p => p.total.as(p.tot))
+    base.groupBy(("blk" +: lines).map(col): _*).agg(ts.head, ts.tail: _*)
+  }
+
+  /** The sequential carry: [[running]] joined with every part's `carry`,
+    * its `agg` over the totals of the strictly preceding blocks of the
+    * same line; callers select [[Op.value]]. The rank is what picks the
+    * carry's layout:
+    *  - rank 1 (`lines` empty): the carry table has O(numBlocks) rows
+    *    (O(√n) under [[Blocked.autoChunk]], the reference's driver-side
+    *    chain). Its window is partitioned by a CONSTANT-VALUED,
+    *    NON-FOLDABLE key, `pmod(blk, 1)` — 0 on every block id, yet no
+    *    rule folds it; a bare literal would be stripped by Spark 4's
+    *    `EliminateWindowPartitions`, degrading the window to the
+    *    unpartitioned warning path. The table is broadcast back.
+    *  - rank N: the carry window is partitioned by the off-axis `lines`,
+    *    and the table, which grows with the line count, joins back on
+    *    (`blk`, `lines`) without a broadcast. */
+  def sequential(base: DataFrame, op: Op, order: Column, lines: Seq[String] = Nil): DataFrame = {
+    val keys = "blk" +: lines
+    val before = (if (lines.isEmpty) Window.partitionBy(pmod(col("blk"), lit(1)))
+                  else Window.partitionBy(lines.map(col): _*))
+      .orderBy("blk").rowsBetween(Window.unboundedPreceding, -1)
+    val carry = totals(base, op, lines).select(
+      keys.map(col) ++ op.parts.map(p => p.agg(col(p.tot)).over(before).as(p.carry)): _*)
+    val local = running(base, op, order, lines)
+    if (lines.isEmpty) local.join(broadcast(carry), "blk") else local.join(carry, keys)
+  }
+
+  /** The 1-d cumulative `op` of `child` on its block grid. */
+  def cumulative(child: VecExpr, op: String, ctx: Ctx): DataFrame = {
+    val scan = BlockScan.op(op)
+    sequential(Blocked.withBlk(child.eval(ctx), child.chunk), scan, col("idx"))
+      .select(col("idx"), scan.value.cast("double").as("v"))
   }
 }
 
@@ -527,76 +641,39 @@ object Blocked {
 final case class RechunkVec(child: VecExpr, newChunk: Long) extends VecExpr {
   require(newChunk > 0, s"chunk must be positive, got $newChunk")
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"rechunk[$newChunk]"
   override def length: Long = child.length
   override def chunk: Long = newChunk
   def eval(ctx: Ctx): DataFrame = child.eval(ctx)
 }
 
+/** A blocked scan or halo window over one child (the cumulatives and the
+  * `map_overlap` family): as long as the child, and it moves at most one
+  * pass of the child across partition boundaries. */
+sealed trait BlockedVec extends VecExpr {
+  def child: VecExpr
+  def children: Seq[VecExpr] = Seq(child)
+  override def length: Long = child.length
+  override def transferBytes: (Long, Long) = (0L, VecExpr.passBytes(child.length))
+}
+
 /** Cumulative scan (reference `CumReduction`,
   * `dask_array/reductions/_cumulative.py:100`): per-block prefix scan
   * (partitioned window) + O(numBlocks) carry table broadcast back — the
-  * reference's exact two-phase plan, with Spark's shuffle as the carrier. */
-final case class CumVec(child: VecExpr, op: String) extends VecExpr {
-  def children: Seq[VecExpr] = Seq(child)
+  * reference's exact two-phase plan, with Spark's shuffle as the carrier;
+  * `op` is any [[BlockScan]] entry. */
+final case class CumVec(child: VecExpr, op: String) extends BlockedVec {
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"cum[$op]"
-  override def length: Long = child.length
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
-  def eval(ctx: Ctx): DataFrame = {
-    val base = Blocked.withBlk(child.eval(ctx), child.chunk)
-    val wL = Blocked.wLocal
-    val wC = Blocked.wCarry
-    op match {
-      case "sum" =>
-        val local = base.withColumn("lv", sum(col("v")).over(wL))
-        val carry = base.groupBy("blk").agg(sum("v").as("tot"))
-          .select(col("blk"), sum("tot").over(wC).as("c"))
-        local.join(broadcast(carry), "blk")
-          .select(col("idx"), (col("lv") + coalesce(col("c"), lit(0.0))).cast("double").as("v"))
-      case "min" | "max" =>
-        val (aggF, combine) =
-          if (op == "min") ((c: Column) => min(c), (a: Column, b: Column) => least(a, b))
-          else ((c: Column) => max(c), (a: Column, b: Column) => greatest(a, b))
-        val local = base.withColumn("lv", aggF(col("v")).over(wL))
-        val carry = base.groupBy("blk").agg(aggF(col("v")).as("tot"))
-          .select(col("blk"), aggF(col("tot")).over(wC).as("c"))
-        local.join(broadcast(carry), "blk")
-          .select(col("idx"),
-            when(col("c").isNull, col("lv")).otherwise(combine(col("lv"), col("c")))
-              .cast("double").as("v"))
-      case "prod" =>
-        // exp-sum-log with per-block zero/sign bookkeeping, carried like sum
-        val zeros = when(col("v") === 0.0, 1).otherwise(0)
-        val negs  = when(col("v") < 0.0, 1).otherwise(0)
-        val logs  = when(col("v") =!= 0.0, log(abs(col("v")))).otherwise(0.0)
-        // one select → one Window operator for all three running columns
-        // (chained withColumn would interleave Projects and plan three
-        // sequential Window passes over the same spec)
-        val local = base.select(col("*"),
-          sum(zeros).over(wL).as("lz"),
-          sum(negs).over(wL).as("ln"),
-          sum(logs).over(wL).as("ll"))
-        val carry = base.groupBy("blk")
-          .agg(sum(zeros).as("bz"), sum(negs).as("bn"), sum(logs).as("bl"))
-          .select(col("blk"),
-            sum("bz").over(wC).as("cz"), sum("bn").over(wC).as("cn"), sum("bl").over(wC).as("cl"))
-        local.join(broadcast(carry), "blk")
-          .select(col("idx"),
-            when(col("lz") + coalesce(col("cz"), lit(0L)) > 0, 0.0)
-              .otherwise(
-                exp(col("ll") + coalesce(col("cl"), lit(0.0))) *
-                  pow(lit(-1.0), (col("ln") + coalesce(col("cn"), lit(0L))) % 2))
-              .cast("double").as("v"))
-      case other => throw new IllegalArgumentException(s"cum op $other")
-    }
-  }
+  def eval(ctx: Ctx): DataFrame = BlockScan.cumulative(child, op, ctx)
 }
 
 /** Work-efficient parallel cumulative scan — `method="blelloch"` (reference
   * `CumReductionBlelloch`, `dask_array/reductions/_cumulative.py:267` +
-  * `crates/.../blelloch.rs`). Same two-phase shape as [[CumVec]] (per-block
-  * partitioned prefix window + carry broadcast back), but the carry table's
+  * `crates/.../blelloch.rs`). Same two-phase shape and the same
+  * [[BlockScan]] op table as [[CumVec]] (per-block partitioned prefix
+  * window + carry broadcast back), but the carry table's
   * own prefix scan is an explicit Blelloch up/down sweep: ceil(log2 B)+
   * rounds of PARTITIONED equi-joins over the O(B)-row block-totals table,
   * with ZERO single-partition windows anywhere in the plan. [[CumVec]]
@@ -611,12 +688,9 @@ final case class CumVec(child: VecExpr, op: String) extends VecExpr {
   * Requires a known child length (the round schedule is planned
   * statically from numBlocks); unknown-length children fall back to the
   * sequential [[CumVec]] plan. */
-final case class CumBlellochVec(child: VecExpr, op: String) extends VecExpr {
-  def children: Seq[VecExpr] = Seq(child)
+final case class CumBlellochVec(child: VecExpr, op: String) extends BlockedVec {
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"cumblelloch[$op]"
-  override def length: Long = child.length
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
 
   /** One sweep round: rows at positions `start, start+s2, start+2·s2, …`
     * are replaced by combine(partner, self) where the partner sits
@@ -647,51 +721,17 @@ final case class CumBlellochVec(child: VecExpr, op: String) extends VecExpr {
     val numBlocks = math.max((n + b - 1) / b, 1L)
     val m = numBlocks - 1 // totals of blocks 0..B-2 feed carries of blocks 1..B-1
     val base = Blocked.withBlk(child.eval(ctx), b)
-    val wL = Blocked.wLocal
-    // (local running columns, per-block totals, columnwise combine, final merge)
-    val (local, totals, cols, comb, finish) = op match {
-      case "sum" =>
-        (base.withColumn("lv", sum(col("v")).over(wL)),
-          base.groupBy("blk").agg(sum("v").as("t0")),
-          Seq("t0"),
-          Seq((a: Column, x: Column) => a + x),
-          (df: DataFrame) => df.select(col("idx"),
-            (col("lv") + coalesce(col("t0"), lit(0.0))).cast("double").as("v")))
-      case "min" | "max" =>
-        val (aggF, combine) =
-          if (op == "min") ((c: Column) => min(c), (a: Column, x: Column) => least(a, x))
-          else ((c: Column) => max(c), (a: Column, x: Column) => greatest(a, x))
-        (base.withColumn("lv", aggF(col("v")).over(wL)),
-          base.groupBy("blk").agg(aggF(col("v")).as("t0")),
-          Seq("t0"), Seq(combine),
-          (df: DataFrame) => df.select(col("idx"),
-            when(col("t0").isNull, col("lv")).otherwise(combine(col("lv"), col("t0")))
-              .cast("double").as("v")))
-      case "prod" =>
-        // log-space triple (zeros, negatives, log|v|) as in CumVec: the
-        // Blelloch combine is columnwise + on all three
-        val zeros = when(col("v") === 0.0, 1).otherwise(0)
-        val negs  = when(col("v") < 0.0, 1).otherwise(0)
-        val logs  = when(col("v") =!= 0.0, log(abs(col("v")))).otherwise(0.0)
-        val plus = (a: Column, x: Column) => a + x
-        (base.select(col("*"),
-            sum(zeros).over(wL).as("lz"), sum(negs).over(wL).as("ln"),
-            sum(logs).over(wL).as("ll")),
-          base.groupBy("blk").agg(sum(zeros).cast("double").as("t0"),
-            sum(negs).cast("double").as("t1"), sum(logs).as("t2")),
-          Seq("t0", "t1", "t2"), Seq(plus, plus, plus),
-          (df: DataFrame) => df.select(col("idx"),
-            when(col("lz") + coalesce(col("t0"), lit(0.0)) > 0, 0.0)
-              .otherwise(exp(col("ll") + coalesce(col("t2"), lit(0.0))) *
-                pow(lit(-1.0), (col("ln") + coalesce(col("t1"), lit(0.0))) % 2))
-              .cast("double").as("v")))
-      case other => throw new IllegalArgumentException(s"cum op $other")
-    }
+    val scan = BlockScan.op(op)
+    // the sweep runs the op table's block totals as DOUBLE columns t0, t1, …
+    val ts = scan.parts.indices.map(i => s"t$i")
+    val local = BlockScan.running(base, scan, col("idx"))
+    def finish(df: DataFrame) = df.select(col("idx"), scan.value(ts).cast("double").as("v"))
     if (numBlocks <= 1)
-      return finish(cols.foldLeft(local)((df, c) => df.withColumn(c, lit(null).cast("double"))))
-    val p0 = totals.where(col("blk") < m).select(col("blk").as("j") +: cols.map(col): _*)
-    val scanned = sweep(p0, m, cols, comb)
-    val carry = scanned.select((col("j") + 1).as("blk") +: cols.map(col): _*)
+      return finish(ts.foldLeft(local)((df, c) => df.withColumn(c, lit(null).cast("double"))))
+    val p0 = BlockScan.totals(base, scan).where(col("blk") < m).select(col("blk").as("j") +:
+      scan.parts.zip(ts).map { case (p, t) => col(p.tot).cast("double").as(t) }: _*)
+    val scanned = sweep(p0, m, ts, scan.parts.map(_.combine))
+    val carry = scanned.select((col("j") + 1).as("blk") +: ts.map(col): _*)
     finish(local.join(broadcast(carry), Seq("blk"), "left"))
   }
 }
@@ -727,19 +767,16 @@ object CumBlellochVec {
 /** n-th discrete difference (reference `diff`,
   * `dask_array/routines/_diff.py:6`): `v - lag(v, n)` window expr; the
   * overlap exchange the reference performs is Spark's sort boundary. */
-final case class DiffVec(child: VecExpr, n: Int) extends VecExpr {
-  def children: Seq[VecExpr] = Seq(child)
+final case class DiffVec(child: VecExpr, n: Int) extends BlockedVec {
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"diff[$n]"
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
   override def length: Long = if (child.length >= 0) math.max(child.length - n, 0) else -1
   def eval(ctx: Ctx): DataFrame = {
     // halo of n ghost rows from the preceding block feeds the lag; windows
     // stay partitioned by block (assumes dense idx, as diff is positional)
-    val all = Blocked.withTrailingHalo(child.eval(ctx), n.toLong, child.chunk)
-    val w = Window.partitionBy("tblk").orderBy("idx")
-    all.withColumn("pv", lag(col("v"), n).over(w))
-      .where(col("tblk") === col("blk") && col("idx") >= n)
+    Blocked.haloWindow(child.eval(ctx), n.toLong, 0L, child.chunk)(w =>
+        Seq(col("*"), lag(col("v"), n).over(w).as("pv")))
+      .where(col("idx") >= n)
       .select((col("idx") - n).as("idx"), (col("v") - col("pv")).as("v"))
   }
 }
@@ -749,18 +786,12 @@ final case class DiffVec(child: VecExpr, n: Int) extends VecExpr {
   * `min_count` semantics at `:249`): a row frame
   * `ROWS BETWEEN w-1 PRECEDING AND CURRENT ROW` — Spark evaluates it
   * incrementally, which is the banded plan the reference builds by hand. */
-final case class SlidingVec(child: VecExpr, w: Int, op: String, minCount: Int) extends VecExpr {
-  def children: Seq[VecExpr] = Seq(child)
+final case class SlidingVec(child: VecExpr, w: Int, op: String, minCount: Int) extends BlockedVec {
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"sliding[$w,$op,$minCount]"
-  override def length: Long = child.length
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
   def eval(ctx: Ctx): DataFrame = {
     // trailing frame fed by a (w-1)-row halo from the preceding block; the
     // banded per-block plan of the reference, with the halo as the band
-    val all = Blocked.withTrailingHalo(child.eval(ctx), (w - 1).toLong, child.chunk)
-    val frame = Window.partitionBy("tblk").orderBy("idx")
-      .rowsBetween(-(w - 1), Window.currentRow)
     val agg = op match {
       case "sum"  => sum(col("v"))
       case "mean" => avg(col("v"))
@@ -769,36 +800,23 @@ final case class SlidingVec(child: VecExpr, w: Int, op: String, minCount: Int) e
       case "std"  => stddev_samp(col("v"))
       case other  => throw new IllegalArgumentException(s"sliding op $other")
     }
-    val cnt = count(col("v")).over(frame)
-    all.select(
-      col("idx"), col("blk"), col("tblk"),
-      when(cnt >= minCount, agg.over(frame)).cast("double").as("v"))
-      .where(col("tblk") === col("blk"))
-      .select(col("idx"), col("v"))
+    Blocked.haloWindow(child.eval(ctx), (w - 1).toLong, 0L, child.chunk) { win =>
+        val frame = win.rowsBetween(-(w - 1), Window.currentRow)
+        Blocked.haloKeys :+ when(count(col("v")).over(frame) >= minCount, agg.over(frame))
+          .cast("double").as("v")
+      }.select(col("idx"), col("v"))
   }
 }
 
 /** Forward fill of nulls (reference `push`/ffill,
   * `dask_array/_overlap.py:1441`): `last(v, ignoreNulls) OVER (ORDER BY idx)`. */
-final case class FfillVec(child: VecExpr) extends VecExpr {
-  def children: Seq[VecExpr] = Seq(child)
+final case class FfillVec(child: VecExpr) extends BlockedVec {
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = "ffill"
-  override def length: Long = child.length
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
-  def eval(ctx: Ctx): DataFrame = {
+  def eval(ctx: Ctx): DataFrame =
     // per-block ffill (partitioned) + carry = last non-null of any earlier
     // block, ffilled over the tiny per-block summary and broadcast back
-    val base = Blocked.withBlk(child.eval(ctx), child.chunk)
-    val local = base.withColumn("lv",
-      last(col("v"), ignoreNulls = true).over(Blocked.wLocal))
-    val carry = base.groupBy("blk")
-      .agg(expr("max_by(v, CASE WHEN v IS NOT NULL THEN idx END)").as("bl"))
-      .select(col("blk"),
-        last(col("bl"), ignoreNulls = true).over(Blocked.wCarry).as("c"))
-    local.join(broadcast(carry), "blk")
-      .select(col("idx"), coalesce(col("lv"), col("c")).as("v"))
-  }
+    BlockScan.cumulative(child, "ffill", ctx)
 }
 
 /** Block-local downsampling (reference `coarsen`,
@@ -807,6 +825,7 @@ final case class FfillVec(child: VecExpr) extends VecExpr {
 final case class CoarsenVec(child: VecExpr, k: Int, op: String) extends VecExpr {
   require(k > 0)
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"coarsen[$k,$op]"
   override def transferBytes: (Long, Long) =
     (0L, VecExpr.passBytes(length)) // map-side combine: only k-fold-reduced rows move
@@ -831,6 +850,7 @@ object VecLen {
   * pure index remap `i → n-1-i`, no data movement beyond the remap. */
 final case class FlipVec(child: VecExpr) extends VecExpr {
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = "flip"
   override def length: Long = child.length
   def eval(ctx: Ctx): DataFrame =
@@ -843,6 +863,7 @@ final case class FlipVec(child: VecExpr) extends VecExpr {
   * two slices + concat, which is the same exchange. */
 final case class RollVec(child: VecExpr, s: Long) extends VecExpr {
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"roll[$s]"
   override def length: Long = child.length
   def eval(ctx: Ctx): DataFrame =
@@ -854,25 +875,19 @@ final case class RollVec(child: VecExpr, s: Long) extends VecExpr {
   * `dask_array/routines/_gradient.py:16`): interior `(x[i+1]-x[i-1])/2`,
   * one-sided at the edges — the reference's halo exchange is the window
   * sort boundary here. */
-final case class GradientVec(child: VecExpr) extends VecExpr {
-  def children: Seq[VecExpr] = Seq(child)
+final case class GradientVec(child: VecExpr) extends BlockedVec {
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = "gradient"
-  override def length: Long = child.length
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
   def eval(ctx: Ctx): DataFrame = {
     // bidirectional halo of 1: last row of each block ghosts into the next
     // block, first row into the previous — the stencil's ghost cells
-    val all = Blocked.withBidirHalo(child.eval(ctx), 1L, child.chunk)
-    val w = Window.partitionBy("tblk").orderBy("idx")
-    val prev = lag(col("v"), 1).over(w)
-    val next = lead(col("v"), 1).over(w)
-    all.select(col("idx"), col("blk"), col("tblk"),
-        when(prev.isNull, next - col("v"))
+    Blocked.haloWindow(child.eval(ctx), 1L, 1L, child.chunk) { w =>
+        val prev = lag(col("v"), 1).over(w)
+        val next = lead(col("v"), 1).over(w)
+        Blocked.haloKeys :+ when(prev.isNull, next - col("v"))
           .when(next.isNull, col("v") - prev)
-          .otherwise((next - prev) / 2.0).as("v"))
-      .where(col("tblk") === col("blk"))
-      .select(col("idx"), col("v"))
+          .otherwise((next - prev) / 2.0).as("v")
+      }.select(col("idx"), col("v"))
   }
 }
 
@@ -886,23 +901,16 @@ final case class GradientVec(child: VecExpr) extends VecExpr {
   * mode instead. Plan shape = [[GradientVec]] generalized: bidirectional
   * ghost slabs of `depth` rows per block edge, windows stay partitioned
   * by block — one scan + one bounded exchange at any scale. */
-final case class StencilVec(child: VecExpr, depth: Int, kernelSql: String) extends VecExpr {
+final case class StencilVec(child: VecExpr, depth: Int, kernelSql: String) extends BlockedVec {
   require(depth >= 1, s"stencil depth must be >= 1, got $depth")
-  def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"stencil[$depth,$kernelSql]"
-  override def length: Long = child.length
-  override def transferBytes: (Long, Long) =
-    (0L, VecExpr.passBytes(child.length))
   def eval(ctx: Ctx): DataFrame = {
-    val all = Blocked.withBidirHalo(child.eval(ctx), depth.toLong, child.chunk)
-    val w = Window.partitionBy("tblk").orderBy("idx")
     // one select → one Window operator for all 2·depth tap columns
-    val taps = all.select(
-      Seq(col("idx"), col("blk"), col("tblk"), col("v")) ++
-        (1 to depth).flatMap(j => Seq(
+    Blocked.haloWindow(child.eval(ctx), depth.toLong, depth.toLong, child.chunk)(w =>
+        (Blocked.haloKeys :+ col("v")) ++ (1 to depth).flatMap(j => Seq(
           lag(col("v"), j).over(w).as(s"v_m$j"),
-          lead(col("v"), j).over(w).as(s"v_p$j"))): _*)
-    taps.where(col("tblk") === col("blk"))
+          lead(col("v"), j).over(w).as(s"v_p$j"))))
       .selectExpr("idx", s"CAST($kernelSql AS DOUBLE) AS v")
   }
 }
@@ -913,6 +921,7 @@ final case class StencilVec(child: VecExpr, depth: Int, kernelSql: String) exten
 final case class RepeatVec(child: VecExpr, k: Int) extends VecExpr {
   require(k > 0)
   def children: Seq[VecExpr] = Seq(child)
+  def mapChildren(f: VecExpr => VecExpr): VecExpr = copy(child = f(child))
   def token: String = s"repeat[$k]"
   override def length: Long = if (child.length >= 0) child.length * k else -1
   def eval(ctx: Ctx): DataFrame =

@@ -10,11 +10,11 @@ import org.apache.spark.sql.types._
   * `row_number().over(Window.orderBy("v"))` computes the same thing, but an
   * unpartitioned window collapses the whole distinct set onto ONE task —
   * fine for a handful of buckets, an OOM for `unique()` over
-  * high-cardinality data (the normal case at 100 TB). This reuses the
-  * [[ExactQuantile]] machinery instead: range-partitioned sort, one
-  * O(numPartitions) count pass for per-partition offsets, then a
-  * partition-local zipWithIndex — every stage distributed, driver traffic
-  * bounded by O(numPartitions).
+  * high-cardinality data (the normal case at 100 TB). This runs the
+  * [[RangeCarrier]] instead: range-partitioned sort of the distinct
+  * values, one O(numPartitions) count fold for per-partition offsets,
+  * then a partition-local zipWithIndex — every stage distributed, driver
+  * traffic bounded by O(numPartitions).
   */
 object DistinctRank {
 
@@ -23,25 +23,15 @@ object DistinctRank {
     * reads a persisted range-sort — call `release()` after its last
     * consumer has executed. */
   def distinctRanks(df: DataFrame, valueCol: String): (DataFrame, () => Unit) = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val dist = df.select(col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull).distinct()
-      .repartitionByRange(parts, col("v"))
-      .sortWithinPartitions("v")
-      .persist()
-    val counts = dist.rdd
-      .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-      .collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val bc = spark.sparkContext.broadcast(offsets)
-    val ranked = dist.rdd.mapPartitionsWithIndex { case (i, it) =>
-      val start = bc.value(i)
+    val dist = RangeCarrier.sorted(
+      df.select(col(valueCol).cast("double").as("v")).where(col("v").isNotNull).distinct(),
+      col("v")).persist()
+    val ranked = RangeCarrier.counted(dist.rdd).pass { (start, it) =>
       it.zipWithIndex.map { case (r, j) => Row(r.getDouble(0), start + j) }
     }
     val schema = StructType(Seq(
       StructField("v", DoubleType, nullable = false),
       StructField("inv", LongType, nullable = false)))
-    (spark.createDataFrame(ranked, schema), () => { dist.unpersist(); () })
+    (df.sparkSession.createDataFrame(ranked, schema), () => { dist.unpersist(); () })
   }
 }

@@ -1,7 +1,60 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+
+/** The range carrier: the one two-pass scan over a range-sorted table,
+  * behind exact quantiles ([[ExactQuantile.brackets]]), distinct ranks
+  * ([[DistinctRank.distinctRanks]]), the exact int64 prefix sum
+  * (`graft.LongArray.cumsum`) and the uniform permutation
+  * (`graft.random.RandomState.permutation`). A global
+  * `Window.orderBy` would do each in one task; the carrier keeps every
+  * stage distributed and moves O(numPartitions) values to the driver:
+  *
+  *   1. [[sorted]]: range-partition by key into `spark.sql.shuffle.partitions`
+  *      ranges (Spark's sampled RangePartitioner) and sort inside each;
+  *   2. [[fold]]: one job folds each partition to one value, collected
+  *      in partition order; the driver turns them into prefix offsets
+  *      (`offsets(i)` folds the partitions before i, `offsets.last` all);
+  *   3. [[Carried.pass]]: a function runs inside each partition, starting
+  *      from that partition's offset.
+  *
+  * Both passes read the same partitions: the range partitioner's bounds
+  * are fixed when the RDD is built, and callers feed it position-keyed,
+  * deterministic rows (or persist the sorted table). */
+object RangeCarrier {
+
+  /** Step 1: range-partition `df` on `keys`, sort each partition by them. */
+  def sorted(df: DataFrame, keys: Column*): DataFrame = {
+    val parts = math.max(1, df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+    df.repartitionByRange(parts, keys: _*).sortWithinPartitions(keys: _*)
+  }
+
+  /** A sorted RDD with the prefix offsets of its partition folds. */
+  final class Carried[T, F: ClassTag](rdd: RDD[T], val offsets: Array[F]) {
+    /** `f(offset of the partition, its rows)` inside each partition. */
+    def pass[U: ClassTag](f: (F, Iterator[T]) => Iterator[U]): RDD[U] = {
+      val bc = rdd.sparkContext.broadcast(offsets)
+      rdd.mapPartitionsWithIndex { case (i, it) => f(bc.value(i), it) }
+    }
+  }
+
+  /** One job folds each partition of `rdd` from `zero` with `step`; the
+    * prefix offsets add the folds with `plus`. */
+  def fold[T, F: ClassTag](rdd: RDD[T], zero: F)(step: (F, T) => F)(
+      plus: (F, F) => F): Carried[T, F] = {
+    val folds = rdd.mapPartitionsWithIndex { case (i, it) => Iterator((i, it.foldLeft(zero)(step))) }
+      .collect().sortBy(_._1).map(_._2)
+    new Carried(rdd, folds.scanLeft(zero)(plus))
+  }
+
+  /** [[fold]] by row count: a partition's offset is its first row's
+    * global rank, `offsets.last` the row count. */
+  def counted[T](rdd: RDD[T]): Carried[T, Long] = fold(rdd, 0L)((c, _) => c + 1)(_ + _)
+}
 
 /** Distributed exact quantiles via range-partitioned sort + rank selection.
   *
@@ -11,12 +64,12 @@ import org.apache.spark.sql.functions._
   * (reference dask_array/reductions/_percentile.py:151,256); this is the
   * exact-answer equivalent built on Spark's distributed sort:
   *
-  *   1. `repartitionByRange(v)` + in-partition sort — Spark's sampled range
-  *      partitioner, every partition holds a contiguous value range;
-  *   2. one count pass → per-partition offsets (O(numPartitions) driver
+  *   1. the [[RangeCarrier]]'s range-partitioned sort on the value —
+  *      every partition holds a contiguous value range;
+  *   2. its count fold → per-partition offsets (O(numPartitions) driver
   *      bytes, the same bound a global sort's range sampling already pays);
-  *   3. one selection pass that emits ONLY the ≤ 2·|ps| global ranks the
-  *      requested quantiles interpolate between.
+  *   3. its pass, a selection that emits ONLY the ≤ 2·|ps| global ranks
+  *      the requested quantiles interpolate between.
   *
   * Interpolation matches Spark/DuckDB `percentile`(_cont_):
   * `lo + (h - floor(h)) * (hi - lo)` at `h = p * (n-1)`.
@@ -50,28 +103,17 @@ object ExactQuantile {
     * h = p·(n−1) and the order statistics at ⌊h⌋ and ⌈h⌉ — every
     * interpolation method combines these three numbers. */
   def brackets(df: DataFrame, valueCol: String, ps: Seq[Double]): Seq[(Double, Double, Double)] = {
-    val spark = df.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val sorted = df.select(col(valueCol).cast("double").as("v"))
-      .where(col("v").isNotNull)
-      .repartitionByRange(parts, col("v"))
-      .sortWithinPartitions("v")
+    val sorted = RangeCarrier.sorted(
+      df.select(col(valueCol).cast("double").as("v")).where(col("v").isNotNull), col("v"))
       .persist()
     try {
-      val rdd = sorted.rdd.map(_.getDouble(0))
-      val counts = rdd
-        .mapPartitionsWithIndex { case (i, it) => Iterator((i, it.size.toLong)) }
-        .collect().sortBy(_._1).map(_._2)
-      val offsets = counts.scanLeft(0L)(_ + _)
-      val n = offsets.last
+      val counted = RangeCarrier.counted(sorted.rdd.map(_.getDouble(0)))
+      val n = counted.offsets.last
       require(n > 0, "quantile of empty input")
       val hs = ps.map(p => p * (n - 1))
       val targets = hs.flatMap(h => Seq(math.floor(h).toLong, math.ceil(h).toLong)).toSet
-      val bc = spark.sparkContext.broadcast((offsets, targets))
-      val found = rdd.mapPartitionsWithIndex { case (i, it) =>
-        val (off, tg) = bc.value
-        val start = off(i)
-        it.zipWithIndex.collect { case (v, j) if tg.contains(start + j) => (start + j, v) }
+      val found = counted.pass { (start, it) =>
+        it.zipWithIndex.collect { case (v, j) if targets.contains(start + j) => (start + j, v) }
       }.collect().toMap
       hs.map(h => (h, found(math.floor(h).toLong), found(math.ceil(h).toLong)))
     } finally { sorted.unpersist(); () }

@@ -1008,17 +1008,11 @@ object MatrixQueries {
     }),
 
     // ediff1d: diff of the raveled matrix (reference
-    // routines/_insert_delete.py:31) — ravel then the same blocked
-    // halo-window diff plan DiffVec uses (no global sort)
+    // routines/_insert_delete.py:31) — ravel adopted as a 1-d array, then
+    // DiffVec's blocked halo-window plan (no global sort)
     "m30_ediff1d" -> ((s, d) => {
       val a = Tab(8, 10, "(i*7 + j*3) % 13").spark(s)
-      val halo = graft.expr.Blocked.withTrailingHalo(a.ravel, 1)
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("tblk").orderBy("idx")
-      halo.withColumn("pv", lag(col("v"), 1).over(w))
-        .where(col("tblk") === col("blk") && col("idx") >= 1)
-        .select((col("idx") - 1).as("idx"), (col("v") - col("pv")).as("v"))
-        .orderBy("idx")
+      DArray.fromGraph(s, d, a.ravel, "idx", "v").diff(1).elements.orderBy("idx")
     }),
 
     // block assembly [[A, B], [C, D]] — pure unions with offsets, zero

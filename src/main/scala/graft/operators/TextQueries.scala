@@ -1145,27 +1145,17 @@ object TextQueries {
     // SEQUENCE PACKING (concat-and-chunk): documents concatenated in
     // doc_id order and split into fixed 2048-token windows; a doc's bin
     // is the window its first token lands in. The global running offset
-    // uses the engine's blocked two-phase carry (same shape as CumVec):
-    // an in-block prefix sum partitioned by a 1000-doc block plus an
+    // is the engine's blocked cumulative sum (BlockScan, as CumVec runs
+    // it): an in-block prefix sum over 1000-doc blocks plus an
     // O(numBlocks) carry table — never a global Window.orderBy over the
     // corpus. One scan, one block-partitioned exchange, one broadcast.
     "t15_seq_packing" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
       val t = docs(s, d).selectExpr("doc_id",
         "CAST(size(split(text, ' ')) AS BIGINT) AS nt", "doc_id DIV 1000 AS blk")
-      val within = t.withColumn("wi",
-        sum("nt").over(Window.partitionBy("blk").orderBy("doc_id")))
-      val carry = t.groupBy("blk").agg(sum("nt").as("bt"))
-        .withColumn("carry", coalesce(sum("bt").over(
-          // constant-valued but non-foldable partition key: survives
-          // EliminateWindowPartitions (a bare literal would not) — the
-          // deliberate O(numBlocks) carry, not an accidental global window
-          Window.partitionBy(pmod(col("blk"), lit(1))).orderBy("blk")
-            .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-        .select("blk", "carry")
-      within.join(broadcast(carry), "blk")
-        .selectExpr("doc_id", "nt", "(carry + wi - nt) DIV 2048 AS bin")
+      val offsets = graft.expr.BlockScan.op("sum", col("nt"), col("doc_id"))
+      graft.expr.BlockScan.sequential(t, offsets, col("doc_id"))
+        .select(col("doc_id"), col("nt"), offsets.value.as("upto"))
+        .selectExpr("doc_id", "nt", "(upto - nt) DIV 2048 AS bin")
         .groupBy("bin")
         .agg(count(lit(1)).as("n_docs"), sum("nt").as("toks"),
           min("doc_id").as("first_id"), max("doc_id").as("last_id"))

@@ -1,7 +1,10 @@
 package graft.random
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import graft.DArray
+import graft.operators.RangeCarrier
 
 /** The legacy `RandomState` object (reference
   * `dask_array/random/_random_state.py:17` — same named-method surface,
@@ -205,23 +208,20 @@ class RandomState(spark: SparkSession, dir: String, seed0: Long = 0L) {
   /** A TRUE uniform permutation of 0..n-1 at any n (the oracle-gated q52
     * uses the shuffle-free affine bijection where n = 2^k allows it; this
     * is the general form): rank positions by their keyed uniform, ties
-    * broken by position — a bijection. Scale shape: one range-partitioned
-    * sort + partition-local zipWithIndex, NO global window and no driver
-    * materialization (the q57/DistinctRank rule). Both zipWithIndex jobs
-    * see identical partitions: the RangePartitioner's boundaries are
-    * fixed once and every input is position-keyed deterministic. */
+    * broken by position — a bijection. Scale shape: the
+    * [[graft.operators.RangeCarrier]] — one range-partitioned sort, one
+    * count fold, a partition-local zipWithIndex — NO global window and no
+    * driver materialization (the q57/DistinctRank rule). Both passes see
+    * identical partitions: the RangePartitioner's boundaries are fixed
+    * once and every input is position-keyed deterministic. */
   def permutation(n: Long): DataFrame = {
     val s = next()
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{StructType, StructField, LongType, DoubleType}
-    val parts = math.max(1, spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-    val keyed = spark.range(n)
-      .selectExpr("id AS p", s"${Kernels.uniform01("id", s)} AS u")
-      .repartitionByRange(parts, col("u"), col("p"))
-      .sortWithinPartitions("u", "p")
-      .rdd
-    val rows = keyed.zipWithIndex().map { case (r, rank) => Row(rank, r.getLong(0).toDouble) }
+    val keyed = RangeCarrier.sorted(
+      spark.range(n).selectExpr("id AS p", s"${Kernels.uniform01("id", s)} AS u"),
+      col("u"), col("p")).rdd
+    val rows = RangeCarrier.counted(keyed).pass { (start, it) =>
+      it.zipWithIndex.map { case (r, j) => Row(start + j, r.getLong(0).toDouble) }
+    }
     spark.createDataFrame(rows, StructType(Seq(
       StructField("idx", LongType, nullable = false),
       StructField("v", DoubleType, nullable = false))))
@@ -231,7 +231,6 @@ class RandomState(spark: SparkSession, dir: String, seed0: Long = 0L) {
     * indexer — one hash-partitioned equi-join on the source position (the
     * `takeLarge` scale path; reference `shuffle` re-chunks and permutes). */
   def shuffle(x: DArray, n: Long): DataFrame = {
-    import org.apache.spark.sql.functions.col
     x.elements.join(
       permutation(n).select(col("idx").as("p"), col("v").cast("long").as("src")),
       col("idx") === col("src"))

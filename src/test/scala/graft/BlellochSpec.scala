@@ -66,7 +66,7 @@ class BlellochSpec extends AnyFunSuite {
     val x = DArray.arange(spark, "/unused", 0, 1000, 1).rechunk(64)
     val seqPlan = x.cumsum.elements.queryExecution.executedPlan.toString
     val blePlan = x.cumsum("blelloch").elements.queryExecution.executedPlan.toString
-    // wCarry's physical signature: a strictly-preceding row frame
+    // the sequential carry window's physical signature: a strictly-preceding row frame
     // (UNBOUNDED PRECEDING .. -1) over the carry table
     val carryFrame = "unboundedpreceding$(), -1"
     assert(seqPlan.contains(carryFrame), s"sequential carry window missing:\n$seqPlan")

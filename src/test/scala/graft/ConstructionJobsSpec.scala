@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * that still launch jobs while they are built are the sanctioned set
   * below (a traced whole-pool floor run at sf0.1, jobs per query); it may
   * only shrink, by moving that work into the plan:
-  *   - q57 (7), q28, q65, q104 (5 each), q97 (4), q98 (3);
+  *   - q57 (7), q28, q65, q104 (5 each), q97 (4), q98 (3) and t34: the
+  *     range-carrier users, whose counts the carrier test pins at sf0.01
+  *     (the same numbers, t34 also 5);
   *   - the store round trips, which write their store while being built:
   *     z01-z07, z09, z12 (2 each), z08, z10, z11 (4 each), q88 (2),
   *     h01 (2), h03, h04, h05, h06 (1 each), np01, np02 (2 each),
@@ -58,6 +60,19 @@ class ConstructionJobsSpec extends AnyFunSuite {
     val jobs = constructionJobs(floorSample)
     assert(jobs.forall(_._2 == 0),
       jobs.filter(_._2 > 0).map { case (n, j) => s"$n: $j job(s)" }.mkString(", "))
+  }
+
+  /** Jobs each sanctioned floor-pool query launches while it is built at
+    * sf0.01 — the range-carrier users (exact quantiles, distinct ranks,
+    * the int64 prefix sum and the permutation), which sort, count and
+    * collect before their frame exists. A ceiling, like the counts below. */
+  private val carrierJobs = Map(
+    "q57_unique_inverse" -> 7, "q28_quantiles" -> 5, "q65_nanquantile" -> 5,
+    "q104_quantile_methods" -> 5, "q97_int64_exact_compute" -> 4,
+    "q98_randomstate_perm" -> 3, "t34_quality_percentile_filter" -> 5)
+
+  test("the range-carrier queries launch no more construction jobs than pinned") {
+    assertCeiling(carrierJobs)
   }
 
   /** Jobs each store round trip launches while it is built at sf0.01 —

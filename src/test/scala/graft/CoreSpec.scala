@@ -31,6 +31,27 @@ class SimplifySpec extends AnyFunSuite {
     assert(s == MapVec(src, "(v * 2) + 1"))
   }
 
+  test("every unary node rewrites below itself: a map(map(leaf)) child fuses") {
+    val chain = MapVec(MapVec(RangeVec(0, 1, 1000), "v + 1"), "v * 2")
+    val unary: Seq[VecExpr => VecExpr] = Seq(
+      MapVec(_, "v - 3"), SliceVec(_, 10, 20), ZipOffsetVec(_, 2, "v1 - v2"),
+      RechunkVec(_, 64), StrideVec(_, 3), FilterVec(_, "v > 5"),
+      SetItemVec(_, Seq((3L, 1.0))), CumVec(_, "sum"), CumBlellochVec(_, "sum"),
+      DiffVec(_, 1), SlidingVec(_, 3, "mean", 1), FfillVec(_), CoarsenVec(_, 4, "sum"),
+      FlipVec(_), RollVec(_, 5), GradientVec(_), StencilVec(_, 1, "v_m1 + v_p1"),
+      RepeatVec(_, 2))
+    def maps(e: VecExpr): Int =
+      (if (e.isInstanceOf[MapVec]) 1 else 0) + e.children.map(maps).sum
+    for (node <- unary) {
+      val s = Simplify(node(chain))
+      assert(maps(s) == 1, s.pprint())
+    }
+    // the parallel scan sees the same simplified input as the sequential one
+    val sliced = SliceVec(chain, 10, 20)
+    assert(Simplify(CumBlellochVec(sliced, "sum")).children ==
+      Simplify(CumVec(sliced, "sum")).children)
+  }
+
   test("map fusion keeps a non-cheap producer out of a consumer that reads v twice") {
     // the layered discrete sampler: a uniform projected once, then a
     // search that reads it at every level — fused, the uniform would be

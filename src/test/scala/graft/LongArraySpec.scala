@@ -68,4 +68,36 @@ class LongArraySpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = back.elements.orderBy("idx").collect().map(_.getLong(1))
     assert(got.zipWithIndex.forall { case (v, i) => v == big + 3L * i })
   }
+
+  test("cumsum equals a driver scanLeft across partition boundaries") {
+    val n = 3000L
+    val x = LongArray.arange(spark, big, 7919, n)
+      .map("CASE WHEN idx % 3 = 0 THEN -v ELSE v END")
+    val cs = x.cumsum()
+    assert(cs.elements.rdd.getNumPartitions > 1)
+    val in = x.elements.orderBy("idx").collect().map(_.getLong(1))
+    val want = in.scanLeft(0L)(_ + _).tail.toSeq
+    val got = cs.elements.orderBy("idx").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.map(_._1).toSeq == (0L until n))
+    assert(got.map(_._2).toSeq == want)
+  }
+
+  test("an int64 overflow raises in cumsum, map and stats alike") {
+    def overflows(f: => Any): Boolean =
+      try { f; false } catch {
+        case e: Throwable =>
+          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+            .exists(_.isInstanceOf[ArithmeticException])
+      }
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    // one partition: the overflow is inside the running sum; four: the
+    // three rows may land in separate partitions, so it is in the offsets
+    try for (parts <- Seq("1", "4")) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      val x = LongArray.arange(spark, Long.MaxValue - 1, 0, 3)
+      assert(overflows(x.cumsum().elements.collect()), s"cumsum at $parts partitions")
+      assert(overflows(x.map("v + 5").elements.collect()))
+      assert(overflows(x.stats().collect()))
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
 }

@@ -156,6 +156,27 @@ class NdSpec extends AnyFunSuite {
       assert(values(a.cumAxis(1, op, blockSize = 2L)) == direct(op), op)
   }
 
+  test("cumAxis and coarsen count a gapped array's absent cells as zeros") {
+    val a = NdArray.tabulate(spark, Seq(3L, 3L), "1.0").triu() // (i, j) = 1 where i <= j
+    assert(!a.dense)
+    val cs = a.cumAxis(0, "sum")
+    assert(cs.dense)
+    assert(values(cs) == (for (i <- 0 to 2; j <- 0 to 2) yield (0 to i).count(_ <= j).toDouble))
+    val avg = a.coarsen(Seq(3L, 3L), "avg(v)")
+    assert(avg.dense)
+    assert(values(avg) == Seq(6.0 / 9))
+  }
+
+  test("cumAxis at rank 1 runs every op of the scan table, carried across blocks") {
+    val a = NdArray.tabulate(spark, Seq(10L), "CAST((c0 % 4) - 1 AS DOUBLE)")
+    val in = (0 until 10).map(i => ((i % 4) - 1).toDouble)
+    val want = Map[String, Seq[Double]](
+      "sum" -> in.scanLeft(0.0)(_ + _).tail, "max" -> in.scanLeft(-9.0)(math.max).tail,
+      "min" -> in.scanLeft(9.0)(math.min).tail, "prod" -> in.scanLeft(1.0)(_ * _).tail)
+    for ((op, w) <- want)
+      assert(values(a.cumAxis(0, op, blockSize = 3L)).map(_ + 0.0) == w.map(_ + 0.0), op)
+  }
+
   test("diffAxis shrinks the axis and matches elementwise differences") {
     val a = NdArray.tabulate(spark, Seq(3L, 4L, 5L), "(c0*7 + c1*3 + c2) % 11")
     val d = a.diffAxis(2)

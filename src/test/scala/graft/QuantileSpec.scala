@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-import graft.operators.ExactQuantile
+import graft.operators.{DistinctRank, ExactQuantile}
 
 class QuantileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -64,5 +64,22 @@ class QuantileSpec extends AnyFunSuite with BeforeAndAfterAll {
     intercept[IllegalArgumentException] {
       ExactQuantile.quantiles(df, "v", Seq(0.5))
     }
+  }
+
+  test("distinctRanks numbers the sorted distinct values, skipping NULLs and duplicates") {
+    val sp = spark
+    import sp.implicits._
+    // 2000 rows over 301 distinct values (every value repeated), plus NULLs,
+    // spread over the 4 range partitions
+    val vals: Seq[Option[Double]] = (0 until 2000).map { i =>
+      if (i % 97 == 0) None else Some(((i * 7919) % 301 - 150).toDouble / 4)
+    }
+    val df = vals.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("idx", "v")
+    val (ranks, release) = DistinctRank.distinctRanks(df, "v")
+    try {
+      val got = ranks.collect().map(r => (r.getDouble(0), r.getLong(1))).sortBy(_._2).toSeq
+      val want = vals.flatten.distinct.sorted.zipWithIndex.map { case (v, i) => (v, i.toLong) }
+      assert(got == want)
+    } finally release()
   }
 }

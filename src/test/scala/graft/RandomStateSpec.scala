@@ -119,6 +119,17 @@ class RandomStateSpec extends AnyFunSuite with BeforeAndAfterAll {
       .getMessage.contains("distinct"))
   }
 
+  test("permutation is a bijection at 1, 3 and 7 shuffle partitions") {
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(1, 3, 7)) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val n = 1001L // not a power of 2
+      val perm = RandomState(spark, dir, seed = 21).permutation(n).collect()
+      assert(perm.map(_.getLong(0)).sorted.toSeq == (0L until n), s"idx at $parts partitions")
+      assert(perm.map(_.getDouble(1).toLong).sorted.toSeq == (0L until n), s"values at $parts partitions")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
   test("permutation plans without a single-partition global window") {
     val r = RandomState(spark, dir, seed = 9)
     val plan = r.permutation(50000L).queryExecution.executedPlan.toString
